@@ -15,6 +15,7 @@ Subpackages:
 - ``table_env`` TableEnvironment facade: executeSql DDL/DML/query + the
                 fluent Table API (the reference's primary entry points)
 - ``session``   SparkSession factory tuned for the driver harness
+- ``worker_daemon`` Python worker daemon that imports pyspark unpacked
 - ``catalog``   parquet star-schema registration (TESTDATA.md tables)
 - ``queries``   the operator-coverage query registry (SURVEY.md section 2)
 - ``functions`` Flink-named scalar/aggregate function shims
@@ -23,10 +24,26 @@ Subpackages:
 - ``streaming`` watermark/window/stateful streaming layer
 """
 
-from flink_release_1_16_0_spark.session import get_spark
-from flink_release_1_16_0_spark.catalog import load_table, register_tables
-from flink_release_1_16_0_spark.table_env import Table, TableEnvironment
+import importlib
 
-__all__ = ["get_spark", "load_table", "register_tables", "Table", "TableEnvironment"]
+# export -> submodule. Resolved on first access, so that importing the
+# package (as ``python -m ...worker_daemon`` does) loads no pyspark.
+_EXPORTS = {
+    "get_spark": "session",
+    "load_table": "catalog",
+    "register_tables": "catalog",
+    "Table": "table_env",
+    "TableEnvironment": "table_env",
+}
+
+__all__ = list(_EXPORTS)
+
+
+def __getattr__(name: str):
+    if name not in _EXPORTS:
+        raise AttributeError(f"module {__name__!r} has no attribute {name!r}")
+    value = getattr(importlib.import_module(f"{__name__}.{_EXPORTS[name]}"), name)
+    globals()[name] = value
+    return value
 
 __version__ = "0.1.0"

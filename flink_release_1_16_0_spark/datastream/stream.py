@@ -122,10 +122,6 @@ def _ts_ms(v) -> int | None:
     return None
 
 
-def _dur_str(d) -> str:
-    return f"{_to_ms(d)} milliseconds"
-
-
 def _assign_time_windows(df: DataFrame, tcol: str, assigner) -> DataFrame:
     """Window assignment as pure native arithmetic over epoch-ms — the
     reference's TumblingEventTimeWindows.assignWindows /

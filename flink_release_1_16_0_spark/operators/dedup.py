@@ -202,13 +202,6 @@ def signature_from_shingles(sh: Column, num_hashes: int = 6) -> Column:
     )
 
 
-def minhash_signature(text: Column, num_hashes: int = 6, k: int = 3) -> Column:
-    """MinHash signature computed straight from text (see
-    signature_from_shingles; prefer shingling once when the shingles are
-    also needed downstream)."""
-    return signature_from_shingles(shingles(text, k), num_hashes)
-
-
 def shingle_table(
     docs: DataFrame,
     id_col: str = "doc_id",
@@ -266,15 +259,6 @@ def shingle_table(
         # stops projection collapse) — no second exchange needed
         return sh.persist()
     return sh.repartition(par, F.col("__id"))
-
-
-def sql_minhash_signature(expr: str, num_hashes: int = 6, k: int = 3) -> str:
-    sh = sql_shingles(expr, k)
-    parts = ", ".join(
-        f"list_min(list_transform(__sh, s -> md5('{i}|' || s)))"
-        for i in range(num_hashes)
-    )
-    return f"(SELECT [{parts}] FROM (SELECT {sh} AS __sh))"
 
 
 def lsh_candidate_pairs(

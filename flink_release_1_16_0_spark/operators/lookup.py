@@ -6,19 +6,16 @@ LookupFunction.java:35, JDBC impl JdbcRowDataLookupFunction.java:54 —
 SURVEY.md section 2.3).
 
 Spark-first design: a lookup join IS a broadcast hash join against a
-snapshot of the dimension relation. Batch: broadcast directly.
-Streaming: re-load + re-broadcast the dimension per micro-batch inside
-foreachBatch — that reproduces the reference's processing-time lookup
-semantics (each batch sees the dimension as-of its processing time);
-the broadcast hash table plays the role of the lookup cache
-(`lookup.cache.max-rows` et al. become moot — the whole dim ships once
-per batch, which at 1000 executors is strictly cheaper than N x
-per-row RPC lookups unless the dim is huge).
+snapshot of the dimension relation, broadcast directly. The broadcast
+hash table plays the role of the lookup cache (`lookup.cache.max-rows`
+et al. become moot — the whole dim ships once, which at 1000 executors
+is strictly cheaper than N x per-row RPC lookups unless the dim is
+huge).
 """
 
 from __future__ import annotations
 
-from collections.abc import Callable, Sequence
+from collections.abc import Sequence
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -40,24 +37,3 @@ def lookup_join(
         c = fact[fc] == dim[dc]
         cond = c if cond is None else (cond & c)
     return fact.join(F.broadcast(dim), cond, how)
-
-
-def streaming_lookup_join(
-    stream: DataFrame,
-    dim_loader: Callable[[], DataFrame],
-    on: Sequence[tuple[str, str]],
-    sink_fn: Callable[[DataFrame, int], None],
-    how: str = "left",
-):
-    """Processing-time lookup join for streams via foreachBatch.
-
-    `dim_loader` is called per micro-batch so dimension updates between
-    batches are visible (FOR SYSTEM_TIME AS OF proc-time semantics).
-    Returns the started StreamingQuery.
-    """
-
-    def process(batch_df: DataFrame, batch_id: int) -> None:
-        dim = dim_loader()
-        sink_fn(lookup_join(batch_df, dim, on, how), batch_id)
-
-    return stream.writeStream.foreachBatch(process).start()

@@ -43,12 +43,6 @@ from flink_release_1_16_0_spark.streaming.changelog import (
 )
 
 
-def _schema_with_rowkind(schema: StructType) -> StructType:
-    from pyspark.sql.types import StringType, StructField
-
-    return StructType([StructField(ROWKIND, StringType()), *schema.fields])
-
-
 def streaming_dedup_keep_last(
     stream: DataFrame,
     keys: Sequence[str],
