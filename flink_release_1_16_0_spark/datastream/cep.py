@@ -47,9 +47,9 @@ from flink_release_1_16_0_spark.datastream.stream import (
     KeyedStream,
     _parse_ddl,
     _row_iter,
-    _to_pdf,
     _ts_ms as _ms,
 )
+from flink_release_1_16_0_spark.operators.grouped import grouped_apply, to_pdf
 
 
 _GSEQ = itertools.count()
@@ -689,10 +689,8 @@ class PatternStream:
                     start += 1
             return out
 
-        from flink_release_1_16_0_spark.datastream.stream import _grouped_apply
-
-        # group-amortized per-key matching (see _grouped_apply)
-        out = _grouped_apply(keyed.stream.df, list(keyed.keys), harness, schema)
+        # group-amortized per-key matching (see grouped_apply)
+        out = grouped_apply(keyed.stream.df, list(keyed.keys), harness, schema)
         side = (timeout_tag,) if use_side else ()
         return DataStream(keyed.env, out, None, side)
 
@@ -802,7 +800,7 @@ class PatternStream:
             if retained:
                 state.setTimeoutTimestamp(wm + 1)
             if out:
-                yield _to_pdf(out, names)
+                yield to_pdf(out, names)
 
         out = keyed.stream.df.groupBy(*keyed.keys).applyInPandasWithState(
             func,

@@ -78,6 +78,7 @@ from flink_release_1_16_0_spark.datastream.functions import (
     WindowFunction,
     _to_ms,
 )
+from flink_release_1_16_0_spark.operators.grouped import grouped_apply, to_pdf
 
 _SIDE_TAG = "__side_tag"
 _SIDE_JSON = "__side_json"
@@ -87,12 +88,6 @@ def _parse_ddl(spark: SparkSession, ddl: str | StructType) -> StructType:
     if isinstance(ddl, StructType):
         return ddl
     return spark.createDataFrame([], ddl).schema
-
-
-def _to_pdf(rows: list[dict], names: list[str]) -> pd.DataFrame:
-    if rows:
-        return pd.DataFrame(rows, columns=names)
-    return pd.DataFrame({n: pd.Series(dtype="object") for n in names})
 
 
 def _row_iter(pdf: pd.DataFrame) -> Iterable[dict]:
@@ -165,171 +160,6 @@ def _assign_session_ids(df: DataFrame, tcol: str, keys: list[str], gap_ms: int) 
     # (the reference's session merge semantics)
     brk = (ts - F.lag(ts).over(w) > F.lit(gap_ms)).cast("int")
     return df.withColumn("__sess", F.sum(F.coalesce(brk, F.lit(0))).over(w))
-
-
-def _same_group_key(a: tuple, b: tuple) -> bool:
-    """Null-safe group-key equality shared by both group-walk paths."""
-    return all((pd.isna(x) and pd.isna(y)) or x == y for x, y in zip(a, b))
-
-
-def _grouped_apply(
-    df: DataFrame,
-    gcols: list[str],
-    harness: Callable[[tuple, pd.DataFrame], pd.DataFrame],
-    schema: StructType,
-    shuffle: bool = True,
-    rows_mode: bool = False,
-) -> DataFrame:
-    """Keyed-group apply with PER-BATCH group iteration: one shuffle on
-    ``gcols`` + ``mapInPandas`` walking the groups inside each Arrow
-    batch. ``applyInPandas`` invokes the Python worker once PER GROUP,
-    which dominates wall time on many-small-groups shapes (thousands of
-    users/windows with a handful of rows each) — iterating groups inside
-    a batch amortizes that cost to one invocation per ~10k rows. The
-    reference pays one operator call per record either way; this keeps
-    the facade's per-group overhead from exceeding it.
-
-    ``shuffle=False`` skips the repartition when the caller's plan
-    already co-locates each group inside one partition (e.g. a window
-    function partitioned by a PREFIX of ``gcols`` — session ids / count
-    fires derive from the key, so hash(key) partitioning covers
-    (key, window) groups); only the partition-local sort runs, keeping
-    the upstream exchange the plan's only one.
-
-    Groups are contiguous after the in-partition sort; a group can
-    still be SPLIT across Arrow batches, so each batch's trailing group
-    carries over as a LIST of pieces (null-safe key comparison,
-    concatenated exactly once when the group completes — a group
-    spanning many batches costs linear assembly, not quadratic).
-    ``harness(key_tuple, group_pdf) -> result_pdf`` keeps the exact
-    applyInPandas contract (group columns included in the pdf).
-
-    ``rows_mode=True`` switches to the many-tiny-groups fast path:
-    ``harness(key_tuple, rows: list[dict]) -> list[dict]`` — one
-    ``itertuples`` pass per Arrow batch with sorted-boundary group
-    detection, ONE output DataFrame per batch. The pdf-mode path builds
-    a groupby sub-frame and a result DataFrame PER GROUP (~1 ms of
-    pandas overhead each), which dominated wall time on shapes like the
-    windowed coGroup (40k one-row groups → 35 s of pure overhead);
-    rows_mode removes both per-group materializations."""
-    names = [f.name for f in schema.fields]
-    if rows_mode:
-        return _grouped_apply_rows(df, gcols, harness, schema, names, shuffle)
-
-    def key_mask(pdf: pd.DataFrame, key_row) -> pd.Series:
-        m = pd.Series(True, index=pdf.index)
-        for c in gcols:
-            v = key_row[c]
-            m &= pdf[c].isna() if pd.isna(v) else (pdf[c] == v)
-        return m
-
-    def emit(pdf: pd.DataFrame) -> pd.DataFrame:
-        # harness may return a DataFrame OR a list of row dicts; list
-        # returns batch into ONE frame per run so a many-tiny-groups
-        # shape never pays a per-group DataFrame construction
-        frames = []
-        rows: list[dict] = []
-        for key, g in pdf.groupby(gcols, sort=False, dropna=False):
-            if not isinstance(key, tuple):
-                key = (key,)
-            out = harness(key, g)
-            if out is None:
-                continue
-            if isinstance(out, list):
-                rows.extend(out)
-            elif len(out):
-                if rows:  # preserve inter-group emission order
-                    frames.append(_to_pdf(rows, names))
-                    rows = []
-                frames.append(out)
-        if rows:
-            frames.append(_to_pdf(rows, names))
-        if not frames:
-            return _to_pdf([], names)
-        return pd.concat(frames, ignore_index=True) if len(frames) > 1 else frames[0]
-
-    def gen(batches: Iterable[pd.DataFrame]) -> Iterable[pd.DataFrame]:
-        carry: list[pd.DataFrame] = []
-
-        def flush() -> pd.DataFrame | None:
-            nonlocal carry
-            if not carry:
-                return None
-            grp = carry[0] if len(carry) == 1 else pd.concat(carry, ignore_index=True)
-            carry = []
-            return emit(grp)
-
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            if carry:
-                ck = tuple(carry[-1][gcols].iloc[-1])
-                fk = tuple(pdf[gcols].iloc[0])
-                if _same_group_key(ck, fk):
-                    head_m = key_mask(pdf, pdf[gcols].iloc[0])
-                    carry.append(pdf[head_m])
-                    pdf = pdf[~head_m]
-                    if len(pdf) == 0:
-                        continue  # batch fully absorbed by the carried group
-                out = flush()  # a different key follows: the group is complete
-                if out is not None and len(out):
-                    yield out
-            tail_m = key_mask(pdf, pdf[gcols].iloc[-1])
-            body = pdf[~tail_m]
-            carry = [pdf[tail_m]]
-            if len(body):
-                yield emit(body)
-        out = flush()
-        if out is not None and len(out):
-            yield out
-
-    parts = (df.repartition(*gcols) if shuffle else df).sortWithinPartitions(*gcols)
-    return parts.mapInPandas(gen, schema)
-
-
-def _grouped_apply_rows(
-    df: DataFrame,
-    gcols: list[str],
-    harness,
-    schema: StructType,
-    names: list[str],
-    shuffle: bool,
-) -> DataFrame:
-    """rows_mode body of :func:`_grouped_apply` (see its docstring):
-    sorted-contiguous group walk over row dicts, one output frame per
-    Arrow batch. The cross-batch carry is a plain list of row dicts —
-    a group spanning batches costs linear assembly."""
-
-    def _key_of(row: dict) -> tuple:
-        return tuple(row[c] for c in gcols)
-
-    def gen(batches: Iterable[pd.DataFrame]) -> Iterable[pd.DataFrame]:
-        carry_rows: list[dict] = []
-        carry_key: tuple | None = None
-
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            cols = list(pdf.columns)
-            out_rows: list[dict] = []
-            for tup in pdf.itertuples(index=False, name=None):
-                row = dict(zip(cols, tup))
-                k = _key_of(row)
-                if carry_key is not None and _same_group_key(k, carry_key):
-                    carry_rows.append(row)
-                    continue
-                if carry_key is not None:
-                    out_rows.extend(harness(carry_key, carry_rows) or [])
-                carry_key, carry_rows = k, [row]
-            if out_rows:
-                yield _to_pdf(out_rows, names)
-        if carry_key is not None:
-            final = harness(carry_key, carry_rows) or []
-            if final:
-                yield _to_pdf(final, names)
-
-    parts = (df.repartition(*gcols) if shuffle else df).sortWithinPartitions(*gcols)
-    return parts.mapInPandas(gen, schema)
 
 
 # ---------------------------------------------------------------------------
@@ -589,7 +419,7 @@ class DataStream:
                 out: list[dict] = []
                 for row in _row_iter(pdf):
                     emit(row, out)
-                yield _to_pdf(out, names)
+                yield to_pdf(out, names)
             if fn is not None:
                 fn.close()
 
@@ -884,7 +714,7 @@ class KeyedStream:
                 acc = row if acc is None else f(acc, row)
             return [acc] if acc is not None else []
 
-        out = _grouped_apply(self.stream.df, list(self.keys), fold, schema)
+        out = grouped_apply(self.stream.df, list(self.keys), fold, schema)
         return DataStream(self.env, out, None)
 
     def _streaming_rolling_reduce(
@@ -912,7 +742,7 @@ class KeyedStream:
             if acc is not None:
                 state.update((pickle.dumps(acc),))
             if out:
-                yield _to_pdf(out, names)
+                yield to_pdf(out, names)
 
         out = self.stream.df.groupBy(*self.keys).applyInPandasWithState(
             func,
@@ -970,7 +800,7 @@ class KeyedStream:
                 out.append({_SIDE_TAG: tag_id, _SIDE_JSON: json.dumps(r, default=str)})
             return out
 
-        out = _grouped_apply(self.stream.df, list(keys), harness, schema)
+        out = grouped_apply(self.stream.df, list(keys), harness, schema)
         return DataStream(self.env, out, None, tuple(side_outputs))
 
     def _process_streaming(
@@ -1048,7 +878,7 @@ class KeyedStream:
             for tag_id, r in ctx.side_rows:
                 out.append({_SIDE_TAG: tag_id, _SIDE_JSON: json.dumps(r, default=str)})
             if out:
-                yield _to_pdf(out, names)
+                yield to_pdf(out, names)
 
         out = self.stream.df.groupBy(*keys).applyInPandasWithState(
             func,
@@ -1141,7 +971,7 @@ class IntervalJoin:
                     rrow = {c: row[f"__r_{c}"] for c in rcols}
                     fn.process_element(lrow, rrow, Context(timer_service_obj=None), colctx)
                 out.extend(colctx.rows)
-                yield _to_pdf(out, names)
+                yield to_pdf(out, names)
 
         return DataStream(env, joined.mapInPandas(gen, schema))
 
@@ -1281,13 +1111,13 @@ class WindowedStream:
             return per_window(kval, window, pdf.drop(columns=helper))
 
         # group-amortized lowering: one shuffle on (key, window), groups
-        # iterated inside each Arrow batch (see _grouped_apply) — the
+        # iterated inside each Arrow batch (see grouped_apply) — the
         # thousands-of-tiny-windows shape would otherwise pay a Python
         # worker invocation per window. Session/count windows derive
         # their window ids from a window function already partitioned by
         # the key, so hash(key) co-location holds and the lowering skips
         # its own shuffle — the plan keeps ONE exchange
-        out = _grouped_apply(
+        out = grouped_apply(
             df,
             gcols,
             lambda key, g: group_rows(key, g),
@@ -1405,7 +1235,7 @@ class WindowedStream:
             elif state.exists:
                 state.remove()
             if out:
-                yield _to_pdf(out, names)
+                yield to_pdf(out, names)
 
         out = df.groupBy(*gcols).applyInPandasWithState(
             func,
@@ -1540,7 +1370,7 @@ class ConnectedStreams:
             fn.close()
             return col.rows
 
-        out = _grouped_apply(unioned, kcols, harness, schema)
+        out = grouped_apply(unioned, kcols, harness, schema)
         return DataStream(env, out)
 
     def _process_streaming(
@@ -1604,7 +1434,7 @@ class ConnectedStreams:
                 # on a then-quiet key waits for the next element
                 state.setTimeoutTimestamp(wm + 1)
             if col.rows:
-                yield _to_pdf(col.rows, names)
+                yield to_pdf(col.rows, names)
 
         out = unioned.groupBy(*kcols).applyInPandasWithState(
             func,
@@ -1658,7 +1488,7 @@ class BroadcastConnectedStream:
                 for row in _row_iter(pdf):
                     ro.current_timestamp = _ts_ms(row.get(tcol)) if tcol else None
                     fn.process_element(row, ro, col)
-                yield _to_pdf(col.rows, names)
+                yield to_pdf(col.rows, names)
             fn.close()
 
         return DataStream(env, self.main.df.mapInPandas(gen, schema))
@@ -1704,7 +1534,7 @@ class KeyedBroadcastConnectedStream:
                 ctx.current_timestamp = t
                 fn.on_timer(t, ctx, col)
             fn.close()
-            return _to_pdf(col.rows, names)
+            return to_pdf(col.rows, names)
 
         out = self.keyed.stream.df.groupBy(*keys).applyInPandas(
             lambda k, p: harness(k, p), schema
@@ -1766,7 +1596,7 @@ class AsyncDataStream:
                         if res is None:
                             continue
                         out.append(res) if isinstance(res, dict) else out.extend(res)
-                    yield _to_pdf(out, names)
+                    yield to_pdf(out, names)
             finally:
                 # wait=False + cancel_futures: a worker stuck past its
                 # timeout must not wedge the task at pool teardown (its
@@ -1856,7 +1686,7 @@ class JoinedStreams(_WindowPair):
                     f({c: row[f"__l_{c}"] for c in lcols}, {c: row[f"__r_{c}"] for c in rcols})
                     for row in _row_iter(pdf)
                 ]
-                yield _to_pdf(out, names)
+                yield to_pdf(out, names)
 
         return DataStream(env, joined.mapInPandas(gen, schema))
 
@@ -1902,6 +1732,6 @@ class CoGroupedStreams(_WindowPair):
             fn.co_group(firsts, seconds, col)
             return col.rows
 
-        # group-amortized lowering on (key, window) — see _grouped_apply
-        out = _grouped_apply(unioned, gcols, harness, schema, rows_mode=True)
+        # group-amortized lowering on (key, window) — see grouped_apply
+        out = grouped_apply(unioned, gcols, harness, schema, rows_mode=True)
         return DataStream(env, out)

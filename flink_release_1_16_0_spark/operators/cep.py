@@ -23,6 +23,9 @@ from collections.abc import Sequence
 import pandas as pd
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
+
+from flink_release_1_16_0_spark.operators.grouped import grouped_apply
 
 
 def classify(symbol_exprs: dict[str, Column], default: str = "-") -> Column:
@@ -38,7 +41,7 @@ def classify(symbol_exprs: dict[str, Column], default: str = "-") -> Column:
 def _apply_per_key(df: DataFrame, keys: Sequence[str], fn, schema: str) -> DataFrame:
     """``groupBy(keys).applyInPandas(fn, schema)`` with the per-key
     Python invocation amortized: lowered through
-    ``datastream.stream._grouped_apply`` (one shuffle on ``keys`` + a
+    ``operators.grouped.grouped_apply`` (one shuffle on ``keys`` + a
     mapInPandas group walk). ``applyInPandas`` calls the Python worker
     once PER KEY — ~4 ms of Arrow+invoke overhead each, measured to
     dominate many-small-keys CEP inputs (sf0.1 events: 1500 user
@@ -46,11 +49,7 @@ def _apply_per_key(df: DataFrame, keys: Sequence[str], fn, schema: str) -> DataF
     batches; a trivial fn times 5.1/0.9/0.6 s at 1500/64/8 groups).
     ``fn`` keeps the exact applyInPandas contract: it receives one
     key's rows, key columns included, and returns a result frame."""
-    from pyspark.sql.types import StructType
-
-    from flink_release_1_16_0_spark.datastream.stream import _grouped_apply
-
-    return _grouped_apply(df, list(keys), lambda _key, g: fn(g), StructType.fromDDL(schema))
+    return grouped_apply(df, list(keys), lambda _key, g: fn(g), StructType.fromDDL(schema))
 
 
 def match_fixed_pattern(

@@ -32,11 +32,16 @@ from pyspark.sql import SparkSession
 _PACKAGE_PARENT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
-def _host_driver_mem() -> str:
-    """Half of MemTotal, at least 1 GiB, as a JVM size."""
+def host_mem_mib() -> int:
+    """This host's MemTotal in MiB."""
     with open("/proc/meminfo") as f:
         kib = next(int(line.split()[1]) for line in f if line.startswith("MemTotal:"))
-    return f"{max(1024, kib // 1024 // 2)}m"
+    return kib // 1024
+
+
+def _host_driver_mem() -> str:
+    """Half of MemTotal, at least 1 GiB, as a JVM size."""
+    return f"{max(1024, host_mem_mib() // 2)}m"
 
 
 def get_spark(

@@ -40,7 +40,6 @@ from __future__ import annotations
 
 import pickle
 from collections.abc import Iterator, Sequence
-from decimal import Decimal
 
 import pandas as pd
 from pyspark.sql import DataFrame
@@ -52,6 +51,7 @@ from pyspark.sql.types import (
     TimestampType,
 )
 
+from flink_release_1_16_0_spark.streaming.accumulators import Accumulator, AggSpecs
 from flink_release_1_16_0_spark.streaming.changelog import (
     DELETE,
     INSERT,
@@ -59,7 +59,11 @@ from flink_release_1_16_0_spark.streaming.changelog import (
     UPDATE_AFTER,
     UPDATE_BEFORE,
 )
-from flink_release_1_16_0_spark.streaming.window_tvf import window_start_with_offset
+from flink_release_1_16_0_spark.streaming.window_tvf import (
+    to_ms,
+    to_ts,
+    window_start_with_offset,
+)
 
 _FUNCS = (
     "count_star",
@@ -73,129 +77,6 @@ _FUNCS = (
     "weighted_avg",
     "concat_distinct",
 )
-
-
-def _jdiv(a: int, b: int) -> int:
-    """Java integer division (truncates toward zero)."""
-    q = abs(a) // abs(b)
-    return q if (a >= 0) == (b >= 0) else -q
-
-
-class _RAcc:
-    """Retractable accumulator: one cell per agg spec + net row count."""
-
-    __slots__ = ("n", "cells")
-
-    def __init__(self, nspecs: int):
-        self.n = 0
-        self.cells = [None] * nspecs
-
-    def add(self, specs, row, sign: int, tup=None, col_pos=None) -> None:
-        """``row`` is a dict, or pass positional ``tup``+``col_pos``
-        (itertuples hot path — no per-row dict allocation, same
-        treatment as the window-TVF and retract aggs)."""
-        self.n += sign
-        for i, (_, func, col, _t) in enumerate(specs):
-            if col is None or func == "count_star":
-                v = None
-            else:
-                c0 = col[0] if isinstance(col, tuple) else col
-                v = tup[col_pos[c0]] if tup is not None else row[c0]
-            if v is not None and isinstance(v, float) and v != v:
-                v = None
-            c = self.cells[i]
-            if func == "count_star":
-                self.cells[i] = (c or 0) + sign
-            elif func == "weighted_avg":
-                w = tup[col_pos[col[1]]] if tup is not None else row[col[1]]
-                if v is None or w is None:
-                    continue
-                s, ws = c if c is not None else (0, 0)
-                self.cells[i] = (s + sign * int(v) * int(w), ws + sign * int(w))
-            elif v is None:
-                continue
-            elif func == "count":
-                self.cells[i] = (c or 0) + sign
-            elif func == "sum":
-                s, k = c if c is not None else (Decimal(0), 0)
-                self.cells[i] = (s + sign * Decimal(str(v)), k + sign)
-            elif func in ("sum_int", "avg_int"):
-                s, k = c if c is not None else (0, 0)
-                self.cells[i] = (s + sign * int(v), k + sign)
-            elif func in ("max", "min", "count_distinct"):
-                d = c if c is not None else {}
-                d[v] = d.get(v, 0) + sign
-                if d[v] == 0:
-                    del d[v]
-                self.cells[i] = d
-            else:  # concat_distinct — append-only, insertion-ordered dict
-                # keys (O(1) membership vs O(d) list `not in`; mirrors the
-                # reference's MapView distinct accumulator).
-                if sign < 0:
-                    raise ValueError("concat_distinct cannot retract")
-                if c is None:
-                    self.cells[i] = {v: True}
-                else:
-                    c.setdefault(v, True)
-
-    def merge(self, specs, other: "_RAcc") -> None:
-        """Session-merge ``other`` into self (MergingWindowSet merge)."""
-        self.n += other.n
-        for i, (_, func, _c, _t) in enumerate(specs):
-            o = other.cells[i]
-            if o is None:
-                continue
-            c = self.cells[i]
-            if func in ("count_star", "count"):
-                self.cells[i] = (c or 0) + o
-            elif func in ("sum", "sum_int", "avg_int", "weighted_avg"):
-                if c is None:
-                    self.cells[i] = o
-                else:
-                    self.cells[i] = (c[0] + o[0], c[1] + o[1])
-            elif func in ("max", "min", "count_distinct"):
-                d = c if c is not None else {}
-                for v, k in o.items():
-                    d[v] = d.get(v, 0) + k
-                    if d[v] == 0:
-                        del d[v]
-                self.cells[i] = d
-            else:
-                # dict.update: existing keys keep position, new ones append
-                # — "self's items then other's new".
-                if c is None:
-                    self.cells[i] = dict(o)
-                else:
-                    c.update(o)
-
-    def emit(self, specs) -> tuple:
-        out = []
-        for i, (_, func, _c, typ) in enumerate(specs):
-            c = self.cells[i]
-            if func in ("count_star", "count"):
-                out.append(int(c or 0))
-            elif func == "count_distinct":
-                out.append(0 if c is None else len(c))
-            elif func == "concat_distinct":
-                out.append(None if c is None else "|".join(str(v) for v in c))
-            elif func == "sum":
-                if c is None or c[1] == 0:
-                    out.append(None)
-                elif isinstance(typ, StringType):
-                    out.append(str(c[0]))
-                else:
-                    out.append(float(c[0]))
-            elif func == "sum_int":
-                out.append(None if c is None or c[1] == 0 else int(c[0]))
-            elif func == "avg_int":
-                out.append(None if c is None or c[1] == 0 else _jdiv(c[0], c[1]))
-            elif func == "weighted_avg":
-                out.append(None if c is None or c[1] == 0 else _jdiv(c[0], c[1]))
-            elif func == "max":
-                out.append(max(c) if c else None)
-            else:  # min
-                out.append(min(c) if c else None)
-        return tuple(out)
 
 
 def streaming_group_window_agg(
@@ -237,6 +118,7 @@ def streaming_group_window_agg(
     else:
         raise ValueError(f"unknown group window kind {kind!r}")
 
+    specs = AggSpecs(aggs, changelog=rowkind_col is not None)
     nspecs = len(aggs)
     key_fields = [stream.schema[k] for k in keys]
     win_fields = [
@@ -254,12 +136,6 @@ def streaming_group_window_agg(
         ]
     )
     out_cols = [f.name for f in out_schema.fields]
-
-    def _ms(t) -> int:
-        return t.value // 1_000_000 if hasattr(t, "value") else int(t.timestamp() * 1000)
-
-    def _ts(ms: int) -> pd.Timestamp:
-        return pd.Timestamp(ms * 1_000_000)
 
     def assign(ts_ms: int) -> list[tuple[int, int]]:
         if kind == "tumble":
@@ -288,8 +164,8 @@ def streaming_group_window_agg(
         out: list[tuple] = []
 
         def row_head(kindmark, ws, we):
-            wt = (_ts(we - 1),) if emit_window_time else ()
-            return (kindmark, *key, _ts(ws), _ts(we), *wt)
+            wt = (to_ts(we - 1),) if emit_window_time else ()
+            return (kindmark, *key, to_ts(ws), to_ts(we), *wt)
 
         def fire(refire_only: bool = False) -> None:
             for (ws, we), slot in sorted(wins.items()):
@@ -297,7 +173,7 @@ def streaming_group_window_agg(
                     continue
                 acc, emitted = slot
                 live = acc.n > 0
-                vals = acc.emit(aggs) if live else None
+                vals = acc.emit(specs) if live else None
                 if emitted is None:
                     if not refire_only or allowed_lateness_ms > 0:
                         if live:
@@ -325,14 +201,15 @@ def streaming_group_window_agg(
                 # positional itertuples: no per-row dict allocation in
                 # the per-row hot loop (runs once per input row at any
                 # scale — same treatment as the window-TVF agg)
-                col_pos = {c: j for j, c in enumerate(pdf.columns)}
-                rk_pos = col_pos[rowkind_col] if rowkind_col else None
-                ts_pos = col_pos[ts_col]
+                cols = list(pdf.columns)
+                plan = specs.plan(cols)
+                rk_pos = cols.index(rowkind_col) if rowkind_col else None
+                ts_pos = cols.index(ts_col)
                 for tup in pdf.itertuples(index=False, name=None):
                     sign = 1
                     if rk_pos is not None:
                         sign = -1 if tup[rk_pos] in (UPDATE_BEFORE, DELETE) else 1
-                    ts_ms = _ms(tup[ts_pos])
+                    ts_ms = to_ms(tup[ts_pos])
                     for ws, we in assign(ts_ms):
                         if wm_chk >= we - 1 + allowed_lateness_ms:
                             continue  # beyond the lateness horizon
@@ -348,18 +225,18 @@ def streaming_group_window_agg(
                                 for w in wins
                                 if w[0] < we and ws < w[1] and wins[w][1] is None
                             ]
-                            acc = _RAcc(nspecs)
+                            acc = Accumulator(nspecs)
                             for w in overlap:
                                 o_acc, _em = wins.pop(w)
-                                acc.merge(aggs, o_acc)
+                                acc.merge(specs, o_acc)
                                 ws, we = min(ws, w[0]), max(we, w[1])
-                            acc.add(aggs, None, sign, tup=tup, col_pos=col_pos)
+                            acc.add(plan, tup, sign)
                             wins[(ws, we)] = [acc, None]
                         else:
                             slot = wins.get((ws, we))
                             if slot is None:
-                                slot = wins[(ws, we)] = [_RAcc(nspecs), None]
-                            slot[0].add(aggs, None, sign, tup=tup, col_pos=col_pos)
+                                slot = wins[(ws, we)] = [Accumulator(nspecs), None]
+                            slot[0].add(plan, tup, sign)
 
         if input_settled:
             accumulate()

@@ -8,7 +8,7 @@ retract-capable accumulators the reference implements as separate
 classes:
 
 - Max/MinWithRetractAggFunction — value->count multiset, extremum of
-  live keys;
+  live keys (a scalar cell when the input is append-only);
 - distinct aggregates over a changelog (COUNT/SUM/AVG/MAX/MIN
   DISTINCT — the DistinctViewSpec path): the same multiset, aggregated
   over its KEYS;
@@ -28,13 +28,13 @@ from __future__ import annotations
 
 import pickle
 from collections.abc import Iterator, Sequence
-from decimal import Decimal
 
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from pyspark.sql.types import StringType, StructField, StructType
 
+from flink_release_1_16_0_spark.streaming.accumulators import Accumulator, AggSpecs
 from flink_release_1_16_0_spark.streaming.changelog import (
     DELETE,
     INSERT,
@@ -59,104 +59,6 @@ _FUNCS = (
     "listagg",
 )
 
-_MULTISET = (
-    "max",
-    "min",
-    "count_distinct",
-    "sum_distinct_int",
-    "avg_distinct_int",
-    "max_distinct",
-    "min_distinct",
-)
-
-
-def _jdiv(a: int, b: int) -> int:
-    q = abs(a) // abs(b)
-    return q if (a >= 0) == (b >= 0) else -q
-
-
-class _Cells:
-    __slots__ = ("n", "cells")
-
-    def __init__(self, nspecs: int):
-        self.n = 0
-        self.cells = [None] * nspecs
-
-    def add(self, specs, row, sign: int, tup=None, col_pos=None) -> None:
-        self.n += sign
-        for i, spec in enumerate(specs):
-            func, col = spec[1], spec[2]
-            if col is None:
-                v = None
-            elif tup is not None:
-                v = tup[col_pos[col]]
-            else:
-                v = row[col]
-            if v is not None and isinstance(v, float) and v != v:
-                v = None
-            c = self.cells[i]
-            if func == "count_star":
-                self.cells[i] = (c or 0) + sign
-            elif v is None:
-                continue
-            elif func == "count":
-                self.cells[i] = (c or 0) + sign
-            elif func == "sum":
-                s, k = c if c is not None else (Decimal(0), 0)
-                self.cells[i] = (s + sign * Decimal(str(v)), k + sign)
-            elif func in ("sum_int", "avg_int"):
-                s, k = c if c is not None else (0, 0)
-                self.cells[i] = (s + sign * int(v), k + sign)
-            elif func in _MULTISET:
-                d = c if c is not None else {}
-                d[v] = d.get(v, 0) + sign
-                if d[v] == 0:
-                    del d[v]
-                self.cells[i] = d
-            else:  # listagg: ordered, retract removes FIRST occurrence
-                lst = c if c is not None else []
-                if sign > 0:
-                    lst.append(v)
-                else:
-                    try:
-                        lst.remove(v)
-                    except ValueError:
-                        pass  # the reference logs and continues
-                self.cells[i] = lst
-
-    def emit(self, specs) -> tuple:
-        out = []
-        for i, spec in enumerate(specs):
-            func = spec[1]
-            c = self.cells[i]
-            if func in ("count_star", "count"):
-                out.append(int(c or 0))
-            elif func == "sum":
-                if c is None or c[1] == 0:
-                    out.append(None)
-                else:
-                    out.append(str(c[0]))
-            elif func == "sum_int":
-                out.append(None if c is None or c[1] == 0 else int(c[0]))
-            elif func == "avg_int":
-                out.append(None if c is None or c[1] == 0 else _jdiv(c[0], c[1]))
-            elif func == "count_distinct":
-                out.append(0 if c is None else len(c))
-            elif func == "sum_distinct_int":
-                out.append(None if not c else sum(int(v) for v in c))
-            elif func == "avg_distinct_int":
-                out.append(
-                    None if not c else _jdiv(sum(int(v) for v in c), len(c))
-                )
-            elif func in ("max", "max_distinct"):
-                out.append(max(c) if c else None)
-            elif func in ("min", "min_distinct"):
-                out.append(min(c) if c else None)
-            else:  # listagg — spec[4] is the delimiter (default ',')
-                delim = spec[4] if len(spec) > 4 else ","
-                out.append(delim.join(str(v) for v in c) if c else None)
-        return tuple(out)
-
 
 def streaming_retracting_multi_agg(
     stream: DataFrame,
@@ -168,8 +70,9 @@ def streaming_retracting_multi_agg(
 ) -> DataFrame:
     """Unbounded retracting group agg over an append or changelog
     input. ``aggs``: (out_name, func, col, out_type[, listagg_delim]).
-    Output: __rowkind + keys + agg columns; SUM(decimal) emits its
-    exact value as a string (cast downstream).
+    Output: __rowkind + keys + agg columns; SUM emits its exact
+    Decimal value per out_type (a STRING out_type keeps it exact for a
+    downstream cast).
     """
     for a in aggs:
         if a[1] not in _FUNCS:
@@ -183,7 +86,7 @@ def streaming_retracting_multi_agg(
         ]
     )
     out_cols = [f.name for f in out_schema.fields]
-    nspecs = len(aggs)
+    specs = AggSpecs(aggs, changelog=rowkind_col is not None)
 
     def fn(
         key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
@@ -191,7 +94,7 @@ def streaming_retracting_multi_agg(
         if state.exists:
             acc, emitted = pickle.loads(state.get[0])
         else:
-            acc, emitted = _Cells(nspecs), None
+            acc, emitted = Accumulator(len(aggs)), None
         for pdf in pdfs:
             if len(pdf) == 0:
                 continue
@@ -199,13 +102,14 @@ def streaming_retracting_multi_agg(
                 pdf = pdf.sort_values(seq_col, kind="mergesort")
             # positional itertuples: no per-row dict allocation in the
             # unbounded-agg hot loop (same treatment as the window agg).
-            col_pos = {c: j for j, c in enumerate(pdf.columns)}
-            rk_pos = None if rowkind_col is None else col_pos[rowkind_col]
+            cols = list(pdf.columns)
+            plan = specs.plan(cols)
+            rk_pos = None if rowkind_col is None else cols.index(rowkind_col)
             for tup in pdf.itertuples(index=False, name=None):
                 sign = 1
                 if rk_pos is not None:
                     sign = -1 if tup[rk_pos] in (UPDATE_BEFORE, DELETE) else 1
-                acc.add(aggs, None, sign, tup=tup, col_pos=col_pos)
+                acc.add(plan, tup, sign)
         out: list[tuple] = []
         if acc.n <= 0:
             if emitted is not None:
@@ -213,7 +117,7 @@ def streaming_retracting_multi_agg(
             if state.exists:
                 state.remove()
         else:
-            vals = acc.emit(aggs)
+            vals = acc.emit(specs)
             if emitted is None:
                 out.append((INSERT, *key, *vals))
             elif vals != emitted:

@@ -1647,9 +1647,9 @@ def streaming_retracting_minmax(
     (MinWithRetractAggFunction / MaxWithRetractAggFunction: plain
     min/max cannot handle deletes, so the accumulator is a
     MapState<value, count> multiset). State here is exactly that
-    value->count map (cents-keyed: the fixture's 2-decimal grid makes
-    integer keys exact); every batch emits the current extrema with a
-    monotone version so the converged state is the max-version row.
+    value->count map, keyed on the value itself; every batch emits the
+    current extrema with a monotone version so the converged state is
+    the max-version row.
     Add/remove commute, so the converged multiset — and its min/max —
     is independent of batch slicing and arrival order.
     """
@@ -1671,7 +1671,7 @@ def streaming_retracting_minmax(
             StructField("max_v", DoubleType()),
         ]
     )
-    entry = ST([StructField("cents", LongType()), StructField("cnt", LongType())])
+    entry = ST([StructField("value", DoubleType()), StructField("cnt", LongType())])
     state_schema = ST(
         [StructField("bag", ArrayType(entry)), StructField("version", LongType())]
     )
@@ -1681,23 +1681,22 @@ def streaming_retracting_minmax(
     ) -> Iterator[pd.DataFrame]:
         if state.exists:
             bag_rows, version = state.get
-            bag = {int(c): int(n) for c, n in (bag_rows or [])}
+            bag = {float(v): int(n) for v, n in (bag_rows or [])}
         else:
             bag, version = {}, 0
         for pdf in pdfs:
             for kind, v in zip(pdf[kind_col], pdf[value_col]):
-                cents = int(round(float(v) * 100))
+                v = float(v)
                 delta = 1 if kind in ("+I", "+U") else -1
-                nxt = bag.get(cents, 0) + delta
+                nxt = bag.get(v, 0) + delta
                 if nxt == 0:
-                    bag.pop(cents, None)
+                    bag.pop(v, None)
                 else:
-                    bag[cents] = nxt
+                    bag[v] = nxt
         version += 1
-        state.update(([(c, n) for c, n in bag.items()], version))
+        state.update(([(v, n) for v, n in bag.items()], version))
         if bag:
-            lo, hi = min(bag), max(bag)
-            row = (*key, version, sum(bag.values()), lo / 100.0, hi / 100.0)
+            row = (*key, version, sum(bag.values()), min(bag), max(bag))
         else:
             row = (*key, version, 0, None, None)
         yield pd.DataFrame(

@@ -38,7 +38,6 @@ from __future__ import annotations
 
 import pickle
 from collections.abc import Iterator, Sequence
-from decimal import Decimal
 from math import gcd
 
 import pandas as pd
@@ -46,13 +45,13 @@ from pyspark.sql import DataFrame
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from pyspark.sql.types import (
     DataType,
-    DoubleType,
     LongType,
-    StringType,
     StructField,
     StructType,
     TimestampType,
 )
+
+from flink_release_1_16_0_spark.streaming.accumulators import Accumulator, AggSpecs
 
 _AGG_FUNCS = (
     "count_star",
@@ -67,12 +66,18 @@ _AGG_FUNCS = (
 
 def window_start_with_offset(ts_ms: int, offset_ms: int, size_ms: int) -> int:
     """TimeWindow.getWindowStartWithOffset — offset may be negative and
-    the remainder must stay non-negative (Java's % differs from
-    Python's for negatives; this is the Java-faithful form)."""
-    remainder = (ts_ms - offset_ms) % size_ms
-    if remainder < 0:
-        remainder += size_ms  # unreachable in Python (% is floored) but explicit
-    return ts_ms - remainder
+    the remainder must stay non-negative (Java adds ``size`` to a
+    negative remainder; Python's floored % never yields one)."""
+    return ts_ms - (ts_ms - offset_ms) % size_ms
+
+
+def to_ms(t) -> int:
+    """Epoch milliseconds of a pandas/datetime timestamp cell."""
+    return t.value // 1_000_000 if hasattr(t, "value") else int(t.timestamp() * 1000)
+
+
+def to_ts(ms: int) -> pd.Timestamp:
+    return pd.Timestamp(ms * 1_000_000)
 
 
 class _Assigner:
@@ -134,96 +139,6 @@ class _Assigner:
         return list(range(max(slice_end, g + self.step), g + self.size + 1, self.step))
 
 
-class _Acc:
-    """One slice's accumulator: row count + one cell per agg spec."""
-
-    __slots__ = ("n", "cells")
-
-    def __init__(self, nspecs: int):
-        self.n = 0
-        self.cells = [None] * nspecs
-
-    def add_tuple(self, specs, tup, col_pos) -> None:
-        """Positional-tuple twin of :meth:`add` for the hot loop."""
-        self.add(specs, None, tup=tup, col_pos=col_pos)
-
-    def add(self, specs, row, tup=None, col_pos=None) -> None:
-        self.n += 1
-        for i, (_, func, col, _t) in enumerate(specs):
-            if col is None:
-                v = None
-            elif tup is not None:
-                v = tup[col_pos[col]]
-            else:
-                v = row[col]
-            if v is not None and isinstance(v, float) and v != v:  # NaN from pandas null
-                v = None
-            c = self.cells[i]
-            if func == "count_star":
-                self.cells[i] = (c or 0) + 1
-            elif v is None:
-                continue
-            elif func == "count":
-                self.cells[i] = (c or 0) + 1
-            elif func == "sum":
-                self.cells[i] = (c if c is not None else Decimal(0)) + Decimal(str(v))
-            elif func == "max":
-                self.cells[i] = v if c is None else max(c, v)
-            elif func == "min":
-                self.cells[i] = v if c is None else min(c, v)
-            else:  # count_distinct / concat_distinct: insertion-ordered
-                # distinct set (dict keys — O(1) membership; the reference
-                # uses a MapView-backed distinct accumulator for the same
-                # reason: list + `not in` is O(d) per row).
-                if c is None:
-                    self.cells[i] = {v: True}
-                else:
-                    c.setdefault(v, True)
-
-    def merge(self, specs, other: "_Acc") -> None:
-        """Append ``other`` into self (AggsHandleFunction.merge — the
-        ConcatDistinct list order is self's items then other's new)."""
-        self.n += other.n
-        for i, (_, func, _col, _t) in enumerate(specs):
-            o = other.cells[i]
-            if o is None:
-                continue
-            c = self.cells[i]
-            if func in ("count_star", "count"):
-                self.cells[i] = (c or 0) + o
-            elif func == "sum":
-                self.cells[i] = (c if c is not None else Decimal(0)) + o
-            elif func == "max":
-                self.cells[i] = o if c is None else max(c, o)
-            elif func == "min":
-                self.cells[i] = o if c is None else min(c, o)
-            else:
-                # dict.update keeps existing keys in place and appends new
-                # ones — exactly "self's items then other's new".
-                if c is None:
-                    self.cells[i] = dict(o)
-                else:
-                    c.update(o)
-
-    def emit(self, specs) -> list:
-        out = []
-        for i, (_, func, _col, typ) in enumerate(specs):
-            c = self.cells[i]
-            if func in ("count_star", "count"):
-                out.append(int(c or 0))
-            elif func == "count_distinct":
-                out.append(0 if c is None else len(c))
-            elif func == "concat_distinct":
-                out.append(None if c is None else "|".join(str(v) for v in c))
-            elif func == "sum" and isinstance(typ, DoubleType):
-                out.append(None if c is None else float(c))
-            elif func == "sum" and isinstance(typ, StringType):
-                out.append(None if c is None else str(c))
-            else:
-                out.append(c)
-        return out
-
-
 def streaming_window_tvf_agg(
     stream: DataFrame,
     keys: Sequence[str],
@@ -249,7 +164,8 @@ def streaming_window_tvf_agg(
     ``aggs``: (out_name, func, in_col, out_type) with func one of
     count_star | count | sum | max | min | count_distinct |
     concat_distinct. SUM accumulates exactly in Decimal; emitted as
-    float when out_type is DOUBLE, as Decimal otherwise.
+    str when out_type is STRING, float when DOUBLE/FLOAT, as Decimal
+    otherwise.
 
     Emission: a window fires once its end passes the isWindowFired
     boundary (wm >= end - 1) and it holds >= 1 row; +I only — a fired
@@ -261,6 +177,7 @@ def streaming_window_tvf_agg(
         if a[1] not in _AGG_FUNCS:
             raise ValueError(f"unsupported window agg func {a[1]!r}")
     asg = _Assigner(kind, size_ms, slide_ms, step_ms, offset_ms)
+    specs = AggSpecs(aggs, changelog=False)
     nspecs = len(aggs)
     key_fields = [stream.schema[k] for k in keys]
     win_fields = [
@@ -279,9 +196,7 @@ def streaming_window_tvf_agg(
     out_cols = [f.name for f in out_schema.fields]
     in_cols = [ts_col] + [c for _, _, c, _ in aggs if c is not None]
     in_cols = list(dict.fromkeys(in_cols))
-
-    def _ts(ms: int) -> pd.Timestamp:
-        return pd.Timestamp(ms * 1_000_000)
+    plan = specs.plan(in_cols)
 
     def fn(
         key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
@@ -294,9 +209,9 @@ def streaming_window_tvf_agg(
 
         out: list[tuple] = []
 
-        def _row(ws: int, we: int, acc: _Acc) -> tuple:
-            wt = (_ts(we - 1),) if emit_window_time else ()
-            return (*key, _ts(ws), _ts(we), *wt, *acc.emit(aggs))
+        def _row(ws: int, we: int, acc: Accumulator) -> tuple:
+            wt = (to_ts(we - 1),) if emit_window_time else ()
+            return (*key, to_ts(ws), to_ts(we), *wt, *acc.emit(specs))
 
         def fire() -> None:
             # The reference's timers run on watermark advance: a window
@@ -318,12 +233,12 @@ def streaming_window_tvf_agg(
                     if acc is not None and acc.n > 0:
                         out.append(_row(e - size_ms, e, acc))
                 elif kind == "hop":
-                    merged = _Acc(nspecs)
+                    merged = Accumulator(nspecs)
                     # descending slice ends (HoppingSlicesIterable)
                     for se in range(e, e - size_ms, -asg.slice):
                         s = slices.get(se)
                         if s is not None:
-                            merged.merge(aggs, s)
+                            merged.merge(specs, s)
                     if merged.n > 0:
                         out.append(_row(e - size_ms, e, merged))
                     # expire the window's first slice — no later window
@@ -341,8 +256,8 @@ def streaming_window_tvf_agg(
                         step_acc = slices.pop(e, None)
                         if step_acc is not None:
                             if target is None:
-                                target = slices[first] = _Acc(nspecs)
-                            target.merge(aggs, step_acc)
+                                target = slices[first] = Accumulator(nspecs)
+                            target.merge(specs, step_acc)
                     if target is not None and target.n > 0:
                         out.append(_row(g, e, target))
                     if e == g + size_ms:  # max window: retire shared state
@@ -356,28 +271,20 @@ def streaming_window_tvf_agg(
             # itself, cumulate -> the shared first slice).
             # itertuples + positional cells: the per-row hot loop runs
             # once per input row at any scale, so no per-row dict
-            # allocation.
-            col_pos = {c: i for i, c in enumerate(in_cols)}
-            ts_pos = col_pos[ts_col]
+            # allocation. ts_col is in_cols[0].
             for pdf in pdfs:
                 if len(pdf) == 0:
                     continue
                 for tup in pdf[in_cols].itertuples(index=False, name=None):
-                    t = tup[ts_pos]
-                    ts_ms = (
-                        t.value // 1_000_000
-                        if hasattr(t, "value")
-                        else int(t.timestamp() * 1000)
-                    )
-                    se = asg.assign_slice_end(ts_ms)
+                    se = asg.assign_slice_end(to_ms(tup[0]))
                     if late_wm >= asg.last_window_end(se) - 1:
                         continue  # late: every window containing it fired
                     if kind == "cumulate" and late_wm >= se - 1:
                         se = asg.group_start(se) + asg.step  # merge target
                     acc = slices.get(se)
                     if acc is None:
-                        acc = slices[se] = _Acc(nspecs)
-                    acc.add_tuple(aggs, tup, col_pos)
+                        acc = slices[se] = Accumulator(nspecs)
+                    acc.add(plan, tup)
 
         if input_attributed:
             # window-attributed input (e.g. a cascade over an upstream
@@ -514,12 +421,6 @@ def streaming_window_tvf_join(
     )
     out_cols = [f.name for f in out_schema.fields]
 
-    def _ms(t) -> int:
-        return t.value // 1_000_000 if hasattr(t, "value") else int(t.timestamp() * 1000)
-
-    def _ts(ms: int) -> pd.Timestamp:
-        return pd.Timestamp(ms * 1_000_000)
-
     l_nulls = [None] * len(lpay)
     r_nulls = [None] * len(rpay)
 
@@ -550,12 +451,12 @@ def streaming_window_tvf_join(
                     ts_pos = col_pos[ts_col]
                 for tup in pdf.itertuples(index=False, name=None):
                     if input_attributed:
-                        e = _ms(tup[we_pos])
+                        e = to_ms(tup[we_pos])
                         if settled_wm is not None and settled_wm >= e - 1:
                             continue
-                        ends = [(e, _ms(tup[ws_pos]))]
+                        ends = [(e, to_ms(tup[ws_pos]))]
                     else:
-                        se = asg.assign_slice_end(_ms(tup[ts_pos]))
+                        se = asg.assign_slice_end(to_ms(tup[ts_pos]))
                         if wm >= asg.last_window_end(se) - 1:
                             continue
                         ends = [
@@ -577,8 +478,8 @@ def streaming_window_tvf_join(
             )
             for e in ready:
                 ws, lrows, rrows = wins.pop(e)
-                wt = (_ts(e - 1),) if emit_window_time else ()
-                head = (*key, _ts(ws), _ts(e), *wt)
+                wt = (to_ts(e - 1),) if emit_window_time else ()
+                head = (*key, to_ts(ws), to_ts(e), *wt)
                 if join_type == "anti_null_aware":
                     # NOT IN: any right NULL suppresses the window;
                     # NULL left values never satisfy NOT IN
@@ -745,12 +646,6 @@ def streaming_window_tvf_topn(
     in_pos = [pos[c] for c in in_names]
     ws_pos = pos.get("window_start")
 
-    def _ms(t) -> int:
-        return t.value // 1_000_000 if hasattr(t, "value") else int(t.timestamp() * 1000)
-
-    def _ts(ms: int) -> pd.Timestamp:
-        return pd.Timestamp(ms * 1_000_000)
-
     def fn(
         key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
     ) -> Iterator[pd.DataFrame]:
@@ -774,14 +669,14 @@ def streaming_window_tvf_topn(
                     ts_pos = pos[ts_col]
                 for tup in it:
                     if input_attributed:
-                        e = _ms(tup[we_pos])
+                        e = to_ms(tup[we_pos])
                         # fired in an EARLIER batch -> late; same-batch
                         # firings still accept (records precede the wm)
                         if settled_wm is not None and settled_wm >= e - 1:
                             continue
                         ends = [e]
                     else:
-                        se = asg.assign_slice_end(_ms(tup[ts_pos]))
+                        se = asg.assign_slice_end(to_ms(tup[ts_pos]))
                         if wm >= asg.last_window_end(se) - 1:
                             continue  # every window containing it fired
                         ends = [e for e in asg.candidate_ends(se) if wm < e - 1]
@@ -801,15 +696,15 @@ def streaming_window_tvf_topn(
             for e in ready:
                 buf = sorted(wins.pop(e), key=skey)
                 if input_attributed:
-                    ws = _ms(buf[0][ws_pos])
+                    ws = to_ms(buf[0][ws_pos])
                 else:
                     ws = asg.window_starts(e)
                 for rank, row in enumerate(buf, start=1):
                     if rank < rank_start or rank > rank_end:
                         continue
-                    vals = [*key, *(row[p] for p in in_pos), _ts(ws), _ts(e)]
+                    vals = [*key, *(row[p] for p in in_pos), to_ts(ws), to_ts(e)]
                     if emit_window_time:
-                        vals.append(_ts(e - 1))
+                        vals.append(to_ts(e - 1))
                     if emit_rownum:
                         vals.append(rank)
                     out.append(tuple(vals))

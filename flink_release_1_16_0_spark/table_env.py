@@ -49,6 +49,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
 from flink_release_1_16_0_spark.functions.sql_udfs import register_sql_functions
+from flink_release_1_16_0_spark.operators.grouped import grouped_apply
 from flink_release_1_16_0_spark.operators.sink import enforce_constraints
 from flink_release_1_16_0_spark.sources import file_source
 
@@ -1782,8 +1783,6 @@ class GroupedTable:
         """
         import pandas as pd
 
-        from flink_release_1_16_0_spark.datastream.stream import _grouped_apply
-
         keys = [k.strip() for k in self._keys.split(",")]
         in_types = {f.name: f for f in self._df.schema.fields}
         missing = [k for k in keys if k not in in_types]
@@ -1811,7 +1810,7 @@ class GroupedTable:
             row.update({n: res[n] for n in agg_names})
             return [row]  # list return: one output frame per Arrow batch
 
-        return AggregatedTable(_grouped_apply(self._df, keys, harness, full), self._tenv)
+        return AggregatedTable(grouped_apply(self._df, keys, harness, full), self._tenv)
 
 
 class AggregatedTable:
@@ -2083,8 +2082,6 @@ class WindowGroupedTable:
         native epoch arithmetic before the shuffle."""
         import pandas as pd
 
-        from flink_release_1_16_0_spark.datastream.stream import _grouped_apply
-
         assigned, gcols, full, agg_names = self._assign_window(schema)
 
         def harness(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
@@ -2102,7 +2099,7 @@ class WindowGroupedTable:
             return [row]  # list return: one output frame per Arrow batch
 
         return WindowAggregatedTable(
-            _grouped_apply(assigned, gcols, harness, full), self._window, self._tenv
+            grouped_apply(assigned, gcols, harness, full), self._window, self._tenv
         )
 
     def flat_aggregate(self, fn, schema: str) -> "WindowAggregatedTable":
@@ -2112,8 +2109,6 @@ class WindowGroupedTable:
         columns; the group keys and window bounds are prepended to every
         emitted row."""
         import pandas as pd
-
-        from flink_release_1_16_0_spark.datastream.stream import _grouped_apply
 
         assigned, gcols, full, names = self._assign_window(schema)
 
@@ -2127,7 +2122,7 @@ class WindowGroupedTable:
             return out
 
         return WindowAggregatedTable(
-            _grouped_apply(assigned, gcols, harness, full), self._window, self._tenv
+            grouped_apply(assigned, gcols, harness, full), self._window, self._tenv
         )
 
 

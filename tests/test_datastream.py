@@ -710,7 +710,7 @@ def test_facade_plan_topology(env, clicks):
     assert plan.count("Exchange") == 1
     # keyed process: exactly one exchange feeding the pandas harness —
     # the group-amortized lowering (repartition + in-partition sort +
-    # mapInPandas, see _grouped_apply) shuffles once like applyInPandas
+    # mapInPandas, see grouped_apply) shuffles once like applyInPandas
     # but pays one Python invocation per Arrow batch, not per group
     out = clicks.key_by("user").process(GapSessionCounter(), "user STRING, session_n INT")
     plan2 = out.to_data_frame()._jdf.queryExecution().executedPlan().toString()

@@ -100,12 +100,13 @@ def test_python_operator_from_foreign_cwd(tmp_path):
         sys.path.insert(0, sys.argv[1])
         import pandas as pd
         from flink_release_1_16_0_spark import get_spark
-        from flink_release_1_16_0_spark.datastream.stream import _row_iter, _to_pdf
+        from flink_release_1_16_0_spark.datastream.stream import _row_iter
+        from flink_release_1_16_0_spark.operators.grouped import to_pdf
 
         spark = get_spark("foreign-cwd")
         df = spark.createDataFrame(pd.DataFrame({"k": [1, 1, 2], "v": [1, 2, 3]}))
         out = df.groupBy("k").applyInPandas(
-            lambda pdf: _to_pdf(list(_row_iter(pdf)), ["k", "v"]), "k long, v long"
+            lambda pdf: to_pdf(list(_row_iter(pdf)), ["k", "v"]), "k long, v long"
         )
         print(sorted(tuple(r) for r in out.collect()))
         spark.stop()

@@ -25,6 +25,7 @@ sys.path.insert(0, "/root/repo")
 from flink_release_1_16_0_spark import get_spark, register_tables  # noqa: E402
 from flink_release_1_16_0_spark.catalog import TABLES  # noqa: E402
 from flink_release_1_16_0_spark.queries import load_registry  # noqa: E402
+from flink_release_1_16_0_spark.session import host_mem_mib  # noqa: E402
 
 
 def _normalize(df: pd.DataFrame) -> pd.DataFrame:
@@ -203,10 +204,11 @@ def main() -> int:
     # Bound DuckDB's native memory and let it SPILL instead of OOMing:
     # the sf1 sweep's recursive-CTE / all-pairs oracles can balloon past
     # the host's RAM next to the Spark JVM (a 10x fixture OOM-killed the
-    # whole sweep once). Slower oracle > dead sweep.
+    # whole sweep once). Slower oracle > dead sweep. The default is a
+    # quarter of MemTotal: get_spark already gives the driver half.
     import os as _os
 
-    mem = _os.environ.get("ORACLE_DUCKDB_MEM", "32GB")
+    mem = _os.environ.get("ORACLE_DUCKDB_MEM", f"{host_mem_mib() // 4}MiB")
     spill = _os.environ.get("ORACLE_DUCKDB_TMP", "/tmp/duckdb_spill")
     _os.makedirs(spill, exist_ok=True)
     con.execute(f"PRAGMA memory_limit='{mem}'")

@@ -211,6 +211,12 @@ def qval(rng: random.Random) -> float:
     return rng.randrange(-400, 400) / 4.0  # exact in binary
 
 
+def eighth(rng: random.Random) -> float:
+    """Off the cent grid (0.125 is not a whole number of cents), exact
+    in binary."""
+    return rng.randrange(-800, 800) / 8.0
+
+
 # --------------------------------------------------------------------------
 # arms: capture + reference interpreter + adjudicate
 # --------------------------------------------------------------------------
@@ -339,7 +345,7 @@ def check_minmax(rng: random.Random) -> str | None:
         streaming_retracting_minmax,
     )
 
-    events = gen_program(rng, rng.randint(4, 40), rng.randint(1, 4), qval)
+    events = gen_program(rng, rng.randint(4, 40), rng.randint(1, 4), eighth)
     cap = _Cap(_schema(f"{ROWKIND} STRING, k BIGINT, v DOUBLE"))
     streaming_retracting_minmax(cap, keys=["k"], value_col="v")
     rows = [(kind, k, v) for kind, k, v in events]
