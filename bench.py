@@ -27,8 +27,9 @@ import json
 import os
 import sys
 import time
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, str(Path(__file__).resolve().parent))
 
 from flink_release_1_16_0_spark import get_spark  # noqa: E402
 from flink_release_1_16_0_spark.queries import load_registry  # noqa: E402

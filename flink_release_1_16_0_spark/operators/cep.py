@@ -525,7 +525,10 @@ def nfa_try_match(
                 own.extend(rows[j] for j in cur_taken)
                 sync[0], sync[1] = cur_taken, len(cur_taken)
             elif len(cur_taken) != sync[1]:
-                # the loop scan appends to the SAME list one row at a time
+                # the loop scan appends to the SAME list one row at a
+                # time; cut past its end first so a list shrunk in
+                # place leaves no stale rows
+                del own[n_base + len(cur_taken):]
                 own.extend(rows[j] for j in cur_taken[sync[1]:])
                 sync[1] = len(cur_taken)
             return bool(pred(rows[i], ctx))

@@ -258,10 +258,14 @@ GROUP BY p_brand, p_type, p_size
 # Spark-side twin: NOT IN spelled as NOT EXISTS — Spark's null-aware
 # anti join (the NOT IN plan) can only broadcast its subquery side,
 # which scales with SF here (supplier); the NOT EXISTS anti join
-# degrades to sort-merge past the threshold. Equivalent on data with
-# non-null supplier/lineitem keys (TPC-H keys are non-null by spec);
-# the ORACLE text keeps the NOT IN, so every oracle run re-proves it.
-# Round-14; pinned by test_semi_anti_fact_broadcast_degrades.
+# degrades to sort-merge past the threshold. NOT EXISTS keeps a NULL
+# l_suppkey line that NOT IN drops, so the twin drops it explicitly
+# (exact while the subquery is non-empty: NULL NOT IN () is TRUE). A
+# NULL s_suppkey, the supplier primary key, is assumed impossible: it
+# would make every NOT IN row NULL. The ORACLE text keeps the NOT IN,
+# so every oracle run re-proves the rewrite. Pinned by
+# test_semi_anti_fact_broadcast_degrades (plan) and
+# test_q16_null_suppkey_matches_not_in (NULL keys).
 _Q16_SPARK_SQL = """
 SELECT p_brand, p_type, p_size,
        CAST(COUNT(DISTINCT l_suppkey) AS BIGINT) AS supplier_cnt
@@ -269,6 +273,7 @@ FROM lineitem JOIN part ON p_partkey = l_partkey
 WHERE p_brand <> 'Brand#1'
   AND p_type <> 'PROMO'
   AND p_size IN (1, 4, 7, 10, 13, 16, 19, 22)
+  AND l_suppkey IS NOT NULL
   AND NOT EXISTS (
     SELECT 1 FROM supplier
     WHERE s_suppkey = l_suppkey AND s_acctbal < 0

@@ -48,6 +48,9 @@ from pyspark.sql.types import (
     _parse_datatype_string,
 )
 
+from flink_release_1_16_0_spark.streaming.event_buffer import py_values
+from flink_release_1_16_0_spark.streaming.window_tvf import to_ms
+
 
 def streaming_cep_within(
     stream: DataFrame,
@@ -175,23 +178,8 @@ def streaming_cep_within(
     )
     slice_cols = ["__ts", "__id", "__sym", *value_cols]
 
-    def make_conv(dt):
-        name = dt.typeName()
-        if name in ("long", "integer", "short", "byte"):
-            return lambda v: None if pd.isna(v) else int(v)
-        if name in ("double", "float"):
-            return lambda v: None if pd.isna(v) else float(v)
-        if name.startswith("timestamp"):
-            return lambda v: None if pd.isna(v) else pd.Timestamp(v)
-        return lambda v: None if (v is None or (isinstance(v, float) and pd.isna(v))) else v
-
-    convs = [make_conv(f.dataType) for f in val_fields]
-
     def col_name(c: str) -> str:
         return "__ts" if c == ts_col else "__id" if c == id_col else c
-
-    def ms(t) -> int:
-        return pd.Timestamp(t).value // 1_000_000
 
     def fn(
         key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
@@ -207,21 +195,15 @@ def streaming_cep_within(
         for pdf in pdfs:
             if len(pdf) == 0:
                 continue
-            for tup in pdf[slice_cols].itertuples(index=False, name=None):
-                if ms(tup[0]) <= wm:
+            vals = [py_values(pdf[f.name], f.dataType) for f in val_fields]
+            for t, i, sym, *vs in zip(pdf["__ts"], pdf["__id"], pdf["__sym"], *vals):
+                if to_ms(t) <= wm:
                     continue  # late beyond the watermark: dropped
-                pending.append(
-                    (
-                        pd.Timestamp(tup[0]),
-                        int(tup[1]),
-                        str(tup[2]),
-                        *[c(v) for c, v in zip(convs, tup[3:])],
-                    )
-                )
+                pending.append((pd.Timestamp(t), int(i), str(sym), *vs))
         settled = sorted(
-            (p for p in pending if ms(p[0]) <= wm), key=lambda p: (p[0].value, p[1])
+            (p for p in pending if to_ms(p[0]) <= wm), key=lambda p: (p[0].value, p[1])
         )
-        unsettled = [p for p in pending if ms(p[0]) > wm]
+        unsettled = [p for p in pending if to_ms(p[0]) > wm]
 
         sym = "".join(p[2] for p in settled)
         ts_ns = np.array([p[0].value for p in settled], dtype="int64")
@@ -235,7 +217,7 @@ def streaming_cep_within(
             e_max = int(ts_ns.searchsorted(ts_ns[s] + bound_ns, "left"))
             m = rx.match(sym, s, e_max)
             if m and m.end() > m.start():
-                if ms(settled[s][0]) + within_ms <= wm:
+                if to_ms(settled[s][0]) + within_ms <= wm:
                     if all_rows:
                         sdf = pd.DataFrame(
                             settled[m.start() : m.end()], columns=slice_cols
@@ -310,7 +292,7 @@ def streaming_cep_within(
         # retire unconsumed settled rows outside the WITHIN horizon:
         # provably unreachable by any future match (module docstring)
         retained = [
-            p for p in settled[consumed:] if ms(p[0]) + within_ms > wm
+            p for p in settled[consumed:] if to_ms(p[0]) + within_ms > wm
         ] + unsettled
         state.update((retained, int(match_no)))
         if retained:
@@ -412,23 +394,8 @@ def streaming_cep_nfa_within(
     )
     slice_cols = ["__ts", "__id", *value_cols]
 
-    def make_conv(dt):
-        name = dt.typeName()
-        if name in ("long", "integer", "short", "byte"):
-            return lambda v: None if pd.isna(v) else int(v)
-        if name in ("double", "float"):
-            return lambda v: None if pd.isna(v) else float(v)
-        if name.startswith("timestamp"):
-            return lambda v: None if pd.isna(v) else pd.Timestamp(v)
-        return lambda v: None if (v is None or (isinstance(v, float) and pd.isna(v))) else v
-
-    convs = [make_conv(f.dataType) for f in val_fields]
-
     def col_name(c: str) -> str:
         return "__ts" if c == ts_col else "__id" if c == id_col else c
-
-    def ms(t) -> int:
-        return pd.Timestamp(t).value // 1_000_000
 
     def fn(
         key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
@@ -444,20 +411,15 @@ def streaming_cep_nfa_within(
         for pdf in pdfs:
             if len(pdf) == 0:
                 continue
-            for tup in pdf[slice_cols].itertuples(index=False, name=None):
-                if ms(tup[0]) <= wm:
+            vals = [py_values(pdf[f.name], f.dataType) for f in val_fields]
+            for t, i, *vs in zip(pdf["__ts"], pdf["__id"], *vals):
+                if to_ms(t) <= wm:
                     continue  # late beyond the watermark: dropped
-                pending.append(
-                    (
-                        pd.Timestamp(tup[0]),
-                        int(tup[1]),
-                        *[c(v) for c, v in zip(convs, tup[2:])],
-                    )
-                )
+                pending.append((pd.Timestamp(t), int(i), *vs))
         settled = sorted(
-            (p for p in pending if ms(p[0]) <= wm), key=lambda p: (p[0].value, p[1])
+            (p for p in pending if to_ms(p[0]) <= wm), key=lambda p: (p[0].value, p[1])
         )
-        unsettled = [p for p in pending if ms(p[0]) > wm]
+        unsettled = [p for p in pending if to_ms(p[0]) > wm]
         rows = [dict(zip(slice_cols, p)) for p in settled]
         pdf_all = pd.DataFrame(settled, columns=slice_cols)
         out: list[tuple] = []
@@ -479,7 +441,7 @@ def streaming_cep_nfa_within(
         while s < len(rows):
             res = nfa_try_match(rows, s, steps, defines, within_ms)
             if res is not None and res[0] > s:
-                if ms(rows[s]["__ts"]) + within_ms <= wm:
+                if to_ms(rows[s]["__ts"]) + within_ms <= wm:
                     end, bound = res
                     out.append(measure_row(bound, False))
                     match_no += 1
@@ -489,7 +451,7 @@ def streaming_cep_nfa_within(
                     # finalizable, no later start is either
                     break
             else:
-                if emit_timeouts and ms(rows[s]["__ts"]) + within_ms <= wm:
+                if emit_timeouts and to_ms(rows[s]["__ts"]) + within_ms <= wm:
                     # expired unmatched anchor: its greedy principal
                     # partial times out NOW (the row retires from state
                     # this batch, so this fires exactly once per anchor)
@@ -501,7 +463,7 @@ def streaming_cep_nfa_within(
                         match_no += 1
                 s += 1
         retained = [
-            p for p in settled[consumed:] if ms(p[0]) + within_ms > wm
+            p for p in settled[consumed:] if to_ms(p[0]) + within_ms > wm
         ] + unsettled
         state.update((retained, int(match_no)))
         if retained:

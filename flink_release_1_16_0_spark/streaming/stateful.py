@@ -13,6 +13,14 @@ Streaming lacks natively (SURVEY.md section 7.0 "custom (real work)"):
   -U/+U changelog on every change (GroupAggFunction.java:125-172).
   State: the accumulators (count, sum).
 
+The event-time operators — the OVER aggregates, the temporal join and
+sort, and the anti join's left side — share one watermark buffer
+(streaming.event_buffer): rows wait in typed, column-wise state until
+the watermark passes them, late rows are dropped and counted in one
+place, and released rows come out in (ts, tie-break) order. All four
+OVER operators fold their frames through one function over the
+retractable COUNT and exact-Decimal SUM of streaming.accumulators.
+
 Design notes for scale: state lives in Spark's checkpointed state store
 partitioned by the grouping key (same layout as Flink's keyed RocksDB
 state); each operator touches only its key group per batch, so the 100
@@ -27,19 +35,39 @@ streaming.changelog (RowKind.java:31-52).
 
 from __future__ import annotations
 
+from collections import deque
 from collections.abc import Iterator, Sequence
+from decimal import Decimal
 
+import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-from pyspark.sql.types import StructType
+from pyspark.sql.types import (
+    ArrayType,
+    DoubleType,
+    IntegerType,
+    LongType,
+    StringType,
+    StructField,
+    StructType,
+    TimestampType,
+)
 
+from flink_release_1_16_0_spark.streaming.accumulators import Accumulator, AggSpecs
 from flink_release_1_16_0_spark.streaming.changelog import (
     DELETE,
     INSERT,
     ROWKIND,
     UPDATE_AFTER,
     UPDATE_BEFORE,
+)
+from flink_release_1_16_0_spark.streaming.event_buffer import (
+    BufferLayout,
+    py_values,
+    sort_key,
+    us_to_ts,
 )
 
 
@@ -109,7 +137,7 @@ def streaming_dedup_keep_last(
             merged = pick(pd.concat([prev, best]))
         else:
             merged = best
-        new_tup = tuple(merged.iloc[0][c] for c in cols)
+        new_tup = _typed_rows(merged, [], out_schema.fields)[0]
         if state_ttl_ms is not None:
             # the cleanup timer refreshes on every access, changed or
             # not (KeyedProcessFunctionWithCleanupState.registerProcessingCleanupTimer)
@@ -268,9 +296,8 @@ def streaming_topn(
     """
     out_schema = stream.schema
     cols = [f.name for f in out_schema.fields]
-    from pyspark.sql.types import ArrayType, StructField, StructType as ST
 
-    state_schema = ST([StructField("rows", ArrayType(out_schema))])
+    state_schema = StructType([StructField("rows", ArrayType(out_schema))])
 
     def fn(
         key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
@@ -324,22 +351,21 @@ def streaming_retractable_topn(
     """
     from collections import Counter
 
-    from pyspark.sql.types import ArrayType, LongType, StructField, StructType as ST
 
     cols = [c for c in stream.columns if c != ROWKIND]
     data_fields = [stream.schema[c] for c in cols]
-    out_schema = ST(
+    out_schema = StructType(
         [
             *data_fields,
             StructField("rn", LongType()),
             StructField("__epoch", LongType()),
         ]
     )
-    state_schema = ST(
+    state_schema = StructType(
         [
             StructField(
                 "rows",
-                ArrayType(ST([*data_fields, StructField("__m", LongType())])),
+                ArrayType(StructType([*data_fields, StructField("__m", LongType())])),
             ),
             StructField("epoch", LongType()),
         ]
@@ -434,16 +460,8 @@ def streaming_retracting_agg(
     (the firstRow short-circuit). Without the column, the input is
     append-only and every row accumulates.
     """
-    from pyspark.sql.types import (
-        DoubleType,
-        LongType,
-        StringType,
-        StructField,
-        StructType as ST,
-    )
-
     key_fields = [stream.schema[k] for k in keys]
-    out_schema = ST(
+    out_schema = StructType(
         [
             StructField(ROWKIND, StringType()),
             *key_fields,
@@ -451,7 +469,7 @@ def streaming_retracting_agg(
             StructField("total", DoubleType()),
         ]
     )
-    state_schema = ST(
+    state_schema = StructType(
         [StructField("n", LongType()), StructField("total", DoubleType())]
     )
 
@@ -510,6 +528,24 @@ def streaming_retracting_agg(
     )
 
 
+def _counted(fields) -> ArrayType:
+    """A join side's state: its live rows, each with multiplicity m."""
+    return ArrayType(StructType([*fields, StructField("m", LongType())]))
+
+
+def _typed_rows(pdf: pd.DataFrame, plain: list[str], fields) -> list[tuple]:
+    """Rows of ``pdf``: the ``plain`` columns as they are, then ``fields``
+    as typed Python values (:func:`event_buffer.py_values`) — a padded
+    union upcasts NULL-bearing integer columns to float64, and NaN
+    payloads would never match as multiset keys."""
+    return list(
+        zip(
+            *[pdf[c].tolist() for c in plain],
+            *[py_values(pdf[f.name], f.dataType) for f in fields],
+        )
+    )
+
+
 def streaming_changelog_join(
     left: DataFrame,
     right: DataFrame,
@@ -560,15 +596,6 @@ def streaming_changelog_join(
     otherwise-disjoint payload columns. Output: keys + left payloads +
     right payloads + ``__rowkind`` + ``__m`` (positive multiplicity).
     """
-    from pyspark.sql import functions as F
-    from pyspark.sql.types import (
-        ArrayType,
-        LongType,
-        StringType,
-        StructField,
-        StructType as ST,
-    )
-
     if join_type not in ("inner", "left", "right", "full"):
         raise ValueError(
             f"join_type must be inner|left|right|full, got {join_type!r}"
@@ -601,7 +628,7 @@ def streaming_changelog_join(
     key_fields = [left.schema[k] for k in keys]
     l_fields = [left.schema[c] for c in lpay]
     r_fields = [right.schema[c] for c in rpay]
-    out_schema = ST(
+    out_schema = StructType(
         [
             *key_fields,
             *l_fields,
@@ -610,13 +637,14 @@ def streaming_changelog_join(
             StructField("__m", LongType()),
         ]
     )
-    state_schema = ST(
+    state_schema = StructType(
         [
-            StructField("l", ArrayType(ST([*l_fields, StructField("m", LongType())]))),
-            StructField("r", ArrayType(ST([*r_fields, StructField("m", LongType())]))),
+            StructField("l", _counted(l_fields)),
+            StructField("r", _counted(r_fields)),
         ]
     )
     out_cols = [*keys, *lpay, *rpay, ROWKIND, "__m"]
+    pay_fields = [*l_fields, *r_fields]
 
     def fn(
         key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
@@ -634,6 +662,7 @@ def streaming_changelog_join(
         else:
             lmap, rmap = {}, {}
         tl, tr = sum(lmap.values()), sum(rmap.values())
+        rows = _typed_rows(pdf, [ROWKIND, "__side"], pay_fields)
         out: list[tuple] = []
         nl = len(lpay)
         l_nulls = (None,) * len(lpay)
@@ -656,9 +685,7 @@ def streaming_changelog_join(
             # (JoinITCase.testNonWindowInnerJoin's if(a=3,null,a) rows).
             # Outer-side null-key rows emit null-padded directly and
             # need no state; inner/sided rows produce nothing.
-            for tup in pdf[[ROWKIND, "__side", *lpay, *rpay]].itertuples(
-                index=False, name=None
-            ):
+            for tup in rows:
                 s = 1 if tup[0] in (INSERT, UPDATE_AFTER) else -1
                 if tup[1] == "L" and outer_left:
                     emit(tup[2 : 2 + nl], r_nulls, s)
@@ -668,10 +695,7 @@ def streaming_changelog_join(
                 yield pd.DataFrame(out, columns=out_cols)
             return
 
-        # positional access: itertuples mangles leading-underscore names
-        for tup in pdf[[ROWKIND, "__side", *lpay, *rpay]].itertuples(
-            index=False, name=None
-        ):
+        for tup in rows:
             kind, side = tup[0], tup[1]
             s = 1 if kind in (INSERT, UPDATE_AFTER) else -1
             is_left = side == "L"
@@ -771,15 +795,6 @@ def streaming_changelog_semi_anti_join(
     but the multiset is kept so valid retractions stay O(1) and state
     equals the reference's right-state view. One shuffle on the key.
     """
-    from pyspark.sql import functions as F
-    from pyspark.sql.types import (
-        ArrayType,
-        LongType,
-        StringType,
-        StructField,
-        StructType as ST,
-    )
-
     meta = (ROWKIND, seq_col, *keys)
     lpay = [c for c in left.columns if c not in meta]
     rpay = [c for c in right.columns if c not in meta]
@@ -802,7 +817,7 @@ def streaming_changelog_semi_anti_join(
     )
     key_fields = [left.schema[k] for k in keys]
     l_fields = [left.schema[c] for c in lpay]
-    out_schema = ST(
+    out_schema = StructType(
         [
             *key_fields,
             *l_fields,
@@ -810,13 +825,15 @@ def streaming_changelog_semi_anti_join(
             StructField("__m", LongType()),
         ]
     )
-    state_schema = ST(
+    r_fields = [right.schema[c] for c in rpay]
+    state_schema = StructType(
         [
-            StructField("l", ArrayType(ST([*l_fields, StructField("m", LongType())]))),
-            StructField("r", ArrayType(ST([*[right.schema[c] for c in rpay], StructField("m", LongType())]))),
+            StructField("l", _counted(l_fields)),
+            StructField("r", _counted(r_fields)),
         ]
     )
     out_cols = [*keys, *lpay, ROWKIND, "__m"]
+    pay_fields = [*l_fields, *r_fields]
     nl = len(lpay)
 
     def fn(
@@ -835,6 +852,7 @@ def streaming_changelog_semi_anti_join(
         else:
             lmap, rmap = {}, {}
         tr = sum(rmap.values())
+        rows = _typed_rows(pdf, [ROWKIND, "__side"], pay_fields)
         out: list[tuple] = []
 
         def member(has_match: bool) -> bool:
@@ -845,22 +863,18 @@ def streaming_changelog_semi_anti_join(
             # (emit nothing), ANTI membership is always true (emit the
             # left rows with their sign); stateless either way
             if anti:
-                for tup in pdf[[ROWKIND, "__side", *lpay]].itertuples(
-                    index=False, name=None
-                ):
+                for tup in rows:
                     if tup[1] != "L":
                         continue
                     s = 1 if tup[0] in (INSERT, UPDATE_AFTER) else -1
                     out.append(
-                        (*key, *tup[2:], INSERT if s > 0 else DELETE, 1)
+                        (*key, *tup[2 : 2 + nl], INSERT if s > 0 else DELETE, 1)
                     )
             if out:
                 yield pd.DataFrame(out, columns=out_cols)
             return
 
-        for tup in pdf[[ROWKIND, "__side", *lpay, *rpay]].itertuples(
-            index=False, name=None
-        ):
+        for tup in rows:
             kind, side = tup[0], tup[1]
             s = 1 if kind in (INSERT, UPDATE_AFTER) else -1
             if side == "L":
@@ -923,83 +937,14 @@ def streaming_temporal_join(
     effective AT the left row's timestamp is visible, Flink's inclusive
     contract); across micro-batches arrival must be time-ordered, the
     same proc-time replay contract as streaming_over_rows_unbounded —
-    the watermark-buffered reordering variant is future work.
+    streaming_temporal_join_event_time is the watermark-buffered
+    reordering variant; both run through `_temporal_join`.
 
     Left rows with no version yet emit NULL right columns (left join,
     matching asof_join). Output: keys + left payloads + right payloads
     + ``asof_ts`` (matched version's ts, NULL when unmatched).
     """
-    from pyspark.sql import functions as F
-    from pyspark.sql.types import IntegerType, StructField, StructType as ST
-
-    lpay = [c for c in left.columns if c not in (*keys, left_ts)]
-    rpay = [c for c in right.columns if c not in (*keys, right_ts)]
-    if set(lpay) & set(rpay):
-        raise ValueError(f"payload columns must be disjoint: {set(lpay) & set(rpay)}")
-
-    def pad(df, side, ts_col, own, other, other_schema):
-        return df.select(
-            *keys,
-            F.col(ts_col).cast("timestamp").alias("__t"),
-            F.lit(side).alias("__side"),
-            *own,
-            *[
-                F.lit(None).cast(other_schema[c].dataType).alias(c)
-                for c in other
-            ],
-        )
-
-    # side 0 = right/version rows sort first at equal ts
-    unioned = pad(right, 0, right_ts, rpay, lpay, left.schema).unionByName(
-        pad(left, 1, left_ts, lpay, rpay, right.schema)
-    )
-
-    key_fields = [left.schema[k] for k in keys]
-    l_fields = [left.schema[c] for c in lpay]
-    r_fields = [right.schema[c] for c in rpay]
-    ts_field = StructField(asof_ts, unioned.schema["__t"].dataType)
-    out_schema = ST([*key_fields, *l_fields, *r_fields, ts_field])
-    state_schema = ST([*r_fields, StructField("__vts", ts_field.dataType),
-                       StructField("__has", IntegerType())])
-    out_cols = [*keys, *lpay, *rpay, asof_ts]
-
-    def fn(
-        key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        batches = [pdf for pdf in pdfs if len(pdf)]
-        if not batches:
-            return
-        pdf = pd.concat(batches, ignore_index=True).sort_values(
-            ["__t", "__side"], kind="mergesort"
-        )
-        if state.exists:
-            *version, vts, _has = state.get
-            version = tuple(version)
-        else:
-            version, vts = None, None
-        nl = len(lpay)
-        out: list[tuple] = []
-        for tup in pdf[["__t", "__side", *lpay, *rpay]].itertuples(
-            index=False, name=None
-        ):
-            t, side = tup[0], tup[1]
-            if side == 0:
-                version, vts = tup[2 + nl :], t
-            else:
-                rvals = version if version is not None else (None,) * len(rpay)
-                out.append((*key, *tup[2 : 2 + nl], *rvals, vts))
-        if version is not None:
-            state.update((*version, vts, 1))
-        if out:
-            yield pd.DataFrame(out, columns=out_cols)
-
-    return unioned.groupBy(*keys).applyInPandasWithState(
-        fn,
-        outputStructType=out_schema,
-        stateStructType=state_schema,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
+    return _temporal_join(left, right, keys, left_ts, right_ts, asof_ts, None, False)
 
 
 def streaming_temporal_join_event_time(
@@ -1042,15 +987,25 @@ def streaming_temporal_join_event_time(
     share one watermark — the two-input operator's
     min-across-inputs watermark, which a union reproduces exactly.
     """
-    from pyspark.sql import functions as F
-    from pyspark.sql.types import (
-        ArrayType,
-        IntegerType,
-        StringType,
-        StructField,
-        StructType as ST,
+    return _temporal_join(
+        left, right, keys, left_ts, right_ts, asof_ts, delay, changelog
     )
 
+
+def _temporal_join(
+    left: DataFrame,
+    right: DataFrame,
+    keys: Sequence[str],
+    left_ts: str,
+    right_ts: str,
+    asof_ts: str,
+    delay: str | None,
+    changelog: bool,
+) -> DataFrame:
+    """Both temporal joins: one keyed walk over the unioned inputs in
+    (ts, side) order. With a watermark ``delay`` rows wait in an
+    :class:`EventBuffer` until the watermark passes them; without one
+    (proc time) each micro-batch is released whole as it arrives."""
     lpay = [c for c in left.columns if c not in (*keys, left_ts, ROWKIND)]
     rpay = [c for c in right.columns if c not in (*keys, right_ts, ROWKIND)]
     if set(lpay) & set(rpay):
@@ -1077,17 +1032,17 @@ def streaming_temporal_join_event_time(
         )
 
     # side 0 = right/version rows sort first at equal ts
-    unioned = (
-        pad(right, 0, right_ts, rpay, lpay, left.schema)
-        .unionByName(pad(left, 1, left_ts, lpay, rpay, right.schema))
-        .withWatermark("__t", delay)
+    unioned = pad(right, 0, right_ts, rpay, lpay, left.schema).unionByName(
+        pad(left, 1, left_ts, lpay, rpay, right.schema)
     )
+    if delay:
+        unioned = unioned.withWatermark("__t", delay)
 
     key_fields = [left.schema[k] for k in keys]
     l_fields = [left.schema[c] for c in lpay]
     r_fields = [right.schema[c] for c in rpay]
     ts_field = StructField(asof_ts, unioned.schema["__t"].dataType)
-    out_schema = ST(
+    out_schema = StructType(
         [
             *key_fields,
             *l_fields,
@@ -1096,121 +1051,72 @@ def streaming_temporal_join_event_time(
             *([StructField(ROWKIND, StringType())] if changelog else []),
         ]
     )
-    pend_schema = ST(
+    buf = BufferLayout(
+        "__t",
         [
-            StructField("__pt", ts_field.dataType),
-            StructField("__pside", IntegerType()),
-            StructField("__pkind", StringType()),
+            StructField("__side", IntegerType()),
+            StructField("__kind", StringType()),
             *l_fields,
             *r_fields,
-        ]
+        ],
+        tie=["__side"],
+        prefix="pending_",
     )
-    state_schema = ST(
-        [
-            StructField("pending", ArrayType(pend_schema)),
-            *r_fields,
-            StructField("__vts", ts_field.dataType),
-            StructField("__has", IntegerType()),
-        ]
+    # the version in effect: its right columns and event time (µs);
+    # no version (none yet, or a tombstone) while the time is NULL
+    state_schema = StructType(
+        [*buf.state_fields(), *r_fields, StructField("__vts_us", LongType())]
     )
     out_cols = [*keys, *lpay, *rpay, asof_ts, *([ROWKIND] if changelog else [])]
-    nl, nr = len(lpay), len(rpay)
-
-    # per-payload-column sanitizers: the padded union makes pandas
-    # upcast NULL-bearing numeric columns to float64 — state (and NaN)
-    # needs the declared types back
-    def make_conv(dt):
-        name = dt.typeName()
-        if name in ("long", "integer", "short", "byte"):
-            return lambda v: None if pd.isna(v) else int(v)
-        if name in ("double", "float"):
-            return lambda v: None if pd.isna(v) else float(v)
-        if name.startswith("timestamp"):
-            return lambda v: None if pd.isna(v) else pd.Timestamp(v)
-        return lambda v: None if (v is None or (isinstance(v, float) and pd.isna(v))) else v
-
-    convs = [make_conv(f.dataType) for f in (*l_fields, *r_fields)]
+    nl, nr, w = len(lpay), len(rpay), buf.width
+    no_version = (None,) * nr
 
     def fn(
         key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
     ) -> Iterator[pd.DataFrame]:
-        def ms(t):
-            return pd.Timestamp(t).value // 1_000_000
-
-        wm = state.getCurrentWatermarkMs()
-        if state.exists:
-            raw = state.get
-            pending = [
-                (pd.Timestamp(p[0]), p[1], *p[2:]) for p in (raw[0] or [])
-            ]
-            has = raw[2 + nr]
-            version = tuple(raw[1 : 1 + nr]) if has else None
-            vts = pd.Timestamp(raw[1 + nr]) if has and raw[1 + nr] is not None else None
-        else:
-            pending, version, vts = [], None, None
+        if delay:
+            wm = upto = state.getCurrentWatermarkMs()
+        else:  # proc time: nothing is late, the batch is released whole
+            wm, upto = -(2**62), 2**62
+        raw = state.get if state.exists else None
+        pending = buf.load(raw)
+        vts = raw[w + nr] if raw else None
+        version = tuple(raw[w : w + nr]) if vts is not None else no_version
         for pdf in pdfs:
-            if len(pdf) == 0:
-                continue
-            for tup in pdf[["__t", "__side", "__kind", *lpay, *rpay]].itertuples(
-                index=False, name=None
-            ):
-                if ms(tup[0]) < wm:
-                    continue  # late: ts strictly before the watermark
-                    # (ts == wm is on time — Spark's own late filter
-                    # and the reference's timer semantics both keep it)
-                pending.append(
-                    (
-                        pd.Timestamp(tup[0]),
-                        int(tup[1]),
-                        tup[2],
-                        *[c(v) for c, v in zip(convs, tup[3:])],
-                    )
-                )
-        ready = sorted(
-            (p for p in pending if ms(p[0]) <= wm),
-            key=lambda p: (p[0].value, p[1]),
-        )
-        pending = [p for p in pending if ms(p[0]) > wm]
+            pending.admit(pdf, wm)
+        ts, cols = pending.release(upto)
         out: list[tuple] = []
-        for p in ready:
-            t, side, kind = p[0], p[1], p[2]
+        for t, side, kind, *vals in zip(ts.tolist(), *cols):
             if side == 0:
                 if kind == DELETE:
                     # tombstone: the key has no version from t on
                     # (latestRightRowToJoin's !isAccumulateMsg branch)
-                    version, vts = None, None
+                    version, vts = no_version, None
                 else:
-                    version, vts = p[3 + nl :], t
+                    version, vts = tuple(vals[nl:]), t
             else:
-                rvals = version if version is not None else (None,) * nr
                 out.append(
-                    (
-                        *key,
-                        *p[3 : 3 + nl],
-                        *rvals,
-                        vts,
-                        *([kind] if changelog else []),
-                    )
+                    (*key, *vals[:nl], *version, vts, *([kind] if changelog else []))
                 )
-        state.update(
-            (
-                pending,
-                *(version if version is not None else (None,) * nr),
-                vts,
-                1 if version is not None else 0,
-            )
-        )
-        if pending:
-            state.setTimeoutTimestamp(min(ms(p[0]) for p in pending) + 1)
+        state.update((*pending.state(), *version, vts))
+        timeout = pending.next_timeout()
+        if timeout is not None:
+            state.setTimeoutTimestamp(timeout)
         if out:
-            yield pd.DataFrame(out, columns=out_cols)
+            res = pd.DataFrame(out, columns=out_cols)
+            res[asof_ts] = pd.to_datetime(res[asof_ts], unit="us")
+            yield res
 
     return unioned.groupBy(*keys).applyInPandasWithState(
         fn,
         outputStructType=out_schema,
         stateStructType=state_schema,
         outputMode="update",
-        timeoutConf=GroupStateTimeout.EventTimeTimeout,
+        timeoutConf=(
+            GroupStateTimeout.EventTimeTimeout
+            if delay
+            else GroupStateTimeout.NoTimeout
+        ),
     )
 
 
@@ -1230,66 +1136,45 @@ def streaming_temporal_sort(
     reference's global temporal sort via a single synthetic key — like
     the reference, a global event-time order is inherently a
     single-channel operator; the scale path is per-``keys`` ordering
-    (each key sorts independently, state sharded by key). Rows at or
+    (each key sorts independently, state sharded by key). Rows strictly
     before the watermark on arrival are dropped; rows the final
     watermark never passes stay buffered (oracle: max(ts)-delay cut).
     """
-    import pickle
-
-    import numpy as np
-    from pyspark.sql import functions as F
-    from pyspark.sql.types import LongType, StructField, StructType as ST
-
     ts_col = order_cols[0]
     group_keys = list(keys) if keys else []
-    cols = stream.columns
-    out_schema = ST([*stream.schema.fields, StructField(seq_col, LongType())])
-    # the pending buffer rides a pickled pandas frame in BINARY state:
-    # the array-of-struct layout the first cut used forced a per-row
-    # Python tuple conversion on EVERY buffered row (1M rows at sf1 =
-    # 44.6 s of pure conversion); the frame form keeps arrival, the
-    # ready/pending split, the sort and the emit all vectorized
-    state_schema = "pending BINARY, seq BIGINT"
-
-    def _ms(series: pd.Series) -> pd.Series:
-        return series.astype("int64") // 1_000_000
+    out_schema = StructType([*stream.schema.fields, StructField(seq_col, LongType())])
+    out_cols = [*stream.columns, seq_col]
+    held = [
+        f for f in stream.schema.fields if f.name not in (ts_col, *group_keys)
+    ]
+    names = [f.name for f in held]
+    buf = BufferLayout(
+        ts_col, held, tie=[c for c in order_cols[1:] if c in names]
+    )
+    state_schema = StructType([*buf.state_fields(), StructField("seq", LongType())])
 
     def fn(
         key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
     ) -> Iterator[pd.DataFrame]:
         wm = state.getCurrentWatermarkMs()
-        if state.exists:
-            raw, seq = state.get
-            parts = [pickle.loads(raw)] if raw else []
-        else:
-            parts, seq = [], 0
+        raw = state.get if state.exists else None
+        pending = buf.load(raw)
+        seq = raw[buf.width] if raw else 0
         for pdf in pdfs:
-            if len(pdf) == 0:
-                continue
-            pdf = pdf[cols]
-            # rows strictly before the watermark ON ARRIVAL are late
-            # (ts == wm is on time, Spark's own boundary): drop
-            parts.append(pdf[_ms(pdf[ts_col]) >= wm])
-        if not parts:
-            return
-        allp = pd.concat(parts, ignore_index=True) if len(parts) > 1 else parts[0]
-        mask = (_ms(allp[ts_col]) <= wm).to_numpy()
-        ready = allp[mask]
-        pending = allp[~mask]
-        out = None
-        if len(ready):
-            out = ready.sort_values(order_cols, kind="mergesort").reset_index(
-                drop=True
-            )
-            out[seq_col] = np.arange(seq + 1, seq + len(out) + 1, dtype="int64")
-            seq += len(out)
-        state.update(
-            (pickle.dumps(pending.reset_index(drop=True)) if len(pending) else None, seq)
-        )
-        if len(pending):
-            state.setTimeoutTimestamp(int(_ms(pending[ts_col]).min()) + 1)
-        if out is not None:
-            yield out
+            pending.admit(pdf, wm)
+        ts, cols = pending.release(wm)
+        state.update((*pending.state(), seq + len(ts)))
+        timeout = pending.next_timeout()
+        if timeout is not None:
+            state.setTimeoutTimestamp(timeout)
+        if len(ts):
+            out = {
+                **dict(zip(group_keys, key)),
+                ts_col: us_to_ts(ts),
+                **dict(zip(names, cols)),
+                seq_col: np.arange(seq + 1, seq + len(ts) + 1, dtype="int64"),
+            }
+            yield pd.DataFrame(out, columns=out_cols)
 
     if group_keys:
         grouped = stream.groupBy(*group_keys)
@@ -1303,6 +1188,164 @@ def streaming_temporal_sort(
         timeoutConf=GroupStateTimeout.EventTimeTimeout,
     )
     return res
+
+
+# COUNT and exact-Decimal SUM over the value column: the frame of all
+# four OVER operators
+_OVER = AggSpecs(
+    [("n", "count", "v", LongType()), ("sum", "sum", "v", DoubleType())],
+    changelog=False,
+)
+_OVER_PLAN = _OVER.plan(["v"])
+# the unbounded operators' running accumulator: the count and the
+# exact sum's decimal text
+_RUNNING_STATE = [
+    StructField("n", LongType()),
+    StructField("sum", StringType()),
+]
+
+
+def _running_load(raw) -> Accumulator:
+    acc = Accumulator(2)
+    if raw and raw[0]:
+        acc.cells = [raw[0], (Decimal(raw[1]), raw[0])]
+    return acc
+
+
+def _running_state(acc: Accumulator) -> tuple:
+    n, s = acc.cells
+    return (n or 0, None if s is None else str(s[0]))
+
+
+def _over_fold(
+    acc: Accumulator,
+    ts: list | None,
+    vals: list,
+    frame: deque | None = None,
+    rows: int | None = None,
+    range_ms: int | None = None,
+) -> list[tuple]:
+    """Fold rows sorted by event time (``ts`` in µs) through ``acc`` and
+    return one (count, sum) per row. Each row is added; with a
+    ``frame`` deque of (ms, v), rows that leave a ROWS-``rows`` or
+    RANGE-``range_ms`` frame are retracted with sign -1, as the
+    reference's bounded functions do, and RANGE peers (equal ts) share
+    one frame."""
+    out: list[tuple] = []
+    i, n = 0, len(vals)
+    while i < n:
+        j = i + 1
+        if range_ms is not None:
+            while j < n and ts[j] == ts[i]:
+                j += 1
+        for k in range(i, j):
+            acc.add(_OVER_PLAN, (vals[k],))
+            if frame is not None:
+                frame.append((ts[k] // 1000, vals[k]))
+        if rows is not None:
+            while len(frame) > rows:
+                acc.add(_OVER_PLAN, (frame.popleft()[1],), -1)
+        elif range_ms is not None:
+            lo = ts[i] // 1000 - range_ms
+            while frame[0][0] < lo:
+                acc.add(_OVER_PLAN, (frame.popleft()[1],), -1)
+        out.extend([acc.emit(_OVER)] * (j - i))
+        i = j
+    return out
+
+
+def _over_event_time(
+    stream: DataFrame,
+    keys: Sequence[str],
+    value_col: str,
+    id_col: str,
+    ts_col: str,
+    names: tuple[str, str],
+    rows: int | None = None,
+    range_ms: int | None = None,
+) -> DataFrame:
+    """The event-time OVER operators: (id, value) rows wait in an
+    :class:`EventBuffer`, are released in (ts, id) order and folded by
+    :func:`_over_fold`. Unbounded, state carries the running
+    accumulator; bounded (``rows`` or ``range_ms``), it carries the
+    frame rows a future row can still see, and the accumulator is
+    refolded from them on each call."""
+    bounded = rows is not None or range_ms is not None
+    id_field = stream.schema[id_col]
+    out_schema = StructType(
+        [
+            *[stream.schema[k] for k in keys],
+            id_field,
+            stream.schema[ts_col],
+            StructField(names[0], LongType()),
+            StructField(names[1], DoubleType()),
+        ]
+    )
+    buf = BufferLayout(
+        ts_col, [id_field, StructField(value_col, DoubleType())], tie=[id_col]
+    )
+    carry_fields = _RUNNING_STATE
+    if bounded:
+        carry_fields = [
+            StructField("frame_ms", ArrayType(LongType())),
+            StructField("frame_v", ArrayType(DoubleType())),
+        ]
+    state_schema = StructType([*buf.state_fields(), *carry_fields])
+    out_cols = [*keys, id_col, ts_col, *names]
+    w = buf.width
+
+    def fn(
+        key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
+    ) -> Iterator[pd.DataFrame]:
+        wm = state.getCurrentWatermarkMs()
+        raw = state.get if state.exists else None
+        pending = buf.load(raw)
+        for pdf in pdfs:
+            pending.admit(pdf, wm)
+        ts, (ids, vals) = pending.release(wm)
+        if bounded:
+            frame = deque(zip(raw[w], raw[w + 1]) if raw else ())
+            acc = Accumulator(2)
+            for _ms, v in frame:
+                acc.add(_OVER_PLAN, (v,))
+            res = _over_fold(acc, ts.tolist(), vals, frame, rows, range_ms)
+            # keep only rows a future row's frame can still hold: the
+            # last rows - 1, or those inside the bound of the watermark
+            # (future rows have ts > wm)
+            while frame and (
+                len(frame) >= rows if rows is not None
+                else frame[0][0] < wm - range_ms
+            ):
+                frame.popleft()
+            carry = ([m for m, _v in frame], [v for _m, v in frame])
+        else:
+            acc = _running_load(raw[w:] if raw else None)
+            res = _over_fold(acc, None, vals)
+            carry = _running_state(acc)
+        state.update((*pending.state(), *carry))
+        timeout = pending.next_timeout()
+        if timeout is not None:
+            state.setTimeoutTimestamp(timeout)
+        if res:
+            n, total = zip(*res)
+            yield pd.DataFrame(
+                {
+                    **dict(zip(keys, key)),
+                    id_col: ids,
+                    ts_col: us_to_ts(ts),
+                    names[0]: n,
+                    names[1]: total,
+                },
+                columns=out_cols,
+            )
+
+    return stream.groupBy(*keys).applyInPandasWithState(
+        fn,
+        outputStructType=out_schema,
+        stateStructType=state_schema,
+        outputMode="update",
+        timeoutConf=GroupStateTimeout.EventTimeTimeout,
+    )
 
 
 def streaming_over_rows_event_time(
@@ -1320,97 +1363,20 @@ def streaming_over_rows_event_time(
     Unlike the proc-time variant, arrival order across micro-batches is
     free: rows buffer in keyed state until the watermark passes their
     timestamp, then finalize in exact (ts, id) order with the running
-    aggregate carried over the finalized prefix. Rows at or before the
-    watermark on arrival are late and dropped (allowed lateness 0, the
-    reference's default). Rows the final watermark never passes (the
+    aggregate carried over the finalized prefix. Rows strictly before
+    the watermark on arrival are late and dropped (allowed lateness 0,
+    the reference's default). Rows the final watermark never passes (the
     last delay-window of a bounded replay) stay buffered — faithful
     watermark semantics, mirrored by the oracle's max(ts)-delay cutoff.
 
     The input MUST carry ``withWatermark(ts_col, delay)``; event-time
     timeouts schedule the flush batches that drain the buffer after the
-    last data batch. State per key = pending buffer + two counters, the
-    exact layout of the reference's per-key MapState<ts, rows> + fired
-    offset.
+    last data batch. State per key = pending buffer + the running
+    (count, exact sum), the layout of the reference's per-key
+    MapState<ts, rows> + accumulator.
     """
-    from pyspark.sql.types import (
-        ArrayType,
-        DoubleType,
-        LongType,
-        StructField,
-        StructType as ST,
-    )
-
-    key_fields = [stream.schema[k] for k in keys]
-    id_field = stream.schema[id_col]
-    ts_field = stream.schema[ts_col]
-    out_schema = ST(
-        [
-            *key_fields,
-            id_field,
-            ts_field,
-            StructField("running_n", LongType()),
-            StructField("running_sum", DoubleType()),
-        ]
-    )
-    pend_schema = ST(
-        [ts_field, id_field, StructField("v", DoubleType())]
-    )
-    state_schema = ST(
-        [
-            StructField("pending", ArrayType(pend_schema)),
-            StructField("n", LongType()),
-            StructField("cents", LongType()),
-        ]
-    )
-
-    def fn(
-        key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        def ms(t):
-            # state round-trips timestamps as datetime, fresh batches as
-            # pandas Timestamp — normalize (naive == session tz == UTC)
-            return pd.Timestamp(t).value // 1_000_000
-
-        wm = state.getCurrentWatermarkMs()
-        if state.exists:
-            pending, n0, cents0 = state.get
-            pending = [(pd.Timestamp(p[0]), p[1], p[2]) for p in (pending or [])]
-        else:
-            pending, n0, cents0 = [], 0, 0
-        for pdf in pdfs:
-            if len(pdf) == 0:
-                continue
-            for t, i, v in zip(pdf[ts_col], pdf[id_col], pdf[value_col]):
-                if ms(t) < wm:
-                    continue  # late: ts strictly before the watermark
-                pending.append((pd.Timestamp(t), int(i), float(v)))
-        ready = sorted(
-            (p for p in pending if ms(p[0]) <= wm),
-            key=lambda p: (p[0], p[1]),
-        )
-        pending = [p for p in pending if ms(p[0]) > wm]
-        out = []
-        n, cents = n0, cents0
-        for t, i, v in ready:
-            n += 1
-            cents += int(round(v * 100))
-            out.append((*key, i, t, n, cents / 100.0))
-        state.update((pending, n, cents))
-        if pending:
-            # fire a flush batch once the watermark passes the earliest
-            # still-buffered row
-            state.setTimeoutTimestamp(min(ms(p[0]) for p in pending) + 1)
-        if out:
-            yield pd.DataFrame(
-                out, columns=[*keys, id_col, ts_col, "running_n", "running_sum"]
-            )
-
-    return stream.groupBy(*keys).applyInPandasWithState(
-        fn,
-        outputStructType=out_schema,
-        stateStructType=state_schema,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.EventTimeTimeout,
+    return _over_event_time(
+        stream, keys, value_col, id_col, ts_col, ("running_n", "running_sum")
     )
 
 
@@ -1426,21 +1392,14 @@ def streaming_over_rows_unbounded(
     RowTimeRowsUnboundedPrecedingFunction — SURVEY.md section 2.5).
 
     Spark has no streaming window functions; this is the keyed-state
-    rebuild: state carries (n, cents) forward, each batch is sorted by
-    the event-time order columns and emitted with cumulative values.
-    Sums run in integer cents (the fixture's 2-decimal grid) so results
-    are exact and batch-split-invariant.
+    rebuild: state carries the running accumulator forward, each batch
+    is sorted by the event-time order columns and folded through
+    :func:`_over_fold`. Sums are exact Decimal, so results are
+    batch-split-invariant for any double.
     """
-    from pyspark.sql.types import (
-        DoubleType,
-        LongType,
-        StructField,
-        StructType as ST,
-    )
-
     key_fields = [stream.schema[k] for k in keys]
     id_field = stream.schema[id_col]
-    out_schema = ST(
+    out_schema = StructType(
         [
             *key_fields,
             id_field,
@@ -1448,9 +1407,8 @@ def streaming_over_rows_unbounded(
             StructField("running_sum", DoubleType()),
         ]
     )
-    state_schema = ST(
-        [StructField("n", LongType()), StructField("cents", LongType())]
-    )
+    state_schema = StructType(_RUNNING_STATE)
+    out_cols = [*keys, id_col, "running_n", "running_sum"]
 
     def fn(
         key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
@@ -1458,22 +1416,21 @@ def streaming_over_rows_unbounded(
         batches = [pdf for pdf in pdfs if len(pdf)]
         if not batches:
             return
-        pdf = pd.concat(batches, ignore_index=True).sort_values(
-            list(order_cols), kind="mergesort"
-        )
-        n0, cents0 = state.get if state.exists else (0, 0)
-        cents = (pdf[value_col] * 100).round().astype("int64").cumsum() + cents0
-        running_n = pd.RangeIndex(1, len(pdf) + 1) + n0
-        out = pd.DataFrame(
+        pdf = pd.concat(batches, ignore_index=True) if len(batches) > 1 else batches[0]
+        order = np.lexsort([sort_key(pdf[c]) for c in reversed(order_cols)])
+        vals = py_values(pdf[value_col], DoubleType())
+        acc = _running_load(state.get if state.exists else None)
+        n, total = zip(*_over_fold(acc, None, [vals[i] for i in order]))
+        state.update(_running_state(acc))
+        yield pd.DataFrame(
             {
-                **{k: pdf[k] for k in keys},
-                id_col: pdf[id_col],
-                "running_n": list(running_n),
-                "running_sum": (cents / 100.0).astype("float64"),
-            }
+                **dict(zip(keys, key)),
+                id_col: pdf[id_col].to_numpy()[order],
+                "running_n": n,
+                "running_sum": total,
+            },
+            columns=out_cols,
         )
-        state.update((int(running_n[-1]), int(cents.iloc[-1])))
-        yield out
 
     return stream.groupBy(*keys).applyInPandasWithState(
         fn,
@@ -1500,97 +1457,16 @@ def streaming_over_range_event_time(
 
     Same watermark discipline as streaming_over_rows_event_time: rows
     buffer until the watermark passes them, finalize in (ts, id) order,
-    late rows drop. State additionally retains the finalized rows still
-    inside the bound window of the watermark (the reference's cleanup:
-    a retired row can never re-enter a future frame because future rows
-    only have later timestamps); everything older is evicted — state is
-    O(rows per bound window), not O(stream).
+    late rows drop. Rows leaving a frame are retracted, not re-summed.
+    State additionally retains the finalized rows still inside the
+    bound window of the watermark (the reference's cleanup: a retired
+    row can never re-enter a future frame because future rows only have
+    later timestamps); everything older is evicted — state is O(rows
+    per bound window), not O(stream).
     """
-    from pyspark.sql.types import (
-        ArrayType,
-        DoubleType,
-        LongType,
-        StructField,
-        StructType as ST,
-    )
-
-    key_fields = [stream.schema[k] for k in keys]
-    id_field = stream.schema[id_col]
-    ts_field = stream.schema[ts_col]
-    out_schema = ST(
-        [
-            *key_fields,
-            id_field,
-            ts_field,
-            StructField("win_n", LongType()),
-            StructField("win_sum", DoubleType()),
-        ]
-    )
-    row_schema = ST([ts_field, id_field, StructField("v", DoubleType())])
-    state_schema = ST(
-        [
-            StructField("pending", ArrayType(row_schema)),
-            StructField("window", ArrayType(row_schema)),
-        ]
-    )
-
-    def fn(
-        key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        def ms(t):
-            return pd.Timestamp(t).value // 1_000_000
-
-        wm = state.getCurrentWatermarkMs()
-        if state.exists:
-            pending, window = state.get
-            pending = [(pd.Timestamp(p[0]), p[1], p[2]) for p in (pending or [])]
-            window = [(pd.Timestamp(p[0]), p[1], p[2]) for p in (window or [])]
-        else:
-            pending, window = [], []
-        for pdf in pdfs:
-            if len(pdf) == 0:
-                continue
-            for t, i, v in zip(pdf[ts_col], pdf[id_col], pdf[value_col]):
-                if ms(t) < wm:
-                    continue  # late: ts strictly before the watermark
-                pending.append((pd.Timestamp(t), int(i), float(v)))
-        ready = sorted(
-            (p for p in pending if ms(p[0]) <= wm), key=lambda p: (p[0], p[1])
-        )
-        pending = [p for p in pending if ms(p[0]) > wm]
-        out = []
-        j = 0
-        while j < len(ready):
-            # peer group: all ready rows with this exact timestamp
-            t = ready[j][0]
-            peers = []
-            while j < len(ready) and ready[j][0] == t:
-                peers.append(ready[j])
-                j += 1
-            window.extend(peers)
-            lo = ms(t) - bound_ms
-            window = [w for w in window if ms(w[0]) >= lo]
-            n = len(window)
-            cents = sum(int(round(w[2] * 100)) for w in window)
-            for _t, i, _v in peers:
-                out.append((*key, i, t, n, cents / 100.0))
-        # retire rows that can never re-enter a frame: future finalized
-        # rows have ts > wm, so their frames start after wm - bound
-        window = [w for w in window if ms(w[0]) >= wm - bound_ms]
-        state.update((pending, window))
-        if pending:
-            state.setTimeoutTimestamp(min(ms(p[0]) for p in pending) + 1)
-        if out:
-            yield pd.DataFrame(
-                out, columns=[*keys, id_col, ts_col, "win_n", "win_sum"]
-            )
-
-    return stream.groupBy(*keys).applyInPandasWithState(
-        fn,
-        outputStructType=out_schema,
-        stateStructType=state_schema,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.EventTimeTimeout,
+    return _over_event_time(
+        stream, keys, value_col, id_col, ts_col, ("win_n", "win_sum"),
+        range_ms=bound_ms,
     )
 
 
@@ -1607,17 +1483,10 @@ def streaming_distinct_count(
     key), the same bound the reference pays); each batch emits the
     updated count, which grows monotonically to the batch-dual answer.
     """
-    from pyspark.sql.types import (
-        ArrayType,
-        LongType,
-        StructField,
-        StructType as ST,
-    )
-
     key_fields = [stream.schema[k] for k in keys]
     val_field = stream.schema[distinct_col]
-    out_schema = ST([*key_fields, StructField("n_distinct", LongType())])
-    state_schema = ST([StructField("seen", ArrayType(val_field.dataType))])
+    out_schema = StructType([*key_fields, StructField("n_distinct", LongType())])
+    state_schema = StructType([StructField("seen", ArrayType(val_field.dataType))])
 
     def fn(
         key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
@@ -1653,16 +1522,8 @@ def streaming_retracting_minmax(
     Add/remove commute, so the converged multiset — and its min/max —
     is independent of batch slicing and arrival order.
     """
-    from pyspark.sql.types import (
-        ArrayType,
-        DoubleType,
-        LongType,
-        StructField,
-        StructType as ST,
-    )
-
     key_fields = [stream.schema[k] for k in keys]
-    out_schema = ST(
+    out_schema = StructType(
         [
             *key_fields,
             StructField("version", LongType()),
@@ -1671,8 +1532,10 @@ def streaming_retracting_minmax(
             StructField("max_v", DoubleType()),
         ]
     )
-    entry = ST([StructField("value", DoubleType()), StructField("cnt", LongType())])
-    state_schema = ST(
+    entry = StructType(
+        [StructField("value", DoubleType()), StructField("cnt", LongType())]
+    )
+    state_schema = StructType(
         [StructField("bag", ArrayType(entry)), StructField("version", LongType())]
     )
 
@@ -1727,84 +1590,15 @@ def streaming_over_rows_bounded_event_time(
     its OWN frame (no peer sharing).
 
     Watermark discipline as the sibling operators: rows buffer until
-    the watermark passes, finalize in order, late rows drop. Retained
-    state is exactly the last ``n_rows - 1`` finalized rows per key
+    the watermark passes, finalize in order, late rows drop; the row
+    leaving the frame is retracted. Retained state is exactly the last
+    ``n_rows - 1`` finalized rows per key
     plus the unsettled buffer — the reference's retract-list bound,
     O(n_rows + out-of-orderness window), never O(stream).
     """
-    from pyspark.sql.types import (
-        ArrayType,
-        DoubleType,
-        LongType,
-        StructField,
-        StructType as ST,
-    )
-
-    key_fields = [stream.schema[k] for k in keys]
-    id_field = stream.schema[id_col]
-    ts_field = stream.schema[ts_col]
-    out_schema = ST(
-        [
-            *key_fields,
-            id_field,
-            ts_field,
-            StructField("win_n", LongType()),
-            StructField("win_sum", DoubleType()),
-        ]
-    )
-    row_schema = ST([ts_field, id_field, StructField("v", DoubleType())])
-    state_schema = ST(
-        [
-            StructField("pending", ArrayType(row_schema)),
-            StructField("window", ArrayType(row_schema)),
-        ]
-    )
-
-    def fn(
-        key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        def ms(t):
-            return pd.Timestamp(t).value // 1_000_000
-
-        wm = state.getCurrentWatermarkMs()
-        if state.exists:
-            pending, window = state.get
-            pending = [(pd.Timestamp(p[0]), p[1], p[2]) for p in (pending or [])]
-            window = [(pd.Timestamp(p[0]), p[1], p[2]) for p in (window or [])]
-        else:
-            pending, window = [], []
-        for pdf in pdfs:
-            if len(pdf) == 0:
-                continue
-            for t, i, v in zip(pdf[ts_col], pdf[id_col], pdf[value_col]):
-                if ms(t) < wm:
-                    continue  # late: ts strictly before the watermark
-                pending.append((pd.Timestamp(t), int(i), float(v)))
-        ready = sorted(
-            (p for p in pending if ms(p[0]) <= wm), key=lambda p: (p[0], p[1])
-        )
-        pending = [p for p in pending if ms(p[0]) > wm]
-        out = []
-        for t, i, v in ready:
-            window.append((t, i, v))
-            window = window[-n_rows:]
-            cents = sum(int(round(w[2] * 100)) for w in window)
-            out.append((*key, i, t, len(window), cents / 100.0))
-        window = window[-(n_rows - 1):] if n_rows > 1 else []
-        state.update((pending, window))
-        if pending:
-            state.setTimeoutTimestamp(min(ms(p[0]) for p in pending) + 1)
-        if out:
-            yield pd.DataFrame(
-                out, columns=[*keys, id_col, ts_col, "win_n", "win_sum"]
-            )
-
-    return stream.groupBy(*keys).applyInPandasWithState(
-        fn,
-        outputStructType=out_schema,
-        stateStructType=state_schema,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.EventTimeTimeout,
+    return _over_event_time(
+        stream, keys, value_col, id_col, ts_col, ("win_n", "win_sum"),
+        rows=n_rows,
     )
 
 
@@ -1846,9 +1640,6 @@ def streaming_anti_join(
     rows per trigger — the same cost model as the reference's keyed
     join state. Output: keys + left timestamp + left payload columns.
     """
-    from pyspark.sql import functions as F
-    from pyspark.sql.types import ArrayType, StructField, TimestampType
-
     lpay = [c for c in left.columns if c not in (*keys, l_ts_col)]
 
     unioned = left.select(
@@ -1878,83 +1669,44 @@ def streaming_anti_join(
         ]
     )
     out_cols = [*keys, l_ts_col, *lpay]
-    left_row = StructType([StructField("__t", TimestampType()), *pay_fields])
-    state_schema = StructType(
-        [
-            StructField("pending", ArrayType(left_row)),
-            StructField("rights", ArrayType(TimestampType())),
-        ]
-    )
-
-    def make_conv(dt):
-        name = dt.typeName()
-        if name in ("long", "integer", "short", "byte"):
-            return lambda v: None if pd.isna(v) else int(v)
-        if name in ("double", "float"):
-            return lambda v: None if pd.isna(v) else float(v)
-        if name.startswith("timestamp"):
-            return lambda v: None if pd.isna(v) else pd.Timestamp(v)
-        return lambda v: None if (v is None or (isinstance(v, float) and pd.isna(v))) else v
-
-    convs = [make_conv(f.dataType) for f in pay_fields]
-    lower_td = pd.Timedelta(milliseconds=lower_ms)
-    upper_td = pd.Timedelta(milliseconds=upper_ms)
+    lefts = BufferLayout("__t", pay_fields, prefix="left_")
+    rights = BufferLayout("__t", [], prefix="right_")
+    state_schema = StructType([*lefts.state_fields(), *rights.state_fields()])
+    lower_us, upper_us = lower_ms * 1000, upper_ms * 1000
 
     def fn(
         key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
     ) -> Iterator[pd.DataFrame]:
-        def ms(t) -> int:
-            return pd.Timestamp(t).value // 1_000_000
-
         wm = state.getCurrentWatermarkMs()
-        if state.exists:
-            raw_pending, raw_rights = state.get
-            pending = [
-                (pd.Timestamp(p[0]), *p[1:]) for p in (raw_pending or [])
-            ]
-            rights = [pd.Timestamp(t) for t in (raw_rights or [])]
-        else:
-            pending, rights = [], []
+        raw = state.get if state.exists else None
+        pending = lefts.load(raw)
+        rts = rights.load(raw, lefts.width)
         for pdf in pdfs:
-            if len(pdf) == 0:
-                continue
-            for tup in pdf[["__t", "__side", *lpay]].itertuples(
-                index=False, name=None
-            ):
-                if ms(tup[0]) < wm:
-                    continue  # late: ts strictly before the watermark
-                    # (ts == wm is on time — Spark's own late filter
-                    # and the reference's timer semantics both keep it)
-                if int(tup[1]) == 0:
-                    pending.append(
-                        (
-                            pd.Timestamp(tup[0]),
-                            *[c(v) for c, v in zip(convs, tup[2:])],
-                        )
-                    )
-                else:
-                    rights.append(pd.Timestamp(tup[0]))
-        out: list[tuple] = []
-        still = []
-        for p in pending:
-            if ms(p[0]) + upper_ms <= wm:  # window closed: final verdict
-                lo, hi = p[0] + lower_td, p[0] + upper_td
-                if not any(lo <= r < hi for r in rights):
-                    out.append((*key, *p))
-            else:
-                still.append(p)
-        pending = still
-        horizon = pd.Timestamp((wm + 1) * 1_000_000)
-        if pending:
-            horizon = min(horizon, min(p[0] for p in pending))
-        keep_from = horizon + lower_td
-        rights = [r for r in rights if r >= keep_from]
-        state.update((pending, rights))
-        if pending:
-            state.setTimeoutTimestamp(
-                max(wm + 1, min(ms(p[0]) for p in pending) + upper_ms + 1)
-            )
-        if out:
+            is_left = pdf["__side"].to_numpy() == 0
+            pending.admit(pdf, wm, is_left)
+            rts.admit(pdf, wm, ~is_left)
+        # windows closed: final verdict
+        ts, cols = pending.release(wm - upper_ms)
+        r = np.sort(rts.ts)
+        hit = np.searchsorted(r, ts + upper_us) > np.searchsorted(r, ts + lower_us)
+        # a right row below the horizon can match neither a buffered nor
+        # a future (non-late) left: discard it
+        horizon = (wm + 1) * 1000
+        if len(pending):
+            horizon = min(horizon, int(pending.ts.min()))
+        rts.release((horizon + lower_us) // 1000 - 1)
+        state.update((*pending.state(), *rts.state()))
+        timeout = pending.next_timeout()
+        if timeout is not None:
+            state.setTimeoutTimestamp(max(wm + 1, timeout + upper_ms))
+        if not hit.all():
+            sel = np.flatnonzero(~hit)
+            pick = sel.tolist()
+            out = {
+                **dict(zip(keys, key)),
+                l_ts_col: us_to_ts(ts[sel]),
+                **{c: [col[i] for i in pick] for c, col in zip(lpay, cols)},
+            }
             yield pd.DataFrame(out, columns=out_cols)
 
     return unioned.groupBy(*keys).applyInPandasWithState(
@@ -1997,18 +1749,8 @@ def streaming_window_agg_allowed_lateness(
     previous batch's (the module's settlement convention), so firing is
     deterministic under replay.
     """
-    from pyspark.sql.types import (
-        ArrayType,
-        DoubleType,
-        LongType,
-        StringType,
-        StructField,
-        TimestampType,
-        StructType as ST,
-    )
-
     key_fields = [stream.schema[k] for k in keys]
-    out_schema = ST(
+    out_schema = StructType(
         [
             StructField(ROWKIND, StringType()),
             *key_fields,
@@ -2017,7 +1759,7 @@ def streaming_window_agg_allowed_lateness(
             StructField("total", DoubleType()),
         ]
     )
-    state_schema = ST(
+    state_schema = StructType(
         [
             StructField("starts", ArrayType(LongType())),
             StructField("ns", ArrayType(LongType())),
@@ -2152,12 +1894,10 @@ def streaming_upsert_to_retract(
     folding these emissions converges to it for any batch slicing
     (pinned by the fuzzer's normalize arm).
     """
-    from pyspark.sql.types import IntegerType, StringType, StructField, StructType as ST
-
     payload = [c for c in stream.columns if c not in (ROWKIND, seq_col)]
     pay_fields = [stream.schema[c] for c in payload]
-    out_schema = ST([StructField(ROWKIND, StringType()), *pay_fields])
-    state_schema = ST([*pay_fields, StructField("__live", IntegerType())])
+    out_schema = StructType([StructField(ROWKIND, StringType()), *pay_fields])
+    state_schema = StructType([*pay_fields, StructField("__live", IntegerType())])
 
     def fn(
         key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState

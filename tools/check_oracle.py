@@ -15,12 +15,13 @@ from __future__ import annotations
 import argparse
 import sys
 import time
+from pathlib import Path
 
 import duckdb
 import numpy as np
 import pandas as pd
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 
 from flink_release_1_16_0_spark import get_spark, register_tables  # noqa: E402
 from flink_release_1_16_0_spark.catalog import TABLES  # noqa: E402

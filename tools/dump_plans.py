@@ -13,8 +13,9 @@ from __future__ import annotations
 
 import os
 import sys
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 
 from flink_release_1_16_0_spark import get_spark  # noqa: E402
 from flink_release_1_16_0_spark.queries import load_registry  # noqa: E402

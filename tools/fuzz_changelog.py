@@ -24,16 +24,18 @@ random programs per operator.
 
 Generated programs are VALID changelogs (a -U/-D only ever retracts a
 currently-live row — the contract both engines require); values are
-multiples of 0.25 so float accumulation is exact and comparisons are
-equality, not tolerance.
+multiples of 0.25, or of 0.125 where an arm checks values off the cent
+grid, so float accumulation is exact and comparisons are equality, not
+tolerance; the OVER references sum exactly with ``Fraction``.
 
 Arms: agg (retracting SUM/COUNT), topn (retractable top-N), minmax
 (retractable MIN/MAX bag), join (two-input changelog join), dedup
 (keep-first/last refinement across batches), wdedup (window dedup with
 watermark eviction + isWindowFired drop), antijoin/semi (time-bounded
-anti join, changelog semi/anti), over_rows/over_range (event-time OVER
-aggregation), normalize (stateful upsert->retract vs the batch
-ChangelogNormalize), lateness (window agg with allowed lateness + late
+anti join, changelog semi/anti), over_rows/over_range/over_bounded
+(event-time OVER aggregation: unbounded, RANGE and ROWS frames),
+normalize (stateful upsert->retract vs the batch ChangelogNormalize),
+lateness (window agg with allowed lateness + late
 -U/+U firings), tjoin (event-time temporal join with version
 tombstones under random watermark schedules).
 
@@ -50,10 +52,13 @@ import argparse
 import random
 import sys
 from collections import Counter, defaultdict
+from fractions import Fraction
+from pathlib import Path
 
+import numpy as np
 import pandas as pd
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 
 from flink_release_1_16_0_spark.streaming.changelog import (  # noqa: E402
     DELETE,
@@ -72,13 +77,19 @@ ADD = (INSERT, UPDATE_AFTER)
 
 
 class FakeGroupState:
-    """The subset of pyspark GroupState the stateful closures use."""
+    """The subset of pyspark GroupState the stateful closures use.
+
+    Once a :class:`_Cap`-captured closure binds its state ``schema``,
+    every ``update`` is checked the way Spark would take it: pyspark's
+    type verifier, then a ``toInternal``/``fromInternal`` round trip, so
+    a value Spark would reject fails here without a Spark job."""
 
     def __init__(self, watermark_ms: int = 0):
         self._value = None
         self._exists = False
         self._wm = watermark_ms
         self.hasTimedOut = False
+        self.schema = None
 
     @property
     def exists(self) -> bool:
@@ -91,7 +102,19 @@ class FakeGroupState:
         return self._value
 
     def update(self, value) -> None:
-        self._value = tuple(value)
+        from pyspark.sql.types import _make_type_verifier
+
+        # GroupState.update's own conversion of top-level values
+        value = tuple(
+            v.tolist() if isinstance(v, np.generic)
+            else v.to_pydatetime() if hasattr(v, "to_pydatetime")
+            else v
+            for v in value
+        )
+        if self.schema is not None:
+            _make_type_verifier(self.schema, nullable=False)(value)
+            value = tuple(self.schema.fromInternal(self.schema.toInternal(value)))
+        self._value = value
         self._exists = True
 
     def remove(self) -> None:
@@ -132,8 +155,39 @@ class _Cap:
     def applyInPandasWithState(
         self, fn, outputStructType, stateStructType, outputMode, timeoutConf
     ):
+        if isinstance(stateStructType, str):
+            stateStructType = _flat_schema(stateStructType)
         self.fn = fn
+        if stateStructType is not None:
+
+            def checked(key, pdfs, state):
+                # bind the declared state schema so update() checks it
+                state.schema = stateStructType
+                return fn(key, pdfs, state)
+
+            self.fn = checked
         return self
+
+
+def _flat_schema(ddl: str):
+    """A flat ``name TYPE, ...`` state schema, parsed without a JVM (the
+    ITCase harnesses capture closures with no Spark session)."""
+    from pyspark.sql import types as T
+
+    kinds = {
+        "BINARY": T.BinaryType(),
+        "BIGINT": T.LongType(),
+        "INT": T.IntegerType(),
+        "DOUBLE": T.DoubleType(),
+        "STRING": T.StringType(),
+        "TIMESTAMP": T.TimestampType(),
+    }
+    return T.StructType(
+        [
+            T.StructField(name, kinds[kind.upper()])
+            for name, kind in (f.split() for f in ddl.split(","))
+        ]
+    )
 
 
 def replay(fn, batches, key_cols, columns, wm_seq=None):
@@ -681,13 +735,14 @@ def check_antijoin(rng: random.Random) -> str | None:
 
 def _event_time_program(rng: random.Random, n_keys: int):
     """(key, ts, id, v) events with bounded disorder + the per-batch
-    watermark sequence (delay 0 over the max seen event time)."""
+    watermark sequence (delay 0 over the max seen event time); values
+    are off the cent grid."""
     rows, t = [], 0
     for i in range(rng.randint(5, 40)):
         t += rng.randrange(0, 30)
         ts = max(0, t - (rng.randrange(0, 25) if rng.random() < 0.3 else 0))
         rows.append(
-            (rng.randrange(n_keys), pd.Timestamp(ts, unit="ms"), i, qval(rng))
+            (rng.randrange(n_keys), pd.Timestamp(ts, unit="ms"), i, eighth(rng))
         )
     batches = split_batches(rng, rows)
     wm_seq, seen = [], 0
@@ -702,8 +757,8 @@ def check_over_rows(rng: random.Random) -> str | None:
     """streaming_over_rows_event_time vs
     RowTimeRowsUnboundedPrecedingFunction: rows buffer until the
     watermark passes, finalize in (ts, id) order with the running
-    (count, exact-cents sum); late rows drop. Same per-batch
-    watermark/key-touch schedule on both sides."""
+    (count, exact sum); late rows drop. Same per-batch watermark/key-touch
+    schedule on both sides."""
     from flink_release_1_16_0_spark.streaming.stateful import (
         streaming_over_rows_event_time,
     )
@@ -718,11 +773,11 @@ def check_over_rows(rng: random.Random) -> str | None:
     )
     got = Counter(
         (r["k"], r["id"], pd.Timestamp(r["ts"]).value // 1_000_000,
-         r["running_n"], round(r["running_sum"] * 100))
+         r["running_n"], r["running_sum"])
         for r in emissions
     )
     pending: dict = defaultdict(list)
-    acc: dict = defaultdict(lambda: [0, 0])  # n, cents
+    acc: dict = defaultdict(lambda: [0, Fraction(0)])  # n, exact sum
     ref: Counter = Counter()
     for b, wm in zip(batches, wm_seq):
         touched = defaultdict(list)
@@ -736,8 +791,8 @@ def check_over_rows(rng: random.Random) -> str | None:
             pending[k] = [p for p in pending[k] if p[0] > wm]
             for m, i, v in ready:
                 acc[k][0] += 1
-                acc[k][1] += int(round(v * 100))
-                ref[(k, i, m, acc[k][0], acc[k][1])] += 1
+                acc[k][1] += Fraction(v)
+                ref[(k, i, m, acc[k][0], float(acc[k][1]))] += 1
     if got != ref:
         return f"over_rows {dict(got)} != ref {dict(ref)}"
     return None
@@ -765,7 +820,7 @@ def check_over_range(rng: random.Random) -> str | None:
     )
     got = Counter(
         (r["k"], r["id"], pd.Timestamp(r["ts"]).value // 1_000_000,
-         r["win_n"], round(r["win_sum"] * 100))
+         r["win_n"], r["win_sum"])
         for r in emissions
     )
     pending: dict = defaultdict(list)
@@ -791,13 +846,61 @@ def check_over_range(rng: random.Random) -> str | None:
                 frame = [
                     f for f in finalized[k] if m - bound <= f[0] <= m
                 ]
-                n = len(frame)
-                cents = sum(int(round(f[2] * 100)) for f in frame)
+                total = float(sum(Fraction(f[2]) for f in frame))
                 for fm, fi, _fv in ready:
                     if fm == m:
-                        ref[(k, fi, m, n, cents)] += 1
+                        ref[(k, fi, m, len(frame), total)] += 1
     if got != ref:
         return f"over_range {dict(got)} != ref {dict(ref)}"
+    return None
+
+
+def check_over_bounded(rng: random.Random) -> str | None:
+    """streaming_over_rows_bounded_event_time vs
+    RowTimeRowsBoundedPrecedingFunction, with the reference frame taken
+    from FULL history: each finalized row sees itself and the
+    ``n_rows - 1`` rows before it in (ts, id) order — its own frame, no
+    peer sharing — so the retained-state trim is checked against the
+    semantic definition."""
+    from flink_release_1_16_0_spark.streaming.stateful import (
+        streaming_over_rows_bounded_event_time,
+    )
+
+    n_rows = rng.randint(1, 5)
+    batches, wm_seq = _event_time_program(rng, rng.randint(1, 3))
+    cap = _Cap(_schema("k BIGINT, ts TIMESTAMP, id BIGINT, v DOUBLE"))
+    streaming_over_rows_bounded_event_time(
+        cap, keys=["k"], value_col="v", id_col="id", ts_col="ts",
+        n_rows=n_rows,
+    )
+    emissions = replay(
+        cap.fn, batches, ["k"], ["k", "ts", "id", "v"], wm_seq=wm_seq
+    )
+    got = Counter(
+        (r["k"], r["id"], pd.Timestamp(r["ts"]).value // 1_000_000,
+         r["win_n"], r["win_sum"])
+        for r in emissions
+    )
+    pending: dict = defaultdict(list)
+    finalized: dict = defaultdict(list)  # full history, never evicted
+    ref: Counter = Counter()
+    for b, wm in zip(batches, wm_seq):
+        touched = defaultdict(list)
+        for k, ts, i, v in b:
+            touched[k].append((ts.value // 1_000_000, i, v))
+        for k, evs in touched.items():
+            for m, i, v in evs:
+                if m >= wm:
+                    pending[k].append((m, i, v))
+            ready = sorted(p for p in pending[k] if p[0] <= wm)
+            pending[k] = [p for p in pending[k] if p[0] > wm]
+            for m, i, v in ready:
+                finalized[k].append((m, i, v))
+                frame = finalized[k][-n_rows:]
+                total = float(sum(Fraction(f[2]) for f in frame))
+                ref[(k, i, m, len(frame), total)] += 1
+    if got != ref:
+        return f"over_bounded(n_rows={n_rows}) {dict(got)} != ref {dict(ref)}"
     return None
 
 
@@ -1224,6 +1327,7 @@ ARMS = {
     "semi": check_semi,
     "over_rows": check_over_rows,
     "over_range": check_over_range,
+    "over_bounded": check_over_bounded,
     "normalize": check_normalize,
     "lateness": check_lateness,
     "tjoin": check_tjoin,

@@ -36,15 +36,17 @@ import argparse
 import random
 import sys
 import time
+from pathlib import Path
 
 import duckdb
 
-sys.path.insert(0, "/root/repo")
+REPO = Path(__file__).resolve().parents[1]
+sys.path.insert(0, str(REPO))
 
 from flink_release_1_16_0_spark import get_spark, register_tables  # noqa: E402
 from flink_release_1_16_0_spark.catalog import TABLES  # noqa: E402
 
-sys.path.insert(0, "/root/repo/tools")
+sys.path.insert(0, str(REPO / "tools"))
 from check_oracle import compare  # noqa: E402
 
 # ---------------------------------------------------------------------------

@@ -20,8 +20,10 @@ from __future__ import annotations
 
 import argparse
 import sys
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+REPO = Path(__file__).resolve().parents[1]
+sys.path.insert(0, str(REPO))
 
 from flink_release_1_16_0_spark import get_spark  # noqa: E402
 from flink_release_1_16_0_spark.queries import load_registry  # noqa: E402
@@ -29,7 +31,7 @@ from flink_release_1_16_0_spark.queries import load_registry  # noqa: E402
 
 def main() -> int:
     ap = argparse.ArgumentParser()
-    ap.add_argument("--sf", default="/root/repo/testdata_sf1")
+    ap.add_argument("--sf", default=str(REPO / "testdata_sf1"))
     args = ap.parse_args()
 
     registry = load_registry()
