@@ -12,8 +12,9 @@ event-time order. :class:`EventBuffer` is that discipline, once:
   it) and counts the drops — the one place late rows are dropped;
 - **release** returns the rows with ``ms(ts) <= upto``, stably sorted
   by (ts, tie-break columns), and keeps the rest;
-- **next_timeout** is the smallest pending ms plus 1, the event-time
-  timeout that fires the flush batch once the watermark passes it;
+- **next_timeout** is the smallest pending ms minus 1, the event-time
+  timeout that fires the flush batch once the watermark reaches it
+  (Spark fires a timeout only when ``timeout < watermark``);
 - **state** is the typed state codec: one ``ArrayType`` field per
   buffered column, event time as BIGINT epoch-µs. No pickle and no
   array-of-struct, so pyspark's state conversion stays per column, not
@@ -195,8 +196,11 @@ class EventBuffer:
         return ts[order], out
 
     def next_timeout(self) -> int | None:
-        """Smallest pending ms plus 1, or None when nothing is pending."""
-        return int(self.ts.min()) // 1000 + 1 if len(self.ts) else None
+        """The event-time timeout that fires once the watermark reaches
+        the smallest pending ms: Spark fires when ``timeout < watermark``,
+        so this is that ms minus 1 (at least 1, the smallest timeout
+        Spark takes), or None when nothing is pending."""
+        return max(int(self.ts.min()) // 1000 - 1, 1) if len(self.ts) else None
 
     def state(self) -> tuple:
         """The state fields of :meth:`BufferLayout.state_fields`."""

@@ -255,7 +255,7 @@ def streaming_group_window_agg(
             state.update((pickle.dumps((wins, settled_wm)),))
             nxt = min((we for _ws, we in wins if we - 1 > wm), default=None)
             if nxt is not None:
-                state.setTimeoutTimestamp(nxt - 1)
+                state.setTimeoutTimestamp(nxt - 2)  # fires at wm >= nxt - 1
             else:
                 # every live window has fired but is retained for the
                 # allowed-lateness horizon — register its cleanup timer
@@ -264,7 +264,7 @@ def streaming_group_window_agg(
                 # retire via the EventTimeTimeout path instead of
                 # holding state until the key's next record.
                 state.setTimeoutTimestamp(
-                    min(we - 1 + allowed_lateness_ms for _ws, we in wins)
+                    min(we - 2 + allowed_lateness_ms for _ws, we in wins)
                 )
         elif state.exists:
             state.remove()

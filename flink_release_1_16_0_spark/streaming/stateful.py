@@ -21,13 +21,19 @@ place, and released rows come out in (ts, tie-break) order. All four
 OVER operators fold their frames through one function over the
 retractable COUNT and exact-Decimal SUM of streaming.accumulators.
 
+The four OVER operators group by key group, not by key
+(streaming.key_groups): one ``applyInPandasWithState`` call serves
+every key of its group, whose state row holds a typed key table with
+each key's carry, and the group's buffer. The other operators here
+still make one call per key. Event-time timeouts are set one ms below
+the watermark that must fire them, as Spark fires a timeout only when
+``timeout < watermark``.
+
 Design notes for scale: state lives in Spark's checkpointed state store
 partitioned by the grouping key (same layout as Flink's keyed RocksDB
-state); each operator touches only its key group per batch, so the 100
-TB story is identical to Flink's — state size bounded by key
-cardinality x state-per-key, not input size. GroupStateTimeout gives
-the state-TTL semantics of `table.exec.state.ttl`
-(KeyedProcessFunctionWithCleanupState.java).
+state), so state size is bounded by key cardinality x state-per-key,
+not input size. GroupStateTimeout gives the state-TTL semantics of
+`table.exec.state.ttl` (KeyedProcessFunctionWithCleanupState.java).
 
 The emitted changelog uses the `__rowkind` encoding from
 streaming.changelog (RowKind.java:31-52).
@@ -68,6 +74,11 @@ from flink_release_1_16_0_spark.streaming.event_buffer import (
     py_values,
     sort_key,
     us_to_ts,
+)
+from flink_release_1_16_0_spark.streaming.key_groups import (
+    KeyTable,
+    apply_in_key_groups,
+    key_runs,
 )
 
 
@@ -1203,6 +1214,13 @@ _RUNNING_STATE = [
     StructField("n", LongType()),
     StructField("sum", StringType()),
 ]
+# the bounded operators' frame: the rows a future row can still see
+_FRAME = [
+    StructField("frame_ms", ArrayType(LongType())),
+    StructField("frame_v", ArrayType(DoubleType())),
+]
+# a buffered row's key, as its position in the group's key table
+_KEY_POS = StructField("__key_pos", LongType())
 
 
 def _running_load(raw) -> Accumulator:
@@ -1264,73 +1282,76 @@ def _over_event_time(
     rows: int | None = None,
     range_ms: int | None = None,
 ) -> DataFrame:
-    """The event-time OVER operators: (id, value) rows wait in an
-    :class:`EventBuffer`, are released in (ts, id) order and folded by
-    :func:`_over_fold`. Unbounded, state carries the running
-    accumulator; bounded (``rows`` or ``range_ms``), it carries the
-    frame rows a future row can still see, and the accumulator is
-    refolded from them on each call."""
+    """The event-time OVER operators, one call per key group: (key,
+    id, value) rows wait in the group's :class:`EventBuffer`, are
+    released in (ts, id) order, split into per-key runs and folded by
+    :func:`_over_fold`. Unbounded, a key's carry is its running
+    accumulator; bounded (``rows`` or ``range_ms``), it is the frame rows
+    a future row can still see, and the accumulator is refolded from
+    them. A key with no carry and no pending row leaves the table."""
     bounded = rows is not None or range_ms is not None
+    key_fields = [stream.schema[k] for k in keys]
     id_field = stream.schema[id_col]
     out_schema = StructType(
         [
-            *[stream.schema[k] for k in keys],
+            *key_fields,
             id_field,
             stream.schema[ts_col],
             StructField(names[0], LongType()),
             StructField(names[1], DoubleType()),
         ]
     )
+    table = KeyTable(key_fields, _FRAME if bounded else _RUNNING_STATE)
     buf = BufferLayout(
-        ts_col, [id_field, StructField(value_col, DoubleType())], tie=[id_col]
+        ts_col,
+        [_KEY_POS, id_field, StructField(value_col, DoubleType())],
+        tie=[id_col],
     )
-    carry_fields = _RUNNING_STATE
-    if bounded:
-        carry_fields = [
-            StructField("frame_ms", ArrayType(LongType())),
-            StructField("frame_v", ArrayType(DoubleType())),
-        ]
-    state_schema = StructType([*buf.state_fields(), *carry_fields])
+    state_schema = StructType([*table.state_fields(), *buf.state_fields()])
     out_cols = [*keys, id_col, ts_col, *names]
-    w = buf.width
 
     def fn(
-        key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
+        _group: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
     ) -> Iterator[pd.DataFrame]:
         wm = state.getCurrentWatermarkMs()
         raw = state.get if state.exists else None
-        pending = buf.load(raw)
+        group = table.load(raw)
+        pending = buf.load(raw, table.width)
         for pdf in pdfs:
-            pending.admit(pdf, wm)
-        ts, (ids, vals) = pending.release(wm)
-        if bounded:
-            frame = deque(zip(raw[w], raw[w + 1]) if raw else ())
-            acc = Accumulator(2)
-            for _ms, v in frame:
-                acc.add(_OVER_PLAN, (v,))
-            res = _over_fold(acc, ts.tolist(), vals, frame, rows, range_ms)
-            # keep only rows a future row's frame can still hold: the
-            # last rows - 1, or those inside the bound of the watermark
-            # (future rows have ts > wm)
-            while frame and (
-                len(frame) >= rows if rows is not None
-                else frame[0][0] < wm - range_ms
-            ):
-                frame.popleft()
-            carry = ([m for m, _v in frame], [v for _m, v in frame])
-        else:
-            acc = _running_load(raw[w:] if raw else None)
-            res = _over_fold(acc, None, vals)
-            carry = _running_state(acc)
-        state.update((*pending.state(), *carry))
-        timeout = pending.next_timeout()
-        if timeout is not None:
-            state.setTimeoutTimestamp(timeout)
+            if len(pdf):
+                pending.admit(pdf.assign(**{_KEY_POS.name: group.codes(pdf)}), wm)
+        ts, (pos, ids, vals) = pending.release(wm)
+        order, runs = key_runs(np.asarray(pos, dtype=np.int64))
+        pick = order.tolist()
+        ts, ids, vals = ts[order], [ids[i] for i in pick], [vals[i] for i in pick]
+        res: list[tuple] = []
+        first, second = group.carry
+        for k, lo, hi in runs:
+            if bounded:
+                frame = deque(zip(first[k] or (), second[k] or ()))
+                acc = Accumulator(2)
+                for _ms, v in frame:
+                    acc.add(_OVER_PLAN, (v,))
+                res += _over_fold(acc, ts[lo:hi].tolist(), vals[lo:hi], frame, rows, range_ms)
+                # keep only rows a future row's frame can still hold: the
+                # last rows - 1, or those inside the bound of the watermark
+                # (future rows have ts > wm)
+                while frame and (
+                    len(frame) >= rows if rows is not None
+                    else frame[0][0] < wm - range_ms
+                ):
+                    frame.popleft()
+                first[k], second[k] = [m for m, _v in frame], [v for _m, v in frame]
+            else:
+                acc = _running_load((first[k], second[k]))
+                res += _over_fold(acc, None, vals[lo:hi])
+                first[k], second[k] = _running_state(acc)
+        out = None
         if res:
             n, total = zip(*res)
-            yield pd.DataFrame(
+            out = pd.DataFrame(
                 {
-                    **dict(zip(keys, key)),
+                    **group.columns([pos[i] for i in pick]),
                     id_col: ids,
                     ts_col: us_to_ts(ts),
                     names[0]: n,
@@ -1338,13 +1359,29 @@ def _over_event_time(
                 },
                 columns=out_cols,
             )
+        live = np.fromiter((bool(c) for c in first), dtype=bool, count=len(group))
+        waiting = np.asarray(pending.cols[0], dtype=np.int64)
+        live[waiting] = True
+        if not live.all():
+            pending.cols[0] = group.keep(live)[waiting].tolist()
+        if len(group):
+            state.update((*group.state(), *pending.state()))
+            timeout = pending.next_timeout()
+            if timeout is not None:
+                state.setTimeoutTimestamp(timeout)
+        elif state.exists:
+            state.remove()
+        if out is not None:
+            yield out
 
-    return stream.groupBy(*keys).applyInPandasWithState(
+    return apply_in_key_groups(
+        stream,
+        table,
         fn,
-        outputStructType=out_schema,
-        stateStructType=state_schema,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.EventTimeTimeout,
+        out_schema,
+        state_schema,
+        "update",
+        GroupStateTimeout.EventTimeTimeout,
     )
 
 
@@ -1407,24 +1444,34 @@ def streaming_over_rows_unbounded(
             StructField("running_sum", DoubleType()),
         ]
     )
-    state_schema = StructType(_RUNNING_STATE)
+    table = KeyTable(key_fields, _RUNNING_STATE)
     out_cols = [*keys, id_col, "running_n", "running_sum"]
 
     def fn(
-        key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
+        _group: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
     ) -> Iterator[pd.DataFrame]:
         batches = [pdf for pdf in pdfs if len(pdf)]
         if not batches:
             return
         pdf = pd.concat(batches, ignore_index=True) if len(batches) > 1 else batches[0]
-        order = np.lexsort([sort_key(pdf[c]) for c in reversed(order_cols)])
+        group = table.load(state.get if state.exists else None)
+        pos = group.codes(pdf)
+        by_time = np.lexsort([sort_key(pdf[c]) for c in reversed(order_cols)])
+        by_key, runs = key_runs(pos[by_time])
+        order = by_time[by_key]
         vals = py_values(pdf[value_col], DoubleType())
-        acc = _running_load(state.get if state.exists else None)
-        n, total = zip(*_over_fold(acc, None, [vals[i] for i in order]))
-        state.update(_running_state(acc))
+        vals = [vals[i] for i in order.tolist()]
+        res: list[tuple] = []
+        n_col, sum_col = group.carry
+        for k, lo, hi in runs:
+            acc = _running_load((n_col[k], sum_col[k]))
+            res += _over_fold(acc, None, vals[lo:hi])
+            n_col[k], sum_col[k] = _running_state(acc)
+        state.update(group.state())
+        n, total = zip(*res)
         yield pd.DataFrame(
             {
-                **dict(zip(keys, key)),
+                **group.columns(pos[order].tolist()),
                 id_col: pdf[id_col].to_numpy()[order],
                 "running_n": n,
                 "running_sum": total,
@@ -1432,12 +1479,14 @@ def streaming_over_rows_unbounded(
             columns=out_cols,
         )
 
-    return stream.groupBy(*keys).applyInPandasWithState(
+    return apply_in_key_groups(
+        stream,
+        table,
         fn,
-        outputStructType=out_schema,
-        stateStructType=state_schema,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+        out_schema,
+        StructType(table.state_fields()),
+        "update",
+        GroupStateTimeout.NoTimeout,
     )
 
 
@@ -1698,7 +1747,7 @@ def streaming_anti_join(
         state.update((*pending.state(), *rts.state()))
         timeout = pending.next_timeout()
         if timeout is not None:
-            state.setTimeoutTimestamp(max(wm + 1, timeout + upper_ms))
+            state.setTimeoutTimestamp(max(timeout + upper_ms, 1))
         if not hit.all():
             sel = np.flatnonzero(~hit)
             pick = sel.tolist()
@@ -1851,7 +1900,7 @@ def streaming_window_agg_allowed_lateness(
                 w + window_ms for w in starts if wins[w][2] is None
             ] + [w + window_ms + allowed_lateness_ms for w in starts]
             nxt = min(b for b in bounds if b > wm)
-            state.setTimeoutTimestamp(nxt)
+            state.setTimeoutTimestamp(nxt - 1)  # fires at wm >= nxt
         elif state.exists:
             state.remove()
         if out:

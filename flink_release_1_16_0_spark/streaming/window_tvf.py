@@ -315,7 +315,7 @@ def streaming_window_tvf_agg(
                 default=None,
             )
             if nxt is not None:
-                state.setTimeoutTimestamp(nxt - 1)
+                state.setTimeoutTimestamp(nxt - 2)  # fires at wm >= nxt - 1
         elif state.exists:
             state.remove()
 
@@ -523,7 +523,7 @@ def streaming_window_tvf_join(
             state.update((pickle.dumps((wins, settled_wm)),))
             nxt = min((e for e in wins if e - 1 > settled_wm), default=None)
             if nxt is not None:
-                state.setTimeoutTimestamp(nxt - 1)
+                state.setTimeoutTimestamp(nxt - 2)  # fires at wm >= nxt - 1
         elif state.exists:
             state.remove()
 
@@ -721,7 +721,7 @@ def streaming_window_tvf_topn(
             state.update((pickle.dumps((wins, settled_wm)),))
             nxt = min((e for e in wins if e - 1 > settled_wm), default=None)
             if nxt is not None:
-                state.setTimeoutTimestamp(nxt - 1)
+                state.setTimeoutTimestamp(nxt - 2)  # fires at wm >= nxt - 1
         elif state.exists:
             state.remove()
 

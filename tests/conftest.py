@@ -7,10 +7,12 @@ suite — SURVEY.md section 5) with a shared local[*] SparkSession.
 from __future__ import annotations
 
 import sys
+from pathlib import Path
 
 import pytest
 
-sys.path.insert(0, "/root/repo")
+# the repo root, so tests import the package and tools/ from any checkout
+sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 
 from flink_release_1_16_0_spark import get_spark  # noqa: E402
 

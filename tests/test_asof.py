@@ -9,11 +9,8 @@ exists yet.
 from __future__ import annotations
 
 import datetime as dt
-import sys
 
-sys.path.insert(0, "/root/repo")
-
-from flink_release_1_16_0_spark.operators.asof import asof_join  # noqa: E402
+from flink_release_1_16_0_spark.operators.asof import asof_join
 
 
 def _ts(s: str) -> dt.datetime:

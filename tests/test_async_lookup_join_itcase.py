@@ -25,15 +25,11 @@ original (operators/async_lookup.py, real mapInPandas execution)."""
 
 from __future__ import annotations
 
-import sys
-
 import pytest
 
-sys.path.insert(0, "/root/repo")
+from pyspark.sql import functions as F
 
-from pyspark.sql import functions as F  # noqa: E402
-
-from flink_release_1_16_0_spark.operators.async_lookup import (  # noqa: E402
+from flink_release_1_16_0_spark.operators.async_lookup import (
     async_lookup_join,
 )
 

@@ -10,14 +10,10 @@ timestamps, and the deflate codec.
 
 from __future__ import annotations
 
-import sys
-
 import pandas as pd
 import pytest
 
-sys.path.insert(0, "/root/repo")
-
-from flink_release_1_16_0_spark.sources.avro_format import (  # noqa: E402
+from flink_release_1_16_0_spark.sources.avro_format import (
     avro_source,
     avro_to_spark_type,
     parse_ocf,

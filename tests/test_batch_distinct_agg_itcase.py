@@ -16,13 +16,9 @@ the NullTable3 derivation (Apache-2.0). Execution: native Spark SQL
 
 from __future__ import annotations
 
-import sys
-
 import pytest
 
-sys.path.insert(0, "/root/repo")
-
-from tests.test_join_semianti_itcase import TUPLE5  # noqa: E402  (= tupleData5)
+from tests.test_join_semianti_itcase import TUPLE5  # (= tupleData5)
 
 C3 = [
     "Hi", "Hello", "Hello world", "Hello world, how are you?",

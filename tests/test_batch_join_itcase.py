@@ -20,12 +20,9 @@ expected rows are the ITCases' own (Apache-2.0)."""
 
 from __future__ import annotations
 
-import sys
 from decimal import Decimal
 
 import pytest
-
-sys.path.insert(0, "/root/repo")
 
 NUMERIC = [
     (1, 1, 1.0, 1.0, Decimal(1)),

@@ -21,13 +21,9 @@ Catalyst picks its own here (native batch joins, SURVEY.md section
 
 from __future__ import annotations
 
-import sys
-
 import pytest
 
-sys.path.insert(0, "/root/repo")
-
-from tests.test_join_semianti_itcase import TUPLE5  # noqa: E402
+from tests.test_join_semianti_itcase import TUPLE5
 
 LEFT_T = [
     (1, 2.0), (2, 100.0), (2, 1.0), (2, 1.0), (3, 3.0), (5, 1.0),

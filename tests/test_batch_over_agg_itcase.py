@@ -11,13 +11,9 @@ native Catalyst window aggregation (SURVEY.md section 2.5 row 37)."""
 
 from __future__ import annotations
 
-import sys
-
 import pytest
 
-sys.path.insert(0, "/root/repo")
-
-from tests.test_join_semianti_itcase import TUPLE5  # noqa: E402
+from tests.test_join_semianti_itcase import TUPLE5
 
 
 @pytest.fixture(autouse=True)

@@ -10,13 +10,9 @@ fact-fact joins (orders x lineitem), pinned here as a plan test.
 
 from __future__ import annotations
 
-import sys
-
 import pytest
 
-sys.path.insert(0, "/root/repo")
-
-from flink_release_1_16_0_spark.catalog import load_table  # noqa: E402
+from flink_release_1_16_0_spark.catalog import load_table
 
 
 @pytest.fixture(scope="module")

@@ -10,12 +10,9 @@ execution is native Spark SQL (SURVEY.md section 2.2 row 14)."""
 
 from __future__ import annotations
 
-import sys
 from decimal import Decimal
 
 import pytest
-
-sys.path.insert(0, "/root/repo")
 
 C3 = [
     "Hi", "Hello", "Hello world", "Hello world, how are you?",

@@ -4,20 +4,17 @@ and the streaming over-agg operator across micro-batches."""
 from __future__ import annotations
 
 import datetime as dt
-import sys
 
 import pytest
 from pyspark.sql import functions as F
 
-sys.path.insert(0, "/root/repo")
-
-from flink_release_1_16_0_spark.operators.cep import (  # noqa: E402
+from flink_release_1_16_0_spark.operators.cep import (
     classify,
     match_fixed_pattern,
     match_regex_pattern,
 )
-from flink_release_1_16_0_spark.operators.lookup import lookup_join  # noqa: E402
-from flink_release_1_16_0_spark.operators.multimodal import (  # noqa: E402
+from flink_release_1_16_0_spark.operators.lookup import lookup_join
+from flink_release_1_16_0_spark.operators.multimodal import (
     extract_media_metadata,
     with_binary_payload,
 )

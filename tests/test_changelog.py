@@ -8,14 +8,11 @@ keys, group-vanish-on-zero-count, and -U/+U pairing.
 from __future__ import annotations
 
 import datetime as dt
-import sys
 
 import pytest
 from pyspark.sql import functions as F
 
-sys.path.insert(0, "/root/repo")
-
-from flink_release_1_16_0_spark.streaming import changelog as C  # noqa: E402
+from flink_release_1_16_0_spark.streaming import changelog as C
 
 
 def _ts(m):

@@ -7,15 +7,11 @@ plans compute latest-version-per-key ground truth.
 
 from __future__ import annotations
 
-import sys
-
 import pytest
 from pyspark.sql import functions as F
 
-sys.path.insert(0, "/root/repo")
-
-from flink_release_1_16_0_spark.plans import changelog_inference as P  # noqa: E402
-from flink_release_1_16_0_spark.streaming import changelog as C  # noqa: E402
+from flink_release_1_16_0_spark.plans import changelog_inference as P
+from flink_release_1_16_0_spark.streaming import changelog as C
 
 # a tiny upsert log: key 1 updated once, key 2 inserted then deleted,
 # key 3 plain insert

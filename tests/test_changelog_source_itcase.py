@@ -27,32 +27,29 @@ streaming_changelog_join, streaming/retract_agg.py."""
 
 from __future__ import annotations
 
-import sys
 from collections import Counter
 from decimal import Decimal
 
 import pandas as pd
 import pytest
 
-sys.path.insert(0, "/root/repo")
+from pyspark.sql.types import LongType, StringType
 
-from pyspark.sql.types import LongType, StringType  # noqa: E402
-
-from tools.fuzz_changelog import FakeGroupState, _Cap, _schema  # noqa: E402
-from flink_release_1_16_0_spark.streaming.changelog import (  # noqa: E402
+from tools.fuzz_changelog import FakeGroupState, _Cap, _schema
+from flink_release_1_16_0_spark.streaming.changelog import (
     DELETE,
     INSERT,
     ROWKIND,
     UPDATE_AFTER,
     UPDATE_BEFORE,
 )
-from tests.test_aggregate_itcase import (  # noqa: E402
+from tests.test_aggregate_itcase import (
     RK,
     build,
     feed,
     retract_fold,
 )
-from tests.test_join_semianti_itcase import (  # noqa: E402
+from tests.test_join_semianti_itcase import (
     _join_fn,
     fold,
     merge_sides,

@@ -12,11 +12,7 @@ Fixtures and expected rows are the ITCase's own (Apache-2.0)."""
 
 from __future__ import annotations
 
-import sys
-
 import pytest
-
-sys.path.insert(0, "/root/repo")
 
 
 @pytest.fixture()

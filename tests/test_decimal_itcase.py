@@ -23,12 +23,9 @@ Catalyst, SURVEY.md section 2.4 row 29)."""
 from __future__ import annotations
 
 import math
-import sys
 from decimal import Decimal
 
 import pytest
-
-sys.path.insert(0, "/root/repo")
 
 
 def _t1(spark, ddl, rows):

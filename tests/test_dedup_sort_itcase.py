@@ -33,14 +33,10 @@ Adaptations, each deliberate:
 
 from __future__ import annotations
 
-import sys
-
 import pandas as pd
 import pytest
 
-sys.path.insert(0, "/root/repo")
-
-from tools.fuzz_changelog import (  # noqa: E402
+from tools.fuzz_changelog import (
     FakeGroupState,
     _Cap,
     _schema,

@@ -185,12 +185,19 @@ def test_state_codec_round_trips_through_the_declared_schema(rows):
     st.lists(st.integers(0, 10_000), max_size=30),
     st.integers(0, 10_000),
 )
-def test_next_timeout_is_smallest_pending_ms_plus_one(ts_ms, wm):
+def test_next_timeout_fires_when_the_watermark_reaches_the_smallest_pending_ms(
+    ts_ms, wm
+):
+    # Spark fires a timeout when timeout < watermark and rejects one
+    # below the watermark or not positive
     buf = LAYOUT.load()
     buf.admit(_frame([(t, i, 0.0) for i, t in enumerate(ts_ms)]), 0)
     buf.release(wm)
     pending = [t for t in ts_ms if t > wm]
-    assert buf.next_timeout() == (min(pending) + 1 if pending else None)
+    timeout = buf.next_timeout()
+    assert timeout == (max(min(pending) - 1, 1) if pending else None)
+    if pending:
+        assert timeout >= wm and timeout > 0
 
 
 def test_py_values_restores_nulls_and_declared_types():

@@ -3,14 +3,10 @@ mirroring the reference's BuiltInFunctionTestBase per-function cases."""
 
 from __future__ import annotations
 
-import sys
-
 import pytest
 from pyspark.sql import functions as F
 
-sys.path.insert(0, "/root/repo")
-
-from flink_release_1_16_0_spark import functions as FF  # noqa: E402
+from flink_release_1_16_0_spark import functions as FF
 
 
 def _one(spark, col):

@@ -7,13 +7,10 @@ retracting-agg behavior (rowkind ignored, every row accumulated +1)."""
 from __future__ import annotations
 
 import random
-import sys
 
 import pytest
 
-sys.path.insert(0, "/root/repo")
-
-from tools.fuzz_changelog import ARMS  # noqa: E402
+from tools.fuzz_changelog import ARMS
 
 
 @pytest.mark.parametrize("arm", sorted(ARMS))

@@ -39,14 +39,11 @@ the implementation is original.
 
 from __future__ import annotations
 
-import sys
 from decimal import Decimal
 
 import pandas as pd
 
-sys.path.insert(0, "/root/repo")
-
-from pyspark.sql.types import (  # noqa: E402
+from pyspark.sql.types import (
     DoubleType,
     LongType,
     StringType,
@@ -55,15 +52,15 @@ from pyspark.sql.types import (  # noqa: E402
     TimestampType,
 )
 
-from tools.fuzz_changelog import FakeGroupState, _Cap  # noqa: E402
-from flink_release_1_16_0_spark.streaming.group_window import (  # noqa: E402
+from tools.fuzz_changelog import FakeGroupState, _Cap
+from flink_release_1_16_0_spark.streaming.group_window import (
     streaming_group_window_agg,
 )
-from flink_release_1_16_0_spark.streaming.stateful import (  # noqa: E402
+from flink_release_1_16_0_spark.streaming.stateful import (
     streaming_retracting_minmax,
     streaming_upsert_to_retract,
 )
-from tests.test_window_agg_itcase import jfmt, _v  # noqa: E402
+from tests.test_window_agg_itcase import jfmt, _v
 
 EPOCH = pd.Timestamp("1970-01-01")
 

@@ -23,11 +23,8 @@ row 15, Expand)."""
 from __future__ import annotations
 
 import datetime as dt
-import sys
 
 import pytest
-
-sys.path.insert(0, "/root/repo")
 
 EMPS = [
     (100, "Fred", 10, None, None, 40, 25, True, False, dt.date(1996, 8, 3)),

@@ -7,19 +7,15 @@ JDBC-backed lookup join (JdbcRowDataLookupFunction.java:54).
 
 from __future__ import annotations
 
-import sys
-
 import pytest
 from pyspark.sql import functions as F
 
-sys.path.insert(0, "/root/repo")
-
-from flink_release_1_16_0_spark.operators.lookup import lookup_join  # noqa: E402
-from flink_release_1_16_0_spark.sources.jdbc import (  # noqa: E402
+from flink_release_1_16_0_spark.operators.lookup import lookup_join
+from flink_release_1_16_0_spark.sources.jdbc import (
     jdbc_source,
     jdbc_write,
 )
-from flink_release_1_16_0_spark.table_env import TableEnvironment  # noqa: E402
+from flink_release_1_16_0_spark.table_env import TableEnvironment
 
 URL = "jdbc:derby:memory:graft_test;create=true"
 

@@ -17,20 +17,17 @@ them. Folds follow TestingRetractSink: Counter += m on +I, -= m on -D.
 
 from __future__ import annotations
 
-import sys
 from collections import Counter
 
 import pandas as pd
 import pytest
 
-sys.path.insert(0, "/root/repo")
-
-from tools.fuzz_changelog import (  # noqa: E402
+from tools.fuzz_changelog import (
     FakeGroupState,
     _Cap,
     _schema,
 )
-from flink_release_1_16_0_spark.streaming.changelog import (  # noqa: E402
+from flink_release_1_16_0_spark.streaming.changelog import (
     DELETE,
     INSERT,
     ROWKIND,

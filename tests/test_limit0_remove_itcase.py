@@ -10,11 +10,7 @@ NOT EXISTS -> all rows. Expected rows are the ITCase's own
 
 from __future__ import annotations
 
-import sys
-
 import pytest
-
-sys.path.insert(0, "/root/repo")
 
 
 @pytest.fixture(autouse=True)

@@ -15,14 +15,10 @@ computed-key lookups (T.id = D.id + 4 with a string expression)."""
 
 from __future__ import annotations
 
-import sys
-
 import pytest
 from pyspark.sql import functions as F
 
-sys.path.insert(0, "/root/repo")
-
-from flink_release_1_16_0_spark.operators.lookup import lookup_join  # noqa: E402
+from flink_release_1_16_0_spark.operators.lookup import lookup_join
 
 SRC = [  # LookupJoinITCase.scala:53 (id, len, content)
     (1, 12, "Julian"),

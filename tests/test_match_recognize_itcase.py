@@ -25,13 +25,9 @@ operators/cep.py."""
 
 from __future__ import annotations
 
-import sys
-
 import pytest
 
-sys.path.insert(0, "/root/repo")
-
-from flink_release_1_16_0_spark.table_env import TableEnvironment  # noqa: E402
+from flink_release_1_16_0_spark.table_env import TableEnvironment
 
 
 @pytest.fixture()

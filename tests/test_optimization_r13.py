@@ -9,19 +9,15 @@ asof_join rewrite's identifier handling.
 
 from __future__ import annotations
 
-import sys
-
 import pytest
 
-sys.path.insert(0, "/root/repo")
-
-from flink_release_1_16_0_spark.catalog import load_table  # noqa: E402
-from flink_release_1_16_0_spark.operators.asof import asof_join  # noqa: E402
-from flink_release_1_16_0_spark.operators.similarity import (  # noqa: E402
+from flink_release_1_16_0_spark.catalog import load_table
+from flink_release_1_16_0_spark.operators.asof import asof_join
+from flink_release_1_16_0_spark.operators.similarity import (
     brute_force_topk,
 )
-from flink_release_1_16_0_spark.queries import load_registry  # noqa: E402
-from flink_release_1_16_0_spark.queries._util import spread_scan  # noqa: E402
+from flink_release_1_16_0_spark.queries import load_registry
+from flink_release_1_16_0_spark.queries._util import spread_scan
 
 REGISTRY = load_registry()
 

@@ -11,21 +11,17 @@ broadcast when the threshold gate is closed).
 
 from __future__ import annotations
 
-import sys
-
 import pytest
 
-sys.path.insert(0, "/root/repo")
-
-from flink_release_1_16_0_spark.catalog import load_table  # noqa: E402
-from flink_release_1_16_0_spark.operators._sqlq import q_ident  # noqa: E402
-from flink_release_1_16_0_spark.operators.similarity import (  # noqa: E402
+from flink_release_1_16_0_spark.catalog import load_table
+from flink_release_1_16_0_spark.operators._sqlq import q_ident
+from flink_release_1_16_0_spark.operators.similarity import (
     hyperplane_lsh_topk,
     ivf_topk,
     random_hyperplanes,
 )
-from flink_release_1_16_0_spark.queries import load_registry  # noqa: E402
-from flink_release_1_16_0_spark.queries._util import (  # noqa: E402
+from flink_release_1_16_0_spark.queries import load_registry
+from flink_release_1_16_0_spark.queries._util import (
     broadcast_if_small,
 )
 

@@ -7,11 +7,7 @@ strategy on dims, and whole-stage codegen presence.
 
 from __future__ import annotations
 
-import sys
-
-sys.path.insert(0, "/root/repo")
-
-from flink_release_1_16_0_spark.queries import load_registry  # noqa: E402
+from flink_release_1_16_0_spark.queries import load_registry
 
 REGISTRY = load_registry()
 

@@ -27,19 +27,15 @@ Adaptations, each deliberate:
 
 from __future__ import annotations
 
-import sys
-
 import pandas as pd
 import pytest
 
-sys.path.insert(0, "/root/repo")
-
-from tools.fuzz_changelog import (  # noqa: E402
+from tools.fuzz_changelog import (
     FakeGroupState,
     _Cap,
     _schema,
 )
-from tests.test_dedup_sort_itcase import replay_wm  # noqa: E402
+from tests.test_dedup_sort_itcase import replay_wm
 
 
 @pytest.fixture(autouse=True)

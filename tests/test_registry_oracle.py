@@ -6,18 +6,12 @@ runner sharing this logic).
 
 from __future__ import annotations
 
-import sys
-
 import duckdb
 import pytest
 
-sys.path.insert(0, "/root/repo")
-sys.path.insert(0, "/root/repo/tools")
-
-from check_oracle import compare  # noqa: E402
-
-from flink_release_1_16_0_spark.catalog import TABLES, register_tables  # noqa: E402
-from flink_release_1_16_0_spark.queries import load_registry  # noqa: E402
+from flink_release_1_16_0_spark.catalog import TABLES, register_tables
+from flink_release_1_16_0_spark.queries import load_registry
+from tools.check_oracle import compare
 
 REGISTRY = load_registry()
 

@@ -11,13 +11,9 @@ Fixtures and expected rows are the ITCase's own (Apache-2.0)."""
 
 from __future__ import annotations
 
-import sys
-
 import pytest
 
-sys.path.insert(0, "/root/repo")
-
-from flink_release_1_16_0_spark.table_env import TableEnvironment  # noqa: E402
+from flink_release_1_16_0_spark.table_env import TableEnvironment
 
 SMALL3 = [(1, 1, "Hi"), (2, 2, "Hello"), (3, 2, "Hello world")]
 DATA3_C = [

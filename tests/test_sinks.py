@@ -4,18 +4,15 @@ partitioned file writes, side outputs (SURVEY.md sections 2.1, 2.9)."""
 from __future__ import annotations
 
 import datetime as dt
-import sys
 
 import pytest
 from pyspark.sql import functions as F
 
-sys.path.insert(0, "/root/repo")
-
-from flink_release_1_16_0_spark.operators.sink import (  # noqa: E402
+from flink_release_1_16_0_spark.operators.sink import (
     enforce_constraints,
     upsert_materialize_to_path,
 )
-from flink_release_1_16_0_spark.streaming import changelog as C  # noqa: E402
+from flink_release_1_16_0_spark.streaming import changelog as C
 
 
 def test_not_null_error_policy(spark):

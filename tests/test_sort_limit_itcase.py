@@ -18,24 +18,20 @@ streaming/retract_agg.py for the inner MAX)."""
 
 from __future__ import annotations
 
-import sys
-
 import pandas as pd
 
-sys.path.insert(0, "/root/repo")
-
-from pyspark.sql.types import (  # noqa: E402
+from pyspark.sql.types import (
     LongType,
     StringType,
     StructField,
     StructType,
 )
 
-from tools.fuzz_changelog import FakeGroupState, _Cap  # noqa: E402
-from flink_release_1_16_0_spark.streaming.retract_agg import (  # noqa: E402
+from tools.fuzz_changelog import FakeGroupState, _Cap
+from flink_release_1_16_0_spark.streaming.retract_agg import (
     streaming_retracting_multi_agg,
 )
-from flink_release_1_16_0_spark.streaming.stateful import (  # noqa: E402
+from flink_release_1_16_0_spark.streaming.stateful import (
     streaming_retractable_topn,
 )
 

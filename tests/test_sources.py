@@ -2,13 +2,9 @@
 
 from __future__ import annotations
 
-import sys
-
 import pytest
 
-sys.path.insert(0, "/root/repo")
-
-from flink_release_1_16_0_spark import sources as S  # noqa: E402
+from flink_release_1_16_0_spark import sources as S
 
 
 def test_file_source_batch_csv_roundtrip(spark, tmp_path):

@@ -21,22 +21,19 @@ ITCase's own (ported test data, Apache-2.0); implementation original.
 from __future__ import annotations
 
 import datetime as _dt
-import sys
 import zlib
 from decimal import Decimal
 
 import pandas as pd
 
-sys.path.insert(0, "/root/repo")
-
-from pyspark.sql.types import (  # noqa: E402
+from pyspark.sql.types import (
     LongType,
     StringType,
     StructField,
     StructType,
 )
 
-from tests.test_aggregate_itcase import (  # noqa: E402
+from tests.test_aggregate_itcase import (
     RK,
     build,
     feed,

@@ -9,16 +9,12 @@ log. Multi-batch is forced by splitting the fixture into chunked files
 
 from __future__ import annotations
 
-import sys
-
 import pytest
 from pyspark.sql import functions as F
 
-sys.path.insert(0, "/root/repo")
-
-from flink_release_1_16_0_spark.catalog import load_table  # noqa: E402
-from flink_release_1_16_0_spark.streaming.core import run_to_table  # noqa: E402
-from flink_release_1_16_0_spark.streaming.stateful import (  # noqa: E402
+from flink_release_1_16_0_spark.catalog import load_table
+from flink_release_1_16_0_spark.streaming.core import run_to_table
+from flink_release_1_16_0_spark.streaming.stateful import (
     streaming_dedup_keep_last,
     streaming_retracting_agg,
     streaming_topn,

@@ -8,14 +8,10 @@ grammar (flink-sql-parser Parser.tdd:53-57).
 
 from __future__ import annotations
 
-import sys
-
 import pytest
 from pyspark.sql import functions as F
 
-sys.path.insert(0, "/root/repo")
-
-from flink_release_1_16_0_spark.table_env import (  # noqa: E402
+from flink_release_1_16_0_spark.table_env import (
     TableEnvironment,
     flink_type_to_spark,
 )

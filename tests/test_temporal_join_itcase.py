@@ -25,16 +25,12 @@ event time (delay 0), final +inf flush.
 
 from __future__ import annotations
 
-import sys
-
 import pandas as pd
 import pytest
 
-sys.path.insert(0, "/root/repo")
-
-from tools.fuzz_changelog import _Cap, _schema  # noqa: E402
-from tests.test_dedup_sort_itcase import replay_wm  # noqa: E402
-from flink_release_1_16_0_spark.streaming.changelog import (  # noqa: E402
+from tools.fuzz_changelog import _Cap, _schema
+from tests.test_dedup_sort_itcase import replay_wm
+from flink_release_1_16_0_spark.streaming.changelog import (
     DELETE,
     INSERT,
     ROWKIND,

@@ -24,13 +24,10 @@ operators/asof.py."""
 from __future__ import annotations
 
 import datetime as dt
-import sys
 
 import pytest
 
-sys.path.insert(0, "/root/repo")
-
-from flink_release_1_16_0_spark.table_env import TableEnvironment  # noqa: E402
+from flink_release_1_16_0_spark.table_env import TableEnvironment
 
 
 def ms(n: int) -> dt.datetime:

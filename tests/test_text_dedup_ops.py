@@ -6,14 +6,10 @@ planted near-duplicates, signature stability.
 
 from __future__ import annotations
 
-import sys
-
 import pyspark.sql.functions as F
 
-sys.path.insert(0, "/root/repo")
-
-from flink_release_1_16_0_spark.operators import dedup as D  # noqa: E402
-from flink_release_1_16_0_spark.operators import text as T  # noqa: E402
+from flink_release_1_16_0_spark.operators import dedup as D
+from flink_release_1_16_0_spark.operators import text as T
 
 
 def _docs(spark, texts):

@@ -17,13 +17,9 @@ test is original (table_env.py DDL parse + rewrite_group_windows)."""
 
 from __future__ import annotations
 
-import sys
-
 import pytest
 
-sys.path.insert(0, "/root/repo")
-
-from flink_release_1_16_0_spark.table_env import TableEnvironment  # noqa: E402
+from flink_release_1_16_0_spark.table_env import TableEnvironment
 
 # (log_ts, ts_ms, a, b) — TimeAttributeITCase.scala:36
 DATA = [

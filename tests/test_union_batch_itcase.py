@@ -9,13 +9,9 @@ Spark SQL (SURVEY.md section 2.7)."""
 
 from __future__ import annotations
 
-import sys
-
 import pytest
 
-sys.path.insert(0, "/root/repo")
-
-from tests.test_join_semianti_itcase import TUPLE5  # noqa: E402
+from tests.test_join_semianti_itcase import TUPLE5
 
 SMALL3 = [(1, 1, "Hi"), (2, 2, "Hello"), (3, 2, "Hello world")]
 

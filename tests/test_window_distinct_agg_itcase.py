@@ -27,15 +27,12 @@ implementation under test is original (streaming/window_tvf.py).
 
 from __future__ import annotations
 
-import sys
 import zlib
 from decimal import Decimal
 
 import pandas as pd
 
-sys.path.insert(0, "/root/repo")
-
-from pyspark.sql.types import (  # noqa: E402
+from pyspark.sql.types import (
     DoubleType,
     FloatType,
     LongType,
@@ -45,11 +42,11 @@ from pyspark.sql.types import (  # noqa: E402
     TimestampType,
 )
 
-from tools.fuzz_changelog import FakeGroupState, _Cap  # noqa: E402
-from flink_release_1_16_0_spark.streaming.window_tvf import (  # noqa: E402
+from tools.fuzz_changelog import FakeGroupState, _Cap
+from flink_release_1_16_0_spark.streaming.window_tvf import (
     streaming_window_tvf_agg,
 )
-from tests.test_window_agg_itcase import (  # noqa: E402
+from tests.test_window_agg_itcase import (
     COLUMNS,
     IN_SCHEMA,
     ROWS,

@@ -33,26 +33,22 @@ the implementation is original.
 
 from __future__ import annotations
 
-import sys
-
 import pandas as pd
 import pytest
 
-sys.path.insert(0, "/root/repo")
-
-from pyspark.sql.types import (  # noqa: E402
+from pyspark.sql.types import (
     LongType,
     StringType,
     StructField,
     StructType,
 )
 
-from tools.fuzz_changelog import FakeGroupState, _Cap  # noqa: E402
-from flink_release_1_16_0_spark.streaming.window_tvf import (  # noqa: E402
+from tools.fuzz_changelog import FakeGroupState, _Cap
+from flink_release_1_16_0_spark.streaming.window_tvf import (
     streaming_window_tvf_agg,
     streaming_window_tvf_join,
 )
-from tests.test_window_agg_itcase import (  # noqa: E402
+from tests.test_window_agg_itcase import (
     COLUMNS,
     IN_SCHEMA,
     SEC,

@@ -18,7 +18,6 @@ from __future__ import annotations
 
 import datetime as dt
 import os
-import sys
 import time
 
 import pyarrow as pa
@@ -27,13 +26,11 @@ import pytest
 from pyspark.sql import functions as F
 from pyspark.sql.types import DoubleType, LongType, StringType
 
-sys.path.insert(0, "/root/repo")
-
-from flink_release_1_16_0_spark.streaming.core import run_to_table  # noqa: E402
-from flink_release_1_16_0_spark.streaming.group_window import (  # noqa: E402
+from flink_release_1_16_0_spark.streaming.core import run_to_table
+from flink_release_1_16_0_spark.streaming.group_window import (
     streaming_group_window_agg,
 )
-from flink_release_1_16_0_spark.streaming.window_tvf import (  # noqa: E402
+from flink_release_1_16_0_spark.streaming.window_tvf import (
     streaming_window_tvf_agg,
     streaming_window_tvf_topn,
 )

@@ -10,10 +10,13 @@ each operator builder ends in ``stream.groupBy(keys).applyInPandasWithState
 (fn, ...)``; a capture shim stands in for the DataFrame and records ``fn``,
 then a single-threaded harness replays randomly generated changelog
 programs through it batch-by-batch with a faked GroupState — exactly the
-per-key data layout Spark's FlatMapGroupsInPandasWithState provides. Every
-program is replayed under SEVERAL random micro-batch slicings; the folded
-emission stream must converge to a single-threaded Python reference
-interpreter implementing the reference engine's semantics
+per-key data layout Spark's FlatMapGroupsInPandasWithState provides, with
+its event-time timers (a state whose timeout is below the watermark is
+called with an empty frame); the key-grouped OVER arms replay under three
+key -> group maps. Every program is replayed under SEVERAL random
+micro-batch slicings; the folded emission stream must converge to a
+single-threaded Python reference interpreter implementing the reference
+engine's semantics
 (flink-table-runtime GroupAggFunction.java:125-172 accumulate/retract,
 RetractableTopNFunction.java data-state multiset, MinWithRetractAggFunction
 MapState bag, StreamingJoinOperator.java:60 two-sided join state,
@@ -90,6 +93,7 @@ class FakeGroupState:
         self._wm = watermark_ms
         self.hasTimedOut = False
         self.schema = None
+        self.timeout = None  # event-time timeout, set by the last call
 
     @property
     def exists(self) -> bool:
@@ -124,8 +128,11 @@ class FakeGroupState:
     def getCurrentWatermarkMs(self) -> int:
         return self._wm
 
-    def setTimeoutTimestamp(self, ms) -> None:  # timers not simulated
-        pass
+    def setTimeoutTimestamp(self, ms) -> None:
+        # pyspark's checks: positive, and not below the watermark
+        if ms <= 0 or ms < self._wm:
+            raise ValueError(f"timeout {ms} invalid at watermark {self._wm}")
+        self.timeout = ms
 
 
 class _Cap:
@@ -150,6 +157,9 @@ class _Cap:
         return self
 
     def filter(self, cond):  # temporal join's DropUpdateBefore
+        return self
+
+    def selectExpr(self, *exprs):  # key_groups' group column
         return self
 
     def applyInPandasWithState(
@@ -190,31 +200,69 @@ def _flat_schema(ddl: str):
     )
 
 
-def replay(fn, batches, key_cols, columns, wm_seq=None):
+def _null_key(key: tuple) -> tuple:
+    """A key tuple with pandas' NaN NULLs as None: Spark groups NULL
+    keys together."""
+    return tuple(None if v != v else v for v in key)
+
+
+def replay(fn, batches, key_cols, columns, wm_seq=None, groups=None):
     """Drive a captured closure the way FlatMapGroupsInPandasWithState
     does: per micro-batch, rows grouped by key, one fn call per touched
     key, GroupState persisted across batches. Returns emissions in
-    arrival order as a list of row dicts."""
+    arrival order as a list of row dicts.
+
+    ``groups`` maps a key tuple (None for NULL) to its key group, for
+    the operators built on streaming.key_groups: rows are then grouped
+    by group, and each frame carries the group column and the keys'
+    value and is-null columns the group call adds. Event-time timers
+    are simulated: after a batch's data calls, every state whose
+    timeout is below the watermark is called with an empty frame and
+    ``hasTimedOut``. An empty batch is a watermark-only flush that
+    calls every known state."""
+    from flink_release_1_16_0_spark.streaming.key_groups import (
+        GROUP_COL,
+        key_value,
+        null_flag,
+    )
+
     states: dict[tuple, FakeGroupState] = {}
     out: list[dict] = []
+    group_cols, frame_cols = list(key_cols), list(columns)
+    if groups is not None:
+        values = [key_value(i) for i in range(len(key_cols))]
+        flags = [null_flag(i) for i in range(len(key_cols))]
+        group_cols, frame_cols = [GROUP_COL], [*columns, GROUP_COL, *values, *flags]
+
+    def call(kt, pdf, st, wm, timed_out=False):
+        st._wm, st.hasTimedOut, st.timeout = wm, timed_out, None
+        for emitted in fn(kt, iter([pdf]), st):
+            out.extend(emitted.to_dict("records"))
+
     for bi, batch in enumerate(batches):
         wm = wm_seq[bi] if wm_seq else 0
+        empty = pd.DataFrame(columns=frame_cols)
         if not batch:
-            # watermark-only flush: call fn for every known key with an
-            # empty frame (the event-time timeout path Spark drives)
-            for kt, st in states.items():
-                st._wm = wm
-                empty = pd.DataFrame(columns=columns)
-                for emitted in fn(kt, iter([empty]), st):
-                    out.extend(emitted.to_dict("records"))
+            for kt, st in list(states.items()):
+                call(kt, empty, st, wm)
             continue
         pdf = pd.DataFrame(batch, columns=columns)
-        for key, grp in pdf.groupby(list(key_cols), sort=False):
-            kt = key if isinstance(key, tuple) else (key,)
-            st = states.setdefault(kt, FakeGroupState())
-            st._wm = wm
-            for emitted in fn(kt, iter([grp.reset_index(drop=True)]), st):
-                out.extend(emitted.to_dict("records"))
+        if groups is not None:
+            # from the raw rows: pandas holds NULL and NaN alike as NaN
+            at = [columns.index(k) for k in key_cols]
+            keys = [tuple(row[j] for j in at) for row in batch]
+            pdf[GROUP_COL] = [groups(k) for k in keys]
+            for i in range(len(at)):
+                pdf[values[i]] = [0 if k[i] is None else k[i] for k in keys]
+                pdf[flags[i]] = [k[i] is None for k in keys]
+        called = set()
+        for key, grp in pdf.groupby(group_cols, sort=False, dropna=False):
+            kt = _null_key(key if isinstance(key, tuple) else (key,))
+            called.add(kt)
+            call(kt, grp.reset_index(drop=True), states.setdefault(kt, FakeGroupState()), wm)
+        for kt, st in list(states.items()):
+            if kt not in called and st.timeout is not None and st.timeout < wm:
+                call(kt, empty, st, wm, timed_out=True)
     return out
 
 
@@ -661,9 +709,9 @@ def check_antijoin(rng: random.Random) -> str | None:
     """streaming_anti_join vs StreamingSemiAntiJoinOperator's anti
     branch: a left row emits exactly once, when its interval window
     closes under the watermark with no right match; late rows drop.
-    The reference interpreter replays the same per-batch watermark and
-    key-touch schedule (state finalizes only when the key sees data,
-    exactly like FlatMapGroupsInPandasWithState with NoTimeout)."""
+    The reference interpreter replays the same per-batch watermark
+    schedule; every key's closed windows finalize in the batch whose
+    watermark closes them (the operator's event-time timeout)."""
     from flink_release_1_16_0_spark.streaming.stateful import streaming_anti_join
 
     lower, upper = 0, 50
@@ -718,6 +766,7 @@ def check_antijoin(rng: random.Random) -> str | None:
                 if m < wm:
                     continue  # late (ts == wm is on time)
                 (rights if side else pending)[k].append(m)
+        for k in list(pending):
             still = []
             for lm in pending[k]:
                 if lm + upper <= wm:
@@ -733,66 +782,93 @@ def check_antijoin(rng: random.Random) -> str | None:
     return None
 
 
-def _event_time_program(rng: random.Random, n_keys: int):
-    """(key, ts, id, v) events with bounded disorder + the per-batch
-    watermark sequence (delay 0 over the max seen event time); values
-    are off the cent grid."""
+def _event_time_program(rng: random.Random):
+    """(key, ts, id, v) events over up to 8 keys, one of them NULL,
+    with bounded disorder + the per-batch watermark sequence (delay 0
+    over the max seen event time); values are off the cent grid."""
+    keys = [None, *range(rng.randint(0, 7))]
     rows, t = [], 0
     for i in range(rng.randint(5, 40)):
         t += rng.randrange(0, 30)
         ts = max(0, t - (rng.randrange(0, 25) if rng.random() < 0.3 else 0))
-        rows.append(
-            (rng.randrange(n_keys), pd.Timestamp(ts, unit="ms"), i, eighth(rng))
-        )
+        rows.append((rng.choice(keys), pd.Timestamp(ts, unit="ms"), i, eighth(rng)))
     batches = split_batches(rng, rows)
     wm_seq, seen = [], 0
     for b in batches:
         wm_seq.append(seen)
         for _, ts, _, _ in b:
             seen = max(seen, ts.value // 1_000_000)
-    return batches, wm_seq
+    return keys, batches, wm_seq
+
+
+def _replay_key_groups(rng, cap, keys, batches, wm_seq, names):
+    """Replay a key-grouped OVER operator under three key -> group maps
+    (all keys in one group, one group per key, a random map); the
+    emissions, as a Counter of (k, id, ts ms, *names), must not depend
+    on the map. Returns (Counter, None) or (None, error)."""
+    one = {(k,): i for i, k in enumerate(keys)}
+    spread = {(k,): rng.randrange(3) for k in keys}
+    runs = []
+    for groups in (lambda _k: 0, one.__getitem__, spread.__getitem__):
+        emissions = replay(
+            cap.fn, batches, ["k"], ["k", "ts", "id", "v"], wm_seq=wm_seq,
+            groups=groups,
+        )
+        runs.append(Counter(
+            (*_null_key((r["k"],)), r["id"], pd.Timestamp(r["ts"]).value // 1_000_000,
+             *[r[n] for n in names])
+            for r in emissions
+        ))
+    if runs[1] != runs[0] or runs[2] != runs[0]:
+        return None, f"groupings differ: {[dict(r) for r in runs]}"
+    return runs[0], None
+
+
+def _release_all(batches, wm_seq):
+    """The reference's watermark schedule: per batch, on-time rows join
+    their key's pending rows, then every key releases its rows with
+    ``ts <= wm`` in (ts, id) order (the reference's event-time timers
+    fire for every key, not only for keys that got data). Yields
+    (key, released rows) per batch and key."""
+    pending: dict = defaultdict(list)
+    for b, wm in zip(batches, wm_seq):
+        for k, ts, i, v in b:
+            m = ts.value // 1_000_000
+            if m >= wm:
+                pending[k].append((m, i, v))
+        for k in list(pending):
+            ready = sorted(p for p in pending[k] if p[0] <= wm)
+            pending[k] = [p for p in pending[k] if p[0] > wm]
+            if ready:
+                yield k, ready
 
 
 def check_over_rows(rng: random.Random) -> str | None:
     """streaming_over_rows_event_time vs
     RowTimeRowsUnboundedPrecedingFunction: rows buffer until the
     watermark passes, finalize in (ts, id) order with the running
-    (count, exact sum); late rows drop. Same per-batch watermark/key-touch
-    schedule on both sides."""
+    (count, exact sum); late rows drop."""
     from flink_release_1_16_0_spark.streaming.stateful import (
         streaming_over_rows_event_time,
     )
 
-    batches, wm_seq = _event_time_program(rng, rng.randint(1, 3))
+    keys, batches, wm_seq = _event_time_program(rng)
     cap = _Cap(_schema("k BIGINT, ts TIMESTAMP, id BIGINT, v DOUBLE"))
     streaming_over_rows_event_time(
         cap, keys=["k"], value_col="v", id_col="id", ts_col="ts"
     )
-    emissions = replay(
-        cap.fn, batches, ["k"], ["k", "ts", "id", "v"], wm_seq=wm_seq
+    got, err = _replay_key_groups(
+        rng, cap, keys, batches, wm_seq, ("running_n", "running_sum")
     )
-    got = Counter(
-        (r["k"], r["id"], pd.Timestamp(r["ts"]).value // 1_000_000,
-         r["running_n"], r["running_sum"])
-        for r in emissions
-    )
-    pending: dict = defaultdict(list)
+    if err:
+        return f"over_rows {err}"
     acc: dict = defaultdict(lambda: [0, Fraction(0)])  # n, exact sum
     ref: Counter = Counter()
-    for b, wm in zip(batches, wm_seq):
-        touched = defaultdict(list)
-        for k, ts, i, v in b:
-            touched[k].append((ts.value // 1_000_000, i, v))
-        for k, evs in touched.items():
-            for m, i, v in evs:
-                if m >= wm:
-                    pending[k].append((m, i, v))
-            ready = sorted(p for p in pending[k] if p[0] <= wm)
-            pending[k] = [p for p in pending[k] if p[0] > wm]
-            for m, i, v in ready:
-                acc[k][0] += 1
-                acc[k][1] += Fraction(v)
-                ref[(k, i, m, acc[k][0], float(acc[k][1]))] += 1
+    for k, ready in _release_all(batches, wm_seq):
+        for m, i, v in ready:
+            acc[k][0] += 1
+            acc[k][1] += Fraction(v)
+            ref[(k, i, m, acc[k][0], float(acc[k][1]))] += 1
     if got != ref:
         return f"over_rows {dict(got)} != ref {dict(ref)}"
     return None
@@ -809,47 +885,30 @@ def check_over_range(rng: random.Random) -> str | None:
     )
 
     bound = 40
-    batches, wm_seq = _event_time_program(rng, rng.randint(1, 3))
+    keys, batches, wm_seq = _event_time_program(rng)
     cap = _Cap(_schema("k BIGINT, ts TIMESTAMP, id BIGINT, v DOUBLE"))
     streaming_over_range_event_time(
         cap, keys=["k"], value_col="v", id_col="id", ts_col="ts",
         bound_ms=bound,
     )
-    emissions = replay(
-        cap.fn, batches, ["k"], ["k", "ts", "id", "v"], wm_seq=wm_seq
-    )
-    got = Counter(
-        (r["k"], r["id"], pd.Timestamp(r["ts"]).value // 1_000_000,
-         r["win_n"], r["win_sum"])
-        for r in emissions
-    )
-    pending: dict = defaultdict(list)
+    got, err = _replay_key_groups(rng, cap, keys, batches, wm_seq, ("win_n", "win_sum"))
+    if err:
+        return f"over_range {err}"
     finalized: dict = defaultdict(list)  # full history, never evicted
     ref: Counter = Counter()
-    for b, wm in zip(batches, wm_seq):
-        touched = defaultdict(list)
-        for k, ts, i, v in b:
-            touched[k].append((ts.value // 1_000_000, i, v))
-        for k, evs in touched.items():
-            for m, i, v in evs:
-                if m >= wm:
-                    pending[k].append((m, i, v))
-            ready = sorted(p for p in pending[k] if p[0] <= wm)
-            pending[k] = [p for p in pending[k] if p[0] > wm]
-            finalized[k].extend(ready)
-            # frames from the FULL finalized history
-            done_ts = set()
-            for m, i, v in ready:
-                if m in done_ts:
-                    continue
-                done_ts.add(m)
-                frame = [
-                    f for f in finalized[k] if m - bound <= f[0] <= m
-                ]
-                total = float(sum(Fraction(f[2]) for f in frame))
-                for fm, fi, _fv in ready:
-                    if fm == m:
-                        ref[(k, fi, m, len(frame), total)] += 1
+    for k, ready in _release_all(batches, wm_seq):
+        finalized[k].extend(ready)
+        # frames from the FULL finalized history
+        done_ts = set()
+        for m, i, v in ready:
+            if m in done_ts:
+                continue
+            done_ts.add(m)
+            frame = [f for f in finalized[k] if m - bound <= f[0] <= m]
+            total = float(sum(Fraction(f[2]) for f in frame))
+            for fm, fi, _fv in ready:
+                if fm == m:
+                    ref[(k, fi, m, len(frame), total)] += 1
     if got != ref:
         return f"over_range {dict(got)} != ref {dict(ref)}"
     return None
@@ -867,38 +926,23 @@ def check_over_bounded(rng: random.Random) -> str | None:
     )
 
     n_rows = rng.randint(1, 5)
-    batches, wm_seq = _event_time_program(rng, rng.randint(1, 3))
+    keys, batches, wm_seq = _event_time_program(rng)
     cap = _Cap(_schema("k BIGINT, ts TIMESTAMP, id BIGINT, v DOUBLE"))
     streaming_over_rows_bounded_event_time(
         cap, keys=["k"], value_col="v", id_col="id", ts_col="ts",
         n_rows=n_rows,
     )
-    emissions = replay(
-        cap.fn, batches, ["k"], ["k", "ts", "id", "v"], wm_seq=wm_seq
-    )
-    got = Counter(
-        (r["k"], r["id"], pd.Timestamp(r["ts"]).value // 1_000_000,
-         r["win_n"], r["win_sum"])
-        for r in emissions
-    )
-    pending: dict = defaultdict(list)
+    got, err = _replay_key_groups(rng, cap, keys, batches, wm_seq, ("win_n", "win_sum"))
+    if err:
+        return f"over_bounded(n_rows={n_rows}) {err}"
     finalized: dict = defaultdict(list)  # full history, never evicted
     ref: Counter = Counter()
-    for b, wm in zip(batches, wm_seq):
-        touched = defaultdict(list)
-        for k, ts, i, v in b:
-            touched[k].append((ts.value // 1_000_000, i, v))
-        for k, evs in touched.items():
-            for m, i, v in evs:
-                if m >= wm:
-                    pending[k].append((m, i, v))
-            ready = sorted(p for p in pending[k] if p[0] <= wm)
-            pending[k] = [p for p in pending[k] if p[0] > wm]
-            for m, i, v in ready:
-                finalized[k].append((m, i, v))
-                frame = finalized[k][-n_rows:]
-                total = float(sum(Fraction(f[2]) for f in frame))
-                ref[(k, i, m, len(frame), total)] += 1
+    for k, ready in _release_all(batches, wm_seq):
+        for m, i, v in ready:
+            finalized[k].append((m, i, v))
+            frame = finalized[k][-n_rows:]
+            total = float(sum(Fraction(f[2]) for f in frame))
+            ref[(k, i, m, len(frame), total)] += 1
     if got != ref:
         return f"over_bounded(n_rows={n_rows}) {dict(got)} != ref {dict(ref)}"
     return None
