@@ -6,7 +6,7 @@ SF001 := /root/testdata/sf0.01
 SF01  := /root/testdata/sf0.1
 SF1   := testdata_sf1
 
-.PHONY: test oracle scale-sweep oracle-sf01 oracle-sf1 fuzz bench verify
+.PHONY: test oracle scale-sweep oracle-sf01 oracle-sf1 fuzz fuzz-changelog bench verify
 
 test:
 	python -m pytest tests/ -q
@@ -28,7 +28,10 @@ oracle-sf1:        ## full registry at sf1 (crash-resumable; build fixture first
 fuzz:              ## 1000-seed property-based cross-engine fuzz
 	python tools/fuzz_oracle.py --seeds 1000
 
+fuzz-changelog:    ## 200-seed replay of every streaming state operator arm
+	python tools/fuzz_changelog.py --seeds 200
+
 bench:
 	python bench.py
 
-verify: test oracle scale-sweep bench
+verify: test oracle scale-sweep fuzz-changelog bench

@@ -447,7 +447,8 @@ def format_debezium_cdc(spark: SparkSession, sf_dir: str) -> DataFrame:
 # retractable MIN/MAX (Min/MaxWithRetractAggFunction): extrema per
 # priority over the changelog — deletes can RAISE the min / LOWER the
 # max, which plain streaming min/max cannot express; the operator's
-# multiset state converges independent of batch slicing.
+# multiset state converges independent of batch slicing, and the
+# emitted -U/+U changelog nets to one live row per priority.
 # --------------------------------------------------------------------------
 
 _RETRACT_MINMAX_ORACLE = f"""
@@ -471,24 +472,31 @@ FROM net GROUP BY o_orderpriority
     "stream_retract_minmax", _RETRACT_MINMAX_ORACLE, tags=("changelog", "streaming", "agg")
 )
 def stream_retract_minmax(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from pyspark.sql.types import LongType
+
     from flink_release_1_16_0_spark.streaming.core import replay_stream, run_to_table
-    from flink_release_1_16_0_spark.streaming.stateful import (
-        streaming_retracting_minmax,
+    from flink_release_1_16_0_spark.streaming.retract_agg import (
+        streaming_retracting_multi_agg,
     )
 
     log = _orders_changelog_df(replay_stream(spark, sf_dir, "orders")).select(
         C.ROWKIND, "o_orderpriority", "o_totalprice"
     )
+    price = log.schema["o_totalprice"].dataType
     out = run_to_table(
-        streaming_retracting_minmax(
-            log, keys=["o_orderpriority"], value_col="o_totalprice"
+        streaming_retracting_multi_agg(
+            log,
+            ["o_orderpriority"],
+            [
+                ("n_live", "count_star", None, LongType()),
+                ("min_v", "min", "o_totalprice", price),
+                ("max_v", "max", "o_totalprice", price),
+            ],
+            rowkind_col=C.ROWKIND,
         ),
         "update",
     )
-    final = out.groupBy("o_orderpriority").agg(
-        F.max(F.struct("version", "n_live", "min_v", "max_v")).alias("s")
-    )
-    return final.select("o_orderpriority", "s.n_live", "s.min_v", "s.max_v")
+    return C.net_multiplicity(out).select("o_orderpriority", "n_live", "min_v", "max_v")
 
 
 # --------------------------------------------------------------------------

@@ -1039,8 +1039,8 @@ def stream_sort_limit(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --------------------------------------------------------------------------
 # streaming distinct agg (GroupAggFunction's DistinctViewDataView):
 # COUNT(DISTINCT user) per event type — unsupported natively by
-# Structured Streaming, held as a keyed seen-set here. Emissions grow
-# monotonically, so the converged state is the per-key max.
+# Structured Streaming, held as a keyed seen-set by the retracting
+# group agg. Its -U/+U changelog nets to one live row per event type.
 # --------------------------------------------------------------------------
 
 _SDISTINCT_ORACLE = """
@@ -1051,16 +1051,23 @@ FROM events GROUP BY event_type
 
 @register("stream_distinct_agg", _SDISTINCT_ORACLE, tags=("streaming", "agg"))
 def stream_distinct_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from flink_release_1_16_0_spark.streaming.stateful import (
-        streaming_distinct_count,
+    from pyspark.sql.types import LongType
+
+    from flink_release_1_16_0_spark.streaming.changelog import net_multiplicity
+    from flink_release_1_16_0_spark.streaming.retract_agg import (
+        streaming_retracting_multi_agg,
     )
 
     ev = replay_stream(spark, sf_dir, "events").select("event_type", "user_id")
     out = run_to_table(
-        streaming_distinct_count(ev, keys=["event_type"], distinct_col="user_id"),
+        streaming_retracting_multi_agg(
+            ev,
+            ["event_type"],
+            [("n_distinct", "count_distinct", "user_id", LongType())],
+        ),
         "update",
     )
-    return out.groupBy("event_type").agg(F.max("n_distinct").alias("n_distinct"))
+    return net_multiplicity(out).select("event_type", "n_distinct")
 
 
 # --------------------------------------------------------------------------
@@ -1810,14 +1817,15 @@ def stream_cep_skip_next(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --------------------------------------------------------------------------
 # tumbling window agg with ALLOWED LATENESS + late firing
 # (WindowOperator.java:380-409 — the lateness path Spark's native
-# window agg cannot express; operator in streaming/stateful.py). The
+# window agg cannot express; operator in streaming/group_window.py). The
 # bounded single-file replay has no late arrivals, so the oracle
 # verifies the on-time firing set: windows whose end the final
 # watermark passed (ms-floored, the module convention); the -U/+U late
 # path is pytest-covered with a multi-batch replay
-# (tests/test_streaming.py::test_window_agg_allowed_lateness). COUNT
-# only: the operator's sequential float accumulator is not
-# cross-engine bit-stable for SUM.
+# (tests/test_streaming.py::test_window_agg_allowed_lateness). The
+# operator fires at end - 1 <= wm (isWindowFired), the oracle at
+# end <= wm: the two differ only for a window ending at wm + 1, which
+# neither fixture (sf0.01, sf0.1) has.
 # --------------------------------------------------------------------------
 
 _SLATENESS_ORACLE = f"""
@@ -1842,18 +1850,21 @@ HAVING bucket * {5 * 60 * 1000} + {5 * 60 * 1000} <= wm_ms
     tags=("streaming", "window", "time"),
 )
 def stream_window_allowed_lateness(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from flink_release_1_16_0_spark.streaming.stateful import (
-        streaming_window_agg_allowed_lateness,
+    from pyspark.sql.types import LongType
+
+    from flink_release_1_16_0_spark.streaming.group_window import (
+        streaming_group_window_agg,
     )
 
     ev = events_stream(spark, sf_dir)
-    out = streaming_window_agg_allowed_lateness(
-        ev.select("ts", "value", F.lit(0).alias("__g")),
-        keys=["__g"],
-        ts_col="ts",
-        window_ms=5 * 60 * 1000,
+    out = streaming_group_window_agg(
+        ev.select("ts", F.lit(0).alias("__g")),
+        ["__g"],
+        "ts",
+        [("n", "count_star", None, LongType())],
+        kind="tumble",
+        size_ms=5 * 60 * 1000,
         allowed_lateness_ms=10 * 60 * 1000,
-        value_col="value",
     )
     return run_to_table(out, "update").select(
         F.col("window_start").alias("win_start"),

@@ -1,11 +1,12 @@
-"""Generalized unbounded retracting group aggregate
+"""Unbounded retracting group aggregate
 (GroupAggFunction.java:125-172 with the WithRetract accumulator
-family).
+family) — the one operator for every unbounded streaming GROUP BY
+aggregate, as GroupAggFunction is the reference's one operator over
+the AggsHandleFunction contract.
 
-`streaming_retracting_agg` (stateful.py) carries the fixed
-(count, sum) pair; this operator takes an agg SPEC and adds the
-retract-capable accumulators the reference implements as separate
-classes:
+It takes an agg SPEC list (streaming.accumulators): COUNT(*), COUNT,
+and the retract-capable accumulators the reference implements as
+separate classes:
 
 - Max/MinWithRetractAggFunction — value->count multiset, extremum of
   live keys (a scalar cell when the input is append-only);
@@ -19,9 +20,12 @@ classes:
 - exact decimal SUM, integer SUM/AVG with Java truncating division.
 
 Emission per key per micro-batch (compacted GroupAggFunction
-protocol): +I on first non-empty state, -U(old)/+U(new) on change,
--D when the live row count nets to zero. State per key = one
-accumulator row; one hash exchange.
+protocol): +I on first non-empty state, -U(old)/+U(new) on change
+and nothing when the values did not change (the reference's record
+equaliser), -D when the live row count nets to zero. The input is a
+changelog only when ``rowkind_col`` names its row-kind column;
+otherwise every row accumulates. State per key = one accumulator row;
+one hash exchange.
 """
 
 from __future__ import annotations

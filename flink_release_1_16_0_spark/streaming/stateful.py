@@ -9,9 +9,10 @@ Streaming lacks natively (SURVEY.md section 7.0 "custom (real work)"):
 - `streaming_topn` — per-key top-N by a sort column, maintained across
   batches (AbstractTopNFunction.java / AppendOnlyTopNFunction). State:
   the current top-N heap, re-emitted per batch.
-- `streaming_retracting_agg` — unbounded group agg that emits the
-  -U/+U changelog on every change (GroupAggFunction.java:125-172).
-  State: the accumulators (count, sum).
+
+The unbounded group aggregates (SUM/COUNT, COUNT DISTINCT, retractable
+MIN/MAX) are one operator, streaming.retract_agg; windows with allowed
+lateness are streaming.group_window.
 
 The event-time operators — the OVER aggregates, the temporal join and
 sort, and the anti join's left side — share one watermark buffer
@@ -43,6 +44,7 @@ from __future__ import annotations
 
 from collections import deque
 from collections.abc import Iterator, Sequence
+from datetime import datetime
 from decimal import Decimal
 
 import numpy as np
@@ -58,7 +60,6 @@ from pyspark.sql.types import (
     StringType,
     StructField,
     StructType,
-    TimestampType,
 )
 
 from flink_release_1_16_0_spark.streaming.accumulators import Accumulator, AggSpecs
@@ -189,14 +190,16 @@ def streaming_window_dedup(
     (window, key), refined eagerly as out-of-order rows arrive.
 
     Scale shape: state keys on the USER key only and every window's
-    winner lives in ONE dict-valued state entry {window: row}. Routing
-    the window bucket into the group key instead (which the generic
+    winner lives in the key's ONE state row. Routing the window bucket
+    into the group key instead (which the generic
     :func:`streaming_dedup_keep_last` would do) pays
     applyInPandasWithState's per-group constant once PER (key, window) —
     ~1M tiny groups at sf1 cost 132 s of harness overhead, the
     per-group-constant class the round-9/10 fixes target. Per-key
     grouping pays it once per key per micro-batch; emissions (the
-    changed winners, update mode) are identical.
+    changed winners, update mode) are identical. The state row is typed:
+    one ``ARRAY`` field per output column, one element per window's
+    winner; a winner's rank is its ``order_col`` values.
 
     State bound: with ``window_size_ms`` set (and a watermark on the
     input), rows for windows whose END is behind the current watermark
@@ -208,30 +211,32 @@ def streaming_window_dedup(
     watermark) every window's winner is retained and late refinements
     keep applying — fine for bounded replays, unbounded on a
     long-running stream."""
-    import pickle
-
-    out_schema = stream.schema
-    cols = [f.name for f in out_schema.fields]
+    fields = stream.schema.fields
+    cols = [f.name for f in fields]
     order_cols = [order_col] if isinstance(order_col, str) else list(order_col)
     if keep not in ("first", "last"):
         raise ValueError(f"keep must be first|last, got {keep!r}")
     sign = 1 if keep == "first" else -1
+    w_at = cols.index(window_col)
+    rank_at = [cols.index(c) for c in order_cols]
+    state_schema = StructType(
+        [StructField(f"win_{f.name}", ArrayType(f.dataType)) for f in fields]
+    )
 
     def _win_end_ms(w) -> float:
-        # window bucket start -> end in epoch ms (pd.Timestamp /
-        # datetime / already-numeric ms all appear depending on source)
-        if hasattr(w, "value"):  # pd.Timestamp (ns)
-            start = w.value / 1_000_000
-        elif hasattr(w, "timestamp"):  # datetime
-            start = w.timestamp() * 1000.0
-        else:
-            start = float(w)
+        # window bucket start -> end in epoch ms (a timestamp, naive ==
+        # UTC as everywhere in the engine, or already-numeric ms)
+        start = pd.Timestamp(w).value / 1_000_000 if isinstance(w, datetime) else float(w)
         return start + (window_size_ms or 0)
+
+    def rank(row: tuple) -> tuple:
+        return tuple(row[j] for j in rank_at)
 
     def fn(
         key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
     ) -> Iterator[pd.DataFrame]:
-        winners: dict = pickle.loads(state.get[0]) if state.exists else {}
+        # window value -> its winning row, typed, in output column order
+        winners = {row[w_at]: row for row in zip(*state.get)} if state.exists else {}
         changed: set = set()
         wm = state.getCurrentWatermarkMs() if window_size_ms is not None else 0
         for pdf in pdfs:
@@ -254,12 +259,11 @@ def streaming_window_dedup(
                 if keep == "first"
                 else s.groupby(window_col, sort=False).tail(1)
             )
-            for row in best.to_dict("records"):
-                w = row[window_col]
+            for row in _typed_rows(best, [], fields):
+                w = row[w_at]
                 cur = winners.get(w)
-                rank = tuple(row[c] for c in order_cols)
-                if cur is None or sign * _cmp_tuples(rank, cur[0]) < 0:
-                    winners[w] = (rank, row)
+                if cur is None or sign * _cmp_tuples(rank(row), rank(cur)) < 0:
+                    winners[w] = row
                     changed.add(w)
         evicted = False
         if wm > 0:
@@ -270,19 +274,19 @@ def streaming_window_dedup(
             evicted = bool(stale)
         if changed:
             yield pd.DataFrame(
-                [winners[w][1] for w in sorted(changed & winners.keys())],
+                [winners[w] for w in sorted(changed & winners.keys())],
                 columns=cols,
-            )[cols]
+            )
         if changed or evicted:
             if winners:
-                state.update((pickle.dumps(winners),))
+                state.update(tuple(list(c) for c in zip(*winners.values())))
             elif state.exists:
                 state.remove()
 
     return stream.groupBy(*keys).applyInPandasWithState(
         fn,
-        outputStructType=out_schema,
-        stateStructType="winners BINARY",
+        outputStructType=stream.schema,
+        stateStructType=state_schema,
         outputMode="update",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
@@ -443,92 +447,6 @@ def streaming_retractable_topn(
                 yield _tombstone()
                 return
         yield top
-
-    return stream.groupBy(*keys).applyInPandasWithState(
-        fn,
-        outputStructType=out_schema,
-        stateStructType=state_schema,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-
-
-def streaming_retracting_agg(
-    stream: DataFrame,
-    keys: Sequence[str],
-    value_col: str,
-) -> DataFrame:
-    """Unbounded SUM/COUNT per key emitting a -U/+U changelog.
-
-    Mirrors GroupAggFunction.java:125-172: first batch for a key emits
-    +I; later changes emit the UPDATE_BEFORE (prior accumulator) and
-    UPDATE_AFTER (new accumulator). When the input carries a
-    ``__rowkind`` column, -U/-D rows RETRACT their contribution
-    (accumulate/retract branch), and a key whose live count returns to
-    zero emits -D of the previous accumulator and clears its state —
-    the reference's recordCounter emptiness path. Inserts and retracts
-    that fully cancel before a key's first emission produce nothing
-    (the firstRow short-circuit). Without the column, the input is
-    append-only and every row accumulates.
-    """
-    key_fields = [stream.schema[k] for k in keys]
-    out_schema = StructType(
-        [
-            StructField(ROWKIND, StringType()),
-            *key_fields,
-            StructField("n", LongType()),
-            StructField("total", DoubleType()),
-        ]
-    )
-    state_schema = StructType(
-        [StructField("n", LongType()), StructField("total", DoubleType())]
-    )
-
-    has_kind = ROWKIND in stream.columns
-
-    def fn(
-        key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        add_n, add_total, touched = 0, 0.0, False
-        for pdf in pdfs:
-            if len(pdf) == 0:
-                continue
-            touched = True
-            if has_kind:
-                sgn = np.where(
-                    pdf[ROWKIND].isin([INSERT, UPDATE_AFTER]), 1, -1
-                )
-                add_n += int(sgn.sum())
-                add_total += float((sgn * pdf[value_col].to_numpy()).sum())
-            else:
-                add_n += len(pdf)
-                add_total += float(pdf[value_col].sum())
-        if not touched:
-            return
-        rows = []
-        if state.exists:
-            n0, t0 = state.get
-            n1, t1 = n0 + add_n, t0 + add_total
-            if n1 == 0:
-                # live count hit zero: retract the previous agg row and
-                # clear state (GroupAggFunction recordCounter path)
-                rows.append((DELETE, *key, n0, t0))
-                state.remove()
-            else:
-                rows.append((UPDATE_BEFORE, *key, n0, t0))
-                rows.append((UPDATE_AFTER, *key, n1, t1))
-                state.update((n1, t1))
-        else:
-            n1, t1 = add_n, add_total
-            if n1 != 0:
-                rows.append((INSERT, *key, n1, t1))
-                state.update((n1, t1))
-            # n1 == 0 with no prior state: inserts and retracts fully
-            # cancelled before the first emission -> emit nothing
-        if rows:
-            yield pd.DataFrame(rows, columns=[ROWKIND, *keys, "n", "total"])
 
     return stream.groupBy(*keys).applyInPandasWithState(
         fn,
@@ -1519,111 +1437,6 @@ def streaming_over_range_event_time(
     )
 
 
-def streaming_distinct_count(
-    stream: DataFrame,
-    keys: Sequence[str],
-    distinct_col: str,
-) -> DataFrame:
-    """Streaming COUNT(DISTINCT x) per key — an aggregation Structured
-    Streaming rejects outright but the reference supports via its
-    distinct state view (DistinctViewDataView backing
-    GroupAggFunction's distinct accumulators). Keyed state = the set of
-    seen values (the exact content of Flink's MapState view; O(ndv per
-    key), the same bound the reference pays); each batch emits the
-    updated count, which grows monotonically to the batch-dual answer.
-    """
-    key_fields = [stream.schema[k] for k in keys]
-    val_field = stream.schema[distinct_col]
-    out_schema = StructType([*key_fields, StructField("n_distinct", LongType())])
-    state_schema = StructType([StructField("seen", ArrayType(val_field.dataType))])
-
-    def fn(
-        key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        seen = set(state.get[0] or []) if state.exists else set()
-        for pdf in pdfs:
-            seen.update(pdf[distinct_col].dropna().tolist())
-        state.update((list(seen),))
-        yield pd.DataFrame([(*key, len(seen))], columns=[*keys, "n_distinct"])
-
-    return stream.groupBy(*keys).applyInPandasWithState(
-        fn,
-        outputStructType=out_schema,
-        stateStructType=state_schema,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-
-
-def streaming_retracting_minmax(
-    stream: DataFrame,
-    keys: Sequence[str],
-    value_col: str,
-    kind_col: str = "__rowkind",
-) -> DataFrame:
-    """Retractable MIN/MAX over a changelog stream
-    (MinWithRetractAggFunction / MaxWithRetractAggFunction: plain
-    min/max cannot handle deletes, so the accumulator is a
-    MapState<value, count> multiset). State here is exactly that
-    value->count map, keyed on the value itself; every batch emits the
-    current extrema with a monotone version so the converged state is
-    the max-version row.
-    Add/remove commute, so the converged multiset — and its min/max —
-    is independent of batch slicing and arrival order.
-    """
-    key_fields = [stream.schema[k] for k in keys]
-    out_schema = StructType(
-        [
-            *key_fields,
-            StructField("version", LongType()),
-            StructField("n_live", LongType()),
-            StructField("min_v", DoubleType()),
-            StructField("max_v", DoubleType()),
-        ]
-    )
-    entry = StructType(
-        [StructField("value", DoubleType()), StructField("cnt", LongType())]
-    )
-    state_schema = StructType(
-        [StructField("bag", ArrayType(entry)), StructField("version", LongType())]
-    )
-
-    def fn(
-        key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        if state.exists:
-            bag_rows, version = state.get
-            bag = {float(v): int(n) for v, n in (bag_rows or [])}
-        else:
-            bag, version = {}, 0
-        for pdf in pdfs:
-            for kind, v in zip(pdf[kind_col], pdf[value_col]):
-                v = float(v)
-                delta = 1 if kind in ("+I", "+U") else -1
-                nxt = bag.get(v, 0) + delta
-                if nxt == 0:
-                    bag.pop(v, None)
-                else:
-                    bag[v] = nxt
-        version += 1
-        state.update(([(v, n) for v, n in bag.items()], version))
-        if bag:
-            row = (*key, version, sum(bag.values()), min(bag), max(bag))
-        else:
-            row = (*key, version, 0, None, None)
-        yield pd.DataFrame(
-            [row], columns=[*keys, "version", "n_live", "min_v", "max_v"]
-        )
-
-    return stream.groupBy(*keys).applyInPandasWithState(
-        fn,
-        outputStructType=out_schema,
-        stateStructType=state_schema,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-
-
 def streaming_over_rows_bounded_event_time(
     stream: DataFrame,
     keys: Sequence[str],
@@ -1763,154 +1576,6 @@ def streaming_anti_join(
         outputStructType=out_schema,
         stateStructType=state_schema,
         outputMode="append",
-        timeoutConf=GroupStateTimeout.EventTimeTimeout,
-    )
-
-
-def streaming_window_agg_allowed_lateness(
-    stream: DataFrame,
-    keys: Sequence[str],
-    ts_col: str,
-    window_ms: int,
-    allowed_lateness_ms: int,
-    value_col: str,
-    slide_ms: int | None = None,
-) -> DataFrame:
-    """Tumbling (or, with ``slide_ms``, hopping) window COUNT/SUM with
-    allowed lateness + late firing —
-    the reference's WindowOperator.java lateness path (allowedLateness
-    + isElementLate/sideOutput at WindowOperator.java:380-409, late
-    firing per late element) that Spark's native window agg cannot
-    express (Structured Streaming drops state the moment the watermark
-    passes the window, so a late-but-allowed row is lost).
-
-    Per (key, window): accumulate; when the watermark passes window_end
-    emit ``+I`` once; a row arriving while ``window_end <= wm <
-    window_end + lateness`` re-accumulates and re-fires as a ``-U/+U``
-    pair (the changelog the reference's legacy group-window produces
-    under late firing); rows beyond the lateness horizon are dropped
-    (the reference side-outputs them); state retires at ``window_end +
-    lateness`` — so state per key is O(windows inside the lateness
-    horizon), the same bound as the reference.
-
-    One hash exchange on the grouping key; window assignment is
-    row-local arithmetic. The watermark visible to a batch is the
-    previous batch's (the module's settlement convention), so firing is
-    deterministic under replay.
-    """
-    key_fields = [stream.schema[k] for k in keys]
-    out_schema = StructType(
-        [
-            StructField(ROWKIND, StringType()),
-            *key_fields,
-            StructField("window_start", TimestampType()),
-            StructField("n", LongType()),
-            StructField("total", DoubleType()),
-        ]
-    )
-    state_schema = StructType(
-        [
-            StructField("starts", ArrayType(LongType())),
-            StructField("ns", ArrayType(LongType())),
-            StructField("totals", ArrayType(DoubleType())),
-            StructField("fired_ns", ArrayType(LongType())),  # -1 = unfired
-            StructField("fired_totals", ArrayType(DoubleType())),
-        ]
-    )
-    out_cols = [ROWKIND, *keys, "window_start", "n", "total"]
-
-    def fn(
-        key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        wm = state.getCurrentWatermarkMs()
-        wins: dict[int, list] = {}
-        if state.exists:
-            starts, ns, totals, f_ns, f_ts = state.get
-            for i, w in enumerate(starts or []):
-                wins[int(w)] = [
-                    int(ns[i]),
-                    float(totals[i]),
-                    None if f_ns[i] < 0 else int(f_ns[i]),
-                    None if f_ns[i] < 0 else float(f_ts[i]),
-                ]
-        out: list[tuple] = []
-        # 1) fire windows that became ready on the watermark BEFORE
-        # touching this batch's rows — the timer fires first in the
-        # reference, so a late row landing in the same micro-batch is
-        # observed as a separate late firing, not folded into the +I
-        for w in sorted(wins):
-            n, total, fn_, _ft = wins[w]
-            if fn_ is None and wm >= w + window_ms and n > 0:
-                out.append((INSERT, *key, pd.Timestamp(w * 1_000_000), n, total))
-                wins[w][2:] = [n, total]
-        # 2) accumulate this batch (rows for already-fired windows are
-        # the late-but-allowed case; beyond the horizon they drop, the
-        # reference's sideOutput at WindowOperator.java:405)
-        for pdf in pdfs:
-            if len(pdf) == 0:
-                continue
-            for t, v in pdf[[ts_col, value_col]].itertuples(index=False, name=None):
-                ts_ms = pd.Timestamp(t).value // 1_000_000
-                if slide_ms is None:
-                    assigned = [(ts_ms // window_ms) * window_ms]
-                else:
-                    # hop assignment (SliceAssigners.Hopping): every
-                    # slide-aligned start w with w <= ts < w + size
-                    first = ((ts_ms - window_ms) // slide_ms + 1) * slide_ms
-                    last = (ts_ms // slide_ms) * slide_ms
-                    assigned = list(range(first, last + 1, slide_ms))
-                for w in assigned:
-                    if wm >= w + window_ms + allowed_lateness_ms:
-                        continue  # beyond the lateness horizon: dropped
-                    acc = wins.setdefault(w, [0, 0.0, None, None])
-                    acc[0] += 1
-                    acc[1] += float(v)
-        # 3) late firings + retirement
-        retired: list[int] = []
-        for w in sorted(wins):
-            n, total, fn_, ft_ = wins[w]
-            w_end = w + window_ms
-            if wm >= w_end and n > 0:
-                ws = pd.Timestamp(w * 1_000_000)
-                if fn_ is None:  # first firing was itself late
-                    out.append((INSERT, *key, ws, n, total))
-                    wins[w][2:] = [n, total]
-                elif (n, total) != (fn_, ft_):
-                    out.append((UPDATE_BEFORE, *key, ws, fn_, ft_))
-                    out.append((UPDATE_AFTER, *key, ws, n, total))
-                    wins[w][2:] = [n, total]
-            if wm >= w_end + allowed_lateness_ms:
-                retired.append(w)
-        for w in retired:
-            del wins[w]
-        if wins:
-            starts = sorted(wins)
-            state.update(
-                (
-                    starts,
-                    [wins[w][0] for w in starts],
-                    [wins[w][1] for w in starts],
-                    [-1 if wins[w][2] is None else wins[w][2] for w in starts],
-                    [-1.0 if wins[w][3] is None else wins[w][3] for w in starts],
-                )
-            )
-            # next event-time action: earliest unfired end, earliest
-            # retirement — whichever comes first after the current wm
-            bounds = [
-                w + window_ms for w in starts if wins[w][2] is None
-            ] + [w + window_ms + allowed_lateness_ms for w in starts]
-            nxt = min(b for b in bounds if b > wm)
-            state.setTimeoutTimestamp(nxt - 1)  # fires at wm >= nxt
-        elif state.exists:
-            state.remove()
-        if out:
-            yield pd.DataFrame(out, columns=out_cols)
-
-    return stream.groupBy(*keys).applyInPandasWithState(
-        fn,
-        outputStructType=out_schema,
-        stateStructType=state_schema,
-        outputMode="update",
         timeoutConf=GroupStateTimeout.EventTimeTimeout,
     )
 

@@ -46,7 +46,7 @@ from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import StructType
+from pyspark.sql.types import DoubleType, LongType, StructType
 
 from flink_release_1_16_0_spark.functions.sql_udfs import register_sql_functions
 from flink_release_1_16_0_spark.operators.grouped import grouped_apply
@@ -3244,7 +3244,7 @@ class TableEnvironment:
         keys = [g for g in gb if g.lower() != "window_start"]
         sel_items = [s.strip() for s in _split_top_level(m.group("sel"))]
         out_exprs: list[tuple[str, str]] = []  # (operator col, out alias)
-        sum_col = None
+        aggs: list[tuple] = []
         for it in sel_items:
             am = re.fullmatch(
                 r"(?:(window_start)|(window_end)|COUNT\s*\(\s*\*\s*\)|SUM\s*\(\s*(\w+)\s*\)|(\w+))"
@@ -3259,11 +3259,12 @@ class TableEnvironment:
             alias = am.group(5)
             if am.group(1):  # window_start
                 out_exprs.append(("window_start", alias or "window_start"))
-            elif am.group(2):  # window_end = start + size, computed below
-                out_exprs.append(("__window_end", alias or "window_end"))
+            elif am.group(2):  # window_end
+                out_exprs.append(("window_end", alias or "window_end"))
             elif am.group(3):  # SUM(col)
-                sum_col = am.group(3)
-                out_exprs.append(("total", alias or f"sum_{sum_col}"))
+                name = f"__agg{len(aggs)}"
+                aggs.append((name, "sum", am.group(3), DoubleType()))
+                out_exprs.append((name, alias or f"sum_{am.group(3)}"))
             elif am.group(4):  # bare key column
                 if am.group(4) not in keys:
                     raise NotImplementedError(
@@ -3272,7 +3273,9 @@ class TableEnvironment:
                     )
                 out_exprs.append((am.group(4), alias or am.group(4)))
             else:  # COUNT(*)
-                out_exprs.append(("n", alias or "n"))
+                name = f"__agg{len(aggs)}"
+                aggs.append((name, "count_star", None, LongType()))
+                out_exprs.append((name, alias or "n"))
         n_, u_ = re.match(
             r"INTERVAL\s+'([\d.]+)'\s+(\w+)", ival, re.IGNORECASE
         ).groups()
@@ -3319,35 +3322,26 @@ class TableEnvironment:
             "days": 86_400_000,
         }[lm.group(2).lower()]
         from flink_release_1_16_0_spark.streaming.changelog import ROWKIND
-        from flink_release_1_16_0_spark.streaming.stateful import (
-            streaming_window_agg_allowed_lateness,
+        from flink_release_1_16_0_spark.streaming.group_window import (
+            streaming_group_window_agg,
         )
 
         stream = self.spark.table(src)
-        if sum_col is None:
-            stream = stream.withColumn("__zero", F.lit(0.0))
         if not keys:  # global window: one synthetic key group
             stream = stream.withColumn("__g", F.lit(0))
             keys = ["__g"]
-        out = streaming_window_agg_allowed_lateness(
+        out = streaming_group_window_agg(
             stream,
-            keys=keys,
-            ts_col=ts_col,
-            window_ms=window_ms,
-            allowed_lateness_ms=lateness_ms,
-            value_col=sum_col or "__zero",
+            keys,
+            ts_col,
+            aggs,
+            kind="tumble" if slide_ms is None else "sliding",
+            size_ms=window_ms,
             slide_ms=slide_ms,
+            allowed_lateness_ms=lateness_ms,
         )
         # ONLY_UPDATE_AFTER toward the sink: drop the -U half
         out = out.filter(F.col(ROWKIND) != "-U")
-        if any(c == "__window_end" for c, _a in out_exprs):
-            out = out.withColumn(
-                "__window_end",
-                # millisecond granularity: a fractional TVF size like
-                # INTERVAL '0.5' SECOND must not truncate to 0
-                F.col("window_start")
-                + F.expr(f"INTERVAL {window_ms} MILLISECOND"),
-            )
         return out.select(
             *[F.col(c).alias(a) for c, a in out_exprs]
         )

@@ -37,6 +37,7 @@ import pandas as pd
 import pytest
 
 from tools.fuzz_changelog import (
+    COUNT_SUM,
     FakeGroupState,
     _Cap,
     _schema,
@@ -315,8 +316,8 @@ def test_dedup_followed_by_unbounded_agg(keep, part):
         UPDATE_AFTER,
         UPDATE_BEFORE,
     )
-    from flink_release_1_16_0_spark.streaming.stateful import (
-        streaming_retracting_agg,
+    from flink_release_1_16_0_spark.streaming.retract_agg import (
+        streaming_retracting_multi_agg,
     )
 
     rows = [(a, b, c, i) for i, (a, b, c) in enumerate(ROWTIME_DATA)]
@@ -339,7 +340,7 @@ def test_dedup_followed_by_unbounded_agg(keep, part):
         prev[k] = r
 
     cap = _Cap(_schema(f"{ROWKIND} STRING, g BIGINT, v DOUBLE"))
-    streaming_retracting_agg(cap, keys=["g"], value_col="v")
+    streaming_retracting_multi_agg(cap, ["g"], COUNT_SUM, rowkind_col=ROWKIND)
     agg_out = replay_wm(
         cap.fn, one_per_batch(changelog), ["g"], [ROWKIND, "g", "v"]
     )

@@ -1,8 +1,8 @@
 """CI wrapper for tools/fuzz_changelog.py: a reduced seed sweep of every
 arm (the 1000-seed runs are the tool's offline gate, recorded in
 SCALING.md/COVERAGE.md), plus a mutation check proving the fuzzer can
-actually detect a broken operator — it must flag the pre-round-11
-retracting-agg behavior (rowkind ignored, every row accumulated +1)."""
+actually detect a broken operator — it must flag a retracting agg
+that ignores row kinds (every row accumulated +1)."""
 
 from __future__ import annotations
 
@@ -23,46 +23,19 @@ def test_fuzz_arm_green(spark, arm):
 
 
 def test_fuzzer_catches_planted_bug(spark, monkeypatch):
-    """Mutation test: replace streaming_retracting_agg with the old
-    append-only implementation (no accumulate/retract branch). The agg
-    arm must report a divergence within a handful of seeds — if it
-    stays green against a broken operator, the fuzzer is vacuous."""
-    import pandas as pd
-
-    from flink_release_1_16_0_spark.streaming import stateful as S
-    from flink_release_1_16_0_spark.streaming.changelog import (
-        INSERT,
-        ROWKIND,
-        UPDATE_AFTER,
-        UPDATE_BEFORE,
-    )
+    """Mutation test: run the retracting agg with its row kinds ignored,
+    so every row accumulates +1 (no retract branch). The agg arm must
+    report a divergence within a handful of seeds — if it stays green
+    against a broken operator, the fuzzer is vacuous."""
+    from flink_release_1_16_0_spark.streaming import retract_agg as RA
     from tools.fuzz_changelog import check_agg
 
-    def broken(stream, keys, value_col):
-        def fn(key, pdfs, state):
-            add_n, add_total = 0, 0.0
-            for pdf in pdfs:
-                if len(pdf) == 0:
-                    continue
-                add_n += len(pdf)  # the planted bug: sign ignored
-                add_total += float(pdf[value_col].sum())
-            if add_n == 0:
-                return
-            rows = []
-            if state.exists:
-                n0, t0 = state.get
-                rows.append((UPDATE_BEFORE, *key, n0, t0))
-                n1, t1 = n0 + add_n, t0 + add_total
-                rows.append((UPDATE_AFTER, *key, n1, t1))
-            else:
-                n1, t1 = add_n, add_total
-                rows.append((INSERT, *key, n1, t1))
-            state.update((n1, t1))
-            yield pd.DataFrame(rows, columns=[ROWKIND, *keys, "n", "total"])
+    real = RA.streaming_retracting_multi_agg
 
-        return stream.applyInPandasWithState(fn, None, None, None, None)
+    def broken(stream, keys, aggs, *, rowkind_col=None, seq_col=None):
+        return real(stream, keys, aggs, seq_col=seq_col)  # the planted bug
 
-    monkeypatch.setattr(S, "streaming_retracting_agg", broken)
+    monkeypatch.setattr(RA, "streaming_retracting_multi_agg", broken)
     caught = sum(
         1
         for seed in range(20)

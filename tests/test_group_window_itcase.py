@@ -56,8 +56,10 @@ from tools.fuzz_changelog import FakeGroupState, _Cap
 from flink_release_1_16_0_spark.streaming.group_window import (
     streaming_group_window_agg,
 )
+from flink_release_1_16_0_spark.streaming.retract_agg import (
+    streaming_retracting_multi_agg,
+)
 from flink_release_1_16_0_spark.streaming.stateful import (
-    streaming_retracting_minmax,
     streaming_upsert_to_retract,
 )
 from tests.test_window_agg_itcase import jfmt, _v
@@ -245,7 +247,7 @@ def test_cascading_tumble_window():
 
 
 # ---------------------------------------------------------------------------
-# MIN/MAX of window-agg rowtimes through the retractable minmax op
+# MIN/MAX of window-agg rowtimes through the retracting group agg
 # ---------------------------------------------------------------------------
 
 
@@ -264,38 +266,39 @@ def test_min_max_with_tumbling_window():
     batches, wm_seq = ts_batches(TS_DATA, to_row=_mkrow)
     inner_rows = replay_keyed(fn=inner, batches=batches, wm_seq=wm_seq,
                               key_cols=["string", "int"], columns=TS_COLS)
-    # outer: the production retractable minmax multiset, one instance
-    # per extremum column (epoch-ms values are exact on its cents grid)
+    # outer: the production retracting MAX/MIN multiset over the inner
+    # changelog (epoch-ms values are exact as doubles)
     mm_schema = StructType(
-        [StructField("string", StringType()), StructField("v", DoubleType()),
-         StructField("__rowkind", StringType())]
+        [StructField("string", StringType()), StructField("max_ts", DoubleType()),
+         StructField("min_ts", DoubleType()), StructField("__rowkind", StringType())]
     )
-    finals: dict[str, dict] = {}
-    for col, out_field in (("max_ts", "max_v"), ("min_ts", "min_v")):
-        cap = _Cap(mm_schema)
-        streaming_retracting_minmax(cap, ["string"], "v")
-        fn = cap.fn
-        states: dict[tuple, FakeGroupState] = {}
-        last: dict[tuple, dict] = {}
-        pdf_all = pd.DataFrame(
-            [
-                {
-                    "string": r["string"],
-                    "v": pd.Timestamp(r[col]).value / 1e6,
-                    "__rowkind": "+I",
-                }
-                for r in inner_rows
-            ]
-        )
-        for key, grp in pdf_all.groupby(["string"], sort=False, dropna=False):
-            k = key if not isinstance(key, tuple) else key[0]
-            kt = (None,) if (isinstance(k, float) and k != k) else (k,)
-            st = states.setdefault(kt, FakeGroupState())
-            for e in fn(kt, iter([grp.reset_index(drop=True)]), st):
-                for r in e.to_dict("records"):
-                    last[kt] = r
-        for kt, r in last.items():
-            finals.setdefault(kt[0], {})[out_field] = r[out_field]
+    cap = _Cap(mm_schema)
+    streaming_retracting_multi_agg(
+        cap,
+        ["string"],
+        [("max_v", "max", "max_ts", DoubleType()), ("min_v", "min", "min_ts", DoubleType())],
+        rowkind_col="__rowkind",
+    )
+    states: dict[tuple, FakeGroupState] = {}
+    finals: dict = {}
+    pdf_all = pd.DataFrame(
+        [
+            {
+                "string": r["string"],
+                "max_ts": pd.Timestamp(r["max_ts"]).value / 1e6,
+                "min_ts": pd.Timestamp(r["min_ts"]).value / 1e6,
+                "__rowkind": "+I",
+            }
+            for r in inner_rows
+        ]
+    )
+    for key, grp in pdf_all.groupby(["string"], sort=False, dropna=False):
+        k = key if not isinstance(key, tuple) else key[0]
+        kt = (None,) if (isinstance(k, float) and k != k) else (k,)
+        st = states.setdefault(kt, FakeGroupState())
+        for e in cap.fn(kt, iter([grp.reset_index(drop=True)]), st):
+            for r in e.to_dict("records"):
+                finals[kt[0]] = r
     got = sorted(
         f"{jfmt(pd.Timestamp(int(v['max_v'] * 1e6)))},"
         f"{jfmt(pd.Timestamp(int(v['min_v'] * 1e6)))},{_v(k)}"

@@ -23,6 +23,7 @@ import pandas as pd
 import pytest
 
 from tools.fuzz_changelog import (
+    COUNT_SUM,
     FakeGroupState,
     _Cap,
     _schema,
@@ -337,12 +338,12 @@ def test_generic_anti_join():
 def _agg_emissions_per_batch(data, keys_cols):
     """Per-source-row batches of a retracting SUM/COUNT changelog —
     the reference's `SELECT SUM(x) FROM t GROUP BY g` subquery."""
-    from flink_release_1_16_0_spark.streaming.stateful import (
-        streaming_retracting_agg,
+    from flink_release_1_16_0_spark.streaming.retract_agg import (
+        streaming_retracting_multi_agg,
     )
 
     cap = _Cap(_schema(f"{ROWKIND} STRING, g STRING, v DOUBLE"))
-    streaming_retracting_agg(cap, keys=["g"], value_col="v")
+    streaming_retracting_multi_agg(cap, ["g"], COUNT_SUM, rowkind_col=ROWKIND)
     states: dict = {}
     out_batches = []
     for v, g in data:

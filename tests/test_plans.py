@@ -285,14 +285,17 @@ def _assert_single_keyed_exchange(plan: str, key: str):
 
 
 def test_streaming_retracting_agg_shuffle_layout(spark, sf_smoke):
+    from pyspark.sql import functions as F
+
     from flink_release_1_16_0_spark.streaming.core import replay_stream
-    from flink_release_1_16_0_spark.streaming.stateful import (
-        streaming_retracting_agg,
+    from flink_release_1_16_0_spark.streaming.retract_agg import (
+        streaming_retracting_multi_agg,
     )
+    from tools.fuzz_changelog import COUNT_SUM
 
     ev = replay_stream(spark, sf_smoke, "events")
-    out = streaming_retracting_agg(
-        ev.select("user_id", "value"), keys=["user_id"], value_col="value"
+    out = streaming_retracting_multi_agg(
+        ev.select("user_id", F.col("value").alias("v")), ["user_id"], COUNT_SUM
     )
     plan = _streaming_plan(spark, out)
     _assert_single_keyed_exchange(plan, "user_id")

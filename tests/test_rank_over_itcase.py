@@ -31,6 +31,7 @@ import pandas as pd
 import pytest
 
 from tools.fuzz_changelog import (
+    COUNT_SUM,
     FakeGroupState,
     _Cap,
     _schema,
@@ -169,15 +170,15 @@ def _agg_then_topn(data, n, order_cols, ascending):
     source row is its own micro-batch; the agg's -U/+U emissions for
     that batch become the TopN's input batch, preserving the
     changelog interleaving of the fused pipeline."""
-    from flink_release_1_16_0_spark.streaming.stateful import (
-        streaming_retracting_agg,
+    from flink_release_1_16_0_spark.streaming.retract_agg import (
+        streaming_retracting_multi_agg,
     )
 
     agg_cap = _Cap(
         _schema("__rowkind STRING, category STRING, shopId BIGINT, v DOUBLE")
     )
-    streaming_retracting_agg(
-        agg_cap, keys=["category", "shopId"], value_col="v"
+    streaming_retracting_multi_agg(
+        agg_cap, ["category", "shopId"], COUNT_SUM, rowkind_col="__rowkind"
     )
     agg_states: dict = {}
     topn_fn = _topn_fn(order_cols, n, ascending)

@@ -16,7 +16,6 @@ from flink_release_1_16_0_spark.catalog import load_table
 from flink_release_1_16_0_spark.streaming.core import run_to_table
 from flink_release_1_16_0_spark.streaming.stateful import (
     streaming_dedup_keep_last,
-    streaming_retracting_agg,
     streaming_topn,
 )
 
@@ -126,9 +125,16 @@ def test_streaming_topn_converges(spark, sf_smoke, chunked_events, events_schema
 
 
 def test_streaming_retracting_agg_changelog(spark, sf_smoke, chunked_events, events_schema):
-    stream = _stream(spark, chunked_events, events_schema).select("event_type", "value")
+    from flink_release_1_16_0_spark.streaming.retract_agg import (
+        streaming_retracting_multi_agg,
+    )
+    from tools.fuzz_changelog import COUNT_SUM
+
+    stream = _stream(spark, chunked_events, events_schema).select(
+        "event_type", F.col("value").alias("v")
+    )
     out = run_to_table(
-        streaming_retracting_agg(stream, keys=["event_type"], value_col="value"),
+        streaming_retracting_multi_agg(stream, ["event_type"], COUNT_SUM),
         "update",
     ).cache()
     rows = out.collect()
@@ -1010,9 +1016,10 @@ def test_window_agg_allowed_lateness(spark, tmp_path_factory):
     -U/+U pair; a row beyond the horizon is dropped; state retires."""
     import datetime as dt
 
-    from flink_release_1_16_0_spark.streaming.stateful import (
-        streaming_window_agg_allowed_lateness,
+    from flink_release_1_16_0_spark.streaming.group_window import (
+        streaming_group_window_agg,
     )
+    from tools.fuzz_changelog import COUNT_SUM
 
     path = str(tmp_path_factory.mktemp("lateness"))
     schema = "k bigint, ts timestamp, v double"
@@ -1039,13 +1046,13 @@ def test_window_agg_allowed_lateness(spark, tmp_path_factory):
         .withWatermark("ts", "1 minute")
     )
     out = run_to_table(
-        streaming_window_agg_allowed_lateness(
+        streaming_group_window_agg(
             stream,
-            keys=["k"],
-            ts_col="ts",
-            window_ms=10 * 60 * 1000,
+            ["k"],
+            "ts",
+            COUNT_SUM,
+            size_ms=10 * 60 * 1000,
             allowed_lateness_ms=10 * 60 * 1000,
-            value_col="v",
         ),
         "update",
     )
@@ -1069,14 +1076,15 @@ def test_window_agg_allowed_lateness(spark, tmp_path_factory):
 
 
 def test_hop_window_agg_allowed_lateness(spark, tmp_path_factory):
-    """Hop (sliding) windows through the lateness operator: a row lands
+    """Hop (sliding) group windows with allowed lateness: a row lands
     in size/slide overlapping windows, and a late-but-allowed row
     re-fires EVERY fired window that contains it."""
     import datetime as dt
 
-    from flink_release_1_16_0_spark.streaming.stateful import (
-        streaming_window_agg_allowed_lateness,
+    from flink_release_1_16_0_spark.streaming.group_window import (
+        streaming_group_window_agg,
     )
+    from tools.fuzz_changelog import COUNT_SUM
 
     path = str(tmp_path_factory.mktemp("hoplate"))
     schema = "k bigint, ts timestamp, v double"
@@ -1102,14 +1110,15 @@ def test_hop_window_agg_allowed_lateness(spark, tmp_path_factory):
         .withWatermark("ts", "1 minute")
     )
     out = run_to_table(
-        streaming_window_agg_allowed_lateness(
+        streaming_group_window_agg(
             stream,
-            keys=["k"],
-            ts_col="ts",
-            window_ms=10 * 60 * 1000,
-            allowed_lateness_ms=10 * 60 * 1000,
-            value_col="v",
+            ["k"],
+            "ts",
+            COUNT_SUM,
+            kind="sliding",
+            size_ms=10 * 60 * 1000,
             slide_ms=5 * 60 * 1000,
+            allowed_lateness_ms=10 * 60 * 1000,
         ),
         "update",
     )

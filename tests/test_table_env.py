@@ -2007,6 +2007,47 @@ def test_allow_lateness_sql_dispatch(spark, tmp_path):
     assert w0 == [("2024-01-01 10:00:00", 2, 3.0), ("2024-01-01 10:00:00", 3, 6.0)]
 
 
+def test_allow_lateness_sql_window_fires_at_end_minus_one(spark, tmp_path):
+    """An allow-lateness tumble window fires when the watermark reaches
+    end - 1 (the reference's isWindowFired): key 2's row moves the final
+    watermark to exactly 10:09:59.999, and key 1's [10:00, 10:10)
+    window, which gets no later data, is emitted by its timer."""
+    import datetime as dt
+
+    src = str(tmp_path / "ale_src")
+    T = dt.datetime(2024, 1, 1, 10, 0, 0)
+    batches = [
+        [(1, T + dt.timedelta(minutes=5))],
+        [(2, T + dt.timedelta(minutes=11) - dt.timedelta(milliseconds=1))],
+    ]
+    for i, rows in enumerate(batches):
+        spark.createDataFrame(rows, "k bigint, ts timestamp").repartition(1).write.parquet(
+            f"{src}/b={i}"
+        )
+    tenv = TableEnvironment.create(spark, streaming=True)
+    tenv.execute_sql(
+        f"""CREATE TABLE ale_src (k BIGINT, ts TIMESTAMP(3),
+          WATERMARK FOR ts AS ts - INTERVAL '1' MINUTE)
+        WITH ('connector'='filesystem','path'='{src}/b=*',
+              'format'='parquet','maxFilesPerTrigger'='1')"""
+    )
+    out = str(tmp_path / "ale_out")
+    tenv.execute_sql(
+        f"""CREATE TABLE ale_snk (k BIGINT, ws TIMESTAMP(3), n BIGINT)
+        WITH ('connector'='filesystem','path'='{out}','format'='parquet')"""
+    )
+    tenv.execute_sql("SET 'table.exec.emit.allow-lateness' = '10 min'")
+    tenv.execute_sql("SET 'table.exec.emit.late-fire.enabled' = 'true'")
+    tenv.execute_sql(
+        """INSERT INTO ale_snk
+        SELECT k, window_start AS ws, COUNT(*) AS n
+        FROM TABLE(TUMBLE(TABLE ale_src, DESCRIPTOR(ts), INTERVAL '10' MINUTE))
+        GROUP BY window_start, k"""
+    )
+    got = [(r["k"], str(r["ws"]), r["n"]) for r in spark.read.parquet(out).collect()]
+    assert got == [(1, "2024-01-01 10:00:00", 1)]
+
+
 def test_allow_lateness_sql_dispatch_hop(spark, tmp_path):
     """HOP TVF also routes to the lateness operator (Flink arg order:
     slide then size); a late row re-fires both overlapping windows."""

@@ -32,13 +32,13 @@ grid, so float accumulation is exact and comparisons are equality, not
 tolerance; the OVER references sum exactly with ``Fraction``.
 
 Arms: agg (retracting SUM/COUNT), topn (retractable top-N), minmax
-(retractable MIN/MAX bag), join (two-input changelog join), dedup
+(retracting MIN/MAX bag), join (two-input changelog join), dedup
 (keep-first/last refinement across batches), wdedup (window dedup with
 watermark eviction + isWindowFired drop), antijoin/semi (time-bounded
 anti join, changelog semi/anti), over_rows/over_range/over_bounded
 (event-time OVER aggregation: unbounded, RANGE and ROWS frames),
 normalize (stateful upsert->retract vs the batch ChangelogNormalize),
-lateness (window agg with allowed lateness + late
+lateness (group window with allowed lateness + late
 -U/+U firings), tjoin (event-time temporal join with version
 tombstones under random watermark schedules).
 
@@ -60,6 +60,7 @@ from pathlib import Path
 
 import numpy as np
 import pandas as pd
+from pyspark.sql.types import DoubleType, LongType
 
 sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 
@@ -72,6 +73,9 @@ from flink_release_1_16_0_spark.streaming.changelog import (  # noqa: E402
 )
 
 ADD = (INSERT, UPDATE_AFTER)
+# COUNT(*) AS n, SUM(v) AS total: the retracting agg's specs in the
+# agg arm and the ITCase pipelines that feed an agg changelog onward
+COUNT_SUM = [("n", "count_star", None, LongType()), ("total", "sum", "v", DoubleType())]
 
 
 # --------------------------------------------------------------------------
@@ -218,8 +222,8 @@ def replay(fn, batches, key_cols, columns, wm_seq=None, groups=None):
     value and is-null columns the group call adds. Event-time timers
     are simulated: after a batch's data calls, every state whose
     timeout is below the watermark is called with an empty frame and
-    ``hasTimedOut``. An empty batch is a watermark-only flush that
-    calls every known state."""
+    ``hasTimedOut``. An empty batch is Spark's no-data batch: a
+    watermark-only flush that makes the timer calls alone."""
     from flink_release_1_16_0_spark.streaming.key_groups import (
         GROUP_COL,
         key_value,
@@ -241,11 +245,7 @@ def replay(fn, batches, key_cols, columns, wm_seq=None, groups=None):
 
     for bi, batch in enumerate(batches):
         wm = wm_seq[bi] if wm_seq else 0
-        empty = pd.DataFrame(columns=frame_cols)
-        if not batch:
-            for kt, st in list(states.items()):
-                call(kt, empty, st, wm)
-            continue
+        called = set()
         pdf = pd.DataFrame(batch, columns=columns)
         if groups is not None:
             # from the raw rows: pandas holds NULL and NaN alike as NaN
@@ -255,11 +255,11 @@ def replay(fn, batches, key_cols, columns, wm_seq=None, groups=None):
             for i in range(len(at)):
                 pdf[values[i]] = [0 if k[i] is None else k[i] for k in keys]
                 pdf[flags[i]] = [k[i] is None for k in keys]
-        called = set()
         for key, grp in pdf.groupby(group_cols, sort=False, dropna=False):
             kt = _null_key(key if isinstance(key, tuple) else (key,))
             called.add(kt)
             call(kt, grp.reset_index(drop=True), states.setdefault(kt, FakeGroupState()), wm)
+        empty = pd.DataFrame(columns=frame_cols)
         for kt, st in list(states.items()):
             if kt not in called and st.timeout is not None and st.timeout < wm:
                 call(kt, empty, st, wm, timed_out=True)
@@ -331,14 +331,15 @@ def _schema(ddl: str):
 
 
 def check_agg(rng: random.Random) -> str | None:
-    """streaming_retracting_agg vs GroupAggFunction.java:125-172."""
-    from flink_release_1_16_0_spark.streaming.stateful import (
-        streaming_retracting_agg,
+    """streaming_retracting_multi_agg (COUNT(*), SUM) vs
+    GroupAggFunction.java:125-172."""
+    from flink_release_1_16_0_spark.streaming.retract_agg import (
+        streaming_retracting_multi_agg,
     )
 
     events = gen_program(rng, rng.randint(4, 40), rng.randint(1, 4), qval)
     cap = _Cap(_schema(f"{ROWKIND} STRING, k BIGINT, v DOUBLE"))
-    streaming_retracting_agg(cap, keys=["k"], value_col="v")
+    streaming_retracting_multi_agg(cap, ["k"], COUNT_SUM, rowkind_col=ROWKIND)
     rows = [(kind, k, v) for kind, k, v in events]
     emissions = replay(
         cap.fn,
@@ -442,31 +443,45 @@ def check_topn(rng: random.Random) -> str | None:
 
 
 def check_minmax(rng: random.Random) -> str | None:
-    """streaming_retracting_minmax vs Min/MaxWithRetractAggFunction."""
-    from flink_release_1_16_0_spark.streaming.stateful import (
-        streaming_retracting_minmax,
+    """streaming_retracting_multi_agg (COUNT(*), MIN, MAX) over a
+    changelog vs Min/MaxWithRetractAggFunction: the folded -U/+U/-D
+    changelog must leave each key's live count and extrema, and no row
+    for a key whose bag emptied."""
+    from flink_release_1_16_0_spark.streaming.retract_agg import (
+        streaming_retracting_multi_agg,
     )
 
     events = gen_program(rng, rng.randint(4, 40), rng.randint(1, 4), eighth)
     cap = _Cap(_schema(f"{ROWKIND} STRING, k BIGINT, v DOUBLE"))
-    streaming_retracting_minmax(cap, keys=["k"], value_col="v")
+    streaming_retracting_multi_agg(
+        cap,
+        ["k"],
+        [
+            ("n_live", "count_star", None, LongType()),
+            ("min_v", "min", "v", DoubleType()),
+            ("max_v", "max", "v", DoubleType()),
+        ],
+        rowkind_col=ROWKIND,
+    )
     rows = [(kind, k, v) for kind, k, v in events]
     emissions = replay(
         cap.fn, split_batches(rng, rows), ["k"], [ROWKIND, "k", "v"]
     )
     got: dict = {}
-    ver: dict = {}
     for r in emissions:
-        if r["version"] >= ver.get(r["k"], -1):
-            ver[r["k"]] = r["version"]
-            got[r["k"]] = (r["n_live"], r["min_v"], r["max_v"])
+        row = (r["n_live"], r["min_v"], r["max_v"])
+        if r[ROWKIND] in ADD:
+            got[r["k"]] = row
+        elif got.pop(r["k"], None) != row:
+            return f"minmax {r[ROWKIND]} {row} does not retract the live row of {r['k']}"
     live: dict = defaultdict(Counter)
     for kind, k, v in events:
         live[k][v] += 1 if kind in ADD else -1
     ref: dict = {}
     for k, bag in live.items():
         vals = [v for v, m in bag.items() for _ in range(m)]
-        ref[k] = (len(vals), min(vals), max(vals)) if vals else (0, None, None)
+        if vals:
+            ref[k] = (len(vals), min(vals), max(vals))
     if got != ref:
         return f"minmax {got} != ref {ref}"
     return None
@@ -1013,13 +1028,15 @@ def check_normalize(rng: random.Random) -> str | None:
 
 
 def check_lateness(rng: random.Random) -> str | None:
-    """streaming_window_agg_allowed_lateness vs an independent fold:
-    rows on time or within the lateness horizon AT ARRIVAL count;
-    everything fires by the final flush; the folded (n, total) per
-    (key, window) must equal the kept-row ground truth, and -U/+U late
-    firings must fold cleanly."""
-    from flink_release_1_16_0_spark.streaming.stateful import (
-        streaming_window_agg_allowed_lateness,
+    """streaming_group_window_agg with allowed lateness vs an
+    independent fold: rows on time or within the lateness horizon AT
+    ARRIVAL count (WindowOperator.isWindowLate: end - 1 + lateness <=
+    wm drops); every window whose end - 1 the final watermark reaches
+    fires by the final flush; the folded (n, total) per (key, window)
+    must equal the kept-row ground truth, and -U/+U late firings must
+    fold cleanly."""
+    from flink_release_1_16_0_spark.streaming.group_window import (
+        streaming_group_window_agg,
     )
 
     size, late = 100, 50
@@ -1035,12 +1052,25 @@ def check_lateness(rng: random.Random) -> str | None:
         wm_seq.append(seen)
         for _k, ts, _v in b:
             seen = max(seen, ts)
-    batches.append([])  # final flush fires every remaining window
-    wm_seq.append(10**15)
+    final_wm = 10**15  # the final flush fires every remaining window
+    if rng.random() < 0.5:
+        # or it stops where Spark's does, at the max event time: a row
+        # of a fresh key moves it to exactly the next window end - 1,
+        # where only their timers fire the other keys' windows
+        final_wm = (seen // size + 1) * size - 1
+        batches.append([(n_keys, final_wm, qval(rng))])
+        wm_seq.append(seen)
+    batches.append([])
+    wm_seq.append(final_wm)
     cap = _Cap(_schema("k BIGINT, ts TIMESTAMP, v DOUBLE"))
-    streaming_window_agg_allowed_lateness(
-        cap, keys=["k"], ts_col="ts", window_ms=size,
-        allowed_lateness_ms=late, value_col="v",
+    streaming_group_window_agg(
+        cap,
+        ["k"],
+        "ts",
+        COUNT_SUM,
+        kind="tumble",
+        size_ms=size,
+        allowed_lateness_ms=late,
     )
     ts_batches = [
         [(k, pd.Timestamp(ts, unit="ms"), v) for k, ts, v in b]
@@ -1063,11 +1093,11 @@ def check_lateness(rng: random.Random) -> str | None:
     for b, wm in zip(batches, wm_seq):
         for k, ts, v in b:
             w = (ts // size) * size
-            if wm >= w + size + late:
+            if wm >= w + size - 1 + late:
                 continue  # beyond the lateness horizon at arrival
             n, cents = ref.get((k, w), (0, 0))
             ref[(k, w)] = (n + 1, cents + round(v * 100))
-    ref = {kw: nt for kw, nt in ref.items() if nt[0] > 0}
+    ref = {(k, w): nt for (k, w), nt in ref.items() if w + size - 1 <= final_wm}
     if folded != ref:
         return f"lateness fold {folded} != ref {ref}"
     return None
@@ -1201,32 +1231,20 @@ def check_wtvf(rng: random.Random) -> str | None:
         wm_seq.append(-(2**60) if max_ts is None else max_ts - delay)
         batches.append([(k, pd.Timestamp(ts * 1_000_000), v)])
         max_ts = ts if max_ts is None else max(max_ts, ts)
-    batches.append([])
-    wm_seq.append(10**15)
+    # Spark's final watermark stops at the max event time: a row of a
+    # fresh key moves it to exactly the next window end - 1 (window ends
+    # sit on offset + k * slide), where only their timers fire the other
+    # keys' windows. Both operators must agree after that flush, and
+    # after one that fires every window.
+    wm = max_ts - delay
+    boundary = offset + -((offset - wm - 2) // slide) * slide - 1
+    batches.append([(n_keys, pd.Timestamp((boundary + delay) * 1_000_000), qval(rng))])
+    wm_seq.append(wm)
 
-    def run(builder, **kw):
+    def run(builder, final_wm, **kw):
         cap = _Cap(schema)
         builder(cap, ["k"], "rowtime", **kw)
-        return replay(cap.fn, batches, ["k"], cols, wm_seq=wm_seq)
-
-    tvf = run(
-        streaming_window_tvf_agg,
-        aggs=[("n", "count_star", None, LongType()),
-              ("s", "sum", "v", DoubleType())],
-        kind=kind_tvf,
-        size_ms=size,
-        slide_ms=None if kind_tvf == "tumble" else slide,
-        offset_ms=offset,
-    )
-    legacy = run(
-        streaming_group_window_agg,
-        aggs=[("n", "count_star", None, LongType()),
-              ("s", "sum", "v", StringType())],
-        kind="tumble" if kind_tvf == "tumble" else "sliding",
-        size_ms=size,
-        slide_ms=None if kind_tvf == "tumble" else slide,
-        offset_ms=offset,
-    )
+        return replay(cap.fn, [*batches, []], ["k"], cols, wm_seq=[*wm_seq, final_wm])
 
     def norm(rows_, sum_from_str):
         out = []
@@ -1245,13 +1263,35 @@ def check_wtvf(rng: random.Random) -> str | None:
             )
         return sorted(out)
 
-    a = norm(tvf, sum_from_str=False)
-    b = norm([r for r in legacy if r[ROWKIND] == INSERT], sum_from_str=True)
-    if a != b:
-        return (
-            f"wtvf diverges (kind={kind_tvf} size={size} slide={slide} "
-            f"offset={offset} delay={delay}): tvf={a} legacy={b}"
+    for final_wm in (boundary, 10**15):
+        tvf = run(
+            streaming_window_tvf_agg,
+            final_wm,
+            aggs=[("n", "count_star", None, LongType()),
+                  ("s", "sum", "v", DoubleType())],
+            kind=kind_tvf,
+            size_ms=size,
+            slide_ms=None if kind_tvf == "tumble" else slide,
+            offset_ms=offset,
         )
+        legacy = run(
+            streaming_group_window_agg,
+            final_wm,
+            aggs=[("n", "count_star", None, LongType()),
+                  ("s", "sum", "v", StringType())],
+            kind="tumble" if kind_tvf == "tumble" else "sliding",
+            size_ms=size,
+            slide_ms=None if kind_tvf == "tumble" else slide,
+            offset_ms=offset,
+        )
+        a = norm(tvf, sum_from_str=False)
+        b = norm([r for r in legacy if r[ROWKIND] == INSERT], sum_from_str=True)
+        if a != b:
+            return (
+                f"wtvf diverges (kind={kind_tvf} size={size} slide={slide} "
+                f"offset={offset} delay={delay} final_wm={final_wm}): "
+                f"tvf={a} legacy={b}"
+            )
     return None
 
 
