@@ -111,14 +111,8 @@ def test_over_emits_a_row_at_the_final_watermark(spark, tmp_path, build):
             "append",
         ),
         (lambda s: streaming_group_window_agg(s, ["k"], "ts", COUNT, size_ms=SIZE_MS), "update"),
-        (
-            lambda s: streaming_group_window_agg(
-                s, ["k"], "ts", COUNT, size_ms=SIZE_MS, allowed_lateness_ms=5 * 60_000
-            ),
-            "update",
-        ),
     ],
-    ids=["tvf_agg", "tvf_topn", "group_window", "group_window_lateness"],
+    ids=["tvf_agg", "tvf_topn", "group_window"],
 )
 def test_window_fires_when_the_watermark_reaches_end_minus_one(spark, tmp_path, build, mode):
     end = T + 10 * MIN
@@ -132,6 +126,21 @@ def test_window_join_fires_when_the_watermark_reaches_end_minus_one(spark, tmp_p
     right = _a_then_b(spark, tmp_path, T + 5 * MIN, end - MS, name="r").select("k", "ts", "v")
     out = streaming_window_tvf_join(left, right, ["k"], "ts", size_ms=SIZE_MS)
     assert [r["k"] for r in run_to_table(out, "append").collect()] == [1]
+
+
+def test_allowed_lateness_window_fires_when_the_watermark_reaches_its_end(spark, tmp_path):
+    """A window kept for an allowed lateness fires at the same boundary,
+    ``wm >= end - 1``, as one without it."""
+    end = T + 10 * MIN
+    out = streaming_group_window_agg(
+        _a_then_b(spark, tmp_path, T + 5 * MIN, end - MS),
+        ["k"],
+        "ts",
+        COUNT,
+        size_ms=SIZE_MS,
+        allowed_lateness_ms=5 * 60_000,
+    )
+    assert [r["k"] for r in run_to_table(out, "update").collect()] == [1]
 
 
 def test_group_window_state_retires_at_the_lateness_horizon(spark, tmp_path):
