@@ -1819,13 +1819,11 @@ def stream_cep_skip_next(spark: SparkSession, sf_dir: str) -> DataFrame:
 # (WindowOperator.java:380-409 — the lateness path Spark's native
 # window agg cannot express; operator in streaming/group_window.py). The
 # bounded single-file replay has no late arrivals, so the oracle
-# verifies the on-time firing set: windows whose end the final
-# watermark passed (ms-floored, the module convention); the -U/+U late
-# path is pytest-covered with a multi-batch replay
-# (tests/test_streaming.py::test_window_agg_allowed_lateness). The
-# operator fires at end - 1 <= wm (isWindowFired), the oracle at
-# end <= wm: the two differ only for a window ending at wm + 1, which
-# neither fixture (sf0.01, sf0.1) has.
+# verifies the on-time firing set: windows whose end - 1 the final
+# watermark reached (isWindowFired, ms-floored, the module convention),
+# as the operator fires them; the -U/+U late path is pytest-covered
+# with a multi-batch replay
+# (tests/test_streaming.py::test_window_agg_allowed_lateness).
 # --------------------------------------------------------------------------
 
 _SLATENESS_ORACLE = f"""
@@ -1840,7 +1838,7 @@ SELECT
   CAST(COUNT(*) AS BIGINT) AS n
 FROM b, wm
 GROUP BY bucket, wm_ms
-HAVING bucket * {5 * 60 * 1000} + {5 * 60 * 1000} <= wm_ms
+HAVING bucket * {5 * 60 * 1000} + {5 * 60 * 1000} - 1 <= wm_ms
 """
 
 

@@ -1,6 +1,7 @@
 """Retractable aggregate accumulator shared by the streaming window-TVF
-(window_tvf.py), group-window (group_window.py) and unbounded
-retracting (retract_agg.py) aggregates.
+(window_tvf.py), group-window (group_window.py), unbounded retracting
+(retract_agg.py) and OVER (stateful.py) aggregates, and its typed
+state codec.
 
 One accumulate/retract/merge/getValue contract, as the reference's
 AggsHandleFunction gives every SQL aggregate: an :class:`Accumulator`
@@ -18,11 +19,22 @@ here:
 - MAX/MIN keep a scalar cell when the operator's input is append-only
   and a value->count multiset (Max/MinWithRetractAggFunction) when it
   carries row kinds; the distinct aggregates keep an insertion-ordered
-  set or a multiset the same way. A multiset on append-only input would
-  pickle every distinct value into each slice's state.
+  set or a multiset the same way.
 - COUNT(*) is the row count ``n`` and needs no cell.
 - Column positions resolve once per pandas batch (:meth:`AggSpecs.plan`),
-  not per row per spec. NaN (pandas' float NULL) counts as NULL.
+  not per row per spec. NaN (pandas' float NULL) counts as NULL; the
+  operators hand rows over in their declared types
+  (``event_buffer.py_values``), which the state codec needs.
+
+State codec (the reference keeps accumulators in typed state that a
+serializer describes): :meth:`AggSpecs.state_fields` lays accumulators
+out as typed ``ARRAY`` fields, one element per accumulator. Per
+accumulator: ``n`` as BIGINT, then per cell ``count`` as BIGINT,
+``sum`` as the Decimal's text plus its count, ``isum`` as two BIGINTs,
+``max``/``min`` in the input column's type, ``set``/``list`` as
+``ARRAY<column type>`` in insertion order, ``bag`` as parallel value
+and count arrays (a count goes negative when a retraction comes before
+its accumulation). NULL is a cell that never saw a value.
 """
 
 from __future__ import annotations
@@ -30,7 +42,15 @@ from __future__ import annotations
 from copy import copy
 from decimal import Decimal
 
-from pyspark.sql.types import DoubleType, FloatType, StringType
+from pyspark.sql.types import (
+    ArrayType,
+    DataType,
+    DoubleType,
+    FloatType,
+    LongType,
+    StringType,
+    StructField,
+)
 
 # func -> (cell on append-only input, cell on changelog input)
 _CELLS = {
@@ -52,6 +72,8 @@ _CELLS = {
 }
 
 _ZERO = Decimal(0)
+# cells stored as two state fields
+_PARTS = {"sum": 2, "isum": 2, "bag": 2}
 
 
 def jdiv(a: int, b: int) -> int:
@@ -68,6 +90,48 @@ def _bag_add(bag: dict, v, k: int) -> None:
         del bag[v]
 
 
+def _parts(cell: str, typ: DataType | None) -> list[tuple[str, DataType]]:
+    """A cell's state fields as (name suffix, type); ``typ`` is the
+    input column's type."""
+    if cell == "count":
+        return [("", LongType())]
+    if cell in ("sum", "isum"):
+        return [("", StringType() if cell == "sum" else LongType()), ("_count", LongType())]
+    if cell in ("max", "min"):
+        return [("", typ)]
+    bag = [("_count", ArrayType(LongType()))] if cell == "bag" else []
+    return [("", ArrayType(typ)), *bag]
+
+
+def _encode(cell: str, c) -> tuple:
+    """A cell as its state fields' values."""
+    if c is None:
+        return (None,) * _PARTS.get(cell, 1)
+    if cell == "sum":
+        return (str(c[0]), c[1])
+    if cell == "set":
+        return (list(c),)
+    if cell == "bag":
+        return (list(c), list(c.values()))
+    return c if cell == "isum" else (c,)
+
+
+def _decode(cell: str, parts: tuple):
+    """The cell stored as ``parts`` (:func:`_encode`)."""
+    v = parts[0]
+    if v is None:
+        return None
+    if cell == "sum":
+        return (Decimal(v), parts[1])
+    if cell == "set":
+        return dict.fromkeys(v, True)
+    if cell == "bag":
+        return dict(zip(v, parts[1]))
+    if cell == "isum":
+        return tuple(parts)
+    return list(v) if cell == "list" else v
+
+
 class AggSpecs:
     """Agg specs with their cell kinds. ``changelog`` says whether the
     operator's input carries row kinds (retractions)."""
@@ -75,21 +139,57 @@ class AggSpecs:
     def __init__(self, specs, changelog: bool):
         self.specs = list(specs)
         self.cells = [_CELLS[s[1]][changelog] for s in self.specs]
+        self.live = [(i, c) for i, c in enumerate(self.cells) if c is not None]
+        # the input columns the specs read, in first-use order
+        cols = [c for s in self.specs for c in (s[2] if isinstance(s[2], tuple) else [s[2]])]
+        self.columns = list(dict.fromkeys(c for c in cols if c is not None))
+        # state fields per accumulator: n, then each cell's parts
+        self.width = 1 + sum(_PARTS.get(c, 1) for _i, c in self.live)
 
     def plan(self, columns) -> list[tuple]:
         """Per-batch add plan over rows laid out as ``columns``:
         (cell index, cell kind, value position, weight position)."""
         pos = {c: j for j, c in enumerate(columns)}
-        out = []
-        for i, (spec, cell) in enumerate(zip(self.specs, self.cells)):
-            if cell is None:
-                continue
-            col = spec[2]
-            if isinstance(col, tuple):
-                out.append((i, cell, pos[col[0]], pos[col[1]]))
-            else:
-                out.append((i, cell, pos[col], None))
+        cols = [s[2] if isinstance(s[2], tuple) else (s[2], None) for s in self.specs]
+        return [(i, cell, pos[cols[i][0]], pos.get(cols[i][1])) for i, cell in self.live]
+
+    def fields(self, schema) -> list[StructField]:
+        """One accumulator's state fields; ``schema`` (a StructType)
+        types the input columns."""
+        out = [StructField("n", LongType())]
+        for (name, _f, col, *_), cell in zip(self.specs, self.cells):
+            if cell is not None:
+                typ = None if isinstance(col, tuple) else schema[col].dataType
+                out += [StructField(f"agg_{name}{sfx}", t) for sfx, t in _parts(cell, typ)]
         return out
+
+    def state_fields(self, schema) -> list[StructField]:
+        """The fields of :meth:`fields` as arrays, one element per
+        accumulator."""
+        return [StructField(f.name, ArrayType(f.dataType)) for f in self.fields(schema)]
+
+    def store(self, accs) -> tuple:
+        """``accs`` as the columns of :meth:`state_fields`."""
+        rows = [
+            (a.n, *[p for i, cell in self.live for p in _encode(cell, a.cells[i])])
+            for a in accs
+        ]
+        return tuple(map(list, zip(*rows))) if rows else tuple([] for _ in range(self.width))
+
+    def load(self, raw, at: int = 0) -> list[Accumulator]:
+        """The accumulators stored at ``raw[at : at + width]``; a NULL
+        ``n`` loads as an empty accumulator."""
+        accs = []
+        for row in zip(*raw[at : at + self.width]):
+            acc = Accumulator(len(self.specs))
+            acc.n = row[0] or 0
+            j = 1
+            for i, cell in self.live:
+                k = _PARTS.get(cell, 1)
+                acc.cells[i] = _decode(cell, row[j : j + k])
+                j += k
+            accs.append(acc)
+        return accs
 
 
 class Accumulator:

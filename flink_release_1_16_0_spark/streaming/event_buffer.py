@@ -28,7 +28,8 @@ a per-key pandas sort costs hundreds of µs.
 
 from __future__ import annotations
 
-from collections.abc import Sequence
+from collections.abc import Iterator, Sequence
+from itertools import repeat
 
 import numpy as np
 import pandas as pd
@@ -78,6 +79,13 @@ def py_values(col, dt) -> list:
         else cast(v) if cast else v
         for v in vals
     ]
+
+
+def py_rows(pdf: pd.DataFrame, fields: Sequence[StructField]) -> Iterator[tuple]:
+    """The rows of ``pdf``'s ``fields`` columns as tuples of plain
+    Python values of their declared types (:func:`py_values`)."""
+    cols = [py_values(pdf[f.name], f.dataType) for f in fields]
+    return zip(*cols) if cols else repeat((), len(pdf))
 
 
 def sort_key(vals) -> np.ndarray:

@@ -33,22 +33,24 @@ operator-fed input (``input_settled=True``) accumulates first —
 records precede the watermark that fired them.
 
 Scale: one hash exchange on the key; per-key state is O(live windows
-x accumulator width), retired on the lateness horizon.
+x accumulator width), retired on the lateness horizon: per window its
+bounds, accumulator and last emitted values, typed (``window_step``).
 """
 
 from __future__ import annotations
 
-import pickle
 from collections.abc import Iterator, Sequence
+from itertools import repeat
 
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from pyspark.sql.types import (
+    ArrayType,
+    BooleanType,
+    LongType,
     StringType,
     StructField,
     StructType,
-    TimestampType,
 )
 
 from flink_release_1_16_0_spark.streaming.accumulators import Accumulator, AggSpecs
@@ -59,10 +61,13 @@ from flink_release_1_16_0_spark.streaming.changelog import (
     UPDATE_AFTER,
     UPDATE_BEFORE,
 )
+from flink_release_1_16_0_spark.streaming.event_buffer import py_rows
 from flink_release_1_16_0_spark.streaming.window_tvf import (
-    to_ms,
-    to_ts,
+    event_ms,
+    window_cols,
+    window_fields,
     window_start_with_offset,
+    window_step,
 )
 
 _FUNCS = (
@@ -120,22 +125,25 @@ def streaming_group_window_agg(
 
     specs = AggSpecs(aggs, changelog=rowkind_col is not None)
     nspecs = len(aggs)
-    key_fields = [stream.schema[k] for k in keys]
-    win_fields = [
-        StructField("window_start", TimestampType()),
-        StructField("window_end", TimestampType()),
-    ]
-    if emit_window_time:
-        win_fields.append(StructField("window_time", TimestampType()))
     out_schema = StructType(
         [
             StructField(ROWKIND, StringType()),
-            *key_fields,
-            *win_fields,
+            *[stream.schema[k] for k in keys],
+            *window_fields(emit_window_time),
             *[StructField(n, t) for n, _f, _c, t in aggs],
         ]
     )
-    out_cols = [f.name for f in out_schema.fields]
+    in_fields = [stream.schema[c] for c in specs.columns]
+    plan = specs.plan(specs.columns)
+    # per window: bounds, accumulator, whether it fired (NULL: not yet;
+    # false: it fired empty) and what its last firing emitted
+    state_fields = [
+        StructField("window_start", ArrayType(LongType())),
+        StructField("window_end", ArrayType(LongType())),
+        *specs.state_fields(stream.schema),
+        StructField("fired", ArrayType(BooleanType())),
+        *[StructField(f"emitted_{n}", ArrayType(t)) for n, _f, _c, t in aggs],
+    ]
 
     def assign(ts_ms: int) -> list[tuple[int, int]]:
         if kind == "tumble":
@@ -151,131 +159,108 @@ def streaming_group_window_agg(
             return outw
         return [(ts_ms, ts_ms + gap_ms)]  # session candidate
 
-    def fn(
-        key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        wm = state.getCurrentWatermarkMs()
-        if state.exists:
-            wins, settled_wm = pickle.loads(state.get[0])
-        else:
-            wins, settled_wm = {}, None
-        # wins: {(start, end): [acc, emitted]} — emitted: None = never
-        # fired; () = fired empty; tuple = the last emitted agg values
-        out: list[tuple] = []
+    # wins: {(start, end): [acc, emitted]} — emitted: None = never
+    # fired; () = fired empty; tuple = the last emitted agg values
+    def load(raw) -> dict:
+        if raw is None:
+            return {}
+        emitted = [
+            None if fired is None else tuple(vals) if fired else ()
+            for fired, *vals in zip(*raw[2 + specs.width :])
+        ]
+        return {w: [*slot] for w, *slot in zip(zip(raw[0], raw[1]), specs.load(raw, 2), emitted)}
 
-        def row_head(kindmark, ws, we):
-            wt = (to_ts(we - 1),) if emit_window_time else ()
-            return (kindmark, *key, to_ts(ws), to_ts(we), *wt)
+    def store(wins: dict) -> tuple:
+        emitted = [slot[1] for slot in wins.values()]
+        return (
+            [ws for ws, _we in wins],
+            [we for _ws, we in wins],
+            *specs.store(slot[0] for slot in wins.values()),
+            [None if e is None else bool(e) for e in emitted],
+            *[[e[i] if e else None for e in emitted] for i in range(nspecs)],
+        )
 
-        def fire(refire_only: bool = False) -> None:
-            for (ws, we), slot in sorted(wins.items()):
-                if wm < we - 1:
-                    continue
-                acc, emitted = slot
-                live = acc.n > 0
-                vals = acc.emit(specs) if live else None
-                if emitted is None:
-                    if not refire_only or allowed_lateness_ms > 0:
-                        if live:
-                            out.append((*row_head(INSERT, ws, we), *vals))
-                            slot[1] = vals
-                        else:
-                            slot[1] = ()
-                elif emitted == ():
-                    if live:
-                        out.append((*row_head(INSERT, ws, we), *vals))
-                        slot[1] = vals
-                elif not live:
-                    out.append((*row_head(DELETE, ws, we), *emitted))
-                    slot[1] = ()
-                elif vals != emitted:
-                    out.append((*row_head(UPDATE_BEFORE, ws, we), *emitted))
-                    out.append((*row_head(UPDATE_AFTER, ws, we), *vals))
-                    slot[1] = vals
+    def fire(key: tuple, wins: dict, _due, wm: int, out: list, refire_only=False) -> None:
+        # every window the watermark reached: +I on its first non-empty
+        # firing, then -U/+U when late rows change it, -D when they
+        # empty it
+        for (ws, we), slot in sorted(wins.items()):
+            emitted = slot[1]
+            if wm < we - 1 or (emitted is None and refire_only and not allowed_lateness_ms):
+                continue
+            old = emitted or ()
+            new = slot[0].emit(specs) if slot[0].n > 0 else ()
+            if old == new and emitted is not None:
+                continue
+            head = (*key, *window_cols(ws, we, emit_window_time))
+            if old and new:
+                out += [(UPDATE_BEFORE, *head, *old), (UPDATE_AFTER, *head, *new)]
+            elif old or new:
+                out.append((DELETE, *head, *old) if old else (INSERT, *head, *new))
+            slot[1] = new
 
-        def accumulate() -> None:
-            wm_chk = (settled_wm if settled_wm is not None else -(2**62)) if input_settled else wm
-            for pdf in pdfs:
-                if len(pdf) == 0:
-                    continue
-                # positional itertuples: no per-row dict allocation in
-                # the per-row hot loop (runs once per input row at any
-                # scale — same treatment as the window-TVF agg)
-                cols = list(pdf.columns)
-                plan = specs.plan(cols)
-                rk_pos = cols.index(rowkind_col) if rowkind_col else None
-                ts_pos = cols.index(ts_col)
-                for tup in pdf.itertuples(index=False, name=None):
-                    sign = 1
-                    if rk_pos is not None:
-                        sign = -1 if tup[rk_pos] in (UPDATE_BEFORE, DELETE) else 1
-                    ts_ms = to_ms(tup[ts_pos])
-                    for ws, we in assign(ts_ms):
-                        if wm_chk >= we - 1 + allowed_lateness_ms:
-                            continue  # beyond the lateness horizon
-                        if kind == "session":
-                            # merge strictly-overlapping UNFIRED
-                            # sessions — a session that already fired
-                            # this batch (emitted, awaiting retirement)
-                            # is purged state in the reference; a
-                            # bridging row opens a NEW session beside
-                            # it rather than re-absorbing its rows
-                            overlap = [
-                                w
-                                for w in wins
-                                if w[0] < we and ws < w[1] and wins[w][1] is None
-                            ]
-                            acc = Accumulator(nspecs)
-                            for w in overlap:
-                                o_acc, _em = wins.pop(w)
-                                acc.merge(specs, o_acc)
-                                ws, we = min(ws, w[0]), max(we, w[1])
-                            acc.add(plan, tup, sign)
-                            wins[(ws, we)] = [acc, None]
-                        else:
-                            slot = wins.get((ws, we))
-                            if slot is None:
-                                slot = wins[(ws, we)] = [Accumulator(nspecs), None]
-                            slot[0].add(plan, tup, sign)
+    def accumulate(wins: dict, pdfs: Iterator[pd.DataFrame], late_wm: int) -> None:
+        for pdf in pdfs:
+            if len(pdf) == 0:
+                continue
+            signs = repeat(1)
+            if rowkind_col is not None:
+                signs = [
+                    -1 if k in (UPDATE_BEFORE, DELETE) else 1
+                    for k in pdf[rowkind_col].tolist()
+                ]
+            rows = zip(event_ms(pdf[ts_col]), signs, py_rows(pdf, in_fields))
+            for ts_ms, sign, tup in rows:
+                for ws, we in assign(ts_ms):
+                    if late_wm >= we - 1 + allowed_lateness_ms:
+                        continue  # beyond the lateness horizon
+                    if kind == "session":
+                        # merge strictly-overlapping UNFIRED
+                        # sessions — a session that already fired
+                        # this batch (emitted, awaiting retirement)
+                        # is purged state in the reference; a
+                        # bridging row opens a NEW session beside
+                        # it rather than re-absorbing its rows
+                        overlap = [
+                            w
+                            for w in wins
+                            if w[0] < we and ws < w[1] and wins[w][1] is None
+                        ]
+                        acc = Accumulator(nspecs)
+                        for w in overlap:
+                            o_acc, _em = wins.pop(w)
+                            acc.merge(specs, o_acc)
+                            ws, we = min(ws, w[0]), max(we, w[1])
+                        acc.add(plan, tup, sign)
+                        wins[(ws, we)] = [acc, None]
+                    else:
+                        slot = wins.get((ws, we))
+                        if slot is None:
+                            slot = wins[(ws, we)] = [Accumulator(nspecs), None]
+                        slot[0].add(plan, tup, sign)
 
-        if input_settled:
-            accumulate()
-            fire()
-        else:
-            fire()
-            accumulate()
-            fire(refire_only=True)
-        settled_wm = wm if settled_wm is None else max(settled_wm, wm)
-
+    def settle(key: tuple, wins: dict, wm: int, out: list) -> None:
+        if not input_settled:
+            # late firing of the rows this batch added
+            fire(key, wins, None, wm, out, refire_only=True)
         # retire windows past the lateness horizon
         for w in [w for w in wins if wm >= w[1] - 1 + allowed_lateness_ms]:
             del wins[w]
 
-        if wins:
-            state.update((pickle.dumps((wins, settled_wm)),))
-            nxt = min((we for _ws, we in wins if we - 1 > wm), default=None)
-            if nxt is not None:
-                state.setTimeoutTimestamp(nxt - 2)  # fires at wm >= nxt - 1
-            else:
-                # every live window has fired but is retained for the
-                # allowed-lateness horizon — register its cleanup timer
-                # (WindowOperator registers a cleanup timer at
-                # window.maxTimestamp + allowedLateness) so quiet keys
-                # retire via the EventTimeTimeout path instead of
-                # holding state until the key's next record.
-                state.setTimeoutTimestamp(
-                    min(we - 2 + allowed_lateness_ms for _ws, we in wins)
-                )
-        elif state.exists:
-            state.remove()
-
-        if out:
-            yield pd.DataFrame(out, columns=out_cols)
-
-    return stream.groupBy(*keys).applyInPandasWithState(
-        fn,
-        outputStructType=out_schema,
-        stateStructType="blob BINARY",
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.EventTimeTimeout,
+    return window_step(
+        stream.groupBy(*keys),
+        out_schema,
+        state_fields,
+        attributed=input_settled,
+        load=load,
+        store=store,
+        accumulate=accumulate,
+        fire=fire,
+        ends=lambda wins: [we for _ws, we in wins],
+        settle=settle,
+        # every live window fired but is kept for the allowed-lateness
+        # horizon: WindowOperator's cleanup timer at window.maxTimestamp
+        # + allowedLateness retires quiet keys
+        cleanup_ms=allowed_lateness_ms,
+        output_mode="update",
     )

@@ -24,14 +24,14 @@ protocol): +I on first non-empty state, -U(old)/+U(new) on change
 and nothing when the values did not change (the reference's record
 equaliser), -D when the live row count nets to zero. The input is a
 changelog only when ``rowkind_col`` names its row-kind column;
-otherwise every row accumulates. State per key = one accumulator row;
-one hash exchange.
+otherwise every row accumulates. State per key = one typed accumulator
+(its last emission is its ``emit``, not stored twice); one hash exchange.
 """
 
 from __future__ import annotations
 
-import pickle
 from collections.abc import Iterator, Sequence
+from itertools import repeat
 
 import pandas as pd
 from pyspark.sql import DataFrame
@@ -46,6 +46,7 @@ from flink_release_1_16_0_spark.streaming.changelog import (
     UPDATE_AFTER,
     UPDATE_BEFORE,
 )
+from flink_release_1_16_0_spark.streaming.event_buffer import py_rows
 
 _FUNCS = (
     "count_star",
@@ -91,28 +92,26 @@ def streaming_retracting_multi_agg(
     )
     out_cols = [f.name for f in out_schema.fields]
     specs = AggSpecs(aggs, changelog=rowkind_col is not None)
+    in_fields = [stream.schema[c] for c in specs.columns]
+    plan = specs.plan(specs.columns)
 
     def fn(
         key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
     ) -> Iterator[pd.DataFrame]:
-        if state.exists:
-            acc, emitted = pickle.loads(state.get[0])
-        else:
-            acc, emitted = Accumulator(len(aggs)), None
+        acc = specs.load(state.get)[0] if state.exists else Accumulator(len(aggs))
+        emitted = acc.emit(specs) if state.exists else None
         for pdf in pdfs:
             if len(pdf) == 0:
                 continue
             if seq_col is not None:
                 pdf = pdf.sort_values(seq_col, kind="mergesort")
-            # positional itertuples: no per-row dict allocation in the
-            # unbounded-agg hot loop (same treatment as the window agg).
-            cols = list(pdf.columns)
-            plan = specs.plan(cols)
-            rk_pos = None if rowkind_col is None else cols.index(rowkind_col)
-            for tup in pdf.itertuples(index=False, name=None):
-                sign = 1
-                if rk_pos is not None:
-                    sign = -1 if tup[rk_pos] in (UPDATE_BEFORE, DELETE) else 1
+            signs = repeat(1)
+            if rowkind_col is not None:
+                signs = [
+                    -1 if k in (UPDATE_BEFORE, DELETE) else 1
+                    for k in pdf[rowkind_col].tolist()
+                ]
+            for sign, tup in zip(signs, py_rows(pdf, in_fields)):
                 acc.add(plan, tup, sign)
         out: list[tuple] = []
         if acc.n <= 0:
@@ -127,14 +126,14 @@ def streaming_retracting_multi_agg(
             elif vals != emitted:
                 out.append((UPDATE_BEFORE, *key, *emitted))
                 out.append((UPDATE_AFTER, *key, *vals))
-            state.update((pickle.dumps((acc, vals)),))
+            state.update(specs.store([acc]))
         if out:
             yield pd.DataFrame(out, columns=out_cols)
 
     return stream.groupBy(*keys).applyInPandasWithState(
         fn,
         outputStructType=out_schema,
-        stateStructType="blob BINARY",
+        stateStructType=StructType(specs.state_fields(stream.schema)),
         outputMode="update",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )

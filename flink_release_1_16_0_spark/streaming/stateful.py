@@ -45,7 +45,6 @@ from __future__ import annotations
 from collections import deque
 from collections.abc import Iterator, Sequence
 from datetime import datetime
-from decimal import Decimal
 
 import numpy as np
 import pandas as pd
@@ -72,6 +71,7 @@ from flink_release_1_16_0_spark.streaming.changelog import (
 )
 from flink_release_1_16_0_spark.streaming.event_buffer import (
     BufferLayout,
+    py_rows,
     py_values,
     sort_key,
     us_to_ts,
@@ -149,7 +149,7 @@ def streaming_dedup_keep_last(
             merged = pick(pd.concat([prev, best]))
         else:
             merged = best
-        new_tup = _typed_rows(merged, [], out_schema.fields)[0]
+        new_tup = next(py_rows(merged, out_schema.fields))
         if state_ttl_ms is not None:
             # the cleanup timer refreshes on every access, changed or
             # not (KeyedProcessFunctionWithCleanupState.registerProcessingCleanupTimer)
@@ -259,7 +259,7 @@ def streaming_window_dedup(
                 if keep == "first"
                 else s.groupby(window_col, sort=False).tail(1)
             )
-            for row in _typed_rows(best, [], fields):
+            for row in py_rows(best, fields):
                 w = row[w_at]
                 cur = winners.get(w)
                 if cur is None or sign * _cmp_tuples(rank(row), rank(cur)) < 0:
@@ -462,17 +462,10 @@ def _counted(fields) -> ArrayType:
     return ArrayType(StructType([*fields, StructField("m", LongType())]))
 
 
-def _typed_rows(pdf: pd.DataFrame, plain: list[str], fields) -> list[tuple]:
-    """Rows of ``pdf``: the ``plain`` columns as they are, then ``fields``
-    as typed Python values (:func:`event_buffer.py_values`) — a padded
-    union upcasts NULL-bearing integer columns to float64, and NaN
-    payloads would never match as multiset keys."""
-    return list(
-        zip(
-            *[pdf[c].tolist() for c in plain],
-            *[py_values(pdf[f.name], f.dataType) for f in fields],
-        )
-    )
+# a changelog join row's row kind and side, ahead of its typed payload
+# (a padded union upcasts NULL-bearing integers to float64, and NaN
+# payloads would never match as multiset keys)
+_TAGS = [StructField(ROWKIND, StringType()), StructField("__side", StringType())]
 
 
 def streaming_changelog_join(
@@ -591,7 +584,7 @@ def streaming_changelog_join(
         else:
             lmap, rmap = {}, {}
         tl, tr = sum(lmap.values()), sum(rmap.values())
-        rows = _typed_rows(pdf, [ROWKIND, "__side"], pay_fields)
+        rows = list(py_rows(pdf, [*_TAGS, *pay_fields]))
         out: list[tuple] = []
         nl = len(lpay)
         l_nulls = (None,) * len(lpay)
@@ -781,7 +774,7 @@ def streaming_changelog_semi_anti_join(
         else:
             lmap, rmap = {}, {}
         tr = sum(rmap.values())
-        rows = _typed_rows(pdf, [ROWKIND, "__side"], pay_fields)
+        rows = list(py_rows(pdf, [*_TAGS, *pay_fields]))
         out: list[tuple] = []
 
         def member(has_match: bool) -> bool:
@@ -1119,19 +1112,12 @@ def streaming_temporal_sort(
     return res
 
 
-# COUNT and exact-Decimal SUM over the value column: the frame of all
-# four OVER operators
-_OVER = AggSpecs(
-    [("n", "count", "v", LongType()), ("sum", "sum", "v", DoubleType())],
-    changelog=False,
-)
+# the frame of all four OVER operators: the exact-Decimal SUM over the
+# value column, whose count of non-NULL values is the frame's COUNT
+_OVER = AggSpecs([("sum", "sum", "v", DoubleType())], changelog=False)
 _OVER_PLAN = _OVER.plan(["v"])
-# the unbounded operators' running accumulator: the count and the
-# exact sum's decimal text
-_RUNNING_STATE = [
-    StructField("n", LongType()),
-    StructField("sum", StringType()),
-]
+# the unbounded operators' carry: the running accumulator
+_RUNNING_STATE = _OVER.fields(StructType([StructField("v", DoubleType())]))
 # the bounded operators' frame: the rows a future row can still see
 _FRAME = [
     StructField("frame_ms", ArrayType(LongType())),
@@ -1141,16 +1127,14 @@ _FRAME = [
 _KEY_POS = StructField("__key_pos", LongType())
 
 
-def _running_load(raw) -> Accumulator:
-    acc = Accumulator(2)
-    if raw and raw[0]:
-        acc.cells = [raw[0], (Decimal(raw[1]), raw[0])]
-    return acc
-
-
-def _running_state(acc: Accumulator) -> tuple:
-    n, s = acc.cells
-    return (n or 0, None if s is None else str(s[0]))
+def _fold_running(carry: list[list], runs, vals: list) -> list[tuple]:
+    """Fold each key's run of ``vals`` into its running accumulator,
+    held in the key table's ``carry``; one (count, sum) per row."""
+    accs = _OVER.load(carry)
+    res = [out for k, lo, hi in runs for out in _over_fold(accs[k], None, vals[lo:hi])]
+    for c, stored in zip(carry, _OVER.store(accs)):
+        c[:] = stored
+    return res
 
 
 def _over_fold(
@@ -1185,7 +1169,8 @@ def _over_fold(
             lo = ts[i] // 1000 - range_ms
             while frame[0][0] < lo:
                 acc.add(_OVER_PLAN, (frame.popleft()[1],), -1)
-        out.extend([acc.emit(_OVER)] * (j - i))
+        c = acc.cells[0]
+        out.extend([(c[1] if c else 0, *acc.emit(_OVER))] * (j - i))
         i = j
     return out
 
@@ -1242,10 +1227,12 @@ def _over_event_time(
         order, runs = key_runs(np.asarray(pos, dtype=np.int64))
         pick = order.tolist()
         ts, ids, vals = ts[order], [ids[i] for i in pick], [vals[i] for i in pick]
-        res: list[tuple] = []
-        first, second = group.carry
-        for k, lo, hi in runs:
-            if bounded:
+        first, second = group.carry[:2]
+        if not bounded:
+            res = _fold_running(group.carry, runs, vals)
+        else:
+            res = []
+            for k, lo, hi in runs:
                 frame = deque(zip(first[k] or (), second[k] or ()))
                 acc = Accumulator(2)
                 for _ms, v in frame:
@@ -1260,10 +1247,6 @@ def _over_event_time(
                 ):
                     frame.popleft()
                 first[k], second[k] = [m for m, _v in frame], [v for _m, v in frame]
-            else:
-                acc = _running_load((first[k], second[k]))
-                res += _over_fold(acc, None, vals[lo:hi])
-                first[k], second[k] = _running_state(acc)
         out = None
         if res:
             n, total = zip(*res)
@@ -1379,12 +1362,7 @@ def streaming_over_rows_unbounded(
         order = by_time[by_key]
         vals = py_values(pdf[value_col], DoubleType())
         vals = [vals[i] for i in order.tolist()]
-        res: list[tuple] = []
-        n_col, sum_col = group.carry
-        for k, lo, hi in runs:
-            acc = _running_load((n_col[k], sum_col[k]))
-            res += _over_fold(acc, None, vals[lo:hi])
-            n_col[k], sum_col[k] = _running_state(acc)
+        res = _fold_running(group.carry, runs, vals)
         state.update(group.state())
         n, total = zip(*res)
         yield pd.DataFrame(

@@ -32,18 +32,24 @@ Scale shape: one hash exchange on the grouping key; per-key state is
 O(live slices) with windows derived by arithmetic, the same bound as
 the reference's slicing operator. Aggregation is incremental per
 slice; firing merges at most size/slide accumulators.
+
+These three operators and the group window (group_window.py) share
+one per-key step, :func:`window_step`, and keep typed state: the
+``streaming.accumulators`` codec for accumulators, the
+``event_buffer.BufferLayout`` codec (window end as time) for rows.
 """
 
 from __future__ import annotations
 
-import pickle
-from collections.abc import Iterator, Sequence
+from collections.abc import Callable, Iterator, Sequence
+from itertools import repeat
 from math import gcd
 
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from pyspark.sql.types import (
+    ArrayType,
     DataType,
     LongType,
     StructField,
@@ -52,6 +58,11 @@ from pyspark.sql.types import (
 )
 
 from flink_release_1_16_0_spark.streaming.accumulators import Accumulator, AggSpecs
+from flink_release_1_16_0_spark.streaming.event_buffer import (
+    BufferLayout,
+    epoch_us,
+    py_rows,
+)
 
 _AGG_FUNCS = (
     "count_star",
@@ -63,6 +74,9 @@ _AGG_FUNCS = (
     "concat_distinct",
 )
 
+# the settled watermark before the first call
+_NEVER = -(2**62)
+
 
 def window_start_with_offset(ts_ms: int, offset_ms: int, size_ms: int) -> int:
     """TimeWindow.getWindowStartWithOffset — offset may be negative and
@@ -72,15 +86,124 @@ def window_start_with_offset(ts_ms: int, offset_ms: int, size_ms: int) -> int:
 
 
 def to_ms(t) -> int:
-    """Epoch milliseconds of a pandas/datetime timestamp cell."""
-    return t.value // 1_000_000 if hasattr(t, "value") else int(t.timestamp() * 1000)
+    """Epoch milliseconds of a pandas/datetime timestamp cell (naive
+    timestamps are UTC, the session time zone)."""
+    return (t if hasattr(t, "value") else pd.Timestamp(t)).value // 1_000_000
 
 
-def to_ts(ms: int) -> pd.Timestamp:
-    return pd.Timestamp(ms * 1_000_000)
+def event_ms(col) -> list[int]:
+    """Epoch milliseconds of a timestamp column, as ints."""
+    return (epoch_us(col) // 1000).tolist()
+
+
+def window_fields(emit_window_time: bool) -> list[StructField]:
+    """The window columns of every windowed operator's output."""
+    names = ["window_start", "window_end"] + ["window_time"] * emit_window_time
+    return [StructField(n, TimestampType()) for n in names]
+
+
+def window_cols(ws: int, we: int, emit_window_time: bool) -> tuple:
+    """A fired window's values of :func:`window_fields`; window_time is
+    the end - 1 ms."""
+    ends = (ws, we, we - 1) if emit_window_time else (ws, we)
+    return tuple(pd.Timestamp(ms * 1_000_000) for ms in ends)
+
+
+def window_step(
+    grouped,
+    out_schema: StructType,
+    state_fields: Sequence[StructField],
+    *,
+    attributed: bool,
+    load: Callable,
+    store: Callable,
+    accumulate: Callable,
+    fire: Callable,
+    ends: Callable,
+    settle: Callable | None = None,
+    cleanup_ms: int | None = None,
+    output_mode: str = "append",
+) -> DataFrame:
+    """``applyInPandasWithState`` with the step every windowed operator
+    takes per key and micro-batch. The operator holds its windows in
+    ``wins`` (``load(raw)``, ``store(wins)``, ``ends(wins)``); the step
+    fires (``fire(key, wins, due, wm, out)``) the ends ``due`` that the
+    watermark fires (isWindowFired: wm >= end - 1) and the settled one
+    did not, and accumulates (``accumulate(wins, pdfs, late_wm)``):
+    source-fed input after firing, late against this watermark (the
+    reference's timers run ahead of the rows); ``attributed`` input, an
+    upstream window operator's output, which precedes the watermark
+    that fired it, before firing, late against the settled one. Then
+    ``settle(key, wins, wm, out)``, if given. The timer is the smallest
+    unfired end - 2 (Spark fires when timeout < watermark), else the
+    smallest end + ``cleanup_ms``; no end left removes the state.
+    """
+    out_cols = out_schema.fieldNames()
+    state_schema = StructType([StructField("settled_wm", LongType()), *state_fields])
+
+    def fn(
+        key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
+    ) -> Iterator[pd.DataFrame]:
+        wm = state.getCurrentWatermarkMs()
+        raw = state.get if state.exists else None
+        settled = _NEVER if raw is None else raw[0]
+        wins = load(None if raw is None else raw[1:])
+        out: list[tuple] = []
+        if attributed:
+            accumulate(wins, pdfs, settled)
+        fire(key, wins, sorted({e for e in ends(wins) if wm >= e - 1 > settled}), wm, out)
+        if not attributed:
+            accumulate(wins, pdfs, wm)
+        if settle is not None:
+            settle(key, wins, wm, out)
+        settled = max(settled, wm)
+        held = list(ends(wins))
+        if held:
+            state.update((settled, *store(wins)))
+            nxt = min((e for e in held if e - 1 > settled), default=None)
+            if nxt is not None:
+                state.setTimeoutTimestamp(nxt - 2)
+            elif cleanup_ms is not None:
+                state.setTimeoutTimestamp(min(held) - 2 + cleanup_ms)
+        elif state.exists:
+            state.remove()
+        if out:
+            yield pd.DataFrame(out, columns=out_cols)
+
+    return grouped.applyInPandasWithState(
+        fn,
+        outputStructType=out_schema,
+        stateStructType=state_schema,
+        outputMode=output_mode,
+        timeoutConf=GroupStateTimeout.EventTimeTimeout,
+    )
+
+
+def _window_rows(layout: BufferLayout, raw, at: int = 0) -> dict[int, list[tuple]]:
+    """Rows per window end, from ``layout``'s state fields at
+    ``raw[at:]`` (the buffer's time is the window end)."""
+    buf = layout.load(raw, at)
+    wins: dict[int, list[tuple]] = {}
+    for t, *row in zip(buf.ts.tolist(), *buf.cols):
+        wins.setdefault(t // 1000, []).append(tuple(row))
+    return wins
+
+
+def _rows_state(layout: BufferLayout, wins: dict[int, list[tuple]]) -> tuple:
+    """Rows per window end as ``layout``'s state fields."""
+    rows = [(e * 1000, *row) for e, rs in wins.items() for row in rs]
+    return tuple(map(list, zip(*rows))) if rows else tuple([] for _ in range(layout.width))
+
+
+def _live_ends(asg: _Assigner | None, t: int, late_wm: int) -> list[int]:
+    """The ends of a row's windows that ``late_wm`` has not fired; the
+    row is at ``t`` ms, or, with no assigner, ``t`` is its window end."""
+    ends = [t] if asg is None else asg.candidate_ends(asg.assign_slice_end(t))
+    return [e for e in ends if late_wm < e - 1]
 
 
 class _Assigner:
+
     """Tumble / hop / cumulate slice assigner (SliceAssigners.java)."""
 
     def __init__(
@@ -172,6 +295,7 @@ def streaming_window_tvf_agg(
     window never refines (late rows for it are dropped upstream of
     state, the reference's windowAggProcessor drop path). Output
     columns: keys, window_start, window_end[, window_time], *aggs.
+    State per key: one accumulator per live slice, keyed by slice end.
     """
     for a in aggs:
         if a[1] not in _AGG_FUNCS:
@@ -179,155 +303,85 @@ def streaming_window_tvf_agg(
     asg = _Assigner(kind, size_ms, slide_ms, step_ms, offset_ms)
     specs = AggSpecs(aggs, changelog=False)
     nspecs = len(aggs)
-    key_fields = [stream.schema[k] for k in keys]
-    win_fields = [
-        StructField("window_start", TimestampType()),
-        StructField("window_end", TimestampType()),
-    ]
-    if emit_window_time:
-        win_fields.append(StructField("window_time", TimestampType()))
     out_schema = StructType(
         [
-            *key_fields,
-            *win_fields,
+            *[stream.schema[k] for k in keys],
+            *window_fields(emit_window_time),
             *[StructField(name, typ) for name, _f, _c, typ in aggs],
         ]
     )
-    out_cols = [f.name for f in out_schema.fields]
-    in_cols = [ts_col] + [c for _, _, c, _ in aggs if c is not None]
-    in_cols = list(dict.fromkeys(in_cols))
-    plan = specs.plan(in_cols)
+    in_fields = [stream.schema[c] for c in specs.columns]
+    plan = specs.plan(specs.columns)
 
-    def fn(
-        key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        wm = state.getCurrentWatermarkMs()
-        if state.exists:
-            slices, settled_wm = pickle.loads(state.get[0])
-        else:
-            slices, settled_wm = {}, None
+    def fire(key: tuple, slices, due: list[int], _wm, out: list) -> None:
+        def emit(ws: int, we: int, acc: Accumulator | None) -> None:
+            if acc is not None and acc.n > 0:
+                out.append((*key, *window_cols(ws, we, emit_window_time), *acc.emit(specs)))
 
-        out: list[tuple] = []
+        for e in due:
+            if kind == "tumble":
+                emit(e - size_ms, e, slices.pop(e, None))
+            elif kind == "hop":
+                merged = Accumulator(nspecs)
+                # descending slice ends (HoppingSlicesIterable)
+                for se in range(e, e - size_ms, -asg.slice):
+                    s = slices.get(se)
+                    if s is not None:
+                        merged.merge(specs, s)
+                emit(e - size_ms, e, merged)
+                # expire the window's first slice — no later window
+                # needs it
+                slices.pop(e - size_ms + asg.slice, None)
+            else:  # cumulate
+                g = asg.group_start(e)
+                first = g + asg.step
+                target = slices.get(first)
+                if e != first:
+                    # merge the current step slice INTO the shared
+                    # first slice (CumulativeSliceAssigner.mergeSlices)
+                    # — so order-sensitive aggs read ascending
+                    step_acc = slices.pop(e, None)
+                    if step_acc is not None:
+                        if target is None:
+                            target = slices[first] = Accumulator(nspecs)
+                        target.merge(specs, step_acc)
+                emit(g, e, target)
+                if e == g + size_ms:  # max window: retire shared state
+                    slices.pop(first, None)
 
-        def _row(ws: int, we: int, acc: Accumulator) -> tuple:
-            wt = (to_ts(we - 1),) if emit_window_time else ()
-            return (*key, to_ts(ws), to_ts(we), *wt, *acc.emit(specs))
+    def accumulate(slices, pdfs: Iterator[pd.DataFrame], late_wm: int) -> None:
+        # drop iff the row's LAST window fired per ``late_wm``; a row
+        # whose own slice fired but later windows remain goes to the
+        # slice-state merge target (AbstractWindowAggProcessor.java:142:
+        # hop -> the slice itself, cumulate -> the shared first slice).
+        for pdf in pdfs:
+            if len(pdf) == 0:
+                continue
+            for t, tup in zip(event_ms(pdf[ts_col]), py_rows(pdf, in_fields)):
+                se = asg.assign_slice_end(t)
+                if late_wm >= asg.last_window_end(se) - 1:
+                    continue  # late: every window containing it fired
+                if kind == "cumulate" and late_wm >= se - 1:
+                    se = asg.group_start(se) + asg.step  # merge target
+                acc = slices.get(se)
+                if acc is None:
+                    acc = slices[se] = Accumulator(nspecs)
+                acc.add(plan, tup)
 
-        def fire() -> None:
-            # The reference's timers run on watermark advance: a window
-            # end fires once, when it first satisfies wm >= e - 1 past
-            # the settled watermark (isWindowFired; monotone, so a
-            # stored high-water mark replaces the reference's timer
-            # state).
-            ready: list[int] = sorted(
-                {
-                    e
-                    for se in slices
-                    for e in asg.candidate_ends(se)
-                    if wm >= e - 1 and (settled_wm is None or e - 1 > settled_wm)
-                }
-            )
-            for e in ready:
-                if kind == "tumble":
-                    acc = slices.pop(e, None)
-                    if acc is not None and acc.n > 0:
-                        out.append(_row(e - size_ms, e, acc))
-                elif kind == "hop":
-                    merged = Accumulator(nspecs)
-                    # descending slice ends (HoppingSlicesIterable)
-                    for se in range(e, e - size_ms, -asg.slice):
-                        s = slices.get(se)
-                        if s is not None:
-                            merged.merge(specs, s)
-                    if merged.n > 0:
-                        out.append(_row(e - size_ms, e, merged))
-                    # expire the window's first slice — no later window
-                    # needs it
-                    slices.pop(e - size_ms + asg.slice, None)
-                else:  # cumulate
-                    g = asg.group_start(e)
-                    first = g + asg.step
-                    target = slices.get(first)
-                    if e != first:
-                        # merge the current step slice INTO the shared
-                        # first slice (CumulativeSliceAssigner.
-                        # mergeSlices) — so order-sensitive aggs read
-                        # ascending
-                        step_acc = slices.pop(e, None)
-                        if step_acc is not None:
-                            if target is None:
-                                target = slices[first] = Accumulator(nspecs)
-                            target.merge(specs, step_acc)
-                    if target is not None and target.n > 0:
-                        out.append(_row(g, e, target))
-                    if e == g + size_ms:  # max window: retire shared state
-                        slices.pop(first, None)
-
-        def accumulate(late_wm: int) -> None:
-            # drop iff the row's LAST window fired per ``late_wm``; a
-            # row whose own slice fired but later windows remain goes
-            # to the slice-state merge target
-            # (AbstractWindowAggProcessor.java:142: hop -> the slice
-            # itself, cumulate -> the shared first slice).
-            # itertuples + positional cells: the per-row hot loop runs
-            # once per input row at any scale, so no per-row dict
-            # allocation. ts_col is in_cols[0].
-            for pdf in pdfs:
-                if len(pdf) == 0:
-                    continue
-                for tup in pdf[in_cols].itertuples(index=False, name=None):
-                    se = asg.assign_slice_end(to_ms(tup[0]))
-                    if late_wm >= asg.last_window_end(se) - 1:
-                        continue  # late: every window containing it fired
-                    if kind == "cumulate" and late_wm >= se - 1:
-                        se = asg.group_start(se) + asg.step  # merge target
-                    acc = slices.get(se)
-                    if acc is None:
-                        acc = slices[se] = Accumulator(nspecs)
-                    acc.add(plan, tup)
-
-        if input_attributed:
-            # window-attributed input (e.g. a cascade over an upstream
-            # window agg's emissions): records precede the watermark
-            # that fired them — Flink forwards outputs before the
-            # watermark — so accumulate first, judging lateness against
-            # the PREVIOUS settled watermark, then fire at this one.
-            accumulate(-1 if settled_wm is None else settled_wm)
-            fire()
-        else:
-            # source-fed: fire before accumulating — the reference's
-            # timers run on watermark advance before the next elements
-            # are seen, so a row landing in a window firing at this
-            # very watermark is observed late, not folded in.
-            fire()
-            accumulate(wm)
-        settled_wm = wm if settled_wm is None else max(settled_wm, wm)
-
-        if slices:
-            state.update((pickle.dumps((slices, settled_wm)),))
-            nxt = min(
-                (
-                    e
-                    for se in slices
-                    for e in asg.candidate_ends(se)
-                    if e - 1 > settled_wm
-                ),
-                default=None,
-            )
-            if nxt is not None:
-                state.setTimeoutTimestamp(nxt - 2)  # fires at wm >= nxt - 1
-        elif state.exists:
-            state.remove()
-
-        if out:
-            yield pd.DataFrame(out, columns=out_cols)
-
-    return stream.groupBy(*keys).applyInPandasWithState(
-        fn,
-        outputStructType=out_schema,
-        stateStructType="blob BINARY",
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.EventTimeTimeout,
+    return window_step(
+        stream.groupBy(*keys),
+        out_schema,
+        [
+            StructField("slice_end", ArrayType(LongType())),
+            *specs.state_fields(stream.schema),
+        ],
+        attributed=input_attributed,
+        # slices: accumulators by slice end
+        load=lambda raw: {} if raw is None else dict(zip(raw[0], specs.load(raw, 1))),
+        store=lambda slices: (list(slices), *specs.store(slices.values())),
+        accumulate=accumulate,
+        fire=fire,
+        ends=lambda slices: (e for se in slices for e in asg.candidate_ends(se)),
     )
 
 
@@ -372,7 +426,8 @@ def streaming_window_tvf_join(
 
     Scale: one hash exchange on (keys); state = live rows per (key,
     open window), retired at fire — the reference's
-    WindowJoinOperator state bound.
+    WindowJoinOperator state bound; each side's rows are one
+    BufferLayout buffer of (window start, payload) by window end.
     """
     kinds = ("inner", "left", "right", "full", "semi", "anti", "anti_null_aware")
     if join_type not in kinds:
@@ -406,161 +461,97 @@ def streaming_window_tvf_join(
         tag(right, "R", rpay, lpay, left.schema)
     )
 
-    key_fields = [left.schema[k] for k in keys]
-    win_fields = [
-        StructField("window_start", TimestampType()),
-        StructField("window_end", TimestampType()),
-    ]
-    if emit_window_time:
-        win_fields.append(StructField("window_time", TimestampType()))
     l_fields = [left.schema[c] for c in lpay]
     r_fields = [right.schema[c] for c in rpay]
     semi_like = join_type in ("semi", "anti", "anti_null_aware")
     out_schema = StructType(
-        [*key_fields, *win_fields, *l_fields, *([] if semi_like else r_fields)]
+        [
+            *[left.schema[k] for k in keys],
+            *window_fields(emit_window_time),
+            *l_fields,
+            *([] if semi_like else r_fields),
+        ]
     )
-    out_cols = [f.name for f in out_schema.fields]
+    ws_field = StructField("window_start", LongType())
+    sides = (
+        BufferLayout("window_end", [ws_field, *l_fields], prefix="l_"),
+        BufferLayout("window_end", [ws_field, *r_fields], prefix="r_"),
+    )
 
     l_nulls = [None] * len(lpay)
     r_nulls = [None] * len(rpay)
+    t_col = "window_end" if input_attributed else ts_col
 
-    def fn(
-        key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        wm = state.getCurrentWatermarkMs()
-        if state.exists:
-            wins, settled_wm = pickle.loads(state.get[0])
-        else:
-            wins, settled_wm = {}, None
-        out: list[tuple] = []
+    def accumulate(wins, pdfs: Iterator[pd.DataFrame], late_wm: int) -> None:
+        for pdf in pdfs:
+            if len(pdf) == 0:
+                continue
+            starts = event_ms(pdf["window_start"]) if input_attributed else repeat(None)
+            is_left = (pdf["__side"] == "L").tolist()
+            rows = zip(py_rows(pdf, l_fields), py_rows(pdf, r_fields))
+            for t, ws, left_row, (lrow, rrow) in zip(event_ms(pdf[t_col]), starts, is_left, rows):
+                side, row = (wins[0], lrow) if left_row else (wins[1], rrow)
+                for e in _live_ends(asg, t, late_wm):
+                    side.setdefault(e, []).append((ws if asg is None else asg.window_starts(e), *row))
+
+    def fire(key: tuple, wins, due: list[int], _wm, out: list) -> None:
+        lw, rw = wins
         matched_key = null_safe or all(k is not None for k in key)
-
-        def accumulate() -> None:
-            for pdf in pdfs:
-                if len(pdf) == 0:
+        for e in due:
+            lrows, rrows = lw.pop(e, []), rw.pop(e, [])  # (start, *payload)
+            head = (*key, *window_cols((lrows or rrows)[0][0], e, emit_window_time))
+            lrows = [r[1:] for r in lrows]
+            rrows = [r[1:] for r in rrows]
+            if join_type == "anti_null_aware":
+                # NOT IN: any right NULL suppresses the window;
+                # NULL left values never satisfy NOT IN
+                idx = lpay.index(null_aware_col)
+                ridx = rpay.index(f"{null_aware_col}2")
+                rvals = [r[ridx] for r in rrows]
+                if any(v is None or v != v for v in rvals):
                     continue
-                # positional itertuples: no per-row dict allocation in
-                # the buffering hot loop (same treatment as the TVF agg)
-                col_pos = {c: j for j, c in enumerate(pdf.columns)}
-                side_pos = col_pos["__side"]
-                lpos = [col_pos[c] for c in lpay]
-                rpos = [col_pos[c] for c in rpay]
-                if input_attributed:
-                    ws_pos, we_pos = col_pos["window_start"], col_pos["window_end"]
-                else:
-                    ts_pos = col_pos[ts_col]
-                for tup in pdf.itertuples(index=False, name=None):
-                    if input_attributed:
-                        e = to_ms(tup[we_pos])
-                        if settled_wm is not None and settled_wm >= e - 1:
-                            continue
-                        ends = [(e, to_ms(tup[ws_pos]))]
-                    else:
-                        se = asg.assign_slice_end(to_ms(tup[ts_pos]))
-                        if wm >= asg.last_window_end(se) - 1:
-                            continue
-                        ends = [
-                            (e, asg.window_starts(e))
-                            for e in asg.candidate_ends(se)
-                            if wm < e - 1
-                        ]
-                    side = 0 if tup[side_pos] == "L" else 1
-                    vals = tuple(tup[p] for p in (lpos if side == 0 else rpos))
-                    for e, ws in ends:
-                        buf = wins.setdefault(e, (ws, [], []))
-                        buf[1 + side].append(vals)
+                rset = set(rvals)
+                for lrow in lrows:
+                    v = lrow[idx]
+                    if v is not None and v == v and v not in rset:
+                        out.append((*head, *lrow))
+                continue
+            joined = matched_key and bool(lrows) and bool(rrows)
+            if join_type == "semi":
+                if joined:
+                    out.extend((*head, *lr) for lr in lrows)
+            elif join_type == "anti":
+                if not joined:
+                    out.extend((*head, *lr) for lr in lrows)
+            elif joined:
+                out.extend((*head, *lr, *rr) for lr in lrows for rr in rrows)
+            else:
+                if join_type in ("left", "full") and lrows:
+                    out.extend((*head, *lr, *r_nulls) for lr in lrows)
+                if join_type in ("right", "full") and rrows:
+                    out.extend((*head, *l_nulls, *rr) for rr in rrows)
 
-        def fire() -> None:
-            ready = sorted(
-                e
-                for e in wins
-                if wm >= e - 1 and (settled_wm is None or e - 1 > settled_wm)
-            )
-            for e in ready:
-                ws, lrows, rrows = wins.pop(e)
-                wt = (to_ts(e - 1),) if emit_window_time else ()
-                head = (*key, to_ts(ws), to_ts(e), *wt)
-                if join_type == "anti_null_aware":
-                    # NOT IN: any right NULL suppresses the window;
-                    # NULL left values never satisfy NOT IN
-                    idx = lpay.index(null_aware_col)
-                    ridx = rpay.index(f"{null_aware_col}2")
-                    rvals = [r[ridx] for r in rrows]
-                    if any(v is None or v != v for v in rvals):
-                        continue
-                    rset = set(rvals)
-                    for lrow in lrows:
-                        v = lrow[idx]
-                        if v is not None and v == v and v not in rset:
-                            out.append((*head, *lrow))
-                    continue
-                joined = matched_key and bool(lrows) and bool(rrows)
-                if join_type == "semi":
-                    if joined:
-                        out.extend((*head, *lr) for lr in lrows)
-                elif join_type == "anti":
-                    if not joined:
-                        out.extend((*head, *lr) for lr in lrows)
-                elif joined:
-                    out.extend(
-                        (*head, *lr, *rr) for lr in lrows for rr in rrows
-                    )
-                else:
-                    if join_type in ("left", "full") and lrows:
-                        out.extend((*head, *lr, *r_nulls) for lr in lrows)
-                    if join_type in ("right", "full") and rrows:
-                        out.extend((*head, *l_nulls, *rr) for rr in rrows)
-
-        if input_attributed:
-            accumulate()
-            fire()
-        else:
-            fire()
-            accumulate()
-        settled_wm = wm if settled_wm is None else max(settled_wm, wm)
-
-        if wins:
-            state.update((pickle.dumps((wins, settled_wm)),))
-            nxt = min((e for e in wins if e - 1 > settled_wm), default=None)
-            if nxt is not None:
-                state.setTimeoutTimestamp(nxt - 2)  # fires at wm >= nxt - 1
-        elif state.exists:
-            state.remove()
-
-        if out:
-            yield pd.DataFrame(out, columns=out_cols)
-
-    return unioned.groupBy(*keys).applyInPandasWithState(
-        fn,
-        outputStructType=out_schema,
-        stateStructType="blob BINARY",
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.EventTimeTimeout,
+    return window_step(
+        unioned.groupBy(*keys),
+        out_schema,
+        [*sides[0].state_fields(), *sides[1].state_fields()],
+        attributed=input_attributed,
+        # per side: rows (window start, *payload) by window end
+        load=lambda raw: (_window_rows(sides[0], raw), _window_rows(sides[1], raw, sides[0].width)),
+        store=lambda wins: (*_rows_state(sides[0], wins[0]), *_rows_state(sides[1], wins[1])),
+        accumulate=accumulate,
+        fire=fire,
+        ends=lambda wins: wins[0].keys() | wins[1].keys(),
     )
 
 
-class _Rev:
-    """Descending wrapper for mixed-type sort keys (stable sort keeps
-    arrival order on ties — the reference's TopN keeps the earlier row
-    on equal sort key, pinned by WindowRankITCase's tie expectations)."""
-
-    __slots__ = ("v",)
-
-    def __init__(self, v):
-        self.v = v
-
-    def __lt__(self, other):
-        return other.v < self.v
-
-    def __eq__(self, other):
-        return self.v == other.v
-
-
-def _sort_key(order):
-    def key(row):
-        return tuple(_Rev(row[c]) if desc else row[c] for c, desc in order)
-
-    return key
+def _rank_sort(rows: list, order: list[tuple[int, bool]]) -> None:
+    """Sort ``rows`` in place by ``order`` [(position, desc)], NULL
+    lowest. Stable sorts, last key first, so ties keep arrival order:
+    the reference's TopN keeps the earlier row on an equal sort key
+    (WindowRankITCase's tie expectations)."""
+    for c, desc in reversed(order):
+        rows.sort(key=lambda r: (r[c] is not None, r[c]), reverse=desc)
 
 
 def streaming_window_tvf_topn(
@@ -605,8 +596,8 @@ def streaming_window_tvf_topn(
       Flink forwards outputs before the watermark).
 
     State per key: the current top rows per open window, O(open
-    windows x rank_end); windows retire at fire. One hash exchange on
-    the key columns.
+    windows x rank_end), one BufferLayout buffer with the window end as
+    time; windows retire at fire. One hash exchange on the key columns.
     """
     asg = None
     if not input_attributed:
@@ -617,121 +608,57 @@ def streaming_window_tvf_topn(
         in_fields = [
             f for f in in_fields if f.name not in ("window_start", "window_end")
         ]
-    win_fields = [
-        StructField("window_start", TimestampType()),
-        StructField("window_end", TimestampType()),
-    ]
-    if emit_window_time:
-        win_fields.append(StructField("window_time", TimestampType()))
     extra = [StructField("rownum", LongType())] if emit_rownum else []
-    out_schema = StructType([*key_fields, *in_fields, *win_fields, *extra])
-    out_cols = [f.name for f in out_schema.fields]
+    out_schema = StructType(
+        [*key_fields, *in_fields, *window_fields(emit_window_time), *extra]
+    )
     in_names = [f.name for f in in_fields]
     # buffered rows are positional tuples over exactly the columns the
-    # operator reads (no per-row dict allocation/copy in the hot loop;
-    # key columns are NOT assumed present on input rows — the previous
-    # dict form never read them either)
-    if input_attributed:
-        buf_cols = list(
-            dict.fromkeys(
-                ["window_start", "window_end", *in_names, *(c for c, _ in order)]
-            )
-        )
-    else:
-        buf_cols = list(
-            dict.fromkeys([ts_col, *in_names, *(c for c, _ in order)])
-        )
+    # operator reads (key columns are not assumed present on input rows)
+    time_cols = ["window_start", "window_end"] if input_attributed else [ts_col]
+    buf_cols = list(dict.fromkeys([*time_cols, *in_names, *(c for c, _ in order)]))
+    buf_fields = [
+        StructField(c, TimestampType()) if c in time_cols else stream.schema[c]
+        for c in buf_cols
+    ]
+    layout = BufferLayout("window_end", buf_fields)
     pos = {c: i for i, c in enumerate(buf_cols)}
-    skey = _sort_key([(pos[c], desc) for c, desc in order])
+    by = [(pos[c], desc) for c, desc in order]
     in_pos = [pos[c] for c in in_names]
     ws_pos = pos.get("window_start")
+    t_col = "window_end" if input_attributed else ts_col
 
-    def fn(
-        key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        wm = state.getCurrentWatermarkMs()
-        if state.exists:
-            wins, settled_wm = pickle.loads(state.get[0])
-        else:
-            wins, settled_wm = {}, None
-        out: list[tuple] = []
+    def accumulate(wins, pdfs: Iterator[pd.DataFrame], late_wm: int) -> None:
+        for pdf in pdfs:
+            if len(pdf) == 0:
+                continue
+            for t, tup in zip(event_ms(pdf[t_col]), py_rows(pdf, buf_fields)):
+                for e in _live_ends(asg, t, late_wm):
+                    buf = wins.setdefault(e, [])
+                    buf.append(tup)
+                    if len(buf) > rank_end:
+                        _rank_sort(buf, by)
+                        del buf[rank_end:]
 
-        def accumulate() -> None:
-            for pdf in pdfs:
-                if len(pdf) == 0:
-                    continue
-                # positional itertuples over the needed columns only:
-                # no per-row dict allocation + copy in the hot loop
-                it = pdf[buf_cols].itertuples(index=False, name=None)
-                if input_attributed:
-                    we_pos = pos["window_end"]
-                else:
-                    ts_pos = pos[ts_col]
-                for tup in it:
-                    if input_attributed:
-                        e = to_ms(tup[we_pos])
-                        # fired in an EARLIER batch -> late; same-batch
-                        # firings still accept (records precede the wm)
-                        if settled_wm is not None and settled_wm >= e - 1:
-                            continue
-                        ends = [e]
-                    else:
-                        se = asg.assign_slice_end(to_ms(tup[ts_pos]))
-                        if wm >= asg.last_window_end(se) - 1:
-                            continue  # every window containing it fired
-                        ends = [e for e in asg.candidate_ends(se) if wm < e - 1]
-                    for e in ends:
-                        buf = wins.setdefault(e, [])
-                        buf.append(tup)
-                        if len(buf) > rank_end:
-                            buf.sort(key=skey)
-                            del buf[rank_end:]
+    def fire(key: tuple, wins, due: list[int], _wm, out: list) -> None:
+        for e in due:
+            buf = wins.pop(e)
+            _rank_sort(buf, by)
+            ws = to_ms(buf[0][ws_pos]) if input_attributed else asg.window_starts(e)
+            win = window_cols(ws, e, emit_window_time)
+            for rank, row in enumerate(buf, start=1):
+                if rank_start <= rank <= rank_end:
+                    vals = (*key, *(row[p] for p in in_pos), *win)
+                    out.append((*vals, rank) if emit_rownum else vals)
 
-        def fire() -> None:
-            ready = sorted(
-                e
-                for e in wins
-                if wm >= e - 1 and (settled_wm is None or e - 1 > settled_wm)
-            )
-            for e in ready:
-                buf = sorted(wins.pop(e), key=skey)
-                if input_attributed:
-                    ws = to_ms(buf[0][ws_pos])
-                else:
-                    ws = asg.window_starts(e)
-                for rank, row in enumerate(buf, start=1):
-                    if rank < rank_start or rank > rank_end:
-                        continue
-                    vals = [*key, *(row[p] for p in in_pos), to_ts(ws), to_ts(e)]
-                    if emit_window_time:
-                        vals.append(to_ts(e - 1))
-                    if emit_rownum:
-                        vals.append(rank)
-                    out.append(tuple(vals))
-
-        if input_attributed:
-            accumulate()
-            fire()
-        else:
-            fire()
-            accumulate()
-        settled_wm = wm if settled_wm is None else max(settled_wm, wm)
-
-        if wins:
-            state.update((pickle.dumps((wins, settled_wm)),))
-            nxt = min((e for e in wins if e - 1 > settled_wm), default=None)
-            if nxt is not None:
-                state.setTimeoutTimestamp(nxt - 2)  # fires at wm >= nxt - 1
-        elif state.exists:
-            state.remove()
-
-        if out:
-            yield pd.DataFrame(out, columns=out_cols)
-
-    return stream.groupBy(*keys).applyInPandasWithState(
-        fn,
-        outputStructType=out_schema,
-        stateStructType="blob BINARY",
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.EventTimeTimeout,
+    return window_step(
+        stream.groupBy(*keys),
+        out_schema,
+        layout.state_fields(),
+        attributed=input_attributed,
+        load=lambda raw: _window_rows(layout, raw),
+        store=lambda wins: _rows_state(layout, wins),
+        accumulate=accumulate,
+        fire=fire,
+        ends=dict.keys,
     )

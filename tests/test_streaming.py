@@ -1075,6 +1075,132 @@ def test_window_agg_allowed_lateness(spark, tmp_path_factory):
     assert not [r for r in rows if r[0] == "2024-01-01 10:40:00"]
 
 
+def test_allowed_lateness_oracle_at_window_end_minus_one(spark, tmp_path):
+    """stream_window_allowed_lateness and its oracle on an events
+    fixture whose final watermark (max ts - 10 min) is exactly a 5-min
+    window end minus 1 ms: the operator fires that window
+    (isWindowFired: wm >= end - 1), so the oracle must keep it too."""
+    import datetime as dt
+
+    import duckdb
+    import pandas as pd
+
+    from flink_release_1_16_0_spark.queries import load_registry
+    from tools.check_oracle import compare
+
+    t0 = dt.datetime(2024, 1, 1)
+    # windows [0, 5) and [5, 10) min; the last row puts the watermark at
+    # 10 min - 1 ms, the end of [5, 10) minus 1
+    offsets_ms = [0, 60_000, 7 * 60_000, 9 * 60_000, 20 * 60_000 - 1]
+    n = len(offsets_ms)
+    pd.DataFrame(
+        {
+            "event_id": range(n),
+            "ts": [t0 + dt.timedelta(milliseconds=o) for o in offsets_ms],
+            "user_id": [1] * n,
+            "event_type": ["click"] * n,
+            "value": [1.0] * n,
+            "props": ["{}"] * n,
+        }
+    ).to_parquet(tmp_path / "events.parquet", coerce_timestamps="us", index=False)
+
+    spec = load_registry()["stream_window_allowed_lateness"]
+    got = spec.fn(spark, str(tmp_path)).toPandas()
+    con = duckdb.connect()
+    con.execute(f"CREATE VIEW events AS SELECT * FROM '{tmp_path}/events.parquet'")
+    want = con.execute(spec.oracle).fetchdf()
+    assert len(got) == 2  # both windows fired
+    assert compare(got, want) == ("OK", "")
+
+
+@pytest.mark.parametrize("op", ["hop", "lateness"])
+def test_window_state_survives_restart(spark, tmp_path, op):
+    """Typed Python window state across a restart: a hop window-TVF
+    aggregate and an allowed-lateness group window drained in two runs
+    that share one checkpoint, the second file arriving between them,
+    emit exactly what one run over both files does. The second file's
+    rows join windows and slices that the first run left in state. None
+    of them is late: after the first run's closing no-data batch, Spark
+    drops rows behind its watermark before the operator sees them."""
+    import datetime as dt
+
+    from pyspark.sql.types import DoubleType, LongType, StringType
+
+    from flink_release_1_16_0_spark.streaming.group_window import (
+        streaming_group_window_agg,
+    )
+    from flink_release_1_16_0_spark.streaming.window_tvf import (
+        streaming_window_tvf_agg,
+    )
+
+    ddl = "k string, ts timestamp, v double"
+    t0 = dt.datetime(2024, 1, 1, 10)
+
+    def rows(*spec):
+        return [(k, t0 + dt.timedelta(seconds=s), v) for k, s, v in spec]
+
+    # the first run ends at watermark 10:28
+    first = rows(("a", 0, 1.0), ("a", 180, 2.5), ("b", 240, 0.125), ("a", 720, 3.0),
+                 ("b", 1020, 4.0), ("a", 1740, 5.0))
+    second = rows(("a", 1710, 6.0), ("b", 1860, 7.0), ("a", 2160, 5.0), ("b", 2640, 9.0))
+    minute = 60 * 1000
+
+    def query(data_dir):
+        stream = (
+            spark.readStream.schema(ddl)
+            .option("maxFilesPerTrigger", "1")
+            .parquet(data_dir)
+            .withWatermark("ts", "1 minute")
+        )
+        if op == "hop":
+            aggs = [
+                ("n", "count_star", None, LongType()),
+                ("s", "sum", "v", StringType()),
+                ("mx", "max", "v", DoubleType()),
+                ("dv", "count_distinct", "v", LongType()),
+            ]
+            return streaming_window_tvf_agg(
+                stream, ["k"], "ts", aggs, kind="hop",
+                size_ms=10 * minute, slide_ms=5 * minute,
+            ), "append"
+        aggs = [("n", "count_star", None, LongType()), ("s", "sum", "v", StringType())]
+        return streaming_group_window_agg(
+            stream, ["k"], "ts", aggs, size_ms=10 * minute,
+            allowed_lateness_ms=10 * minute,
+        ), "update"
+
+    def drain(name, ckpt):
+        out, mode = query(str(tmp_path / name / "data"))
+        q = (
+            out.writeStream.foreachBatch(
+                lambda df, _id: df.write.mode("append").parquet(str(tmp_path / name / "sink"))
+            )
+            .option("checkpointLocation", str(tmp_path / name / ckpt))
+            .outputMode(mode)
+            .trigger(availableNow=True)
+            .start()
+        )
+        q.awaitTermination(300)
+        assert q.exception() is None
+
+    def table(name):
+        return sorted(tuple(r) for r in spark.read.parquet(str(tmp_path / name / "sink")).collect())
+
+    _write_chunk(spark, str(tmp_path / "one" / "data"), first, ddl, 1000)
+    _write_chunk(spark, str(tmp_path / "one" / "data"), second, ddl, 2000)
+    drain("one", "ckpt")
+    _write_chunk(spark, str(tmp_path / "two" / "data"), first, ddl, 1000)
+    drain("two", "ckpt")
+    _write_chunk(spark, str(tmp_path / "two" / "data"), second, ddl, 2000)
+    drain("two", "ckpt")
+    assert table("two") == table("one")
+    # the 10:20-10:30 window of key a holds a first-run row (10:29, 5.0)
+    # and a second-run row (10:28:30, 6.0)
+    w = (t0 + dt.timedelta(minutes=20), t0 + dt.timedelta(minutes=30))
+    want = ("a", *w, 2, "11.0", 6.0, 2) if op == "hop" else ("+I", "a", *w, 2, "11.0")
+    assert want in table("one")
+
+
 def test_hop_window_agg_allowed_lateness(spark, tmp_path_factory):
     """Hop (sliding) group windows with allowed lateness: a row lands
     in size/slide overlapping windows, and a late-but-allowed row

@@ -40,7 +40,10 @@ anti join, changelog semi/anti), over_rows/over_range/over_bounded
 normalize (stateful upsert->retract vs the batch ChangelogNormalize),
 lateness (group window with allowed lateness + late
 -U/+U firings), tjoin (event-time temporal join with version
-tombstones under random watermark schedules).
+tombstones under random watermark schedules), wtvf/wtvf_distinct
+(window TVF aggregate vs the group window), wjoin/wtopn (window join
+and window TopN vs per-window references, ending with a no-data flush
+at a window end - 1).
 
 Usage:
     python tools/fuzz_changelog.py --seeds 1000 [--arms agg,join,...]
@@ -56,6 +59,7 @@ import random
 import sys
 from collections import Counter, defaultdict
 from fractions import Fraction
+from functools import cmp_to_key
 from pathlib import Path
 
 import numpy as np
@@ -141,7 +145,9 @@ class FakeGroupState:
 
 class _Cap:
     """DataFrame stand-in: enough surface for the operator builders to
-    run their schema plumbing and hand us the production closure."""
+    run their schema plumbing and hand us the production closure. A
+    state schema that holds BINARY (serialized objects rather than
+    typed state) is refused."""
 
     def __init__(self, schema):
         self.schema = schema
@@ -171,6 +177,8 @@ class _Cap:
     ):
         if isinstance(stateStructType, str):
             stateStructType = _flat_schema(stateStructType)
+        if stateStructType is not None and _opaque(stateStructType):
+            raise TypeError(f"opaque BINARY state: {stateStructType.simpleString()}")
         self.fn = fn
         if stateStructType is not None:
 
@@ -183,13 +191,26 @@ class _Cap:
         return self
 
 
+def _opaque(dt) -> bool:
+    """Whether a state type holds BINARY anywhere: serialized objects,
+    not typed state."""
+    from pyspark.sql import types as T
+
+    if isinstance(dt, T.StructType):
+        return any(_opaque(f.dataType) for f in dt.fields)
+    if isinstance(dt, T.ArrayType):
+        return _opaque(dt.elementType)
+    if isinstance(dt, T.MapType):
+        return _opaque(dt.keyType) or _opaque(dt.valueType)
+    return isinstance(dt, T.BinaryType)
+
+
 def _flat_schema(ddl: str):
     """A flat ``name TYPE, ...`` state schema, parsed without a JVM (the
     ITCase harnesses capture closures with no Spark session)."""
     from pyspark.sql import types as T
 
     kinds = {
-        "BINARY": T.BinaryType(),
         "BIGINT": T.LongType(),
         "INT": T.IntegerType(),
         "DOUBLE": T.DoubleType(),
@@ -1399,6 +1420,162 @@ def check_wtvf_distinct(rng: random.Random) -> str | None:
     return None
 
 
+def _window_program(rng: random.Random):
+    """Random rows for the window join and TopN arms under a random
+    tumble or hop spec: (side, key, ts ms, id, value) rows in random
+    batches, the watermark each batch sees (max ts so far - delay), and
+    the no-data flushes: at the next window end - 1, then maybe one that
+    fires everything. Keys are 0..2 or NULL; values tie or are NULL."""
+    slide = rng.choice([2000, 3000, 5000])
+    size = slide * rng.choice([1, 1, 2, 3])
+    offset = rng.choice([0, 0, -2500, 1700])
+    delay = rng.choice([0, 1000, 5000])
+    rows = [
+        (
+            rng.randrange(2),
+            None if rng.random() < 0.1 else rng.randrange(3),
+            rng.randrange(0, 40_000),
+            i,
+            None if rng.random() < 0.1 else float(rng.randrange(4)),
+        )
+        for i in range(rng.randint(4, 40))
+    ]
+    batches = split_batches(rng, rows, max_batches=8)
+    wm_seq, seen = [], None
+    for b in batches:
+        wm_seq.append(-(2**60) if seen is None else seen - delay)
+        seen = max(seen or 0, *(r[2] for r in b))
+    flushes = [offset + -((offset - (seen - delay) - 2) // slide) * slide - 1]
+    if rng.random() < 0.5:
+        flushes.append(10**15)
+    spec = {"size_ms": size, "offset_ms": offset}
+    if size != slide:
+        spec.update(kind="hop", slide_ms=slide)
+    return spec, batches, wm_seq, flushes
+
+
+def _fired_windows(spec: dict, batches, wm_seq, final_wm: int) -> dict:
+    """Reference: the rows of each fired (key, window end), in arrival
+    order. A row joins each window that holds it (starts on the offset
+    grid every slide, size long) and that its batch's watermark had not
+    fired (wm < end - 1); a window fires once the final watermark
+    reaches end - 1."""
+    size, offset = spec["size_ms"], spec["offset_ms"]
+    slide = spec.get("slide_ms", size)
+    wins: dict = defaultdict(list)
+    for b, wm in zip(batches, wm_seq):
+        for row in b:
+            start = row[2] - (row[2] - offset) % slide
+            for j in range(size // slide):
+                e = start - j * slide + size
+                if wm < e - 1 <= final_wm:
+                    wins[(row[1], e)].append(row)
+    return wins
+
+
+def _int(v):
+    return None if v is None or v != v else int(v)
+
+
+def check_wjoin(rng: random.Random) -> str | None:
+    """streaming_window_tvf_join (inner/left/semi/anti) vs a per-window
+    reference: each fired (key, window) joins the rows it accepted; a
+    NULL key never matches."""
+    from flink_release_1_16_0_spark.streaming.window_tvf import (
+        streaming_window_tvf_join,
+    )
+
+    join_type = rng.choice(["inner", "left", "semi", "anti"])
+    spec, batches, wm_seq, flushes = _window_program(rng)
+    lcap = _Cap(_schema("k BIGINT, ts TIMESTAMP, lid BIGINT"))
+    rcap = _Cap(_schema("k BIGINT, ts TIMESTAMP, rid BIGINT"))
+    streaming_window_tvf_join(lcap, rcap, ["k"], "ts", join_type=join_type, **spec)
+    frames = [
+        [
+            (k, pd.Timestamp(ts, unit="ms"), "LR"[side], None if side else i, i if side else None)
+            for side, k, ts, i, _v in b
+        ]
+        for b in batches
+    ]
+    emissions = replay(
+        lcap.fn, [*frames, *[[] for _ in flushes]], ["k"],
+        ["k", "ts", "__side", "lid", "rid"], wm_seq=[*wm_seq, *flushes],
+    )
+    got = Counter(
+        (_int(r["k"]), pd.Timestamp(r["window_start"]).value // 10**6,
+         pd.Timestamp(r["window_end"]).value // 10**6, _int(r["lid"]), _int(r.get("rid")))
+        for r in emissions
+    )
+    ref: Counter = Counter()
+    for (k, e), rows in _fired_windows(spec, batches, wm_seq, flushes[-1]).items():
+        lids = [r[3] for r in rows if r[0] == 0]
+        rids = [r[3] for r in rows if r[0] == 1]
+        joined = k is not None and bool(lids) and bool(rids)
+        if join_type in ("semi", "anti"):
+            pairs = [(i, None) for i in lids] if joined == (join_type == "semi") else []
+        elif joined:
+            pairs = [(i, j) for i in lids for j in rids]
+        else:
+            pairs = [(i, None) for i in lids] if join_type == "left" else []
+        ref.update((k, e - spec["size_ms"], e, i, j) for i, j in pairs)
+    if got != ref:
+        return f"wjoin {join_type} {spec} flushes={flushes}: got-ref={got - ref} ref-got={ref - got}"
+    return None
+
+
+def check_wtopn(rng: random.Random) -> str | None:
+    """streaming_window_tvf_topn vs a per-window reference: the rows
+    each fired (key, window) accepted, stably sorted by value and maybe
+    id, each ascending or descending (NULL lowest; ties keep arrival
+    order), ranks rank_start..rank_end."""
+    from flink_release_1_16_0_spark.streaming.window_tvf import (
+        streaming_window_tvf_topn,
+    )
+
+    rank_end = rng.randint(1, 3)
+    rank_start = rng.randint(1, rank_end)
+    order = [("v", rng.random() < 0.5)]
+    if rng.random() < 0.5:
+        order.append(("id", rng.random() < 0.5))
+    spec, batches, wm_seq, flushes = _window_program(rng)
+    cap = _Cap(_schema("k BIGINT, ts TIMESTAMP, id BIGINT, v DOUBLE"))
+    streaming_window_tvf_topn(
+        cap, ["k"], "ts", order, rank_end, rank_start=rank_start,
+        emit_rownum=True, **spec,
+    )
+    frames = [[(k, pd.Timestamp(ts, unit="ms"), i, v) for _s, k, ts, i, v in b] for b in batches]
+    emissions = replay(
+        cap.fn, [*frames, *[[] for _ in flushes]], ["k"], ["k", "ts", "id", "v"],
+        wm_seq=[*wm_seq, *flushes],
+    )
+    got = Counter(
+        (_int(r["k"]), pd.Timestamp(r["window_end"]).value // 10**6, r["id"], r["rownum"])
+        for r in emissions
+    )
+    def cmp(a, b):
+        for col, desc in order:
+            j = 4 if col == "v" else 3
+            x, y = (a[j] is not None, a[j]), (b[j] is not None, b[j])
+            if x != y:
+                return (-1 if x < y else 1) * (-1 if desc else 1)
+        return 0
+
+    ref: Counter = Counter()
+    for (k, e), rows in _fired_windows(spec, batches, wm_seq, flushes[-1]).items():
+        ranked = sorted(rows, key=cmp_to_key(cmp))
+        ref.update(
+            (k, e, r[3], rank)
+            for rank, r in enumerate(ranked[:rank_end], start=1)
+            if rank >= rank_start
+        )
+    if got != ref:
+        return (
+            f"wtopn rank {rank_start}..{rank_end} {order} {spec} flushes={flushes}: "
+            f"got-ref={got - ref} ref-got={ref - got}"
+        )
+    return None
+
+
 ARMS = {
     "agg": check_agg,
     "topn": check_topn,
@@ -1416,6 +1593,8 @@ ARMS = {
     "lateness": check_lateness,
     "tjoin": check_tjoin,
     "wtvf": check_wtvf,
+    "wjoin": check_wjoin,
+    "wtopn": check_wtopn,
 }
 
 
