@@ -716,6 +716,7 @@ class PatternStream:
         from pyspark.sql.streaming.state import GroupStateTimeout
 
         from flink_release_1_16_0_spark.operators.cep import nfa_all_matches
+        from flink_release_1_16_0_spark.streaming.event_buffer import timeout_at
 
         keyed = self.keyed
         tcol = keyed.stream.time_col
@@ -798,7 +799,10 @@ class PatternStream:
             retained = settled[decided:] + unsettled
             state.update((pickle.dumps(retained),))
             if retained:
-                state.setTimeoutTimestamp(wm + 1)
+                # the earliest undecided anchor is decided once the
+                # watermark reaches its ms + within
+                first = min(_ms(r[tcol]) for r in retained)
+                state.setTimeoutTimestamp(timeout_at(first + within_ms))
             if out:
                 yield to_pdf(out, names)
 

@@ -18,7 +18,11 @@ reference's BATCH execution-mode semantics: state lives for the
 duration of one key's group, the watermark stays at -inf while elements
 are processed and jumps to +inf at end of input, at which point every
 registered timer fires in timestamp order (the documented behavior of
-DataStream programs on bounded input).
+DataStream programs on bounded input). On unbounded input a key's
+state is its pending timers (``TimerService._timers``) and the user's
+values by descriptor name (``RuntimeContext._snapshot``); the state
+objects, and the functions their descriptors carry, are rebuilt each
+micro-batch, never stored.
 """
 
 from __future__ import annotations
@@ -26,6 +30,8 @@ from __future__ import annotations
 import heapq
 from dataclasses import dataclass, field
 from typing import Any, Callable, Iterable
+
+from pyspark import cloudpickle
 
 MIN_WATERMARK = -(2**63)
 MAX_WATERMARK = 2**63 - 1
@@ -87,6 +93,8 @@ class AggregatingStateDescriptor:
 
 
 class ValueState:
+    _slot = "_v"  # the attribute keyed state stores
+
     def __init__(self, default: Any = None) -> None:
         self._v = default
         self._default = default
@@ -102,6 +110,8 @@ class ValueState:
 
 
 class ListState:
+    _slot = "_l"
+
     def __init__(self) -> None:
         self._l: list = []
 
@@ -122,6 +132,8 @@ class ListState:
 
 
 class MapState:
+    _slot = "_m"
+
     def __init__(self) -> None:
         self._m: dict = {}
 
@@ -157,6 +169,8 @@ class MapState:
 
 
 class ReducingState:
+    _slot = "_v"
+
     def __init__(self, reduce_function: Callable[[Any, Any], Any]) -> None:
         self._fn = reduce_function
         self._v: Any = None
@@ -172,6 +186,8 @@ class ReducingState:
 
 
 class AggregatingState:
+    _slot = "_acc"
+
     def __init__(self, agg: "AggregateFunction") -> None:
         self._agg = agg
         self._acc = agg.create_accumulator()
@@ -192,16 +208,33 @@ class RuntimeContext:
     The reference scopes one logical store per key (keyed state); the
     batch harness materializes it fresh when a key's group starts, the
     exact lifetime keyed state has in BATCH execution mode where keys
-    are processed one group at a time.
+    are processed one group at a time. On unbounded input ``values`` is
+    the key's :meth:`_snapshot` from the previous micro-batch: each
+    state object is rebuilt from its descriptor and takes its stored
+    value back.
     """
 
-    def __init__(self) -> None:
+    def __init__(self, values: bytes | None = None) -> None:
         self._states: dict[str, Any] = {}
+        self._values: dict[str, Any] = cloudpickle.loads(values) if values else {}
 
     def _get(self, name: str, make: Callable[[], Any]) -> Any:
         if name not in self._states:
-            self._states[name] = make()
+            st = make()
+            if name in self._values:
+                setattr(st, st._slot, self._values[name])
+            self._states[name] = st
         return self._states[name]
+
+    def _snapshot(self) -> bytes:
+        """The user's state values by descriptor name, pickled: only the
+        values, so a reduce or aggregate function is never stored.
+        cloudpickle, because a value's class may exist only by value on
+        the worker (defined in the driver's script)."""
+        vals = dict(self._values)
+        for name, st in self._states.items():
+            vals[name] = getattr(st, st._slot)
+        return cloudpickle.dumps(vals)
 
     def get_state(self, desc: ValueStateDescriptor) -> ValueState:
         return self._get(desc.name, lambda: ValueState(desc.default))
@@ -231,12 +264,18 @@ class TimerService:
     does the heap here). Event-time and processing-time timers both
     fire at end of input, the documented BATCH-mode behavior."""
 
-    def __init__(self) -> None:
+    def __init__(self, event: Iterable[int] = (), proc: Iterable[int] = ()) -> None:
         self._watermark = MIN_WATERMARK
-        self._event: list[int] = []
-        self._event_set: set[int] = set()
-        self._proc: list[int] = []
-        self._proc_set: set[int] = set()
+        # a sorted list is a heap
+        self._event: list[int] = sorted(event)
+        self._event_set: set[int] = set(self._event)
+        self._proc: list[int] = sorted(proc)
+        self._proc_set: set[int] = set(self._proc)
+
+    def _timers(self) -> tuple[list[int], list[int]]:
+        """The pending event-time and processing-time timers, the
+        constructor's arguments."""
+        return sorted(self._event_set), sorted(self._proc_set)
 
     def current_watermark(self) -> int:
         return self._watermark

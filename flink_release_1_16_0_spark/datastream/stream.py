@@ -21,32 +21,43 @@ wraps a Spark DataFrame; transformations stay declarative:
   before any Python runs, so the shuffle key is (key, window) and the
   pandas harness only ever sees one group;
 - arbitrary user functions run Arrow-batched (``mapInPandas`` for
-  stateless ops, ``applyInPandas`` for keyed/window ops). Per-row Python
+  stateless ops, ``grouped_apply`` for keyed/window ops). Per-row Python
   is inherent to user lambdas — the reference pays the same cost through
   its Beam harness for PyFlink UDFs (AbstractPythonFunctionOperator.java:48).
 
 Bounded inputs execute with the reference's BATCH execution-mode
 semantics (RuntimeExecutionMode.BATCH): per key, elements are processed
 in event-time order, keyed state lives for the key's group, the
-watermark jumps to +inf at end of input and fires all timers. Unbounded
-(micro-batch) semantics for these operators live in
-``streaming/stateful.py`` via the Table layer.
+watermark jumps to +inf at end of input and fires all timers. On
+unbounded (micro-batch) input the keyed functions run on one
+``applyInPandasWithState`` step (:func:`_keyed_process`) and the
+window aggregate on the SQL window operators' ``window_step``; both
+fire at the reference's boundaries (a timer at ``t <= wm``, a window at
+``end - 1 <= wm``).
 
-Scale note (100 TB): ``applyInPandas`` materializes one key's group in
-executor memory — the same bound as the reference's batch sort-based
-keyed operators holding one key's run. Heavy-key workloads should use
-the Table/SQL layer where aggregation is incremental.
+Scale note (100 TB): a bounded keyed function materializes one key's
+group in executor memory — the same bound as the reference's batch
+sort-based keyed operators holding one key's run. Heavy-key workloads
+should use the Table/SQL layer where aggregation is incremental.
 """
 
 from __future__ import annotations
 
 import datetime
+import json
 from typing import Any, Callable, Iterable
 
 import pandas as pd
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import StructType
+from pyspark.sql.types import (
+    ArrayType,
+    BinaryType,
+    LongType,
+    StringType,
+    StructField,
+    StructType,
+)
 from pyspark.sql.window import Window
 
 from flink_release_1_16_0_spark.datastream.functions import (
@@ -70,6 +81,7 @@ from flink_release_1_16_0_spark.datastream.functions import (
     ProcessWindowFunction,
     ReadOnlyBroadcastContext,
     ReduceFunction,
+    ReducingStateDescriptor,
     RuntimeContext,
     TimerService,
     TimeWindow,
@@ -79,9 +91,13 @@ from flink_release_1_16_0_spark.datastream.functions import (
     _to_ms,
 )
 from flink_release_1_16_0_spark.operators.grouped import grouped_apply, to_pdf
+from flink_release_1_16_0_spark.streaming.event_buffer import timeout_at
+from flink_release_1_16_0_spark.streaming.window_tvf import window_step
 
 _SIDE_TAG = "__side_tag"
 _SIDE_JSON = "__side_json"
+# the columns a process function's side-output rows travel in
+_SIDE_FIELDS = [StructField(_SIDE_TAG, StringType()), StructField(_SIDE_JSON, StringType())]
 
 
 def _parse_ddl(spark: SparkSession, ddl: str | StructType) -> StructType:
@@ -94,6 +110,18 @@ def _row_iter(pdf: pd.DataFrame) -> Iterable[dict]:
     # to_dict('records') keeps python-native access cheap; NaT/NaN appear
     # as-is, matching what a PyFlink Row would carry for SQL NULL
     return pdf.to_dict("records")
+
+
+def _out_rows(ctx: Context, col: Collector, use_side: bool) -> list[dict]:
+    """A process function's collected rows, plus its side-output rows
+    (JSON in :data:`_SIDE_FIELDS`) when the operator declared side
+    outputs."""
+    if not use_side:
+        return col.rows
+    return [{**r, _SIDE_TAG: None, _SIDE_JSON: None} for r in col.rows] + [
+        {_SIDE_TAG: tag_id, _SIDE_JSON: json.dumps(r, default=str)}
+        for tag_id, r in ctx.side_rows
+    ]
 
 
 def _ts_ms(v) -> int | None:
@@ -405,10 +433,7 @@ class DataStream:
         src = self._as_main()
         schema = _parse_ddl(self.env.spark, output_type)
         if side_tags:
-            schema = StructType(
-                list(schema.fields)
-                + list(_parse_ddl(self.env.spark, f"{_SIDE_TAG} STRING, {_SIDE_JSON} STRING").fields)
-            )
+            schema = StructType(schema.fields + _SIDE_FIELDS)
         names = [f.name for f in schema.fields]
 
         def gen(batches: Iterable[pd.DataFrame]) -> Iterable[pd.DataFrame]:
@@ -467,18 +492,13 @@ class DataStream:
         """Non-keyed process function (DataStream.java:647): no keyed
         state / timers (the reference throws on timer registration in a
         non-keyed context; here the TimerService is absent)."""
-        import json
-
         tcol = self.time_col
 
         def emit(row: dict, out: list) -> None:
             ctx = Context(timer_service_obj=None, current_timestamp=_ts_ms(row.get(tcol)) if tcol else None)
             col = Collector()
             fn.process_element(row, ctx, col)
-            for r in col.rows:
-                out.append({**r, _SIDE_TAG: None, _SIDE_JSON: None} if side_outputs else r)
-            for tag_id, r in ctx.side_rows:
-                out.append({_SIDE_TAG: tag_id, _SIDE_JSON: json.dumps(r, default=str)})
+            out.extend(_out_rows(ctx, col, bool(side_outputs)))
 
         return self._map_rows(emit, output_type, side_tags=tuple(side_outputs), fn=fn)
 
@@ -609,6 +629,131 @@ class DataStream:
 
 
 # ---------------------------------------------------------------------------
+# keyed process step (KeyedProcessOperator / KeyedCoProcessOperator /
+# CoBroadcastWithKeyedOperator)
+
+# the streaming keyed state: pending event-time and processing-time
+# timers, and the user's state values by descriptor name
+_KEYED_STATE = StructType(
+    [
+        StructField("event", ArrayType(LongType())),
+        StructField("proc", ArrayType(LongType())),
+        StructField("values", BinaryType()),
+    ]
+)
+
+
+def _keyed_process(
+    df: DataFrame,
+    keys: list[str],
+    order: list[str],
+    fn,
+    dispatch: Callable[[dict, Context, Collector], None],
+    make_ctx: Callable[[TimerService], Context],
+    schema: StructType,
+    side_outputs: tuple[OutputTag, ...] = (),
+) -> DataFrame:
+    """The one step of every keyed function: per key, rows sorted by
+    ``order`` (NULL first) go to ``dispatch(row, ctx, out)``, and due
+    timers call ``fn.on_timer``. ``order`` is the event-time column,
+    which sets the element timestamp, then tie-breakers; it is empty on
+    a stream without event time. ``make_ctx(timer_service)`` builds the
+    context.
+
+    Bounded input runs on ``grouped_apply``: state lives for the key's
+    group and every timer fires at end of input (``TimerService._drain``,
+    BATCH execution mode). Unbounded input runs on
+    ``applyInPandasWithState`` with :data:`_KEYED_STATE`: each
+    micro-batch fires the event-time timers the watermark reached
+    (``t <= wm``) and the processing-time timers wall clock passed,
+    before and after the key's rows. The state timeout is the earliest
+    event-time timer's :func:`timeout_at`, so a quiet key's timer at
+    ``t`` fires in the batch whose watermark reaches ``t``; pending
+    processing-time timers alone wake the key on the next watermark
+    advance (micro-batch granularity)."""
+    ts_col = order[0] if order else None
+    use_side = bool(side_outputs)
+    if use_side:
+        schema = StructType(schema.fields + _SIDE_FIELDS)
+    names = schema.fieldNames()
+
+    def start(key: tuple, ts: TimerService, rc: RuntimeContext) -> tuple[Context, Collector]:
+        fn.open(rc)
+        ctx = make_ctx(ts)
+        ctx.current_key = key[0] if len(key) == 1 else key
+        return ctx, Collector()
+
+    def run(pdf: pd.DataFrame, ctx: Context, col: Collector) -> None:
+        if order:
+            pdf = pdf.sort_values(order, kind="stable", na_position="first")
+        for row in _row_iter(pdf):
+            ctx.current_timestamp = _ts_ms(row[ts_col]) if ts_col else None
+            dispatch(row, ctx, col)
+
+    def on_timers(times: Iterable[int], ctx: Context, col: Collector) -> None:
+        for t in times:
+            ctx.current_timestamp = t
+            fn.on_timer(t, ctx, col)
+
+    if not df.isStreaming:
+
+        def harness(key: tuple, pdf: pd.DataFrame) -> list[dict]:
+            ts = TimerService()
+            ctx, col = start(key, ts, RuntimeContext())
+            run(pdf, ctx, col)
+            on_timers(ts._drain(), ctx, col)
+            fn.close()
+            return _out_rows(ctx, col, use_side)
+
+        return grouped_apply(df, keys, harness, schema)
+
+    import time
+
+    from pyspark.sql.streaming.state import GroupStateTimeout
+
+    if not ts_col:
+        raise ValueError(
+            "streaming keyed process needs assign_timestamps_and_watermarks "
+            "(event-time timers require a watermarked column)"
+        )
+
+    def step(key: tuple, pdfs: Iterable[pd.DataFrame], state) -> Iterable[pd.DataFrame]:
+        wm = state.getCurrentWatermarkMs()
+        event, proc, values = state.get if state.exists else ((), (), None)
+        ts = TimerService(event, proc)
+        rc = RuntimeContext(values)
+        ctx, col = start(key, ts, rc)
+
+        def fire_due() -> None:
+            on_timers(ts._advance(wm), ctx, col)
+            on_timers(ts._due_proc(int(time.time() * 1000)), ctx, col)
+
+        fire_due()
+        if not state.hasTimedOut:
+            for pdf in pdfs:
+                if len(pdf):
+                    run(pdf, ctx, col)
+            fire_due()
+        state.update((*ts._timers(), rc._snapshot()))
+        nxt = ts._next_pending()
+        if nxt is not None:
+            state.setTimeoutTimestamp(timeout_at(nxt))
+        elif ts._proc_set:
+            state.setTimeoutTimestamp(wm + 1)
+        out = _out_rows(ctx, col, use_side)
+        if out:
+            yield to_pdf(out, names)
+
+    return df.groupBy(*keys).applyInPandasWithState(
+        step,
+        outputStructType=schema,
+        stateStructType=_KEYED_STATE,
+        outputMode="append",
+        timeoutConf=GroupStateTimeout.EventTimeTimeout,
+    )
+
+
+# ---------------------------------------------------------------------------
 # keyed stream
 
 
@@ -721,15 +866,17 @@ class KeyedStream:
         self, f: Callable[[dict, dict], dict], schema: StructType, names: list[str], tcol: str | None
     ) -> DataStream:
         """Unbounded rolling reduce via ``applyInPandasWithState``: the
-        accumulator element is the keyed state (pickled — arbitrary
-        user types), each arriving element emits the updated
-        accumulator (update changelog downstream)."""
-        import pickle
-
+        accumulator element is a ``ReducingState`` whose value is the
+        keyed state (the keyed process step's values codec), each
+        arriving element emits the updated accumulator (update
+        changelog downstream)."""
         from pyspark.sql.streaming.state import GroupStateTimeout
 
+        desc = ReducingStateDescriptor("acc", f)
+
         def func(key: tuple, pdfs: Iterable[pd.DataFrame], state) -> Iterable[pd.DataFrame]:
-            acc = pickle.loads(state.get[0]) if state.exists else None
+            rc = RuntimeContext(state.get[0] if state.exists else None)
+            acc = rc.get_reducing_state(desc)
             out: list[dict] = []
             for pdf in pdfs:
                 if len(pdf) == 0:
@@ -737,17 +884,16 @@ class KeyedStream:
                 if tcol:
                     pdf = pdf.sort_values(tcol, kind="stable")
                 for row in _row_iter(pdf):
-                    acc = row if acc is None else f(acc, row)
-                    out.append(acc)
-            if acc is not None:
-                state.update((pickle.dumps(acc),))
+                    acc.add(row)
+                    out.append(acc.get())
             if out:
+                state.update((rc._snapshot(),))
                 yield to_pdf(out, names)
 
         out = self.stream.df.groupBy(*self.keys).applyInPandasWithState(
             func,
             outputStructType=schema,
-            stateStructType="acc BINARY",
+            stateStructType="values BINARY",
             outputMode="update",
             timeoutConf=GroupStateTimeout.NoTimeout,
         )
@@ -761,133 +907,18 @@ class KeyedStream:
         output_type: str | StructType,
         side_outputs: tuple[OutputTag, ...] = (),
     ) -> DataStream:
-        import json
-
-        spark = self.env.spark
-        schema = _parse_ddl(spark, output_type)
-        if side_outputs:
-            schema = StructType(
-                list(schema.fields)
-                + list(_parse_ddl(spark, f"{_SIDE_TAG} STRING, {_SIDE_JSON} STRING").fields)
-            )
-        names = [fld.name for fld in schema.fields]
         tcol = self.stream.time_col
-        keys = self.keys
-        use_side = bool(side_outputs)
-        if self.stream.df.isStreaming:
-            return self._process_streaming(fn, schema, names, tuple(side_outputs))
-
-        def harness(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
-            if tcol:
-                pdf = pdf.sort_values(tcol, kind="stable")
-            rc = RuntimeContext()
-            fn.open(rc)
-            ts = TimerService()
-            kval = key[0] if len(key) == 1 else key
-            ctx = Context(timer_service_obj=ts, current_key=kval)
-            col = Collector()
-            for row in _row_iter(pdf):
-                ctx.current_timestamp = _ts_ms(row.get(tcol)) if tcol else None
-                fn.process_element(row, ctx, col)
-            for t in ts._drain():
-                ctx.current_timestamp = t
-                fn.on_timer(t, ctx, col)
-            fn.close()
-            out: list[dict] = []
-            for r in col.rows:
-                out.append({**r, _SIDE_TAG: None, _SIDE_JSON: None} if use_side else r)
-            for tag_id, r in ctx.side_rows:
-                out.append({_SIDE_TAG: tag_id, _SIDE_JSON: json.dumps(r, default=str)})
-            return out
-
-        out = grouped_apply(self.stream.df, list(keys), harness, schema)
-        return DataStream(self.env, out, None, tuple(side_outputs))
-
-    def _process_streaming(
-        self,
-        fn: KeyedProcessFunction,
-        schema: StructType,
-        names: list[str],
-        side_outputs: tuple[OutputTag, ...],
-    ) -> DataStream:
-        """Unbounded KeyedProcessFunction via ``applyInPandasWithState``
-        (STREAMING execution mode). Keyed state and the timer queue are
-        the group state (pickled — arbitrary user state types); the
-        micro-batch watermark drives event-time timers: due timers fire
-        before the batch's elements, and a state timeout at the earliest
-        pending timer wakes keys that receive no further data —
-        the KeyedProcessOperator pattern in micro-batch clothing.
-        Processing-time timers fire on the following batch once wall
-        clock passes them (micro-batch granularity, documented)."""
-        import json
-        import pickle
-        import time as _time
-
-        from pyspark.sql.streaming.state import GroupStateTimeout
-
-        tcol = self.stream.time_col
-        if not tcol:
-            raise ValueError(
-                "streaming keyed process needs assign_timestamps_and_watermarks "
-                "(event-time timers require a watermarked column)"
-            )
-        keys = self.keys
-        use_side = bool(side_outputs)
-
-        def func(key: tuple, pdfs: Iterable[pd.DataFrame], state) -> Iterable[pd.DataFrame]:
-            if state.exists:
-                rc, ts = pickle.loads(state.get[0])
-            else:
-                rc, ts = RuntimeContext(), TimerService()
-            fn.open(rc)
-            kval = key[0] if len(key) == 1 else key
-            ctx = Context(timer_service_obj=ts, current_key=kval)
-            col = Collector()
-            wm = state.getCurrentWatermarkMs()
-
-            def fire_due() -> None:
-                for t in ts._advance(wm):
-                    ctx.current_timestamp = t
-                    fn.on_timer(t, ctx, col)
-                for t in ts._due_proc(int(_time.time() * 1000)):
-                    ctx.current_timestamp = t
-                    fn.on_timer(t, ctx, col)
-
-            fire_due()
-            if not state.hasTimedOut:
-                for pdf in pdfs:
-                    if len(pdf) == 0:
-                        continue
-                    pdf = pdf.sort_values(tcol, kind="stable")
-                    for row in _row_iter(pdf):
-                        ctx.current_timestamp = _ts_ms(row.get(tcol))
-                        fn.process_element(row, ctx, col)
-                fire_due()
-            state.update((pickle.dumps((rc, ts)),))
-            nxt = ts._next_pending()
-            if nxt is not None:
-                # timeouts must sit beyond the current watermark
-                state.setTimeoutTimestamp(max(nxt, wm + 1))
-            elif ts._proc_set:
-                # pending processing-time timers: wake on the next
-                # watermark advance so wall clock is re-checked
-                state.setTimeoutTimestamp(wm + 1)
-            out: list[dict] = []
-            for r in col.rows:
-                out.append({**r, _SIDE_TAG: None, _SIDE_JSON: None} if use_side else r)
-            for tag_id, r in ctx.side_rows:
-                out.append({_SIDE_TAG: tag_id, _SIDE_JSON: json.dumps(r, default=str)})
-            if out:
-                yield to_pdf(out, names)
-
-        out = self.stream.df.groupBy(*keys).applyInPandasWithState(
-            func,
-            outputStructType=schema,
-            stateStructType="state BINARY",
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.EventTimeTimeout,
+        out = _keyed_process(
+            self.stream.df,
+            self.keys,
+            [tcol] if tcol else [],
+            fn,
+            fn.process_element,
+            Context,
+            _parse_ddl(self.env.spark, output_type),
+            tuple(side_outputs),
         )
-        return DataStream(self.env, out, None, side_outputs)
+        return DataStream(self.env, out, None, tuple(side_outputs))
 
     # -- windows ------------------------------------------------------------
 
@@ -993,23 +1024,37 @@ class WindowedStream:
         self.count = count
         self.drop_key = drop_key
         self.env = keyed.env
+        self._late_tags: tuple[OutputTag, ...] = ()
+
+    def _refuse_unbounded_lateness(self) -> None:
+        if self.keyed.stream.df.isStreaming:
+            raise NotImplementedError(
+                "allowed lateness and late-data side outputs on an unbounded "
+                "window are the Table layer's surface: the allowed-lateness "
+                "group window (table.exec.emit.allow-lateness, "
+                "streaming_group_window_agg(allowed_lateness_ms=...)); an "
+                "unbounded DataStream window drops late elements"
+            )
 
     def allowed_lateness(self, lateness) -> "WindowedStream":
         """WindowedStream.java:108. On bounded input (BATCH mode) every
         element precedes the end-of-input watermark, so no element is
         ever late and any lateness bound is exact as a no-op — the
-        reference's batch runtime drops the concept the same way. The
-        unbounded path for allowed lateness + late firing is the Table
-        layer's allowed-lateness operator (streaming/stateful.py)."""
-        _to_ms(lateness)  # validate the duration spelling
+        reference's batch runtime drops the concept the same way. On
+        unbounded input a lateness above zero raises: late firing is the
+        Table layer's allowed-lateness group window."""
+        if _to_ms(lateness) > 0:
+            self._refuse_unbounded_lateness()
         return self
 
     def side_output_late_data(self, tag: OutputTag) -> "WindowedStream":
         """WindowedStream.java:124. BATCH mode: the late-data side
         output is exactly empty (no element follows the end-of-input
         watermark); the tag is recorded so get_side_output on the
-        window result resolves to an empty typed stream."""
-        self._late_tags = getattr(self, "_late_tags", ()) + (tag,)
+        window result resolves to an empty typed stream. On unbounded
+        input it raises, as :meth:`allowed_lateness` does."""
+        self._refuse_unbounded_lateness()
+        self._late_tags += (tag,)
         return self
 
     def trigger(self, trigger) -> "WindowedStream":
@@ -1124,9 +1169,7 @@ class WindowedStream:
             schema,
             shuffle=kind not in ("session", "count"),
         )
-        return DataStream(
-            self.env, out, None, empty_tags=getattr(self, "_late_tags", ())
-        )
+        return DataStream(self.env, out, None, empty_tags=self._late_tags)
 
     def reduce(self, fn: ReduceFunction | Callable[[dict, dict], dict], output_type: str | StructType | None = None) -> DataStream:
         f = fn.reduce if isinstance(fn, ReduceFunction) else fn
@@ -1169,80 +1212,63 @@ class WindowedStream:
         self, fn: AggregateFunction, output_type: str | StructType
     ) -> DataStream:
         """Unbounded tumble/slide AggregateFunction
-        (WindowedStream.java:285 + AggregatingStateDescriptor — the
-        reference's incremental window aggregation): windows assign
-        natively (epoch-ms arithmetic, so the (key, window) shuffle is
-        JVM-side), one pickled accumulator per (key, window) lives in
-        ``applyInPandasWithState``, and the window finalizes exactly
-        once when the watermark passes its end (EventTimeTrigger.onEventTime)
-        — elements arriving after finalization are late and drop, the
-        reference's default zero allowed-lateness."""
-        import pickle
-
-        from pyspark.sql.streaming.state import GroupStateTimeout
+        (WindowedStream.java:285 + AggregatingStateDescriptor) on the SQL
+        window operators' per-key step, ``window_tvf.window_step``:
+        windows assign natively (epoch-ms arithmetic, so the shuffle is
+        JVM-side), state per user key holds each open window's start
+        and end, and their accumulators (user accumulators are any
+        Python objects, so they are one cloudpickled list, one call per
+        key, not per window), a window fires once when the
+        watermark reaches ``end - 1`` (EventTimeTrigger), and an element
+        whose window has ``end - 1 <= wm`` is late and drops
+        (WindowOperator.isWindowLate, zero allowed lateness). Keying the
+        state on the user key, not (key, window), pays
+        ``applyInPandasWithState``'s per-group constant once per key per
+        micro-batch instead of once per window."""
+        from pyspark import cloudpickle
 
         s = self.keyed.stream
         tcol = s.time_col
         if not tcol:
             raise ValueError("time windows need assign_timestamps_and_watermarks first")
-        schema = _parse_ddl(self.env.spark, output_type)
-        names = [fld.name for fld in schema.fields]
-        df = _assign_time_windows(s.df, tcol, self.assigner)
-        # State keys on the USER key only; every open window of that key
-        # lives in ONE dict-valued state entry {(win_start, win_end):
-        # acc}. Grouping on (key, window) instead — the first cut — paid
-        # applyInPandasWithState's per-group constant (Arrow slice,
-        # Python call, 1-row pandas output, state round-trip) once PER
-        # WINDOW: ~1M (user, hour) windows at sf1 cost 235 s of pure
-        # harness overhead, the same per-group constant class the
-        # round-9 cogroup fix removed, and the thing a 1000-executor run
-        # multiplies by billions of windows. Per-key grouping pays it
-        # once per key per micro-batch and fires every due window of a
-        # key in one output batch.
-        gcols = [*self.keyed.keys]
+        bounds = ["__win_start", "__win_end"]
 
-        def func(key: tuple, pdfs: Iterable[pd.DataFrame], state) -> Iterable[pd.DataFrame]:
-            wm = state.getCurrentWatermarkMs()
-            accs: dict = pickle.loads(state.get[0]) if state.exists else {}
+        def accumulate(wins: dict, pdfs: Iterable[pd.DataFrame], late_wm: int) -> None:
             for pdf in pdfs:
                 if len(pdf) == 0:
                     continue
                 pdf = pdf.sort_values(tcol, kind="stable")
-                ws_arr = pdf["__win_start"].to_numpy()
-                we_arr = pdf["__win_end"].to_numpy()
-                rows = _row_iter(pdf.drop(columns=["__win_start", "__win_end"]))
-                for row, ws, we in zip(rows, ws_arr, we_arr):
-                    we = int(we)
-                    if we <= wm:
-                        # the watermark already passed this window's end:
-                        # the window fired (or would have fired empty) —
-                        # zero allowed lateness drops the element, and a
-                        # fired window can never re-fire
+                starts, ends = pdf["__win_start"].tolist(), pdf["__win_end"].tolist()
+                for row, ws, we in zip(_row_iter(pdf.drop(columns=bounds)), starts, ends):
+                    if we - 1 <= late_wm:
                         continue
-                    k = (int(ws), we)
-                    acc = accs.get(k)
-                    if acc is None:
-                        acc = fn.create_accumulator()
-                    accs[k] = fn.add(row, acc)
-            # fire every window whose end the watermark passed, in
-            # window order, exactly once (the acc leaves the dict)
-            due = sorted(k for k in accs if k[1] <= wm)
-            out = [fn.get_result(accs.pop(k)) for k in due]
-            if accs:
-                state.update((pickle.dumps(accs),))
-                # wake when the earliest open window can fire
-                state.setTimeoutTimestamp(max(min(k[1] for k in accs), wm + 1))
-            elif state.exists:
-                state.remove()
-            if out:
-                yield to_pdf(out, names)
+                    acc = wins[we][1] if we in wins else fn.create_accumulator()
+                    wins[we] = (ws, fn.add(row, acc))
 
-        out = df.groupBy(*gcols).applyInPandasWithState(
-            func,
-            outputStructType=schema,
-            stateStructType="acc BINARY",
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.EventTimeTimeout,
+        def fire(_key: tuple, wins: dict, due: list[int], _wm: int, out: list) -> None:
+            out.extend(fn.get_result(wins.pop(e)[1]) for e in due)
+
+        out = window_step(
+            _assign_time_windows(s.df, tcol, self.assigner).groupBy(*self.keyed.keys),
+            _parse_ddl(self.env.spark, output_type),
+            [
+                StructField("win_start", ArrayType(LongType())),
+                StructField("win_end", ArrayType(LongType())),
+                StructField("accs", BinaryType()),
+            ],
+            attributed=False,
+            # windows: (start, accumulator) by end
+            load=lambda raw: {} if raw is None else dict(
+                zip(raw[1], zip(raw[0], cloudpickle.loads(raw[2])))
+            ),
+            store=lambda wins: (
+                [w[0] for w in wins.values()],
+                list(wins),
+                cloudpickle.dumps([w[1] for w in wins.values()]),
+            ),
+            accumulate=accumulate,
+            fire=fire,
+            ends=dict.keys,
         )
         return DataStream(self.env, out)
 
@@ -1293,9 +1319,11 @@ class ConnectedStreams:
 
     def process(self, fn: CoProcessFunction, output_type: str | StructType) -> DataStream:
         """Keyed co-process: both inputs shuffle to the same key (one
-        native exchange via union-with-tag), then one harness per key
-        processes the merged, time-sorted run — the two-input operator's
-        min-watermark ordering on bounded input."""
+        native exchange via union-with-tag), then the keyed process step
+        runs each key's merged, time-sorted run — the two-input
+        operator's min-watermark ordering on bounded input; unbounded,
+        the union's watermark is the minimum of the inputs' (Spark's
+        multi-watermark policy)."""
         if not self.keys1 or not self.keys2:
             raise ValueError("connect(...).process needs key_by(keys1, keys2) (keyed context)")
         env = self.first.env
@@ -1338,110 +1366,23 @@ class ConnectedStreams:
             *[F.col(c).alias(f"__r_{c}") for c in rcols if c != rt],
         )
         unioned = l.unionByName(r)
-        schema = _parse_ddl(env.spark, output_type)
-        names = [fld.name for fld in schema.fields]
-        kcols = [f"__k{i}" for i in range(len(self.keys1))]
 
-        def dispatch(fn_, row: dict, ctx: Context, col: Collector) -> None:
+        def dispatch(row: dict, ctx: Context, col: Collector) -> None:
             if row["__side"] == 0:
                 d = {c: (row["__ts"] if c == lt else row[f"__l_{c}"]) for c in lcols}
-                fn_.process_element1(d, ctx, col)
+                fn.process_element1(d, ctx, col)
             else:
                 d = {c: (row["__ts"] if c == rt else row[f"__r_{c}"]) for c in rcols}
-                fn_.process_element2(d, ctx, col)
+                fn.process_element2(d, ctx, col)
 
-        if unioned.isStreaming:
-            return self._process_streaming(unioned, fn, schema, names, kcols, dispatch)
-
-        def harness(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
-            pdf = pdf.sort_values(["__ts", "__side"], kind="stable", na_position="first")
-            rc = RuntimeContext()
-            fn.open(rc)
-            ts = TimerService()
-            kval = key[0] if len(key) == 1 else key
-            ctx = Context(timer_service_obj=ts, current_key=kval)
-            col = Collector()
-            for row in _row_iter(pdf):
-                ctx.current_timestamp = _ts_ms(row["__ts"])
-                dispatch(fn, row, ctx, col)
-            for t in ts._drain():
-                ctx.current_timestamp = t
-                fn.on_timer(t, ctx, col)
-            fn.close()
-            return col.rows
-
-        out = grouped_apply(unioned, kcols, harness, schema)
-        return DataStream(env, out)
-
-    def _process_streaming(
-        self, unioned: DataFrame, fn, schema: StructType, names: list[str],
-        kcols: list[str], dispatch,
-    ) -> DataStream:
-        """Unbounded keyed co-process: the union-with-tag shuffles both
-        inputs to the key natively; per key, pickled state + the timer
-        queue live in applyInPandasWithState — the two-input
-        KeyedCoProcessOperator with the union's min-across-inputs
-        watermark driving timers (Spark's multi-watermark min policy)."""
-        import pickle
-        import time as _time
-
-        from pyspark.sql.streaming.state import GroupStateTimeout
-
-        env = self.first.env
-
-        def func(key, pdfs, state):
-            if state.exists:
-                rc, ts = pickle.loads(state.get[0])
-            else:
-                rc, ts = RuntimeContext(), TimerService()
-            fn.open(rc)
-            kval = key[0] if len(key) == 1 else key
-            ctx = Context(timer_service_obj=ts, current_key=kval)
-            col = Collector()
-            wm = state.getCurrentWatermarkMs()
-
-            def fire_due() -> None:
-                for t in ts._advance(wm):
-                    ctx.current_timestamp = t
-                    fn.on_timer(t, ctx, col)
-                # processing-time timers fire on the following batch once
-                # wall clock passes them (micro-batch granularity — the
-                # single-input path's contract)
-                for t in ts._due_proc(int(_time.time() * 1000)):
-                    ctx.current_timestamp = t
-                    fn.on_timer(t, ctx, col)
-
-            fire_due()
-            if not state.hasTimedOut:
-                for pdf in pdfs:
-                    if len(pdf) == 0:
-                        continue
-                    pdf = pdf.sort_values(
-                        ["__ts", "__side"], kind="stable", na_position="first"
-                    )
-                    for row in _row_iter(pdf):
-                        ctx.current_timestamp = _ts_ms(row["__ts"])
-                        dispatch(fn, row, ctx, col)
-                fire_due()
-            state.update((pickle.dumps((rc, ts)),))
-            nxt = ts._next_pending()
-            if nxt is not None:
-                state.setTimeoutTimestamp(max(nxt, wm + 1))
-            elif ts._proc_set:
-                # pending processing-time timers: wake on the next
-                # watermark advance so wall clock is re-checked — without
-                # this a CoProcessFunction registering a proc-time timer
-                # on a then-quiet key waits for the next element
-                state.setTimeoutTimestamp(wm + 1)
-            if col.rows:
-                yield to_pdf(col.rows, names)
-
-        out = unioned.groupBy(*kcols).applyInPandasWithState(
-            func,
-            outputStructType=schema,
-            stateStructType="state BINARY",
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.EventTimeTimeout,
+        out = _keyed_process(
+            unioned,
+            [f"__k{i}" for i in range(len(self.keys1))],
+            ["__ts", "__side"],
+            fn,
+            dispatch,
+            Context,
+            _parse_ddl(env.spark, output_type),
         )
         return DataStream(env, out)
 
@@ -1497,9 +1438,9 @@ class BroadcastConnectedStream:
 class KeyedBroadcastConnectedStream:
     """Keyed main stream + broadcast control stream
     (KeyedBroadcastProcessFunction.java): per-key keyed state and timers
-    PLUS the replicated broadcast state. BATCH-mode order: broadcast
-    side first in full (its state maps build once), then each key's
-    time-sorted run with timers firing at end of input."""
+    PLUS the replicated broadcast state. The broadcast side (bounded)
+    is consumed first in full (its state maps build once), then the
+    keyed process step runs each key's time-sorted run."""
 
     def __init__(self, keyed: KeyedStream, bcast: "BroadcastStream") -> None:
         self.keyed, self.bcast = keyed, bcast
@@ -1512,32 +1453,15 @@ class KeyedBroadcastConnectedStream:
             bctx.get_broadcast_state(desc)
         for row in (r.asDict(recursive=True) for r in self.bcast.stream.df.collect()):
             fn.process_broadcast_element(row, bctx)
-        schema = _parse_ddl(env.spark, output_type)
-        names = [fld.name for fld in schema.fields]
         tcol = self.keyed.stream.time_col
-        keys = self.keyed.keys
-
-        def harness(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
-            if tcol:
-                pdf = pdf.sort_values(tcol, kind="stable")
-            rc = RuntimeContext()
-            fn.open(rc)
-            ts = TimerService()
-            kval = key[0] if len(key) == 1 else key
-            ctx = ReadOnlyBroadcastContext(ts, states)
-            ctx.current_key = kval
-            col = Collector()
-            for row in _row_iter(pdf):
-                ctx.current_timestamp = _ts_ms(row.get(tcol)) if tcol else None
-                fn.process_element(row, ctx, col)
-            for t in ts._drain():
-                ctx.current_timestamp = t
-                fn.on_timer(t, ctx, col)
-            fn.close()
-            return to_pdf(col.rows, names)
-
-        out = self.keyed.stream.df.groupBy(*keys).applyInPandas(
-            lambda k, p: harness(k, p), schema
+        out = _keyed_process(
+            self.keyed.stream.df,
+            self.keyed.keys,
+            [tcol] if tcol else [],
+            fn,
+            fn.process_element,
+            lambda ts: ReadOnlyBroadcastContext(ts, states),
+            _parse_ddl(env.spark, output_type),
         )
         return DataStream(env, out)
 

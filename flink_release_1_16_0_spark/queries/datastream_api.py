@@ -559,7 +559,7 @@ WITH d AS (
 SELECT user_id, CAST(n AS INT) AS session_n
 FROM g, m
 WHERE sess < (SELECT MAX(sess) FROM g g2 WHERE g2.user_id = g.user_id)
-   OR last_ts + INTERVAL 30 MINUTE < maxts - INTERVAL 10 MINUTE
+   OR last_ts + INTERVAL 30 MINUTE <= maxts - INTERVAL 10 MINUTE
 """
 
 
@@ -574,9 +574,9 @@ def dsapi_stream_process_timers(spark: SparkSession, sf_dir: str) -> DataFrame:
     queue live in applyInPandasWithState, and the final watermark
     (max ts - 10 min bounded delay) decides which tail-session timers
     fire — non-final sessions emit in-element when their successor
-    arrives; a user's last session emits only if its 30-min deadline is
-    strictly under the final watermark (Spark fires event-time timeouts
-    strictly past the watermark), which the oracle mirrors."""
+    arrives; a user's last session emits only if the final watermark
+    reaches its 30-min deadline (an event-time timer fires at
+    ``t <= wm``), which the oracle mirrors."""
     from flink_release_1_16_0_spark.streaming.core import replay_stream, run_to_table
 
     env = StreamExecutionEnvironment.get_execution_environment(spark)
@@ -723,7 +723,7 @@ SELECT user_id, win_start,
        COUNT(*) AS n,
        CAST(SUM(CAST(value AS DECIMAL(38,2))) AS DOUBLE) AS total
 FROM w
-WHERE win_start + 3600000 < (SELECT wm FROM m)
+WHERE win_start + 3600000 - 1 <= (SELECT wm FROM m)
 GROUP BY user_id, win_start
 """
 
@@ -765,9 +765,9 @@ def dsapi_stream_window_aggregate(spark: SparkSession, sf_dir: str) -> DataFrame
     """Tumbling 1-hour AggregateFunction on the UNBOUNDED replayed event
     log: windows assign natively, one accumulator per (user, window)
     lives in keyed state, and each window fires exactly once when the
-    watermark (max ts - 10 min bounded delay) passes its end — the
-    oracle keeps exactly the windows whose end is strictly under the
-    final watermark."""
+    watermark (max ts - 10 min bounded delay) reaches its end - 1
+    (EventTimeTrigger) — the oracle keeps exactly the windows with
+    ``end - 1 <= wm`` at the final watermark."""
     from flink_release_1_16_0_spark.streaming.core import replay_stream, run_to_table
 
     env = StreamExecutionEnvironment.get_execution_environment(spark)

@@ -12,9 +12,10 @@ event-time order. :class:`EventBuffer` is that discipline, once:
   it) and counts the drops — the one place late rows are dropped;
 - **release** returns the rows with ``ms(ts) <= upto``, stably sorted
   by (ts, tie-break columns), and keeps the rest;
-- **next_timeout** is the smallest pending ms minus 1, the event-time
-  timeout that fires the flush batch once the watermark reaches it
-  (Spark fires a timeout only when ``timeout < watermark``);
+- **next_timeout** is the smallest pending ms minus 1
+  (:func:`timeout_at`), the event-time timeout that fires the flush
+  batch once the watermark reaches it (Spark fires a timeout only when
+  ``timeout < watermark``);
 - **state** is the typed state codec: one ``ArrayType`` field per
   buffered column, event time as BIGINT epoch-µs. No pickle and no
   array-of-struct, so pyspark's state conversion stays per column, not
@@ -49,6 +50,13 @@ _NO_TS = np.zeros(0, dtype=np.int64)
 def epoch_us(col) -> np.ndarray:
     """int64 epoch-µs of a timestamp column (naive == session tz == UTC)."""
     return np.asarray(col, dtype="datetime64[us]").view(np.int64)
+
+
+def timeout_at(ms: int) -> int:
+    """The event-time timeout that fires once the watermark reaches
+    ``ms``: Spark fires when ``timeout < watermark``, so ``ms - 1`` (at
+    least 1, the smallest timeout Spark takes)."""
+    return max(ms - 1, 1)
 
 
 def us_to_ts(ts_us: np.ndarray) -> np.ndarray:
@@ -204,11 +212,9 @@ class EventBuffer:
         return ts[order], out
 
     def next_timeout(self) -> int | None:
-        """The event-time timeout that fires once the watermark reaches
-        the smallest pending ms: Spark fires when ``timeout < watermark``,
-        so this is that ms minus 1 (at least 1, the smallest timeout
-        Spark takes), or None when nothing is pending."""
-        return max(int(self.ts.min()) // 1000 - 1, 1) if len(self.ts) else None
+        """The :func:`timeout_at` of the smallest pending ms, or None
+        when nothing is pending."""
+        return timeout_at(int(self.ts.min()) // 1000) if len(self.ts) else None
 
     def state(self) -> tuple:
         """The state fields of :meth:`BufferLayout.state_fields`."""

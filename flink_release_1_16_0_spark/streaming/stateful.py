@@ -406,9 +406,8 @@ def streaming_retractable_topn(
                 continue
             touched = True
             signs = pdf[ROWKIND].isin([INSERT, UPDATE_AFTER])
-            for tup, pos in zip(
-                pdf[cols].itertuples(index=False, name=None), signs
-            ):
+            # plain values, NULL as None, so a retraction matches its row
+            for tup, pos in zip(py_rows(pdf, data_fields), signs):
                 counter[tup] += 1 if pos else -1
         if not touched:
             return

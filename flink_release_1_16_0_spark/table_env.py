@@ -1765,9 +1765,11 @@ class GroupedTable:
         TableAggregateFunction.java:157 — an aggregate emitting MULTIPLE
         rows per group, e.g. top-2). ``fn`` is a pandas
         DataFrame -> DataFrame per group; ``schema`` its output schema
-        (group keys are NOT implicit — include them in the output)."""
+        (group keys are NOT implicit — include them in the output).
+        Lowered via the group-amortized exchange, as :meth:`aggregate`."""
         keys = [k.strip() for k in self._keys.split(",")]
-        return Table(self._df.groupBy(*keys).applyInPandas(fn, schema=schema), self._tenv)
+        out = grouped_apply(self._df, keys, lambda _key, pdf: fn(pdf), StructType.fromDDL(schema))
+        return Table(out, self._tenv)
 
     def aggregate(self, fn, schema: str) -> "AggregatedTable":
         """GroupedTable.aggregate (TableImpl.java:413,

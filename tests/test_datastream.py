@@ -32,6 +32,7 @@ from flink_release_1_16_0_spark.datastream import (
     ProcessFunction,
     ProcessJoinFunction,
     ProcessWindowFunction,
+    ReducingStateDescriptor,
     SlidingEventTimeWindows,
     StreamExecutionEnvironment,
     TumblingEventTimeWindows,
@@ -1020,3 +1021,159 @@ def test_env_source_creation_parity(env, tmp_path):
     assert env.from_elements(1.5).to_data_frame().dtypes == [("value", "double")]
     with pytest.raises(ValueError, match="2\\*\\*63"):
         env.from_sequence(0, 2**63 - 1)
+
+
+# -- STREAMING keyed state, lateness scope and the facade oracles -------------
+
+
+class RunningTotal(KeyedProcessFunction):
+    """Per element, the key's running total of ``n`` in a ReducingState
+    whose reduce function is a lambda."""
+
+    def open(self, rc):
+        self.total = rc.get_reducing_state(
+            ReducingStateDescriptor("total", lambda a, b: a + b)
+        )
+
+    def process_element(self, value, ctx, out):
+        self.total.add(value["n"])
+        out.collect({"user": value["user"], "total": self.total.get()})
+
+
+def test_streaming_keyed_process_reducing_state_lambda(spark, env, tmp_path):
+    """Keyed state holds the user's values, not the state objects: a
+    ReducingState built on a lambda carries its value from one
+    micro-batch to the next."""
+    import os
+    import time
+
+    import pandas as pd
+
+    from flink_release_1_16_0_spark.streaming.core import run_to_table
+
+    d = tmp_path / "reduce_stream"
+    d.mkdir()
+    batches = [[("a", _ts(0), 1), ("a", _ts(1), 3)], [("a", _ts(2), 5), ("b", _ts(3), 10)]]
+    for i, rows in enumerate(batches):
+        path = d / f"b{i}.parquet"
+        pdf = pd.DataFrame(rows, columns=["user", "ts", "n"]).astype({"n": "int32"})
+        pdf.to_parquet(path, coerce_timestamps="us", index=False)
+        t = time.time() - 100 + i * 10
+        os.utime(path, (t, t))
+    sdf = (
+        spark.readStream.schema("user STRING, ts TIMESTAMP, n INT")
+        .option("maxFilesPerTrigger", "1")
+        .parquet(str(d))
+    )
+    s = env.from_data_frame(sdf).assign_timestamps_and_watermarks(
+        WatermarkStrategy.for_monotonous_timestamps().with_timestamp_assigner("ts")
+    )
+    out = s.key_by("user").process(RunningTotal(), "user STRING, total INT")
+    got = run_to_table(out.to_data_frame(), output_mode="append")
+    assert sorted((r.user, r.total) for r in got.collect()) == [
+        ("a", 1), ("a", 4), ("a", 9), ("b", 10),
+    ]
+
+
+class CountAcc:
+    """A user accumulator class, which a worker knows only by value."""
+
+    def __init__(self):
+        self.user, self.n = None, 0
+
+
+class ClassAccSum(AggregateFunction):
+    def create_accumulator(self):
+        return CountAcc()
+
+    def add(self, row, acc):
+        acc.user, acc.n = row["user"], acc.n + row["n"]
+        return acc
+
+    def get_result(self, acc):
+        return {"user": acc.user, "n": acc.n}
+
+
+def test_streaming_window_aggregate_class_accumulator(spark, env, clicks_parquet):
+    """An accumulator of a user class survives keyed state, although
+    the worker cannot import the class by name."""
+    from flink_release_1_16_0_spark.streaming.core import run_to_table
+
+    out = (
+        _stream_clicks(spark, env, clicks_parquet)
+        .key_by("user")
+        .window(TumblingEventTimeWindows.of("10 minutes"))
+        .aggregate(ClassAccSum(), "user STRING, n INT")
+    )
+    got = run_to_table(out.to_data_frame(), output_mode="append")
+    assert sorted((r.user, r.n) for r in got.collect()) == [("a", 4), ("a", 5), ("b", 30)]
+
+
+def test_streaming_window_refuses_allowed_lateness(spark, env, clicks_parquet):
+    """An unbounded window fires at the watermark with zero allowed
+    lateness; a lateness above zero or a late-data side output raises
+    and names the Table layer's allowed-lateness group window."""
+    s = _stream_clicks(spark, env, clicks_parquet)
+    win = s.key_by("user").window(TumblingEventTimeWindows.of("10 minutes"))
+    assert win.allowed_lateness("0 seconds") is win
+    with pytest.raises(NotImplementedError, match="allowed-lateness group window"):
+        win.allowed_lateness("1 minute")
+    with pytest.raises(NotImplementedError, match="allowed-lateness group window"):
+        win.side_output_late_data(OutputTag("late", "user STRING, ts TIMESTAMP, n INT"))
+
+
+def _events_at(tmp_path, rows) -> str:
+    """An events fixture of (user_id, ms offset from 2024-01-01) rows."""
+    import datetime as dt
+
+    import pandas as pd
+
+    t0 = dt.datetime(2024, 1, 1)
+    n = len(rows)
+    pd.DataFrame(
+        {
+            "event_id": range(n),
+            "ts": [t0 + dt.timedelta(milliseconds=ms) for _u, ms in rows],
+            "user_id": [u for u, _ms in rows],
+            "event_type": ["click"] * n,
+            "value": [1.5] * n,
+            "props": ["{}"] * n,
+        }
+    ).to_parquet(tmp_path / "events.parquet", coerce_timestamps="us", index=False)
+    return str(tmp_path)
+
+
+def _registry_vs_oracle(spark, name: str, sf_dir: str):
+    import duckdb
+
+    from flink_release_1_16_0_spark.queries import load_registry
+    from tools.check_oracle import compare
+
+    spec = load_registry()[name]
+    got = spec.fn(spark, sf_dir).toPandas()
+    con = duckdb.connect()
+    con.execute(f"CREATE VIEW events AS SELECT * FROM '{sf_dir}/events.parquet'")
+    return got, compare(got, con.execute(spec.oracle).fetchdf())
+
+
+def test_stream_window_aggregate_oracle_at_window_end_minus_one(spark, tmp_path):
+    """dsapi_stream_window_aggregate and its oracle on an events
+    fixture whose final watermark (max ts - 10 min) is the first hour
+    window's end minus 1 ms: the window fires, so the oracle keeps it."""
+    hour, delay = 3_600_000, 600_000
+    sf = _events_at(tmp_path, [(1, 0), (1, 60_000), (2, hour - 1 + delay)])
+    got, verdict = _registry_vs_oracle(spark, "dsapi_stream_window_aggregate", sf)
+    assert len(got) == 1  # user 1's first hour
+    assert verdict == ("OK", "")
+
+
+def test_stream_process_timers_oracle_at_the_session_deadline(spark, tmp_path):
+    """dsapi_stream_process_timers and its oracle on an events fixture
+    whose final watermark (max ts - 10 min) is exactly user 1's session
+    deadline (last ts + 30 min): the timer fires, so the oracle keeps
+    the session."""
+    gap, delay = 1_800_000, 600_000
+    sf = _events_at(tmp_path, [(1, 0), (1, 60_000), (2, 60_000 + gap + delay)])
+    got, verdict = _registry_vs_oracle(spark, "dsapi_stream_process_timers", sf)
+    assert len(got) == 1  # user 1's session of two
+    assert verdict == ("OK", "")

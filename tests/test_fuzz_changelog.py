@@ -69,3 +69,22 @@ def test_wtvf_fuzzer_catches_planted_bug(spark, monkeypatch):
         if check_wtvf(random.Random(f"wtvf-mut-{seed}")) is not None
     )
     assert caught >= 8, f"planted bug caught in only {caught}/20 seeds"
+
+
+def test_topn_retracts_a_row_holding_a_null_double(spark):
+    """A -D of a row whose DOUBLE is NULL retracts its +I: the top-N's
+    live multiset holds plain values with NULL as None (pandas hands
+    the NULL over as NaN, which never equals itself)."""
+    from flink_release_1_16_0_spark.streaming.changelog import DELETE, INSERT, ROWKIND
+    from flink_release_1_16_0_spark.streaming.stateful import streaming_retractable_topn
+    from tools.fuzz_changelog import _Cap, _schema, replay
+
+    cap = _Cap(_schema(f"{ROWKIND} STRING, k BIGINT, s STRING, v DOUBLE"))
+    streaming_retractable_topn(cap, keys=["k"], order_cols=["s"], n=2)
+    batches = [
+        [(INSERT, 1, "b", 2.0), (INSERT, 1, "a", None)],
+        [(DELETE, 1, "a", None)],
+    ]
+    out = replay(cap.fn, batches, ["k"], [ROWKIND, "k", "s", "v"])
+    last = max(r["__epoch"] for r in out)
+    assert [(r["s"], r["rn"]) for r in out if r["__epoch"] == last] == [("b", 1)]

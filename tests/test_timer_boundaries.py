@@ -11,13 +11,25 @@ from __future__ import annotations
 
 import datetime as dt
 import os
+import sys
 import time
 
 import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest
+from pyspark import cloudpickle
 from pyspark.sql.types import LongType
 
+from flink_release_1_16_0_spark.datastream import (
+    CEP,
+    KeyedCoProcessFunction,
+    KeyedProcessFunction,
+    Pattern,
+    SlidingEventTimeWindows,
+    StreamExecutionEnvironment,
+    TumblingEventTimeWindows,
+)
+from flink_release_1_16_0_spark.datastream.stream import DataStream
 from flink_release_1_16_0_spark.streaming.core import run_to_table
 from flink_release_1_16_0_spark.streaming.group_window import (
     streaming_group_window_agg,
@@ -33,6 +45,9 @@ from flink_release_1_16_0_spark.streaming.window_tvf import (
     streaming_window_tvf_join,
     streaming_window_tvf_topn,
 )
+
+# the facade's user functions below ship to executor workers by value
+cloudpickle.register_pickle_by_value(sys.modules[__name__])
 
 T = dt.datetime(2024, 1, 1, 10, 0)
 MIN = dt.timedelta(minutes=1)
@@ -172,3 +187,109 @@ def test_group_window_state_retires_at_the_lateness_horizon(spark, tmp_path):
         assert q.lastProgress["stateOperators"][0]["numRowsTotal"] == 1
     finally:
         q.stop()
+
+
+# -- the DataStream facade -----------------------------------------------------
+
+
+def _facade(spark, stream):
+    """A facade stream over ``stream``, which is already watermarked."""
+    return DataStream(StreamExecutionEnvironment.get_execution_environment(spark), stream, "ts")
+
+
+class _CountAgg:
+    """AggregateFunction: the key and the element count of a window."""
+
+    def create_accumulator(self):
+        return {"k": None, "n": 0}
+
+    def add(self, row, acc):
+        return {"k": row["k"], "n": acc["n"] + 1}
+
+    def get_result(self, acc):
+        return acc
+
+
+class _TimerAfter(KeyedProcessFunction):
+    """Each element sets an event-time timer 5 minutes after it; the
+    timer emits the key."""
+
+    def process_element(self, value, ctx, out):
+        ctx.timer_service().register_event_time_timer(ctx.timestamp() + 5 * 60_000)
+
+    def on_timer(self, timestamp, ctx, out):
+        out.collect({"k": ctx.get_current_key()})
+
+
+class _CoTimerAfter(KeyedCoProcessFunction):
+    """:class:`_TimerAfter` on the first input of a connected stream."""
+
+    def process_element1(self, value, ctx, out):
+        ctx.timer_service().register_event_time_timer(ctx.timestamp() + 5 * 60_000)
+
+    def process_element2(self, value, ctx, out):
+        pass
+
+    def on_timer(self, timestamp, ctx, out):
+        out.collect({"k": ctx.get_current_key()})
+
+
+def _window_count(spark, stream, assigner):
+    out = _facade(spark, stream).key_by("k").window(assigner).aggregate(_CountAgg(), "k BIGINT, n BIGINT")
+    return sorted((r["k"], r["n"]) for r in run_to_table(out.to_data_frame(), "append").collect())
+
+
+@pytest.mark.parametrize(
+    "assigner",
+    [
+        TumblingEventTimeWindows.of("10 minutes"),
+        SlidingEventTimeWindows.of("10 minutes", "5 minutes"),
+    ],
+    ids=["tumble", "slide"],
+)
+@pytest.mark.parametrize("before, fired", [(MS, [(1, 1)]), (2 * MS, [])], ids=["end-1", "end-2"])
+def test_facade_window_fires_when_the_watermark_reaches_end_minus_one(
+    spark, tmp_path, assigner, before, fired
+):
+    """Key A's row at 10:05 is in the window [10:00, 10:10) (and, when
+    sliding, [10:05, 10:15)); the first fires at ``wm = end - 1`` and
+    not a millisecond before (EventTimeTrigger)."""
+    end = T + 10 * MIN
+    assert _window_count(spark, _a_then_b(spark, tmp_path, T + 5 * MIN, end - before), assigner) == fired
+
+
+def test_facade_window_drops_a_row_whose_window_end_minus_one_is_the_watermark(spark, tmp_path):
+    """Batch 1 moves the watermark to ``end - 1`` of [10:00, 10:10).
+    Key 3's row at 10:06 in batch 2 passes Spark's late filter (the
+    previous batch's watermark, 10:04) but its window has fired
+    (isWindowLate), so it drops; a last batch moves the watermark far
+    enough to fire any window it had opened."""
+    end = T + 10 * MIN
+    rows = [(1, T + 5 * MIN), (2, end - MS + DELAY), (3, T + 6 * MIN), (2, end + 60 * MIN + DELAY)]
+    got = _window_count(spark, _stream(spark, tmp_path, rows), TumblingEventTimeWindows.of("10 minutes"))
+    assert got == [(1, 1), (2, 1)]
+
+
+def test_facade_process_timer_fires_when_the_watermark_reaches_it(spark, tmp_path):
+    out = _facade(spark, _a_then_b(spark, tmp_path, T, T + 5 * MIN)).key_by("k").process(_TimerAfter(), "k BIGINT")
+    assert [r["k"] for r in run_to_table(out.to_data_frame(), "append").collect()] == [1]
+
+
+def test_facade_co_process_timer_fires_when_the_watermark_reaches_it(spark, tmp_path):
+    first = _facade(spark, _a_then_b(spark, tmp_path, T, T + 5 * MIN, name="l"))
+    second = _facade(spark, _a_then_b(spark, tmp_path, T, T + 5 * MIN, name="r"))
+    out = first.connect(second).key_by("k", "k").process(_CoTimerAfter(), "k BIGINT")
+    assert [r["k"] for r in run_to_table(out.to_data_frame(), "append").collect()] == [1]
+
+
+def test_facade_cep_decides_a_quiet_anchor_when_the_watermark_reaches_its_horizon(spark, tmp_path):
+    """Key A's anchor at 10:00 has a 5-minute WITHIN horizon; key B's
+    rows move the watermark to 10:05 - 1 ms and then to 10:05, where
+    A's anchor is decided and its match emits."""
+    horizon = T + 5 * MIN
+    rows = [(1, T), (2, horizon - MS + DELAY), (2, horizon + DELAY)]
+    pat = Pattern.begin("a").where(lambda r: True).within("5 minutes")
+    out = CEP.pattern(_facade(spark, _stream(spark, tmp_path, rows)).key_by("k"), pat).select(
+        lambda m: {"k": m["a"][0]["k"]}, "k BIGINT", tiebreaker="id"
+    )
+    assert [r["k"] for r in run_to_table(out.to_data_frame(), "append").collect()] == [1]
