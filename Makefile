@@ -6,7 +6,7 @@ SF001 := /root/testdata/sf0.01
 SF01  := /root/testdata/sf0.1
 SF1   := testdata_sf1
 
-.PHONY: test oracle scale-sweep oracle-sf01 oracle-sf1 fuzz fuzz-changelog bench verify
+.PHONY: test oracle scale-sweep partition-sweep oracle-sf01 oracle-sf1 fuzz fuzz-changelog bench verify
 
 test:
 	python -m pytest tests/ -q
@@ -16,6 +16,10 @@ oracle:            ## full registry vs DuckDB at the gated sf0.01
 
 scale-sweep:       ## streaming + changelog + cep queries at sf0.1
 	python tools/check_oracle.py --sf $(SF01) --tag streaming --tag changelog --tag cep
+
+partition-sweep:   ## streaming + changelog + cep queries at 1 and at 8 state partitions
+	SPARK_GRAFT_CPUS=1 python tools/check_oracle.py --sf $(SF001) --tag streaming --tag changelog --tag cep
+	SPARK_GRAFT_CPUS=8 python tools/check_oracle.py --sf $(SF001) --tag streaming --tag changelog --tag cep
 
 oracle-sf01:       ## full registry at sf0.1 (run before round end)
 	python tools/check_oracle.py --sf $(SF01)
@@ -34,4 +38,4 @@ fuzz-changelog:    ## 200-seed replay of every streaming state operator arm
 bench:
 	python bench.py
 
-verify: test oracle scale-sweep fuzz-changelog bench
+verify: test oracle scale-sweep partition-sweep fuzz-changelog bench

@@ -10,9 +10,13 @@ scheduler), UTC session timezone (oracle comparability), Arrow on
 Resources default to this host: ``local[N]`` over the CPUs this process
 may run on, and a driver heap of half the physical memory (at least
 1 GiB), leaving the rest to Python workers and the OS.
-``SPARK_GRAFT_CPUS`` and ``SPARK_DRIVER_MEM`` override either. At
-cluster scale the same settings hold: AQE coalesces the shuffle
-partitions (one per local core, at least 8) up/down, and
+``SPARK_GRAFT_CPUS`` and ``SPARK_DRIVER_MEM`` override either.
+
+Batch shuffles use one partition per core, at least 8, and AQE
+coalesces them at run time. Streaming state partitions are capped at
+the cores instead (``streaming.core._start``): each one commits every
+micro-batch, used or not. A query's count is fixed in its checkpoint
+when it first starts. At cluster scale the same settings hold, and
 ``spark.sql.shuffle.partitions`` becomes a cluster level knob the
 caller overrides via ``extra_conf``.
 

@@ -14,9 +14,11 @@ stream-stream joins whose matches emit within the batch).
 from __future__ import annotations
 
 import itertools
+import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.streaming import DataStreamWriter, StreamingQuery
 
 from flink_release_1_16_0_spark.catalog import normalize_event_ts
 
@@ -67,28 +69,52 @@ def run_to_table(
     query's exception. The returned DataFrame is a normal batch
     relation over the sink contents.
     """
-    import os
-
-    if timeout_sec is None:
-        timeout_sec = int(os.environ.get("SPARK_GRAFT_STREAM_TIMEOUT", "300"))
+    timeout_sec = _timeout(timeout_sec)
     if os.environ.get("SPARK_GRAFT_STREAM_SINK", "memory") == "spill":
         return _run_to_spill(stream_df, output_mode, timeout_sec)
     sink = f"__stream_sink_{next(_SINK_COUNTER)}"
-    q = (
-        stream_df.writeStream.format("memory")
-        .queryName(sink)
-        .outputMode(output_mode)
-        .trigger(availableNow=True)
-        .start()
-    )
-    _drain(q, timeout_sec)
+    writer = stream_df.writeStream.format("memory").queryName(sink).outputMode(output_mode)
+    _drain(_start(stream_df, writer), timeout_sec)
     spark = stream_df.sparkSession
     return spark.table(sink)
 
 
-def _drain(q, timeout_sec: int) -> None:
-    """awaitTermination with loud failure + loud timeout (shared by the
-    memory and spill sinks)."""
+def _timeout(timeout_sec: int | None = None) -> int:
+    """The drain timeout: ``timeout_sec``, else SPARK_GRAFT_STREAM_TIMEOUT,
+    else 300 s."""
+    if timeout_sec is None:
+        return int(os.environ.get("SPARK_GRAFT_STREAM_TIMEOUT", "300"))
+    return timeout_sec
+
+
+def _start(stream_df: DataFrame, writer: DataStreamWriter) -> StreamingQuery:
+    """Start ``writer`` as an availableNow query: the one start path of
+    every streaming query in the engine.
+
+    The query's state partitions are capped at the cores:
+    ``spark.sql.shuffle.partitions`` reads ``min(its value, cores)``
+    while the query starts and its old value afterwards, also when the
+    start raises. Each state partition commits every micro-batch, used
+    or not, so partitions beyond the cores only add commits; the keys'
+    layout is fixed by ``key_groups.KEY_GROUPS``, not by this count.
+    The query keeps the capped count because it clones the session conf
+    when it starts and records the count in its checkpoint's offset
+    log, so a restart keeps the count its checkpoint began with. Batch
+    plans never see the cap, and a smaller session setting wins.
+    """
+    spark = stream_df.sparkSession
+    key = "spark.sql.shuffle.partitions"
+    old = spark.conf.get(key)
+    spark.conf.set(key, str(min(int(old), spark.sparkContext.defaultParallelism)))
+    try:
+        return writer.trigger(availableNow=True).start()
+    finally:
+        spark.conf.set(key, old)
+
+
+def _drain(q: StreamingQuery, timeout_sec: int) -> None:
+    """awaitTermination with loud failure + loud timeout (shared by every
+    query :func:`_start` starts)."""
     try:
         finished = q.awaitTermination(timeout_sec)
         exc = q.exception()
@@ -126,13 +152,8 @@ def _run_to_spill(
         batch_df.write.mode(mode).parquet(out_dir)
         wrote.append(True)
 
-    q = (
-        stream_df.writeStream.foreachBatch(fb)
-        .outputMode(output_mode)
-        .trigger(availableNow=True)
-        .start()
-    )
-    _drain(q, timeout_sec)
+    writer = stream_df.writeStream.foreachBatch(fb).outputMode(output_mode)
+    _drain(_start(stream_df, writer), timeout_sec)
     if not wrote:
         return spark.createDataFrame([], stream_df.schema)
     return spark.read.schema(stream_df.schema).parquet(out_dir)
@@ -156,10 +177,7 @@ def run_to_digest(
     final materialized state, so a digest compare needs no ordering or
     single-batch assumption. Compare with :func:`digest_of_batch` on
     the oracle's final rows."""
-    import os
-
-    if timeout_sec is None:
-        timeout_sec = int(os.environ.get("SPARK_GRAFT_STREAM_TIMEOUT", "300"))
+    timeout_sec = _timeout(timeout_sec)
     rowkind = "__rowkind"
     has_rk = rowkind in stream_df.columns
     totals = {"rows": 0, "by_rowkind": {}, "net_count": 0, "net_checksum": 0}
@@ -193,13 +211,8 @@ def run_to_digest(
             totals["net_count"] += int(r["net"])
             totals["net_checksum"] += int(r["chk"] or 0)
 
-    q = (
-        stream_df.writeStream.foreachBatch(fb)
-        .outputMode(output_mode)
-        .trigger(availableNow=True)
-        .start()
-    )
-    _drain(q, timeout_sec)
+    writer = stream_df.writeStream.foreachBatch(fb).outputMode(output_mode)
+    _drain(_start(stream_df, writer), timeout_sec)
     return totals
 
 

@@ -13,7 +13,10 @@ call serve every key of its group.
 - :data:`KEY_GROUPS` is a constant, like the reference's max
   parallelism: the group of a key is part of the checkpointed state
   layout, so it must stay fixed for the life of a checkpoint and is not
-  derived from ``spark.sql.shuffle.partitions``.
+  derived from ``spark.sql.shuffle.partitions``. The state partition
+  count plays the reference's operator parallelism: it follows the
+  cores (``streaming.core._start``), and each partition serves whole
+  key groups.
 - :class:`KeyTable` is the per-key state codec: the key columns plus a
   per-key carry, each one typed ``ARRAY`` field of the group's state
   row, one element per key. Rows of the group refer to their key by its

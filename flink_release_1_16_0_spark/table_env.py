@@ -947,28 +947,21 @@ class CatalogTable:
                 f"unsupported streaming sink connector {connector!r} "
                 "(supported: filesystem, blackhole, hive)"
             )
-        q = writer.outputMode(output_mode).trigger(availableNow=True).start()
-        try:
-            q.awaitTermination(300)
-            # awaitTermination(timeout) returns a bool and does NOT
-            # re-raise stream failures — surface them explicitly so a
-            # failed INSERT never looks like an empty success
-            exc = q.exception()
-            if exc is not None:
-                raise exc
-            # partition-commit at end-of-input (PartitionCommitter's
-            # finite-stream endInput path), derived from the files this
-            # execution wrote: the foreachBatch sink's accumulated
-            # staged-move manifests, or the native sink's own
-            # _spark_metadata commit-log delta — never an mtime scan, so
-            # a concurrent writer is never co-committed
-            if connector == "filesystem" and self._has_commit_policy():
-                if "checkpoint" in self.options:
-                    committed.update(self._commit_log_partitions(meta_before))
-                self._commit_partitions(sorted(committed))
-        finally:
-            if q.isActive:
-                q.stop()
+        from flink_release_1_16_0_spark.streaming.core import _drain, _start, _timeout
+
+        # a failed or timed-out drain raises, so neither looks like an
+        # empty success and neither commits a partition
+        _drain(_start(out, writer.outputMode(output_mode)), _timeout())
+        # partition-commit at end-of-input (PartitionCommitter's
+        # finite-stream endInput path), derived from the files this
+        # execution wrote: the foreachBatch sink's accumulated
+        # staged-move manifests, or the native sink's own
+        # _spark_metadata commit-log delta — never an mtime scan, so
+        # a concurrent writer is never co-committed
+        if connector == "filesystem" and self._has_commit_policy():
+            if "checkpoint" in self.options:
+                committed.update(self._commit_log_partitions(meta_before))
+            self._commit_partitions(sorted(committed))
 
 
 def _rewrite_proctime(expr: str) -> str:

@@ -402,6 +402,55 @@ def test_partition_commit_overwrite_replaces_only_written_partitions(spark, tmp_
     assert os.path.exists(f"{out}/p=1/_SUCCESS")
 
 
+def test_streaming_insert_timeout_raises_and_commits_nothing(spark, tmp_path, monkeypatch):
+    """A streaming INSERT whose drain times out raises ``TimeoutError``,
+    stops its query and commits no partition: ``awaitTermination``
+    returns False on timeout rather than raising. The timeout is
+    SPARK_GRAFT_STREAM_TIMEOUT's, as for every other drain."""
+    import os
+
+    from pyspark.sql.streaming import DataStreamWriter
+
+    from flink_release_1_16_0_spark.table_env import TableEnvironment
+
+    class Stalled:
+        """A query still running when its timeout ends."""
+
+        isActive = True
+        waited = None
+
+        def awaitTermination(self, timeout):
+            Stalled.waited = timeout
+            return False
+
+        def exception(self):
+            return None
+
+        def stop(self):
+            Stalled.isActive = False
+
+    src = str(tmp_path / "to_src")
+    spark.range(0, 4).selectExpr("id AS k", "id % 2 AS p").write.parquet(src)
+    out = str(tmp_path / "to_out")
+    stenv = TableEnvironment.create(spark, streaming=True)
+    stenv.execute_sql(
+        f"""CREATE TABLE to_src (k BIGINT, p BIGINT)
+        WITH ('connector'='filesystem','path'='{src}','format'='parquet')"""
+    )
+    stenv.execute_sql(
+        f"""CREATE TABLE to_snk (k BIGINT)
+        WITH ('connector'='filesystem','path'='{out}','format'='parquet',
+              'sink.partition-commit.policy.kind'='success-file')"""
+    )
+    monkeypatch.setenv("SPARK_GRAFT_STREAM_TIMEOUT", "7")
+    monkeypatch.setattr(DataStreamWriter, "start", lambda self, *a, **kw: Stalled())
+    with pytest.raises(TimeoutError):
+        stenv.execute_sql("INSERT INTO to_snk SELECT k FROM to_src")
+    assert Stalled.waited == 7
+    assert not Stalled.isActive
+    assert not os.path.exists(f"{out}/_SUCCESS")
+
+
 def test_partition_commit_native_checkpoint_sink_uses_commit_log(spark, tmp_path):
     """With the native file sink (explicit 'checkpoint' option), the
     partition-commit set comes from the _spark_metadata commit-log

@@ -13,7 +13,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from flink_release_1_16_0_spark.catalog import load_table
-from flink_release_1_16_0_spark.streaming.core import run_to_table
+from flink_release_1_16_0_spark.streaming.core import _drain, _start, run_to_table
 from flink_release_1_16_0_spark.streaming.stateful import (
     streaming_dedup_keep_last,
     streaming_topn,
@@ -1113,6 +1113,74 @@ def test_allowed_lateness_oracle_at_window_end_minus_one(spark, tmp_path):
     assert compare(got, want) == ("OK", "")
 
 
+def _state_partitions(spark, run):
+    """Calls ``run()`` and returns its result with the state partition
+    count of every progress of the query it starts. A
+    ``StreamingQueryListener`` sees the query ``run_to_table`` keeps to
+    itself; listener events arrive asynchronously, so this waits for the
+    query's termination event."""
+    import threading
+
+    from pyspark.sql.streaming import StreamingQueryListener
+
+    started, counts, done = set(), [], threading.Event()
+
+    class Listener(StreamingQueryListener):
+        def onQueryStarted(self, event):
+            started.add(event.id)
+
+        def onQueryProgress(self, event):
+            if event.progress.id in started and event.progress.stateOperators:
+                counts.append(event.progress.stateOperators[0].numShufflePartitions)
+
+        def onQueryTerminated(self, event):
+            if event.id in started:
+                done.set()
+
+    listener = Listener()
+    spark.streams.addListener(listener)
+    try:
+        out = run()
+        assert done.wait(60)
+    finally:
+        spark.streams.removeListener(listener)
+    return out, counts
+
+
+def test_state_partitions_capped_at_cores(spark, tmp_path):
+    """A streaming query starts with ``min(shuffle.partitions, cores)``
+    state partitions: 4 under ``SPARK_GRAFT_CPUS=4`` and the session's
+    8, and 1 where the session sets 1. The session's own setting reads
+    the same after the drain, and after a start that raises."""
+    key = "spark.sql.shuffle.partitions"
+    path = str(tmp_path / "data")
+    spark.createDataFrame([(i % 3, i) for i in range(12)], "k int, v int").write.parquet(path)
+    stream = spark.readStream.schema("k int, v int").parquet(path)
+    counted = stream.groupBy("k").agg(F.count("*").alias("n"), F.sum("v").alias("s"))
+
+    def drain():
+        return sorted(tuple(r) for r in run_to_table(counted, "complete").collect())
+
+    want = [(0, 4, 18), (1, 4, 22), (2, 4, 26)]
+    conf = spark.conf.get(key)
+    rows, counts = _state_partitions(spark, drain)
+    assert rows == want
+    assert counts and set(counts) == {min(int(conf), spark.sparkContext.defaultParallelism)}
+    assert spark.conf.get(key) == conf
+    spark.conf.set(key, "1")
+    try:
+        rows, counts = _state_partitions(spark, drain)
+        assert rows == want
+        assert counts and set(counts) == {1}
+        assert spark.conf.get(key) == "1"
+    finally:
+        spark.conf.set(key, conf)
+    # complete mode without an aggregate is refused when the query starts
+    with pytest.raises(Exception, match="(?i)complete"):
+        run_to_table(stream, "complete")
+    assert spark.conf.get(key) == conf
+
+
 @pytest.mark.parametrize("op", ["hop", "lateness"])
 def test_window_state_survives_restart(spark, tmp_path, op):
     """Typed Python window state across a restart: a hop window-TVF
@@ -1121,7 +1189,11 @@ def test_window_state_survives_restart(spark, tmp_path, op):
     emit exactly what one run over both files does. The second file's
     rows join windows and slices that the first run left in state. None
     of them is late: after the first run's closing no-data batch, Spark
-    drops rows behind its watermark before the operator sees them."""
+    drops rows behind its watermark before the operator sees them.
+
+    The two runs also differ in their state partition count: the first
+    starts at the session's 8, and the restart, started capped at the
+    cores, keeps the 8 of its checkpoint's offset log."""
     import datetime as dt
 
     from pyspark.sql.types import DoubleType, LongType, StringType
@@ -1169,30 +1241,37 @@ def test_window_state_survives_restart(spark, tmp_path, op):
             allowed_lateness_ms=10 * minute,
         ), "update"
 
-    def drain(name, ckpt):
+    def drain(name, ckpt, start=_start):
+        """Drains the query into ``name``'s sink and returns the state
+        partition counts its progress reports."""
         out, mode = query(str(tmp_path / name / "data"))
-        q = (
+        writer = (
             out.writeStream.foreachBatch(
                 lambda df, _id: df.write.mode("append").parquet(str(tmp_path / name / "sink"))
             )
             .option("checkpointLocation", str(tmp_path / name / ckpt))
             .outputMode(mode)
-            .trigger(availableNow=True)
-            .start()
         )
-        q.awaitTermination(300)
-        assert q.exception() is None
+        q = start(out, writer)
+        _drain(q, 300)
+        return {p.stateOperators[0].numShufflePartitions for p in q.recentProgress}
+
+    def start_uncapped(_out, writer):
+        return writer.trigger(availableNow=True).start()
 
     def table(name):
         return sorted(tuple(r) for r in spark.read.parquet(str(tmp_path / name / "sink")).collect())
 
+    conf = int(spark.conf.get("spark.sql.shuffle.partitions"))
     _write_chunk(spark, str(tmp_path / "one" / "data"), first, ddl, 1000)
     _write_chunk(spark, str(tmp_path / "one" / "data"), second, ddl, 2000)
-    drain("one", "ckpt")
+    assert drain("one", "ckpt") == {min(conf, spark.sparkContext.defaultParallelism)}
+    # the first run starts at the session's count; the restart goes
+    # through the capped start but keeps the count of its offset log
     _write_chunk(spark, str(tmp_path / "two" / "data"), first, ddl, 1000)
-    drain("two", "ckpt")
+    assert drain("two", "ckpt", start=start_uncapped) == {conf}
     _write_chunk(spark, str(tmp_path / "two" / "data"), second, ddl, 2000)
-    drain("two", "ckpt")
+    assert drain("two", "ckpt") == {conf}
     assert table("two") == table("one")
     # the 10:20-10:30 window of key a holds a first-run row (10:29, 5.0)
     # and a second-run row (10:28:30, 6.0)
