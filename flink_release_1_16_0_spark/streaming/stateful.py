@@ -8,7 +8,7 @@ Streaming lacks natively (SURVEY.md section 7.0 "custom (real work)"):
   StreamExecChangelogNormalize.java:156). State: the current winner row.
 - `streaming_topn` — per-key top-N by a sort column, maintained across
   batches (AbstractTopNFunction.java / AppendOnlyTopNFunction). State:
-  the current top-N heap, re-emitted per batch.
+  the current top-N rows, re-emitted per batch.
 
 The unbounded group aggregates (SUM/COUNT, COUNT DISTINCT, retractable
 MIN/MAX) are one operator, streaming.retract_agg; windows with allowed
@@ -22,19 +22,24 @@ place, and released rows come out in (ts, tie-break) order. All four
 OVER operators fold their frames through one function over the
 retractable COUNT and exact-Decimal SUM of streaming.accumulators.
 
-The four OVER operators group by key group, not by key
-(streaming.key_groups): one ``applyInPandasWithState`` call serves
-every key of its group, whose state row holds a typed key table with
-each key's carry, and the group's buffer. The other operators here
-still make one call per key. Event-time timeouts are set one ms below
-the watermark that must fire them, as Spark fires a timeout only when
+The OVER operators, the dedup operators, both top-N operators and
+upsert-to-retract group by key group, not by key (streaming.key_groups):
+one ``applyInPandasWithState`` call serves every key of its group,
+whose state row holds a typed key table with each key's carry. The
+dedup, top-N and upsert-to-retract operators are each a pure per-key
+step over typed rows (``key_groups.keyed_state``); the OVER operators
+keep a group-level step, vectorized across keys, with the group's
+buffer. Event-time timeouts are set one ms below the watermark that
+must fire them, as Spark fires a timeout only when
 ``timeout < watermark``.
 
 Design notes for scale: state lives in Spark's checkpointed state store
 partitioned by the grouping key (same layout as Flink's keyed RocksDB
 state), so state size is bounded by key cardinality x state-per-key,
-not input size. GroupStateTimeout gives the state-TTL semantics of
-`table.exec.state.ttl` (KeyedProcessFunctionWithCleanupState.java).
+not input size. A per-key event-time timer in the key's carry, which
+``keyed_state`` turns into the group's timeout, gives the state-TTL
+semantics of `table.exec.state.ttl`
+(KeyedProcessFunctionWithCleanupState.java).
 
 The emitted changelog uses the `__rowkind` encoding from
 streaming.changelog (RowKind.java:31-52).
@@ -42,9 +47,12 @@ streaming.changelog (RowKind.java:31-52).
 
 from __future__ import annotations
 
-from collections import deque
+import heapq
+from collections import Counter, deque
 from collections.abc import Iterator, Sequence
 from datetime import datetime
+from itertools import compress
+from operator import itemgetter, not_
 
 import numpy as np
 import pandas as pd
@@ -80,7 +88,58 @@ from flink_release_1_16_0_spark.streaming.key_groups import (
     KeyTable,
     apply_in_key_groups,
     key_runs,
+    keyed_state,
 )
+
+
+def _sort(rows: list[tuple], order: Sequence[tuple[int, bool]]) -> list[tuple]:
+    """``rows`` stably sorted by the columns of ``order`` (position,
+    descending), NULLs last in either direction, as pandas sorts."""
+    for j, desc in reversed(order):
+        rows = [
+            *sorted((r for r in rows if r[j] is not None), key=itemgetter(j), reverse=desc),
+            *(r for r in rows if r[j] is None),
+        ]
+    return rows
+
+
+def _top(rows: list[tuple], order: Sequence[tuple[int, bool]], n: int) -> list[tuple]:
+    """``_sort(rows, order)[:n]``, sorting only the rows that can place
+    in the first n by the first order column: those at or ahead of its
+    n-th best non-NULL value."""
+    j, desc = order[0]
+    vals = [r[j] for r in rows if r[j] is not None]
+    if len(vals) > n:
+        cut = (heapq.nlargest if desc else heapq.nsmallest)(n, vals)[-1]
+        rows = [r for r in rows if r[j] is not None and (r[j] >= cut if desc else r[j] <= cut)]
+    return _sort(rows, order)[:n]
+
+
+def _winner(names: list[str], order_col: str | Sequence[str], keep: str):
+    """The dedup winner of a list of rows: the head (``keep="first"``)
+    or the tail (``"last"``) of their stable sort by the ``order_col``
+    columns ascending, NULL last."""
+    if keep not in ("first", "last"):
+        raise ValueError(f"keep must be first|last, got {keep!r}")
+    cols = [order_col] if isinstance(order_col, str) else order_col
+    order = [(names.index(c), False) for c in cols]
+    at = 0 if keep == "first" else -1
+    return lambda rows: _sort(rows, order)[at]
+
+
+def _ms(ts: datetime) -> int:
+    """A naive timestamp (UTC, as everywhere in the engine) in epoch ms."""
+    return pd.Timestamp(ts).value // 1_000_000
+
+
+def _columns(rows: list[tuple], width: int) -> tuple[list, ...]:
+    """``rows`` as ``width`` column lists, a carry of array fields."""
+    return tuple([r[j] for r in rows] for j in range(width))
+
+
+def _arrays(fields, prefix: str) -> list[StructField]:
+    """Carry fields holding a list of rows over ``fields``, column-wise."""
+    return [StructField(f"{prefix}{f.name}", ArrayType(f.dataType)) for f in fields]
 
 
 def streaming_dedup_keep_last(
@@ -99,7 +158,7 @@ def streaming_dedup_keep_last(
     rowtime dedup (RT/deduplicate/RowTimeDeduplicateFunction.java:31,
     which likewise refines eagerly as out-of-order rows arrive rather
     than waiting for the watermark). ``order_col`` may be a list for
-    composite (ts, tiebreak) ordering.
+    composite (ts, tiebreak) ordering; a NULL ranks last.
 
     ``state_ttl_ms`` is the reference's ``table.exec.state.ttl``
     (ExecutionConfigOptions.java:52 / KeyedProcessFunctionWithCleanupState):
@@ -115,66 +174,31 @@ def streaming_dedup_keep_last(
     sinks overwrite by key (upsert materialization — the
     SinkUpsertMaterializer.java:62 pattern is the sink's MERGE).
     """
-    out_schema = stream.schema
-    cols = [f.name for f in out_schema.fields]
-    state_schema = out_schema
-    order_cols = [order_col] if isinstance(order_col, str) else list(order_col)
-    if keep not in ("first", "last"):
-        raise ValueError(f"keep must be first|last, got {keep!r}")
+    fields = stream.schema.fields
+    pick = _winner(stream.columns, order_col, keep)
     if state_ttl_ms is not None and ttl_time_col is None:
         raise ValueError("state_ttl_ms needs ttl_time_col (a watermarked column)")
+    carry_fields = [StructField(f"row_{f.name}", f.dataType) for f in fields]
+    if state_ttl_ms is not None:
+        ttl_at = stream.columns.index(ttl_time_col)
+        carry_fields.append(StructField("expire_ms", LongType()))
 
-    def pick(pdf: pd.DataFrame) -> pd.DataFrame:
-        s = pdf.sort_values(order_cols, kind="mergesort")
-        return s.tail(1) if keep == "last" else s.head(1)
+    def step(key, rows, carry, wm):
+        best = pick(rows)
+        prev = None if carry is None else carry[: len(fields)]
+        # the held winner goes first: it keeps its place on a tie
+        win = best if prev is None else pick([prev, best])
+        # the cleanup timer refreshes on every access, changed or not
+        # (KeyedProcessFunctionWithCleanupState.registerProcessingCleanupTimer)
+        expire = () if state_ttl_ms is None else (_ms(best[ttl_at]) + state_ttl_ms,)
+        # rank unchanged: the reference's DeduplicateFunctionHelper
+        # emits nothing when the incoming row does not beat the held
+        # winner (isDuplicate false path) — conformance pinned by the
+        # DeduplicateITCase raw-changelog ports
+        return ([] if win == prev else [win]), (*win, *expire)
 
-    def fn(
-        key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        if state_ttl_ms is not None and state.hasTimedOut:
-            # cleanup timer fired: discard idle state (CleanupState.java)
-            state.remove()
-            return
-        best: pd.DataFrame | None = None
-        for pdf in pdfs:
-            if len(pdf) == 0:
-                continue
-            top = pick(pdf)
-            best = top if best is None else pick(pd.concat([best, top]))
-        if best is None:
-            return
-        prev_tup = tuple(state.get) if state.exists else None
-        if prev_tup is not None:
-            prev = pd.DataFrame([prev_tup], columns=cols)
-            merged = pick(pd.concat([prev, best]))
-        else:
-            merged = best
-        new_tup = next(py_rows(merged, out_schema.fields))
-        if state_ttl_ms is not None:
-            # the cleanup timer refreshes on every access, changed or
-            # not (KeyedProcessFunctionWithCleanupState.registerProcessingCleanupTimer)
-            last_seen_ms = pd.Timestamp(best.iloc[0][ttl_time_col]).value // 1_000_000
-            state.setTimeoutTimestamp(last_seen_ms + state_ttl_ms)
-        if prev_tup is not None and new_tup == prev_tup:
-            # rank unchanged: the reference's DeduplicateFunctionHelper
-            # emits nothing when the incoming row does not beat the
-            # held winner (isDuplicate false path) — conformance pinned
-            # by the DeduplicateITCase raw-changelog ports
-            return
-        state.update(new_tup)
-        yield merged[cols]
-
-    return stream.groupBy(*keys).applyInPandasWithState(
-        fn,
-        outputStructType=out_schema,
-        stateStructType=state_schema,
-        outputMode="update",
-        timeoutConf=(
-            GroupStateTimeout.EventTimeTimeout
-            if state_ttl_ms is not None
-            else GroupStateTimeout.NoTimeout
-        ),
-    )
+    timer = None if state_ttl_ms is None else "expire_ms"
+    return keyed_state(stream, keys, step, carry_fields, stream.schema, timeout=timer)
 
 
 def streaming_window_dedup(
@@ -189,17 +213,9 @@ def streaming_window_dedup(
     RowTimeWindowDeduplicateOperatorBuilder): the winning row per
     (window, key), refined eagerly as out-of-order rows arrive.
 
-    Scale shape: state keys on the USER key only and every window's
-    winner lives in the key's ONE state row. Routing the window bucket
-    into the group key instead (which the generic
-    :func:`streaming_dedup_keep_last` would do) pays
-    applyInPandasWithState's per-group constant once PER (key, window) —
-    ~1M tiny groups at sf1 cost 132 s of harness overhead, the
-    per-group-constant class the round-9/10 fixes target. Per-key
-    grouping pays it once per key per micro-batch; emissions (the
-    changed winners, update mode) are identical. The state row is typed:
-    one ``ARRAY`` field per output column, one element per window's
-    winner; a winner's rank is its ``order_col`` values.
+    Scale shape: state keys on the USER key only, not on (key, window):
+    the key's carry holds every window's winner, one ``ARRAY`` field
+    per output column; a winner's rank is its ``order_col`` values.
 
     State bound: with ``window_size_ms`` set (and a watermark on the
     input), rows for windows whose END is behind the current watermark
@@ -207,93 +223,49 @@ def streaming_window_dedup(
     semantics) and those windows' winners are evicted — so per-key
     state is bounded by the number of OPEN windows (the reference's
     cleanup timer in RowTimeWindowDeduplicateOperatorBuilder) and a
-    passed window can never re-emit. Without it (or without a
-    watermark) every window's winner is retained and late refinements
-    keep applying — fine for bounded replays, unbounded on a
-    long-running stream."""
+    passed window can never re-emit; an input without a watermark is
+    refused. Without it every window's winner is retained and late
+    refinements keep applying — fine for bounded replays, unbounded on
+    a long-running stream."""
     fields = stream.schema.fields
-    cols = [f.name for f in fields]
-    order_cols = [order_col] if isinstance(order_col, str) else list(order_col)
-    if keep not in ("first", "last"):
-        raise ValueError(f"keep must be first|last, got {keep!r}")
-    sign = 1 if keep == "first" else -1
-    w_at = cols.index(window_col)
-    rank_at = [cols.index(c) for c in order_cols]
-    state_schema = StructType(
-        [StructField(f"win_{f.name}", ArrayType(f.dataType)) for f in fields]
-    )
+    w_at = stream.columns.index(window_col)
+    pick = _winner(stream.columns, order_col, keep)
 
-    def _win_end_ms(w) -> float:
-        # window bucket start -> end in epoch ms (a timestamp, naive ==
-        # UTC as everywhere in the engine, or already-numeric ms)
-        start = pd.Timestamp(w).value / 1_000_000 if isinstance(w, datetime) else float(w)
-        return start + (window_size_ms or 0)
+    def fired(w, wm: int) -> bool:
+        # the reference fires when watermark >= windowEnd - 1
+        # (TimeWindowUtil.isWindowFired): "passed" is end - 1 <= wm
+        start = _ms(w) if isinstance(w, datetime) else w
+        return start + window_size_ms - 1 <= wm
 
-    def rank(row: tuple) -> tuple:
-        return tuple(row[j] for j in rank_at)
-
-    def fn(
-        key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        # window value -> its winning row, typed, in output column order
-        winners = {row[w_at]: row for row in zip(*state.get)} if state.exists else {}
-        changed: set = set()
-        wm = state.getCurrentWatermarkMs() if window_size_ms is not None else 0
-        for pdf in pdfs:
-            if len(pdf) == 0:
-                continue
-            if wm > 0:
-                # zero allowed lateness: a row for a passed window is
-                # dropped, exactly like the reference's window operator.
-                # The reference fires when watermark >= windowEnd - 1
-                # (TimeWindowUtil.isWindowFired), so "passed" means
-                # win_end - 1 <= wm, not win_end <= wm.
-                pdf = pdf[pdf[window_col].map(_win_end_ms) - 1 > wm]
-                if len(pdf) == 0:
-                    continue
-            # candidate per window from THIS batch first (vectorized),
-            # then one python-level compare against the held winner
-            s = pdf.sort_values(order_cols, kind="mergesort")
-            best = (
-                s.groupby(window_col, sort=False).head(1)
-                if keep == "first"
-                else s.groupby(window_col, sort=False).tail(1)
-            )
-            for row in py_rows(best, fields):
-                w = row[w_at]
-                cur = winners.get(w)
-                if cur is None or sign * _cmp_tuples(rank(row), rank(cur)) < 0:
-                    winners[w] = row
-                    changed.add(w)
-        evicted = False
+    def step(key, rows, carry, wm):
+        if window_size_ms is None:
+            wm = 0
+        elif wm is None:
+            raise ValueError("window_size_ms needs a watermark on the input")
+        # window value -> its winning row, in output column order
+        winners = {row[w_at]: row for row in zip(*carry)} if carry else {}
+        arrived: dict = {}
+        for row in rows:
+            # zero allowed lateness: a row of a fired window is dropped
+            if wm <= 0 or not fired(row[w_at], wm):
+                arrived.setdefault(row[w_at], []).append(row)
+        changed = set()
+        for w, batch in arrived.items():
+            held = winners.get(w)
+            if held is not None:
+                # the held winner keeps its place on a tie: it loses
+                # only to a strictly better row
+                batch = [held, *batch] if keep == "first" else [*batch, held]
+            win = pick(batch)
+            if win != held:
+                winners[w] = win
+                changed.add(w)
         if wm > 0:
-            # mirror isWindowFired's windowEnd-1 trigger boundary
-            stale = [w for w in winners if _win_end_ms(w) - 1 <= wm]
-            for w in stale:
-                del winners[w]
-            evicted = bool(stale)
-        if changed:
-            yield pd.DataFrame(
-                [winners[w] for w in sorted(changed & winners.keys())],
-                columns=cols,
-            )
-        if changed or evicted:
-            if winners:
-                state.update(tuple(list(c) for c in zip(*winners.values())))
-            elif state.exists:
-                state.remove()
+            winners = {w: row for w, row in winners.items() if not fired(w, wm)}
+        out = [winners[w] for w in sorted(changed & winners.keys())]
+        return out, (_columns(list(winners.values()), len(fields)) if winners else None)
 
-    return stream.groupBy(*keys).applyInPandasWithState(
-        fn,
-        outputStructType=stream.schema,
-        stateStructType=state_schema,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-
-
-def _cmp_tuples(a: tuple, b: tuple) -> int:
-    return -1 if a < b else (1 if a > b else 0)
+    return keyed_state(stream, keys, step, _arrays(fields, "win_"), stream.schema)
 
 
 def streaming_topn(
@@ -307,39 +279,18 @@ def streaming_topn(
 
     Re-emits the key's full current top-N whenever it changes; the sink
     replaces the key's previous top-N (update semantics, the batch dual
-    of the reference's retract stream).
+    of the reference's retract stream). Ties keep arrival order and a
+    NULL ranks last.
     """
-    out_schema = stream.schema
-    cols = [f.name for f in out_schema.fields]
+    fields = stream.schema.fields
+    order = [(stream.columns.index(order_col), not ascending)]
 
-    state_schema = StructType([StructField("rows", ArrayType(out_schema))])
+    def step(key, rows, carry, _wm):
+        held = list(zip(*carry)) if carry else []
+        top = _top(held + rows, order, n)
+        return top, _columns(top, len(fields))
 
-    def fn(
-        key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        batches = [pdf for pdf in pdfs if len(pdf)]
-        if not batches:
-            return
-        new = pd.concat(batches, ignore_index=True)
-        if state.exists:
-            (rows,) = state.get
-            prev = pd.DataFrame([tuple(r) for r in rows], columns=cols)
-            new = pd.concat([prev, new], ignore_index=True)
-        top = (
-            new.sort_values(order_col, ascending=ascending, kind="mergesort")
-            .head(n)
-            .reset_index(drop=True)
-        )
-        state.update(([tuple(r) for r in top.itertuples(index=False)],))
-        yield top[cols]
-
-    return stream.groupBy(*keys).applyInPandasWithState(
-        fn,
-        outputStructType=out_schema,
-        stateStructType=state_schema,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
+    return keyed_state(stream, keys, step, _arrays(fields, "top_"), stream.schema)
 
 
 def streaming_retractable_topn(
@@ -364,59 +315,36 @@ def streaming_retractable_topn(
     sharded by key across the state store — the same bound as the
     reference.
     """
-    from collections import Counter
-
-
-    cols = [c for c in stream.columns if c != ROWKIND]
+    names = stream.columns
+    kind_at = names.index(ROWKIND)
+    cols = [c for c in names if c != ROWKIND]
     data_fields = [stream.schema[c] for c in cols]
     out_schema = StructType(
-        [
-            *data_fields,
-            StructField("rn", LongType()),
-            StructField("__epoch", LongType()),
-        ]
+        [*data_fields, StructField("rn", LongType()), StructField("__epoch", LongType())]
     )
-    state_schema = StructType(
-        [
-            StructField(
-                "rows",
-                ArrayType(StructType([*data_fields, StructField("__m", LongType())])),
-            ),
-            StructField("epoch", LongType()),
-        ]
-    )
-    asc = (
-        list(ascending)
-        if isinstance(ascending, (list, tuple))
-        else [ascending] * len(order_cols)
-    )
+    asc = ascending if isinstance(ascending, (list, tuple)) else [ascending] * len(order_cols)
+    order = [(cols.index(c), not a) for c, a in zip(order_cols, asc)]
+    carry_fields = [
+        *_arrays(data_fields, "live_"),
+        StructField("live_m", ArrayType(LongType())),
+        StructField("epoch", LongType()),
+    ]
 
-    def fn(
-        key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        counter: Counter = Counter()
-        epoch = 0
-        if state.exists:
-            rows, epoch = state.get
-            for r in rows or []:
-                counter[tuple(r[:-1])] = r[-1]
-        touched = False
-        for pdf in pdfs:
-            if len(pdf) == 0:
-                continue
-            touched = True
-            signs = pdf[ROWKIND].isin([INSERT, UPDATE_AFTER])
-            # plain values, NULL as None, so a retraction matches its row
-            for tup, pos in zip(py_rows(pdf, data_fields), signs):
-                counter[tup] += 1 if pos else -1
-        if not touched:
-            return
-        live = [(t, m) for t, m in counter.items() if m > 0]
+    def step(key, rows, carry, _wm):
+        *live, ms, epoch = carry or ([],) * (len(cols) + 1) + (0,)
+        counter = Counter(dict(zip(zip(*live), ms)))
+        data = [row[:kind_at] + row[kind_at + 1 :] for row in rows]
+        adds = [row[kind_at] in (INSERT, UPDATE_AFTER) for row in rows]
+        counter.update(compress(data, adds))
+        counter.subtract(Counter(compress(data, map(not_, adds))))
+        live = {t: m for t, m in counter.items() if m > 0}
         epoch += 1
-        state.update(([(*t, m) for t, m in live], epoch))
-        expanded = [t for t, m in live for _ in range(m)]
-
-        def _tombstone() -> pd.DataFrame:
+        carry = (*_columns(list(live), len(cols)), list(live.values()), epoch)
+        # copies of a row sort together: the top n distinct rows hold
+        # the top n copies
+        top = [t for t in _top(list(live), order, n) for _ in range(live[t])][:n]
+        out = [(*t, rn, epoch) for rn, t in enumerate(top, 1) if rn >= rank_start]
+        if not out:
             # RetractableTopNFunction emits deletes for rows leaving the
             # rank range; with epoch-replace semantics the equivalent is
             # an explicit "now empty" marker (rn=0, data NULL except the
@@ -424,36 +352,10 @@ def streaming_retractable_topn(
             # emptied frame from an untouched key. Consumers filter
             # rn >= 1 after the fold.
             kv = dict(zip(keys, key))
-            row = {c: kv.get(c) for c in cols}
-            row["rn"] = 0
-            row["__epoch"] = epoch
-            return pd.DataFrame([row], columns=[*cols, "rn", "__epoch"])
+            out = [(*[kv.get(c) for c in cols], 0, epoch)]
+        return out, carry
 
-        if not expanded:
-            yield _tombstone()
-            return
-        top = (
-            pd.DataFrame(expanded, columns=cols)
-            .sort_values(list(order_cols), ascending=asc, kind="mergesort")
-            .head(n)
-            .reset_index(drop=True)
-        )
-        top["rn"] = range(1, len(top) + 1)
-        top["__epoch"] = epoch
-        if rank_start > 1:
-            top = top[top["rn"] >= rank_start]
-            if len(top) == 0:
-                yield _tombstone()
-                return
-        yield top
-
-    return stream.groupBy(*keys).applyInPandasWithState(
-        fn,
-        outputStructType=out_schema,
-        stateStructType=state_schema,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
+    return keyed_state(stream, keys, step, carry_fields, out_schema)
 
 
 def _counted(fields) -> ArrayType:
@@ -1571,7 +1473,7 @@ def streaming_upsert_to_retract(
 
     Input: a changelog with ``__rowkind`` in {+I, +U, -D} (no -U — the
     upsert contract; -U rows are tolerated and dropped, the planner's
-    DropUpdateBefore). Emission per input row:
+    DropUpdateBefore). Emission per input row, in ``seq_col`` order:
 
     - additive with no live prior: ``+I(new)``
     - additive with live prior:    ``-U(prev)`` then ``+U(new)``
@@ -1580,54 +1482,34 @@ def streaming_upsert_to_retract(
       value-from-state behavior); without a live prior it is a no-op.
 
     State per key = one row (the reference's single ValueState), so
-    100 TB behavior is bounded by key cardinality. One hash exchange.
-    The batch dual is changelog.upsert_to_retract (one window pass);
-    folding these emissions converges to it for any batch slicing
-    (pinned by the fuzzer's normalize arm).
+    100 TB behavior is bounded by key cardinality; a key without a live
+    row keeps no state. The batch dual is changelog.upsert_to_retract
+    (one window pass); folding these emissions converges to it for any
+    batch slicing (pinned by the fuzzer's normalize arm).
     """
-    payload = [c for c in stream.columns if c not in (ROWKIND, seq_col)]
-    pay_fields = [stream.schema[c] for c in payload]
+    names = stream.columns
+    kind_at, seq_at = names.index(ROWKIND), names.index(seq_col)
+    pay_at = [j for j, c in enumerate(names) if c not in (ROWKIND, seq_col)]
+    pay_fields = [stream.schema.fields[j] for j in pay_at]
     out_schema = StructType([StructField(ROWKIND, StringType()), *pay_fields])
-    state_schema = StructType([*pay_fields, StructField("__live", IntegerType())])
 
-    def fn(
-        key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        prev: tuple | None = None
-        if state.exists:
-            raw = state.get
-            prev = tuple(raw[:-1]) if raw[-1] else None
+    def step(key, rows, prev, _wm):
         out: list[tuple] = []
-        for pdf in pdfs:
-            if len(pdf) == 0:
-                continue
-            pdf = pdf.sort_values(seq_col, kind="mergesort")
-            for tup in pdf[[ROWKIND, *payload]].itertuples(index=False, name=None):
-                kind, row = tup[0], tup[1:]
-                if kind == UPDATE_BEFORE:
-                    continue  # DropUpdateBefore: redundant under a PK
-                if kind == DELETE:
-                    if prev is not None:
-                        out.append((DELETE, *prev))
-                        prev = None
-                elif prev is None:
-                    out.append((INSERT, *row))
-                    prev = row
-                else:
-                    out.append((UPDATE_BEFORE, *prev))
-                    out.append((UPDATE_AFTER, *row))
-                    prev = row
-        if prev is not None:
-            state.update((*prev, 1))
-        elif state.exists:
-            state.remove()
-        if out:
-            yield pd.DataFrame(out, columns=[ROWKIND, *payload])
+        for row in _sort(rows, [(seq_at, False)]):
+            kind, new = row[kind_at], tuple(map(row.__getitem__, pay_at))
+            if kind == UPDATE_BEFORE:
+                continue  # DropUpdateBefore: redundant under a PK
+            if kind == DELETE:
+                if prev is not None:
+                    out.append((DELETE, *prev))
+                    prev = None
+            elif prev is None:
+                out.append((INSERT, *new))
+                prev = new
+            else:
+                out += [(UPDATE_BEFORE, *prev), (UPDATE_AFTER, *new)]
+                prev = new
+        return out, prev
 
-    return stream.groupBy(*keys).applyInPandasWithState(
-        fn,
-        outputStructType=out_schema,
-        stateStructType=state_schema,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
+    carry_fields = [StructField(f"prev_{f.name}", f.dataType) for f in pay_fields]
+    return keyed_state(stream, keys, step, carry_fields, out_schema)

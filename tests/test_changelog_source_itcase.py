@@ -30,12 +30,11 @@ from __future__ import annotations
 from collections import Counter
 from decimal import Decimal
 
-import pandas as pd
 import pytest
 
 from pyspark.sql.types import LongType, StringType
 
-from tools.fuzz_changelog import FakeGroupState, _Cap, _schema
+from tools.fuzz_changelog import _Cap, _schema, one_group, replay
 from flink_release_1_16_0_spark.streaming.changelog import (
     DELETE,
     INSERT,
@@ -162,18 +161,13 @@ def _normalize_upsert(rows, key_idx, ncols):
     )
     cap = _Cap(_schema(ddl))
     streaming_upsert_to_retract(cap, keys=[names[i] for i in key_idx], seq_col="seq")
-    fn = cap.fn
-    states: dict = {}
-    out = []
     cols = [ROWKIND, "seq"] + names
-    for i, r in enumerate(rows):
-        pdf = pd.DataFrame([(r[0], i, *r[1:])], columns=cols)
-        kt = tuple(r[1 + i_] for i_ in key_idx)
-        # key columns are payload positions 0.. (key_idx over payload)
-        st = states.setdefault(kt, FakeGroupState())
-        for e in fn(kt, iter([pdf]), st):
-            out += [tuple(rr) for rr in e.itertuples(index=False, name=None)]
-    return out
+    batches = [[(r[0], i, *r[1:])] for i, r in enumerate(rows)]
+    keys = [names[i] for i in key_idx]
+    return [
+        tuple(e.values())
+        for e in replay(cap.fn, batches, keys, cols, groups=one_group)
+    ]
 
 
 def users_changelog(mode):

@@ -41,6 +41,8 @@ from tools.fuzz_changelog import (
     FakeGroupState,
     _Cap,
     _schema,
+    one_group,
+    replay,
 )
 
 
@@ -172,7 +174,7 @@ def test_first_row_on_proctime():
     fn = _dedup_fn(["b"], ["seq"], "first")
     for batches in (one_per_batch(rows), [rows], [rows[:7], rows[7:]]):
         got = _fold_last_per_key(
-            replay_wm(fn, batches, ["b"], ["a", "b", "c", "seq"]), "b"
+            replay(fn, batches, ["b"], ["a", "b", "c", "seq"], groups=one_group), "b"
         )
         assert got == sorted(
             [
@@ -193,7 +195,7 @@ def test_last_row_on_proctime():
     fn = _dedup_fn(["b"], ["seq"], "last")
     for batches in (one_per_batch(rows), [rows], [rows[:11], rows[11:]]):
         got = _fold_last_per_key(
-            replay_wm(fn, batches, ["b"], ["a", "b", "c", "seq"]), "b"
+            replay(fn, batches, ["b"], ["a", "b", "c", "seq"], groups=one_group), "b"
         )
         assert got == sorted(
             [
@@ -219,8 +221,8 @@ def test_first_row_on_rowtime_raw_changelog():
     rows = [(a, b, c, i) for i, (a, b, c) in enumerate(ROWTIME_DATA)]
     # order by (rowtime b, arrival seq): first-arrival wins rowtime ties
     fn = _dedup_fn(["a"], ["b", "seq"], "first")
-    emissions = replay_wm(
-        fn, one_per_batch(rows), ["a"], ["a", "b", "c", "seq"]
+    emissions = replay(
+        fn, one_per_batch(rows), ["a"], ["a", "b", "c", "seq"], groups=one_group
     )
     raw = upsert_to_raw_changelog(emissions, "a", _fmt_rowtime)
     assert sorted(raw) == sorted(
@@ -243,8 +245,8 @@ def test_last_row_on_rowtime_raw_changelog():
     # here the partition key is b (the rowtime value itself)
     rows = [(a, b, c, i) for i, (a, b, c) in enumerate(ROWTIME_DATA)]
     fn = _dedup_fn(["b"], ["b", "seq"], "last")
-    emissions = replay_wm(
-        fn, one_per_batch(rows), ["b"], ["a", "b", "c", "seq"]
+    emissions = replay(
+        fn, one_per_batch(rows), ["b"], ["a", "b", "c", "seq"], groups=one_group
     )
     raw = upsert_to_raw_changelog(emissions, "b", _fmt_rowtime)
     assert sorted(raw) == sorted(
@@ -271,7 +273,7 @@ def test_first_row_minibatch_compaction():
     free."""
     rows = [(a, b, c, i) for i, (a, b, c) in enumerate(ROWTIME_DATA)]
     fn = _dedup_fn(["a"], ["b", "seq"], "first")
-    emissions = replay_wm(fn, [rows], ["a"], ["a", "b", "c", "seq"])
+    emissions = replay(fn, [rows], ["a"], ["a", "b", "c", "seq"], groups=one_group)
     raw = upsert_to_raw_changelog(emissions, "a", _fmt_rowtime)
     assert sorted(raw) == sorted(
         [
@@ -289,7 +291,7 @@ def test_last_row_minibatch_compaction():
     six +I rows, no updates."""
     rows = [(a, b, c, i) for i, (a, b, c) in enumerate(ROWTIME_DATA)]
     fn = _dedup_fn(["b"], ["b", "seq"], "last")
-    emissions = replay_wm(fn, [rows], ["b"], ["a", "b", "c", "seq"])
+    emissions = replay(fn, [rows], ["b"], ["a", "b", "c", "seq"], groups=one_group)
     raw = upsert_to_raw_changelog(emissions, "b", _fmt_rowtime)
     assert sorted(raw) == sorted(
         [
@@ -323,8 +325,8 @@ def test_dedup_followed_by_unbounded_agg(keep, part):
     rows = [(a, b, c, i) for i, (a, b, c) in enumerate(ROWTIME_DATA)]
     order = ["b", "seq"]
     fn = _dedup_fn([part], order, keep)
-    emissions = replay_wm(
-        fn, one_per_batch(rows), [part], ["a", "b", "c", "seq"]
+    emissions = replay(
+        fn, one_per_batch(rows), [part], ["a", "b", "c", "seq"], groups=one_group
     )
     # dedup upserts -> retract changelog (the planner's implicit
     # upsert-to-retract conversion in front of the downstream agg)

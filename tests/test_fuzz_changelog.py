@@ -77,7 +77,7 @@ def test_topn_retracts_a_row_holding_a_null_double(spark):
     the NULL over as NaN, which never equals itself)."""
     from flink_release_1_16_0_spark.streaming.changelog import DELETE, INSERT, ROWKIND
     from flink_release_1_16_0_spark.streaming.stateful import streaming_retractable_topn
-    from tools.fuzz_changelog import _Cap, _schema, replay
+    from tools.fuzz_changelog import _Cap, _schema, one_group, replay
 
     cap = _Cap(_schema(f"{ROWKIND} STRING, k BIGINT, s STRING, v DOUBLE"))
     streaming_retractable_topn(cap, keys=["k"], order_cols=["s"], n=2)
@@ -85,6 +85,6 @@ def test_topn_retracts_a_row_holding_a_null_double(spark):
         [(INSERT, 1, "b", 2.0), (INSERT, 1, "a", None)],
         [(DELETE, 1, "a", None)],
     ]
-    out = replay(cap.fn, batches, ["k"], [ROWKIND, "k", "s", "v"])
+    out = replay(cap.fn, batches, ["k"], [ROWKIND, "k", "s", "v"], groups=one_group)
     last = max(r["__epoch"] for r in out)
     assert [(r["s"], r["rn"]) for r in out if r["__epoch"] == last] == [("b", 1)]

@@ -52,7 +52,7 @@ from pyspark.sql.types import (
     TimestampType,
 )
 
-from tools.fuzz_changelog import FakeGroupState, _Cap
+from tools.fuzz_changelog import FakeGroupState, _Cap, one_group, replay
 from flink_release_1_16_0_spark.streaming.group_window import (
     streaming_group_window_agg,
 )
@@ -621,9 +621,10 @@ def _currency_agg_rows(allowed_lateness_ms=0):
                 "rate": rate,
                 "currency_time": EPOCH + pd.Timedelta(seconds=ts_s),
             }
-            st = norm_states.setdefault((cur,), FakeGroupState())
-            for e in norm_fn((cur,), iter([pd.DataFrame([row], columns=CUR_COLS)]), st):
-                changelog.extend(e.to_dict("records"))
+            changelog = replay(
+                norm_fn, [[tuple(row[c] for c in CUR_COLS)]], ["currency"], CUR_COLS,
+                groups=one_group, states=norm_states,
+            )
             max_ts = ts_s if max_ts is None else max(max_ts, ts_s)
         per_key: dict[tuple, pd.DataFrame] = {}
         if changelog:
@@ -760,11 +761,11 @@ def test_window_aggregate_on_retract_stream():
                 "string": r[5],
                 "rowtime": EPOCH + pd.Timedelta(milliseconds=r[0]),
             }
-            kt = (r[5],)
-            st = norm_states.setdefault(kt, FakeGroupState())
             cols = [f.name for f in dedup_schema.fields]
-            for e in norm_fn(kt, iter([pd.DataFrame([srow], columns=cols)]), st):
-                changelog.extend(e.to_dict("records"))
+            changelog = replay(
+                norm_fn, [[tuple(srow[c] for c in cols)]], ["string"], cols,
+                groups=one_group, states=norm_states,
+            )
             max_ts = r[0] if max_ts is None else max(max_ts, r[0])
         per_key: dict[tuple, pd.DataFrame] = {}
         if changelog:

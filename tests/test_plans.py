@@ -284,6 +284,20 @@ def _assert_single_keyed_exchange(plan: str, key: str):
     assert "REQUIRED_BY_STATEFUL_OPERATOR" in plan
 
 
+def _assert_key_group_exchange(plan: str, keys: list[str]):
+    """A key-grouped operator (streaming/key_groups.py) shuffles once,
+    on the key group, and its group hashes exactly the user keys."""
+    import re as _re
+
+    from flink_release_1_16_0_spark.streaming.key_groups import GROUP_COL
+
+    _assert_single_keyed_exchange(plan, GROUP_COL)
+    hashes = set(_re.findall(rf"pmod\(xxhash64\(([^)]*)\), \d+\) AS {GROUP_COL}", plan))
+    assert len(hashes) == 1, f"expected 1 key group expression, plan has {hashes}"
+    cols = [c.split("#")[0].strip() for c in hashes.pop().split(",")[:-1]]  # last: the seed
+    assert cols == keys, f"key group hashes {cols}, want {keys}"
+
+
 def test_streaming_retracting_agg_shuffle_layout(spark, sf_smoke):
     from pyspark.sql import functions as F
 
@@ -314,7 +328,7 @@ def test_streaming_topn_shuffle_layout(spark, sf_smoke):
         n=3,
     )
     plan = _streaming_plan(spark, out)
-    _assert_single_keyed_exchange(plan, "event_type")
+    _assert_key_group_exchange(plan, ["event_type"])
 
 
 def test_streaming_dedup_keep_last_shuffle_layout(spark, sf_smoke):
@@ -330,7 +344,7 @@ def test_streaming_dedup_keep_last_shuffle_layout(spark, sf_smoke):
         order_col="event_id",
     )
     plan = _streaming_plan(spark, out)
-    _assert_single_keyed_exchange(plan, "user_id")
+    _assert_key_group_exchange(plan, ["user_id"])
 
 
 def test_streaming_anti_join_shuffle_layout(spark, sf_smoke):
@@ -524,9 +538,10 @@ def test_all_pairs_streamed_side_is_repartitioned(spark, sf_smoke):
 
 def test_streaming_window_state_keys_exclude_window(spark, sf_smoke):
     """Regression pin for the per-(key, window) state-layout fix: the
-    streaming window aggregate and windowed dedup must group their
-    stateful operator by the USER key only (windows live inside the
-    per-key state value) — re-introducing the window bucket into the
+    streaming window aggregate must group its stateful operator by the
+    USER key only, and the windowed dedup must hash its key group over
+    the user key only (windows live inside the per-key state value) —
+    re-introducing the window bucket into the
     grouping key restores the ~1M-tiny-groups per-group constant the
     sf1 study measured at 235 s / 132 s. Pinned on the UNSTARTED
     streaming plans (the registry entries execute to completion)."""
@@ -578,8 +593,7 @@ def test_streaming_window_state_keys_exclude_window(spark, sf_smoke):
         ev, window_col="win_start", keys=["user_id"],
         order_col=["ts", "event_id"], keep="first",
     )
-    keys = state_keys(ded)
-    assert "win" not in keys, f"window col in dedup state key: {keys}"
+    _assert_key_group_exchange(_streaming_plan(spark, ded), ["user_id"])
 
 
 def test_streaming_changelog_outer_join_shuffle_layout(spark, sf_smoke):

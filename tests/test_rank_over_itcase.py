@@ -35,6 +35,8 @@ from tools.fuzz_changelog import (
     FakeGroupState,
     _Cap,
     _schema,
+    one_group,
+    replay,
 )
 from tests.test_dedup_sort_itcase import replay_wm
 
@@ -104,7 +106,7 @@ def test_topn():
     rows = [("+I", c, s, n, 1) for c, s, n in RANK_DATA]
     fn = _topn_fn(["num"], 2, False)
     got = _fold_topn(
-        replay_wm(fn, [[r] for r in rows], ["category"], TOPN_COLS)
+        replay(fn, [[r] for r in rows], ["category"], TOPN_COLS, groups=one_group)
     )
     assert got == sorted(
         [
@@ -129,7 +131,7 @@ def test_topnth(rank_no, expected):
     rows = [("+I", c, s, n, 1) for c, s, n in RANK_DATA]
     fn = _topn_fn(["num"], rank_no, False)
     got = [t for t in _fold_topn(
-        replay_wm(fn, [[r] for r in rows], ["category"], TOPN_COLS)
+        replay(fn, [[r] for r in rows], ["category"], TOPN_COLS, groups=one_group)
     ) if t[3] == rank_no]
     assert got == sorted(expected)
 
@@ -140,7 +142,7 @@ def test_topn_with_upsert_sink():
     rows = [("+I", c, s, n, 1) for c, s, n in RANK_DATA]
     fn = _topn_fn(["num"], 2, True)
     got = _fold_topn(
-        replay_wm(fn, [[r] for r in rows], ["category"], TOPN_COLS)
+        replay(fn, [[r] for r in rows], ["category"], TOPN_COLS, groups=one_group)
     )
     assert got == sorted(
         [
@@ -196,19 +198,14 @@ def _agg_then_topn(data, n, order_cols, ascending):
             agg_rows.extend(emitted.to_dict("records"))
         if not agg_rows:
             continue
-        tpdf = pd.DataFrame(
-            [
-                (r["__rowkind"], r["category"], r["shopId"],
-                 int(r["total"]), int(r["n"]))
-                for r in agg_rows
-            ],
-            columns=TOPN_COLS,
+        changelog = [
+            (r["__rowkind"], r["category"], r["shopId"], int(r["total"]), int(r["n"]))
+            for r in agg_rows
+        ]
+        out += replay(
+            topn_fn, [changelog], ["category"], TOPN_COLS,
+            groups=one_group, states=topn_states,
         )
-        for key, grp in tpdf.groupby(["category"], sort=False):
-            kt2 = key if isinstance(key, tuple) else (key,)
-            st2 = topn_states.setdefault(kt2, FakeGroupState())
-            for emitted in topn_fn(kt2, iter([grp.reset_index(drop=True)]), st2):
-                out.extend(emitted.to_dict("records"))
     return out
 
 

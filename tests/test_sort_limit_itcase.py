@@ -27,7 +27,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from tools.fuzz_changelog import FakeGroupState, _Cap
+from tools.fuzz_changelog import FakeGroupState, _Cap, one_group, replay
 from flink_release_1_16_0_spark.streaming.retract_agg import (
     streaming_retracting_multi_agg,
 )
@@ -43,16 +43,13 @@ def run_topn(in_schema, cols, batches, order_cols, n, ascending, rank_start=1):
     streaming_retractable_topn(
         cap, ["__g"], order_cols, n, ascending=ascending, rank_start=rank_start
     )
-    fn = cap.fn
-    st = FakeGroupState()
+    states: dict = {}
     last_epoch_rows: list = []
     for batch in batches:
-        pdf = pd.DataFrame(batch, columns=cols)
-        for e in fn((0,), iter([pdf]), st):
+        emitted = replay(cap.fn, [batch], ["__g"], cols, groups=one_group, states=states)
+        if emitted:
             # rn=0 tombstone = "frame now empty" -> replace with nothing
-            last_epoch_rows = [
-                r for r in e.to_dict("records") if r["rn"] >= 1
-            ]
+            last_epoch_rows = [r for r in emitted if r["rn"] >= 1]
     return last_epoch_rows
 
 
@@ -109,7 +106,7 @@ def _retract_rank(rank_start):
     rank_fn = rank_cap.fn
 
     agg_states: dict = {}
-    rank_state = FakeGroupState()
+    rank_states: dict = {}
     last: list = []
     for a, b in data:
         st = agg_states.setdefault((a,), FakeGroupState())
@@ -118,12 +115,12 @@ def _retract_rank(rank_start):
             changelog.extend(e.to_dict("records"))
         if not changelog:
             continue
-        pdf = pd.DataFrame(
-            [(0, r[RK], r["a"], r["mx"]) for r in changelog],
-            columns=["__g", RK, "a", "mx"],
+        emitted = replay(
+            rank_fn, [[(0, r[RK], r["a"], r["mx"]) for r in changelog]], ["__g"],
+            ["__g", RK, "a", "mx"], groups=one_group, states=rank_states,
         )
-        for e in rank_fn((0,), iter([pdf]), rank_state):
-            last = [r for r in e.to_dict("records") if r["rn"] >= 1]
+        if emitted:
+            last = [r for r in emitted if r["rn"] >= 1]
     return sorted(f"{r['a']},{r['mx']}" for r in last)
 
 

@@ -12,9 +12,11 @@ then a single-threaded harness replays randomly generated changelog
 programs through it batch-by-batch with a faked GroupState — exactly the
 per-key data layout Spark's FlatMapGroupsInPandasWithState provides, with
 its event-time timers (a state whose timeout is below the watermark is
-called with an empty frame); the key-grouped OVER arms replay under three
-key -> group maps. Every program is replayed under SEVERAL random
-micro-batch slicings; the folded emission stream must converge to a
+called with an empty frame); the arms of the key-grouped operators
+(OVER, dedup, window dedup, both top-N operators, upsert-to-retract)
+replay under three key -> group maps and must emit the same per key.
+Every program is replayed under SEVERAL random micro-batch slicings;
+the folded emission stream must converge to a
 single-threaded Python reference interpreter implementing the reference
 engine's semantics
 (flink-table-runtime GroupAggFunction.java:125-172 accumulate/retract,
@@ -31,7 +33,8 @@ multiples of 0.25, or of 0.125 where an arm checks values off the cent
 grid, so float accumulation is exact and comparisons are equality, not
 tolerance; the OVER references sum exactly with ``Fraction``.
 
-Arms: agg (retracting SUM/COUNT), topn (retractable top-N), minmax
+Arms: agg (retracting SUM/COUNT), topn (retractable top-N), atopn
+(append-only top-N over BIGINTs beyond 2**53 and NULLs), minmax
 (retracting MIN/MAX bag), join (two-input changelog join), dedup
 (keep-first/last refinement across batches), wdedup (window dedup with
 watermark eviction + isWindowFired drop), antijoin/semi (time-bounded
@@ -64,6 +67,7 @@ from pathlib import Path
 
 import numpy as np
 import pandas as pd
+from pyspark.errors import PySparkRuntimeError
 from pyspark.sql.types import DoubleType, LongType
 
 sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
@@ -93,9 +97,11 @@ class FakeGroupState:
     Once a :class:`_Cap`-captured closure binds its state ``schema``,
     every ``update`` is checked the way Spark would take it: pyspark's
     type verifier, then a ``toInternal``/``fromInternal`` round trip, so
-    a value Spark would reject fails here without a Spark job."""
+    a value Spark would reject fails here without a Spark job.
+    ``watermark_ms=None`` is an input without a watermark, whose
+    watermark pyspark refuses to read."""
 
-    def __init__(self, watermark_ms: int = 0):
+    def __init__(self, watermark_ms: int | None = 0):
         self._value = None
         self._exists = False
         self._wm = watermark_ms
@@ -134,11 +140,19 @@ class FakeGroupState:
         self._exists = False
 
     def getCurrentWatermarkMs(self) -> int:
+        if self._wm is None:
+            raise PySparkRuntimeError(
+                errorClass="CANNOT_WITHOUT",
+                messageParameters={
+                    "condition1": "get event time watermark timestamp",
+                    "condition2": "setting watermark before applyInPandasWithState",
+                },
+            )
         return self._wm
 
     def setTimeoutTimestamp(self, ms) -> None:
         # pyspark's checks: positive, and not below the watermark
-        if ms <= 0 or ms < self._wm:
+        if ms <= 0 or (self._wm is not None and ms < self._wm):
             raise ValueError(f"timeout {ms} invalid at watermark {self._wm}")
         self.timeout = ms
 
@@ -231,33 +245,36 @@ def _null_key(key: tuple) -> tuple:
     return tuple(None if v != v else v for v in key)
 
 
-def replay(fn, batches, key_cols, columns, wm_seq=None, groups=None):
+def replay(fn, batches, key_cols, columns, wm_seq=None, groups=None, states=None):
     """Drive a captured closure the way FlatMapGroupsInPandasWithState
     does: per micro-batch, rows grouped by key, one fn call per touched
-    key, GroupState persisted across batches. Returns emissions in
-    arrival order as a list of row dicts.
+    key, GroupState persisted across batches (in ``states``, if given,
+    so that a caller can replay one batch at a time). Returns emissions
+    in arrival order as a list of row dicts.
 
     ``groups`` maps a key tuple (None for NULL) to its key group, for
     the operators built on streaming.key_groups: rows are then grouped
-    by group, and each frame carries the group column and the keys'
-    value and is-null columns the group call adds. Event-time timers
-    are simulated: after a batch's data calls, every state whose
-    timeout is below the watermark is called with an empty frame and
-    ``hasTimedOut``. An empty batch is Spark's no-data batch: a
-    watermark-only flush that makes the timer calls alone."""
+    by group, and each frame carries the group column and every
+    column's value and is-null flag, of which the group call reads the
+    exact ones. Event-time timers are simulated: after a batch's data
+    calls, every state whose timeout is below the watermark is called
+    with an empty frame and ``hasTimedOut``. Without ``wm_seq`` the
+    input has no watermark, as does a batch whose entry is None; reading
+    it then raises, as in pyspark. An empty batch is Spark's
+    no-data batch: a watermark-only flush that makes the timer calls
+    alone."""
     from flink_release_1_16_0_spark.streaming.key_groups import (
         GROUP_COL,
-        key_value,
-        null_flag,
+        null_col,
+        value_col,
     )
 
-    states: dict[tuple, FakeGroupState] = {}
+    states = {} if states is None else states
     out: list[dict] = []
     group_cols, frame_cols = list(key_cols), list(columns)
     if groups is not None:
-        values = [key_value(i) for i in range(len(key_cols))]
-        flags = [null_flag(i) for i in range(len(key_cols))]
-        group_cols, frame_cols = [GROUP_COL], [*columns, GROUP_COL, *values, *flags]
+        exact = [f(c) for c in columns for f in (value_col, null_col)]
+        group_cols, frame_cols = [GROUP_COL], [*columns, GROUP_COL, *exact]
 
     def call(kt, pdf, st, wm, timed_out=False):
         st._wm, st.hasTimedOut, st.timeout = wm, timed_out, None
@@ -265,26 +282,31 @@ def replay(fn, batches, key_cols, columns, wm_seq=None, groups=None):
             out.extend(emitted.to_dict("records"))
 
     for bi, batch in enumerate(batches):
-        wm = wm_seq[bi] if wm_seq else 0
+        wm = wm_seq[bi] if wm_seq else None
         called = set()
         pdf = pd.DataFrame(batch, columns=columns)
         if groups is not None:
             # from the raw rows: pandas holds NULL and NaN alike as NaN
             at = [columns.index(k) for k in key_cols]
-            keys = [tuple(row[j] for j in at) for row in batch]
-            pdf[GROUP_COL] = [groups(k) for k in keys]
-            for i in range(len(at)):
-                pdf[values[i]] = [0 if k[i] is None else k[i] for k in keys]
-                pdf[flags[i]] = [k[i] is None for k in keys]
+            pdf[GROUP_COL] = [groups(tuple(row[j] for j in at)) for row in batch]
+            for j, c in enumerate(columns):
+                pdf[value_col(c)] = [0 if row[j] is None else row[j] for row in batch]
+                pdf[null_col(c)] = [row[j] is None for row in batch]
         for key, grp in pdf.groupby(group_cols, sort=False, dropna=False):
             kt = _null_key(key if isinstance(key, tuple) else (key,))
             called.add(kt)
             call(kt, grp.reset_index(drop=True), states.setdefault(kt, FakeGroupState()), wm)
         empty = pd.DataFrame(columns=frame_cols)
         for kt, st in list(states.items()):
-            if kt not in called and st.timeout is not None and st.timeout < wm:
+            due = st.timeout is not None and wm is not None and st.timeout < wm
+            if kt not in called and due:
                 call(kt, empty, st, wm, timed_out=True)
     return out
+
+
+def one_group(_key: tuple) -> int:
+    """The key -> group map that puts every key in one group."""
+    return 0
 
 
 # --------------------------------------------------------------------------
@@ -413,9 +435,11 @@ def check_topn(rng: random.Random) -> str | None:
         cap, keys=["k"], order_cols=["v", "id"], n=n, ascending=False
     )
     rows = [(kind, k, p[0], p[1]) for kind, k, p in events]
-    emissions = replay(
-        cap.fn, split_batches(rng, rows), ["k"], [ROWKIND, "k", "v", "id"]
+    emissions, err = _replay_key_groups(
+        rng, cap.fn, ["k"], [ROWKIND, "k", "v", "id"], split_batches(rng, rows)
     )
+    if err:
+        return f"topn {err}"
     # adjudicate: per key, the max-__epoch emission set is the final top-N
     per_key: dict = defaultdict(list)
     for r in emissions:
@@ -460,6 +484,48 @@ def check_topn(rng: random.Random) -> str | None:
             got.pop(k)
     if got != ref:
         return f"topn {got} != ref {ref}"
+    return None
+
+
+def check_atopn(rng: random.Random) -> str | None:
+    """streaming_topn vs AppendOnlyTopNFunction: each batch that
+    touches a key emits the key's top n of all its rows so far, stably
+    sorted by a BIGINT value (ascending or descending, NULL last either
+    way, ties in arrival order). Keys, values and ids are drawn with
+    NULLs and beyond 2**53, so a value rounded through float64 shows."""
+    from flink_release_1_16_0_spark.streaming.stateful import streaming_topn
+
+    n, ascending = rng.randint(1, 4), rng.random() < 0.5
+    keys = [None, *[2**62 + i for i in range(rng.randint(1, 3))]]
+    rows = [
+        (
+            rng.choice(keys),
+            rng.choice([None, 2**62 + rng.randrange(4), rng.randrange(-3, 3)]),
+            2**53 + 1 + i,
+        )
+        for i in range(rng.randint(3, 40))
+    ]
+    batches = split_batches(rng, rows)
+    cap = _Cap(_schema("k BIGINT, v BIGINT, id BIGINT"))
+    streaming_topn(cap, keys=["k"], order_col="v", n=n, ascending=ascending)
+    emissions, err = _replay_key_groups(rng, cap.fn, ["k"], ["k", "v", "id"], batches)
+    if err:
+        return f"atopn {err}"
+    got: dict = defaultdict(list)
+    for r in emissions:
+        got[_plain(r["k"])].append((_plain(r["v"]), r["id"]))
+    seen: dict = defaultdict(list)
+    ref: dict = defaultdict(list)
+    for b in batches:
+        for k in dict.fromkeys(k for k, _v, _i in b):
+            seen[k] += [(v, i) for kk, v, i in b if kk == k]
+            ranked = sorted(
+                seen[k],
+                key=lambda r: (r[0] is None, 0 if r[0] is None else r[0] if ascending else -r[0]),
+            )
+            ref[k] += ranked[:n]
+    if dict(got) != dict(ref):
+        return f"atopn n={n} asc={ascending}: {dict(got)} != ref {dict(ref)}"
     return None
 
 
@@ -605,9 +671,11 @@ def check_dedup(rng: random.Random) -> str | None:
     ]
     cap = _Cap(_schema("k BIGINT, v DOUBLE, id BIGINT"))
     streaming_dedup_keep_last(cap, keys=["k"], order_col=["v", "id"], keep=keep)
-    emissions = replay(
-        cap.fn, split_batches(rng, rows), ["k"], ["k", "v", "id"]
+    emissions, err = _replay_key_groups(
+        rng, cap.fn, ["k"], ["k", "v", "id"], split_batches(rng, rows)
     )
+    if err:
+        return f"dedup[{keep}] {err}"
     got: dict = {}
     for r in emissions:
         got[r["k"]] = (r["v"], r["id"])
@@ -662,9 +730,11 @@ def check_wdedup(rng: random.Random) -> str | None:
         keep="first",
         window_size_ms=size,
     )
-    emissions = replay(
-        cap.fn, batches, ["k"], ["k", "win", "ts", "id"], wm_seq=wm_seq
+    emissions, err = _replay_key_groups(
+        rng, cap.fn, ["k"], ["k", "win", "ts", "id"], batches, wm_seq
     )
+    if err:
+        return f"wdedup {err}"
     got: dict = {}
     for r in emissions:
         got[(r["k"], r["win"])] = (r["ts"], r["id"])
@@ -818,6 +888,9 @@ def check_antijoin(rng: random.Random) -> str | None:
     return None
 
 
+OVER_COLS = ["k", "ts", "id", "v"]
+
+
 def _event_time_program(rng: random.Random):
     """(key, ts, id, v) events over up to 8 keys, one of them NULL,
     with bounded disorder + the per-batch watermark sequence (delay 0
@@ -834,30 +907,47 @@ def _event_time_program(rng: random.Random):
         wm_seq.append(seen)
         for _, ts, _, _ in b:
             seen = max(seen, ts.value // 1_000_000)
-    return keys, batches, wm_seq
+    return batches, wm_seq
 
 
-def _replay_key_groups(rng, cap, keys, batches, wm_seq, names):
-    """Replay a key-grouped OVER operator under three key -> group maps
-    (all keys in one group, one group per key, a random map); the
-    emissions, as a Counter of (k, id, ts ms, *names), must not depend
-    on the map. Returns (Counter, None) or (None, error)."""
-    one = {(k,): i for i, k in enumerate(keys)}
-    spread = {(k,): rng.randrange(3) for k in keys}
+def _plain(v):
+    """An emitted value with pandas' NULLs (NaN, NaT) as None."""
+    return None if not isinstance(v, (list, tuple)) and pd.isna(v) else v
+
+
+def _replay_key_groups(rng, fn, key_cols, columns, batches, wm_seq=None):
+    """Replay a key-grouped operator under three key -> group maps (all
+    keys in one group, one group per key, a random map); each key's
+    emissions, in order, must not depend on the map. Returns (the
+    one-group run's emissions, None) or (None, error)."""
+    one: dict = {}
+    spread: dict = {}
+    maps = (
+        one_group,
+        lambda k: one.setdefault(k, len(one)),
+        lambda k: spread.setdefault(k, rng.randrange(3)),
+    )
     runs = []
-    for groups in (lambda _k: 0, one.__getitem__, spread.__getitem__):
-        emissions = replay(
-            cap.fn, batches, ["k"], ["k", "ts", "id", "v"], wm_seq=wm_seq,
-            groups=groups,
-        )
-        runs.append(Counter(
-            (*_null_key((r["k"],)), r["id"], pd.Timestamp(r["ts"]).value // 1_000_000,
-             *[r[n] for n in names])
-            for r in emissions
-        ))
-    if runs[1] != runs[0] or runs[2] != runs[0]:
-        return None, f"groupings differ: {[dict(r) for r in runs]}"
-    return runs[0], None
+    for groups in maps:
+        emissions = replay(fn, batches, key_cols, columns, wm_seq=wm_seq, groups=groups)
+        per_key: dict = defaultdict(list)
+        for r in emissions:
+            per_key[tuple(_plain(r[k]) for k in key_cols)].append(
+                {c: _plain(v) for c, v in r.items()}
+            )
+        runs.append((emissions, dict(per_key)))
+    if any(per_key != runs[0][1] for _e, per_key in runs[1:]):
+        return None, f"groupings differ: {[p for _e, p in runs]}"
+    return runs[0][0], None
+
+
+def _over_emissions(emissions, names) -> Counter:
+    """OVER emissions as a Counter of (k, id, ts ms, *names)."""
+    return Counter(
+        (_plain(r["k"]), r["id"], pd.Timestamp(r["ts"]).value // 1_000_000,
+         *[r[n] for n in names])
+        for r in emissions
+    )
 
 
 def _release_all(batches, wm_seq):
@@ -888,16 +978,15 @@ def check_over_rows(rng: random.Random) -> str | None:
         streaming_over_rows_event_time,
     )
 
-    keys, batches, wm_seq = _event_time_program(rng)
+    batches, wm_seq = _event_time_program(rng)
     cap = _Cap(_schema("k BIGINT, ts TIMESTAMP, id BIGINT, v DOUBLE"))
     streaming_over_rows_event_time(
         cap, keys=["k"], value_col="v", id_col="id", ts_col="ts"
     )
-    got, err = _replay_key_groups(
-        rng, cap, keys, batches, wm_seq, ("running_n", "running_sum")
-    )
+    emissions, err = _replay_key_groups(rng, cap.fn, ["k"], OVER_COLS, batches, wm_seq)
     if err:
         return f"over_rows {err}"
+    got = _over_emissions(emissions, ("running_n", "running_sum"))
     acc: dict = defaultdict(lambda: [0, Fraction(0)])  # n, exact sum
     ref: Counter = Counter()
     for k, ready in _release_all(batches, wm_seq):
@@ -921,15 +1010,16 @@ def check_over_range(rng: random.Random) -> str | None:
     )
 
     bound = 40
-    keys, batches, wm_seq = _event_time_program(rng)
+    batches, wm_seq = _event_time_program(rng)
     cap = _Cap(_schema("k BIGINT, ts TIMESTAMP, id BIGINT, v DOUBLE"))
     streaming_over_range_event_time(
         cap, keys=["k"], value_col="v", id_col="id", ts_col="ts",
         bound_ms=bound,
     )
-    got, err = _replay_key_groups(rng, cap, keys, batches, wm_seq, ("win_n", "win_sum"))
+    emissions, err = _replay_key_groups(rng, cap.fn, ["k"], OVER_COLS, batches, wm_seq)
     if err:
         return f"over_range {err}"
+    got = _over_emissions(emissions, ("win_n", "win_sum"))
     finalized: dict = defaultdict(list)  # full history, never evicted
     ref: Counter = Counter()
     for k, ready in _release_all(batches, wm_seq):
@@ -962,15 +1052,16 @@ def check_over_bounded(rng: random.Random) -> str | None:
     )
 
     n_rows = rng.randint(1, 5)
-    keys, batches, wm_seq = _event_time_program(rng)
+    batches, wm_seq = _event_time_program(rng)
     cap = _Cap(_schema("k BIGINT, ts TIMESTAMP, id BIGINT, v DOUBLE"))
     streaming_over_rows_bounded_event_time(
         cap, keys=["k"], value_col="v", id_col="id", ts_col="ts",
         n_rows=n_rows,
     )
-    got, err = _replay_key_groups(rng, cap, keys, batches, wm_seq, ("win_n", "win_sum"))
+    emissions, err = _replay_key_groups(rng, cap.fn, ["k"], OVER_COLS, batches, wm_seq)
     if err:
         return f"over_bounded(n_rows={n_rows}) {err}"
+    got = _over_emissions(emissions, ("win_n", "win_sum"))
     finalized: dict = defaultdict(list)  # full history, never evicted
     ref: Counter = Counter()
     for k, ready in _release_all(batches, wm_seq):
@@ -1008,9 +1099,11 @@ def check_normalize(rng: random.Random) -> str | None:
     rows = [(kind, i, k, v) for i, (kind, k, v) in enumerate(events)]
     cap = _Cap(_schema(f"{ROWKIND} STRING, seq BIGINT, k BIGINT, v DOUBLE"))
     streaming_upsert_to_retract(cap, keys=["k"], seq_col="seq")
-    emissions = replay(
-        cap.fn, split_batches(rng, rows), ["k"], [ROWKIND, "seq", "k", "v"]
+    emissions, err = _replay_key_groups(
+        rng, cap.fn, ["k"], [ROWKIND, "seq", "k", "v"], split_batches(rng, rows)
     )
+    if err:
+        return f"normalize {err}"
     # fold: the retract log must materialize to the upsert log's final
     folded: dict = {}
     for r in emissions:
@@ -1579,6 +1672,7 @@ def check_wtopn(rng: random.Random) -> str | None:
 ARMS = {
     "agg": check_agg,
     "topn": check_topn,
+    "atopn": check_atopn,
     "wtvf_distinct": check_wtvf_distinct,
     "minmax": check_minmax,
     "join": check_join,
